@@ -20,11 +20,20 @@ Scale notes (100 TB thinking):
 * stage 2 re-tokenizes its group instead of materializing a global TF
   table — tokenize is JVM-regex (cheap, codegen) while a TF parquet would
   be roughly index-sized write+read IO;
-* the only wide shuffles are groupBy(term,doc) TF aggregation (map-side
-  partial combine) and the salted (term, salt) run shuffle — both bounded
-  per reducer by ``range_size`` for heavy terms;
 * group scans push ``doc_id`` range predicates into the forward-index
-  parquet (written range-partitioned by doc_id, so file pruning applies).
+  parquet (written range-partitioned by doc_id, so file pruning applies);
+* placement rule: each driver-vs-Spark choice has ONE budget and both
+  sides run the same code. Stage 1b plans its sources once
+  (:func:`_stage1b_plan`) and aggregates them in pandas at or under
+  ``DRIVER_DICT_MAX_ROWS`` metadata rows, in Spark above. Stage 3 merges
+  every bucket with one kernel (:func:`_merge_bucket`): on driver threads
+  at or under ``DRIVER_MERGE_MAX_POSTINGS`` input postings; above it as
+  one Spark task per bucket when the input is segment rows (purge,
+  compaction after ``gc_runs``), and through the salted (term, salt) run
+  shuffle when the input is runs (first build, large append) — the salt
+  bounds every reducer group by ``range_size`` postings;
+* index roots are local paths (:class:`IndexPaths` rejects URIs), since
+  manifests commit through ``os``.
 """
 
 from __future__ import annotations
@@ -57,7 +66,20 @@ from dawnsearch_spark.operators.tf import (
 
 @dataclass(frozen=True)
 class IndexPaths:
+    """The directory layout of one index root. Roots are local paths:
+    manifests commit through ``os`` (manifest.py), so a scheme root would
+    put them under ``./file:/...`` while Spark writes the data at the URI,
+    and resume, crash recovery and Engine open would then depend on the
+    working directory."""
+
     root: str
+
+    def __post_init__(self) -> None:
+        if "://" in self.root:
+            raise ValueError(
+                f"index root {self.root!r} is a URI; index roots must be "
+                "local paths because manifests are local-only"
+            )
 
     @property
     def documents(self) -> str:
@@ -158,28 +180,21 @@ def _plan_groups(
     return plan
 
 
-def _pa_files(path: str) -> list[str] | None:
-    """Local parquet part files of a directory, or None when the path is
-    not a plain local directory (callers fall back to Spark)."""
+def _pa_files(path: str) -> list[str]:
+    """Parquet part files of a directory (empty when it is absent)."""
     import glob as _glob
 
-    if "://" in path or not os.path.isdir(path):
-        return None
     return sorted(_glob.glob(os.path.join(path, "*.parquet")))
 
 
 def _pa_read(path_or_files, columns=None):
-    """Driver-side pyarrow table read (no Spark job), or None."""
-    files = (
-        _pa_files(path_or_files)
-        if isinstance(path_or_files, str)
-        else path_or_files
-    )
-    if files is None:
-        return None
+    """Driver-side pyarrow table read (no Spark job)."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
+    files = (
+        _pa_files(path_or_files) if isinstance(path_or_files, str) else path_or_files
+    )
     if not files:
         return pa.table({c: [] for c in (columns or [])})
     return pads.dataset(files, format="parquet").to_table(columns=columns)
@@ -188,11 +203,9 @@ def _pa_read(path_or_files, columns=None):
 def _pa_count_max(path: str, col: str) -> tuple[int, int | None] | None:
     """(row count, max(col)) from parquet FOOTER metadata only — the
     exact values a Spark count/max job returns, read without a job.
-    None when the directory is not local or any row group lacks
-    statistics (caller falls back to Spark)."""
+    None when any row group lacks statistics (caller falls back to
+    Spark)."""
     files = _pa_files(path)
-    if files is None:
-        return None
     import pyarrow.parquet as papq
 
     total = 0
@@ -264,43 +277,52 @@ def load_stats(root: str) -> CorpusStats:
     )
 
 
-#: Postings budget for the DRIVER-SIDE merge fast path (zero Spark jobs):
-#: an append/compaction whose input fits decodes, merges and writes the
-#: new generation in-process via pyarrow — the build-side twin of the
-#: serving fast path (a ~10-stage Spark job costs whole seconds of fixed
-#: overhead on inputs this small). Scale-dependent, so env-overridable;
-#: inputs above the budget take the distributed merge unchanged.
+#: Postings budget for the DRIVER-SIDE merge placement (zero Spark jobs):
+#: an input that fits is read once via pyarrow, split by term bucket and
+#: merged by :func:`_merge_bucket` on driver threads — the build-side twin
+#: of the serving fast path (a ~10-stage Spark job costs whole seconds of
+#: fixed overhead on inputs this small). Scale-dependent, so
+#: env-overridable; inputs above the budget merge as Spark tasks.
 DRIVER_MERGE_MAX_POSTINGS = int(
     os.environ.get("DAWNSEARCH_SPARK_DRIVER_MERGE_POSTINGS", 4_000_000)
 )
 
+#: the one file each merged ``gen=K/bucket=B`` directory holds
+BUCKET_FILE = "part-00000.parquet"
 
-def _driver_merge_to_generation(
-    paths: IndexPaths,
-    cfg: EngineConfig,
-    group_ids: list[int],
-    gen_id: int,
-    source_gens: list[dict] | None = None,
-    tombstones=None,
-) -> dict | None:
-    """In-process (pyarrow, zero-Spark-job) twin of the distributed
-    stage-3 merge for budget-sized inputs. Emits EXACTLY the rows the
-    distributed path emits — same reclassify split set (dictionary-heavy
-    terms ∪ terms already salted in the input runs), same per-(term, salt)
-    k-way merge kernel, same tombstone mask, same ``_make_segment_row``
-    packing, same (term, range_id) file order per bucket — written as one
-    parquet file per ``gen=K/bucket=B`` directory with ~1 MB row groups
-    (the same term-pruning layout the distributed writer produces).
-    Returns None when the input is not driver-readable (non-local URI) —
-    the caller falls back to the distributed merge."""
-    import glob as _glob
+_MERGE_IN_COLS = ["n_docs", "doc_blob", "tf_blob", "dl_blob"]
 
-    import numpy as np
 
-    if "://" in paths.root:
-        return None
-    import pyarrow as pa
+def _heavy_terms(paths: IndexPaths) -> frozenset:
+    """The dictionary-heavy terms, via one filtered pyarrow read."""
     import pyarrow.dataset as pads
+
+    files = _pa_files(paths.terms)
+    if not files:
+        return frozenset()
+    td = pads.dataset(files, format="parquet").to_table(
+        columns=["term"], filter=pads.field("heavy") == True  # noqa: E712
+    )
+    return frozenset(td.column("term").to_pylist())
+
+
+def _merge_bucket(rows, salt_col: str, heavy, tomb, cfg: EngineConfig,
+                  bucket_dir: str) -> tuple[int, int]:
+    """THE merge kernel: merge, pack and write one term bucket.
+
+    ``rows`` is a pyarrow table of run-shaped rows of ONE bucket — posting
+    runs (``salt_col="salt"``) or segment rows reinterpreted as runs
+    (``salt_col="range_id"``: a segment row's blobs are valid run blobs).
+    Keys never span buckets (bucket = crc32(term)), so a bucket merges on
+    its own. Split set = dictionary-heavy terms ∪ terms already salted in
+    these rows: within one generation a term is served either as one light
+    row or as range rows, never both. Output: ``bucket_dir/part-00000``
+    sorted by (term, range_id), ~1 MB row groups (parquet footers become
+    the term directory pages the serving reads prune by). Returns
+    (rows, postings) written; an empty result writes nothing."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
     import pyarrow.parquet as papq
 
     from dawnsearch_spark.operators.merge import (
@@ -309,356 +331,238 @@ def _driver_merge_to_generation(
         segment_columns_to_rows,
     )
 
-    # ---- input rows: runs-sourced, else segment-sourced (compaction/purge
-    # after gc_runs), mirroring the distributed path's source selection ----
-    gdirs = [os.path.join(paths.runs, f"group={g}") for g in group_ids]
-    if source_gens is not None and not all(os.path.isdir(d) for d in gdirs):
-        src_groups = sorted(int(x) for g in source_gens for x in g["groups"])
-        if src_groups != sorted(int(g) for g in group_ids):
-            return None  # let the distributed path raise its precise error
-        files: list[str] = []
-        for g in source_gens:
-            if int(g.get("rows", 0)) > 0:
-                files.extend(
-                    sorted(
-                        _glob.glob(
-                            os.path.join(
-                                paths.segments, f"gen={int(g['gen'])}",
-                                "bucket=*", "*.parquet",
-                            )
-                        )
-                    )
-                )
-        salt_col = "range_id"
-    else:
-        if not all(os.path.isdir(d) for d in gdirs):
-            return None
-        files = []
-        for d in gdirs:
-            files.extend(sorted(_glob.glob(os.path.join(d, "*.parquet"))))
-        salt_col = "salt"
+    if not rows.num_rows:
+        return 0, 0
+    terms = rows.column("term").to_numpy(zero_copy_only=False)
+    salts = rows.column(salt_col).to_numpy(zero_copy_only=False).astype(np.int64)
+    salted = {t for t, s in zip(terms, salts) if s >= 0}
+    cols = merge_rows_columnar(
+        terms,
+        salts,
+        rows.column("n_docs").to_numpy(zero_copy_only=False).astype(np.int64),
+        rows.column("doc_blob").to_pylist(),
+        rows.column("tf_blob").to_pylist(),
+        rows.column("dl_blob").to_pylist(),
+        cfg,
+        split_terms=heavy | salted if salted else heavy,
+        tomb=tomb,
+    )
+    out = pd.DataFrame(segment_columns_to_rows(cols))
+    if not len(out):
+        return 0, 0
+    out = out.sort_values(["term", "range_id"], ignore_index=True)
+    i64, list_i64 = pa.int64(), pa.list_(pa.int64())
+    schema = pa.schema(
+        [
+            ("term", pa.string()), ("range_id", i64), ("n_docs", i64),
+            ("tf_sum", i64), ("doc_blob", pa.binary()),
+            ("tf_blob", pa.binary()), ("dl_blob", pa.binary()),
+            ("block_last", list_i64), ("block_doc_off", list_i64),
+            ("block_tf_off", list_i64), ("block_dl_off", list_i64),
+            ("front_tf", list_i64), ("front_dl", list_i64),
+            ("front_off", list_i64), ("max_tf", i64), ("min_dl", i64),
+        ]
+    )
+    blob_bytes = int(
+        sum(len(b) for c in ("doc_blob", "tf_blob", "dl_blob") for b in out[c])
+        + 200 * len(out)
+    )
+    rg_rows = max(16, int(len(out) * (1 << 20) / max(blob_bytes, 1)))
+    os.makedirs(bucket_dir, exist_ok=True)
+    papq.write_table(
+        pa.table({c: out[c].tolist() for c in SEGMENT_COLS if c != "bucket"},
+                 schema=schema),
+        os.path.join(bucket_dir, BUCKET_FILE),
+        row_group_size=min(rg_rows, len(out)),
+        compression="snappy",
+    )
+    return len(out), int(out["n_docs"].sum())
 
-    cols = ["term", salt_col, "n_docs", "doc_blob", "tf_blob", "dl_blob"]
-    if files:
-        tbl = pads.dataset(files, format="parquet").to_table(columns=cols)
-    else:
-        tbl = pa.table({c: [] for c in cols})
-    terms_v = tbl.column("term").to_numpy(zero_copy_only=False)
-    salts_v = tbl.column(salt_col).to_numpy(zero_copy_only=False).astype(np.int64)
-    ndocs_v = tbl.column("n_docs").to_numpy(zero_copy_only=False).astype(np.int64)
-    doc_v = tbl.column("doc_blob").to_pylist()
-    tf_v = tbl.column("tf_blob").to_pylist()
-    dl_v = tbl.column("dl_blob").to_pylist()
 
-    # ---- split set: dictionary-heavy terms ∪ already-salted input terms ----
-    heavy_set: set = set()
-    if os.path.isdir(paths.terms):
-        tfiles = sorted(_glob.glob(os.path.join(paths.terms, "*.parquet")))
-        if tfiles:
-            td = pads.dataset(tfiles, format="parquet").to_table(
-                columns=["term", "heavy"],
-                filter=pads.field("heavy") == True,  # noqa: E712
+def _generation_files(paths: IndexPaths, gens: list[dict]) -> list[str]:
+    """Segment part files of the given generations (rows == 0 ones have
+    none)."""
+    import glob as _glob
+
+    return [
+        f
+        for g in gens
+        if int(g.get("rows", 0) or 0) > 0
+        for f in sorted(
+            _glob.glob(
+                os.path.join(paths.segments, f"gen={int(g['gen'])}", "bucket=*", "*.parquet")
             )
-            heavy_set = set(td.column("term").to_pylist())
-    split_set = heavy_set | {t for t, s in zip(terms_v, salts_v) if s >= 0}
+        )
+    ]
 
-    # ---- reclassify + merge + pack, batched PER BUCKET and threaded ----
-    # Keys never span buckets (bucket = crc32(term)), so the kernel is
-    # separable by bucket: each thread merges + packs + writes one
-    # bucket's rows (identical per-key output to the single global kernel
-    # — the lexsort is fully determined by the posting keys). The NumPy
-    # kernels release the GIL for their array passes, so a small pool
-    # overlaps them; single-threaded this merge was the dominant phase of
-    # a 10k-doc append (3-4 s) and of small compactions (7 s).
-    tomb = None
-    if tombstones is not None and len(tombstones):
-        tomb = np.sort(np.asarray(tombstones, np.int64))
-    import pandas as pd
+
+def _merge_source(
+    paths: IndexPaths, group_ids: list[int], source_gens: list[dict] | None
+) -> tuple[str, list[str]]:
+    """(salt column, input files) of a merge. Runs-sourced while every
+    group's run dir exists; otherwise (compaction / purge after
+    ``gc_runs``) the source generations' segment files, which must cover
+    exactly the requested groups."""
+    gdirs = [os.path.join(paths.runs, f"group={g}") for g in group_ids]
+    if source_gens is None or all(os.path.isdir(d) for d in gdirs):
+        missing = [g for g, d in zip(group_ids, gdirs) if not os.path.isdir(d)]
+        if missing:
+            raise FileNotFoundError(f"merge: run groups {missing} have no run dir")
+        return "salt", [f for d in gdirs for f in _pa_files(d)]
+    src_groups = sorted(int(x) for g in source_gens for x in g["groups"])
+    if src_groups != sorted(int(g) for g in group_ids):
+        raise RuntimeError(
+            f"segment-sourced merge needs generations covering exactly "
+            f"the requested groups (gens cover {src_groups}, "
+            f"requested {sorted(group_ids)})"
+        )
+    return "range_id", _generation_files(paths, source_gens)
+
+
+def _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir) -> dict[int, tuple[int, int]]:
+    """Driver placement: one pyarrow read, split by bucket, the kernel on a
+    small thread pool (its NumPy passes release the GIL)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    import numpy as np
 
     from dawnsearch_spark.operators.merge import term_bucket_py
 
-    gdir = os.path.join(paths.segments, f"gen={gen_id}")
-    if os.path.isdir(gdir):  # crash leftover from an uncommitted attempt
-        import shutil
-
-        shutil.rmtree(gdir, ignore_errors=True)
-
-    uterms, tinv = np.unique(terms_v, return_inverse=True)
+    tbl = _pa_read(files, columns=["term", salt_col] + _MERGE_IN_COLS)
+    uterms, tinv = np.unique(
+        tbl.column("term").to_numpy(zero_copy_only=False), return_inverse=True
+    )
     ubuckets = np.fromiter(
         (term_bucket_py(str(t), cfg.num_term_buckets) for t in uterms),
         np.int64,
         len(uterms),
     )
     row_bucket = ubuckets[tinv]
-    list_i64 = pa.list_(pa.int64())
-    schema = pa.schema(
-        [
-            ("term", pa.string()),
-            ("range_id", pa.int64()),
-            ("n_docs", pa.int64()),
-            ("tf_sum", pa.int64()),
-            ("doc_blob", pa.binary()),
-            ("tf_blob", pa.binary()),
-            ("dl_blob", pa.binary()),
-            ("block_last", list_i64),
-            ("block_doc_off", list_i64),
-            ("block_tf_off", list_i64),
-            ("block_dl_off", list_i64),
-            ("front_tf", list_i64),
-            ("front_dl", list_i64),
-            ("front_off", list_i64),
-            ("max_tf", pa.int64()),
-            ("min_dl", pa.int64()),
-        ]
-    )
-    file_cols = [c for c in SEGMENT_COLS if c != "bucket"]
-
-    def _merge_one_bucket(bkt: int) -> tuple[int, int]:
-        sel = np.flatnonzero(row_bucket == bkt)
-        if not len(sel):
-            return 0, 0
-        cols_out = merge_rows_columnar(
-            terms_v[sel],
-            salts_v[sel],
-            ndocs_v[sel],
-            [doc_v[i] for i in sel],
-            [tf_v[i] for i in sel],
-            [dl_v[i] for i in sel],
-            cfg,
-            split_terms=split_set,
-            tomb=tomb,
-        )
-        rows_map = segment_columns_to_rows(cols_out)
-        grp = pd.DataFrame(rows_map)
-        if not len(grp):
-            return 0, 0
-        grp = grp.sort_values(["term", "range_id"], ignore_index=True)
-        bdir = os.path.join(gdir, f"bucket={bkt}")
-        os.makedirs(bdir, exist_ok=True)
-        btbl = pa.table({c: grp[c].tolist() for c in file_cols}, schema=schema)
-        blob_bytes = int(
-            sum(len(b) for b in grp["doc_blob"])
-            + sum(len(b) for b in grp["tf_blob"])
-            + sum(len(b) for b in grp["dl_blob"])
-            + 200 * len(grp)
-        )
-        rg_rows = max(16, int(len(grp) * (1 << 20) / max(blob_bytes, 1)))
-        papq.write_table(
-            btbl,
-            os.path.join(bdir, "part-00000.parquet"),
-            row_group_size=min(rg_rows, len(grp)),
-            compression="snappy",
-        )
-        return len(grp), int(grp["n_docs"].sum())
-
     present = sorted({int(b) for b in row_bucket})
-    if present:
-        os.makedirs(gdir, exist_ok=True)
-        from concurrent.futures import ThreadPoolExecutor
+    if not present:
+        return {}
 
-        with ThreadPoolExecutor(max_workers=min(8, len(present))) as pool:
-            results = list(pool.map(_merge_one_bucket, present))
-    else:
-        results = []
-    n_rows = int(sum(r for r, _ in results))
-    postings_out = int(sum(p for _, p in results))
-    return {
-        "gen": int(gen_id),
-        "groups": [int(g) for g in group_ids],
-        "rows": n_rows,
-        "postings": postings_out,
-        "bytes": dir_bytes(gdir),
-    }
+    def one(b: int) -> tuple[int, tuple[int, int]]:
+        rows = tbl.take(np.flatnonzero(row_bucket == b))
+        return b, _merge_bucket(
+            rows, salt_col, heavy, tomb, cfg, os.path.join(gdir, f"bucket={b}")
+        )
+
+    with ThreadPoolExecutor(max_workers=min(8, len(present))) as pool:
+        return dict(pool.map(one, present))
 
 
-def _bucket_merge_to_generation(
-    spark: SparkSession,
-    paths: IndexPaths,
-    cfg: EngineConfig,
-    group_ids: list[int],
-    gen_id: int,
-    source_gens: list[dict],
-    tombstones=None,
-) -> dict | None:
-    """Shuffle-free SEGMENT-SOURCED merge (compaction / purge): one task
-    per term bucket, each reading its bucket's files across the source
-    generations directly via pyarrow and running the same columnar merge
-    kernel, then writing its bucket's output file in place.
+def _merge_in_tasks(spark, cfg, files, heavy, tomb, gdir) -> dict[int, tuple[int, int]]:
+    """Task placement for big SEGMENT-sourced merges: one Spark task per
+    bucket reads that bucket's files and runs the kernel. No exchange —
+    every row of a (term, range), in every generation, already lives under
+    the same ``bucket=B`` directories."""
+    by_bucket: dict[int, list[str]] = {}
+    for f in files:
+        b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+        by_bucket.setdefault(b, []).append(f)
+    sc = spark.sparkContext
+    files_bc, heavy_bc, tomb_bc = (
+        sc.broadcast(by_bucket), sc.broadcast(heavy), sc.broadcast(tomb)
+    )
 
-    Why no exchange is needed: ``bucket = crc32(term) % num_term_buckets``
-    is a pure function of the term, so ALL rows of a (term, range) — in
-    every generation — already live under the same ``bucket=B`` partition
-    directories; the distributed merge's (term, salt) repartition of every
-    posting blob re-derived a grouping the on-disk layout already has
-    (guide §2.4: remove shuffles the data's existing partitioning makes
-    redundant). Row content is byte-identical to the other merge paths
-    (same kernel, and the kernel's lexsort is fully determined by the
-    posting keys); the per-bucket one-file layout matches the driver
-    merge's. The per-bucket split set (dictionary-heavy terms plus terms
-    already salted in that bucket's rows) equals the global split set
-    restricted to the bucket, for the same reason the layout does.
-
-    Returns None when the index is not a local filesystem path (the
-    shuffle-based merge handles remote layouts)."""
-    import glob as _glob
-
-    import numpy as np
-
-    if "://" in paths.root:
-        return None
-    gdirs = [os.path.join(paths.runs, f"group={g}") for g in group_ids]
-    if all(os.path.isdir(d) for d in gdirs):
-        return None  # runs-sourced merges keep the distributed path
-    src_groups = sorted(int(x) for g in source_gens for x in g["groups"])
-    if src_groups != sorted(int(g) for g in group_ids):
-        return None  # let the distributed path raise its precise error
-
-    bucket_files: dict[int, list[str]] = {}
-    for g in source_gens:
-        if int(g.get("rows", 0)) > 0:
-            for bdir in _glob.glob(
-                os.path.join(paths.segments, f"gen={int(g['gen'])}", "bucket=*")
-            ):
-                b = int(bdir.rsplit("=", 1)[1])
-                bucket_files.setdefault(b, []).extend(
-                    sorted(_glob.glob(os.path.join(bdir, "*.parquet")))
-                )
-
-    heavy_set: set = set()
-    if os.path.isdir(paths.terms):
-        import pyarrow.dataset as pads
-
-        tfiles = sorted(_glob.glob(os.path.join(paths.terms, "*.parquet")))
-        if tfiles:
-            td = pads.dataset(tfiles, format="parquet").to_table(
-                columns=["term", "heavy"],
-                filter=pads.field("heavy") == True,  # noqa: E712
-            )
-            heavy_set = set(td.column("term").to_pylist())
-
-    gdir = os.path.join(paths.segments, f"gen={gen_id}")
-    if os.path.isdir(gdir):  # crash leftover from an uncommitted attempt
-        import shutil
-
-        shutil.rmtree(gdir, ignore_errors=True)
-    os.makedirs(gdir, exist_ok=True)
-
-    tomb = None
-    if tombstones is not None and len(tombstones):
-        tomb = np.sort(np.asarray(tombstones, np.int64))
-    tomb_bc = spark.sparkContext.broadcast(tomb)
-    heavy_bc = spark.sparkContext.broadcast(frozenset(heavy_set))
-    files_bc = spark.sparkContext.broadcast(bucket_files)
-    cfg_local = cfg
-    gdir_local = gdir
-
-    def gen(batches):
+    def task(batches):
         import pandas as pd
-        import pyarrow as pa
-        import pyarrow.dataset as pads
-        import pyarrow.parquet as papq
 
-        from dawnsearch_spark.operators.merge import (
-            SEGMENT_COLS,
-            merge_rows_columnar,
-            segment_columns_to_rows,
-        )
-
-        cols_in = ["term", "range_id", "n_docs", "doc_blob", "tf_blob", "dl_blob"]
-        list_i64 = pa.list_(pa.int64())
-        schema = pa.schema(
-            [
-                ("term", pa.string()), ("range_id", pa.int64()),
-                ("n_docs", pa.int64()), ("tf_sum", pa.int64()),
-                ("doc_blob", pa.binary()), ("tf_blob", pa.binary()),
-                ("dl_blob", pa.binary()),
-                ("block_last", list_i64), ("block_doc_off", list_i64),
-                ("block_tf_off", list_i64), ("block_dl_off", list_i64),
-                ("front_tf", list_i64), ("front_dl", list_i64),
-                ("front_off", list_i64),
-                ("max_tf", pa.int64()), ("min_dl", pa.int64()),
-            ]
-        )
-        file_cols = [c for c in SEGMENT_COLS if c != "bucket"]
         for pdf in batches:
-            for b in pdf["id"].to_numpy():
-                files = files_bc.value.get(int(b), [])
-                if not files:
-                    continue
-                tbl = pads.dataset(files, format="parquet").to_table(columns=cols_in)
-                terms_v = tbl.column("term").to_numpy(zero_copy_only=False)
-                salts_v = (
-                    tbl.column("range_id").to_numpy(zero_copy_only=False).astype(np.int64)
-                )
-                ndocs_v = (
-                    tbl.column("n_docs").to_numpy(zero_copy_only=False).astype(np.int64)
-                )
-                split_set = frozenset(heavy_bc.value) | {
-                    t for t, s in zip(terms_v, salts_v) if s >= 0
-                }
-                cols_out = merge_rows_columnar(
-                    terms_v, salts_v, ndocs_v,
-                    tbl.column("doc_blob").to_pylist(),
-                    tbl.column("tf_blob").to_pylist(),
-                    tbl.column("dl_blob").to_pylist(),
-                    cfg_local, split_terms=split_set, tomb=tomb_bc.value,
-                )
-                rows_map = segment_columns_to_rows(cols_out)
-                rows_df = pd.DataFrame(rows_map)
-                n_rows = len(rows_df)
-                if not n_rows:
-                    yield pd.DataFrame({"bucket": [int(b)], "rows": [0], "postings": [0]})
-                    continue
-                rows_df = rows_df.sort_values(["term", "range_id"], ignore_index=True)
-                bdir = os.path.join(gdir_local, f"bucket={int(b)}")
-                os.makedirs(bdir, exist_ok=True)
-                btbl = pa.table(
-                    {c: rows_df[c].tolist() for c in file_cols}, schema=schema
-                )
-                blob_bytes = int(
-                    sum(len(x) for x in rows_df["doc_blob"])
-                    + sum(len(x) for x in rows_df["tf_blob"])
-                    + sum(len(x) for x in rows_df["dl_blob"])
-                    + 200 * n_rows
-                )
-                rg_rows = max(16, int(n_rows * (1 << 20) / max(blob_bytes, 1)))
-                papq.write_table(
-                    btbl,
-                    os.path.join(bdir, "part-00000.parquet"),
-                    row_group_size=min(rg_rows, n_rows),
-                    compression="snappy",
-                )
-                yield pd.DataFrame(
-                    {
-                        "bucket": [int(b)],
-                        "rows": [n_rows],
-                        "postings": [int(rows_df["n_docs"].sum())],
-                    }
-                )
+            for b in pdf["id"].tolist():
+                fl = files_bc.value.get(b)
+                if fl:
+                    n, p = _merge_bucket(
+                        _pa_read(fl, columns=["term", "range_id"] + _MERGE_IN_COLS),
+                        "range_id", heavy_bc.value, tomb_bc.value, cfg,
+                        os.path.join(gdir, f"bucket={b}"),
+                    )
+                    yield pd.DataFrame({"bucket": [b], "rows": [n], "postings": [p]})
 
     n_b = cfg.num_term_buckets
-    stats_rows = (
-        spark.range(0, n_b, 1, numPartitions=n_b)
-        .mapInPandas(gen, "bucket long, rows long, postings long")
-        .collect()
+    try:
+        out = (
+            spark.range(0, n_b, 1, numPartitions=n_b)
+            .mapInPandas(task, "bucket long, rows long, postings long")
+            .collect()
+        )
+    finally:
+        for bc in (files_bc, heavy_bc, tomb_bc):
+            bc.destroy()
+    return {int(r["bucket"]): (int(r["rows"]), int(r["postings"])) for r in out}
+
+
+def _check_bucket_files(gdir: str, per_bucket: dict[int, tuple[int, int]]) -> None:
+    """Every bucket reported with rows must have its file where the driver
+    can see it. Task-written files on a non-shared local path would
+    otherwise commit a generation the driver (and every reader) misses."""
+    missing = sorted(
+        b
+        for b, (n, _) in per_bucket.items()
+        if n and not os.path.isfile(os.path.join(gdir, f"bucket={b}", BUCKET_FILE))
     )
-    tomb_bc.destroy()
-    heavy_bc.destroy()
-    files_bc.destroy()
-    return {
-        "gen": int(gen_id),
-        "groups": [int(g) for g in group_ids],
-        "rows": int(sum(r["rows"] for r in stats_rows)),
-        "postings": int(sum(r["postings"] for r in stats_rows)),
-        "bytes": dir_bytes(gdir),
-    }
+    if missing:
+        raise RuntimeError(
+            f"merge into {gdir}: buckets {missing} reported rows but their "
+            "files are not visible to the driver (executors must write to "
+            "a path the driver shares)"
+        )
+
+
+def _merge_shuffled(spark, paths, cfg, group_ids, in_postings, tomb, gdir) -> tuple[int, int]:
+    """Big RUNS-sourced merge (first build / large append): reclassify
+    runs against the split set, then one (term, salt) shuffle into
+    :func:`merge_runs_segments` — the salt spreads one heavy term's doc
+    ranges over many tasks. Returns (rows, postings) written."""
+    from dawnsearch_spark.operators.merge import merge_runs_segments
+
+    runs_raw = spark.read.option("basePath", paths.runs).parquet(
+        *[os.path.join(paths.runs, f"group={g}") for g in group_ids]
+    )
+    split_terms = (
+        spark.read.parquet(paths.terms).filter(F.col("heavy")).select("term")
+        .union(runs_raw.filter(F.col("salt") >= 0).select("term"))
+        .distinct()
+    )
+    tomb_bc = spark.sparkContext.broadcast(tomb) if tomb is not None else None
+    # sized to the INPUT, not the cluster: ~250k postings per merge task
+    # (32 near-empty shuffle tasks cost whole seconds on small input)
+    merge_parts = max(1, min(cfg.build_partitions, in_postings // 250_000 + 1))
+    seg = merge_runs_segments(
+        reclassify_runs(runs_raw, split_terms, cfg), cfg, merge_parts,
+        tombstones_bc=tomb_bc,
+    )
+    try:
+        (
+            seg.repartition(merge_parts, "bucket")
+            .sortWithinPartitions("term", "range_id")
+            # term-sorted files + ~1 MB row groups: the same term-pruning
+            # layout the kernel writes
+            .write.mode("overwrite")
+            .option("parquet.block.size", str(1 << 20))
+            .partitionBy("bucket")
+            .parquet(gdir)
+        )
+    finally:
+        if tomb_bc is not None:
+            tomb_bc.destroy()
+    import glob as _glob
+
+    # an all-empty-content batch leaves no schema-bearing file: 0 rows
+    bt = _pa_read(
+        sorted(_glob.glob(os.path.join(gdir, "bucket=*", "*.parquet"))),
+        columns=["n_docs"],
+    )
+    if not bt.num_rows:
+        return 0, 0
+    return bt.num_rows, int(bt.column("n_docs").to_numpy(zero_copy_only=False).sum())
 
 
 def merge_groups_to_generation(
     spark: SparkSession,
     paths: IndexPaths,
     cfg: EngineConfig,
-    heavy_terms: DataFrame,
     group_ids: list[int],
     gen_id: int,
     source_gens: list[dict] | None = None,
@@ -668,108 +572,23 @@ def merge_groups_to_generation(
 
     ``source_gens`` (committed generation dicts covering exactly
     ``group_ids``) lets the merge source from the POSTINGS ALREADY IN
-    those generations' segment rows instead of runs/: a segment row's
-    doc/tf/dl blobs are valid run blobs (same delta+varbyte streams —
-    block-leading gaps are plain gaps, see codec.decode_all_postings),
-    so the rows reinterpret as runs with salt = range_id and
-    group = gen, zero re-encoding. The runs-sourced path is kept
-    whenever every group's run dir still exists (byte-identical
-    output either way: both decode to the same disjoint docID-sorted
-    posting sets, and the merge + block pack are deterministic); with
-    ``cfg.gc_runs`` the dirs are gone and compaction runs entirely
-    off the index itself — runs/ storage is reclaimed instead of
-    doubling the index forever (VERDICT r4 #1).
+    those generations' segment rows once runs/ is gone (``gc_runs``):
+    the rows reinterpret as runs with salt = range_id, zero re-encoding,
+    and both sources merge to the same rows.
 
-    ``tombstones`` (sorted int64 doc_ids) drops those docs' postings
-    during the merge — the purge path of the delete lifecycle
-    (Lucene-style: deletes are tombstones until a merge rewrites the
-    affected rows)."""
-    # Budget-sized inputs (appends, small compactions/purges) merge on
-    # the driver with zero Spark jobs — identical output rows, ~10 Spark
-    # stages of fixed overhead saved (dominant at O(batch) input sizes).
-    if source_gens is not None:
-        _in_postings = sum(int(g.get("postings", 0) or 0) for g in source_gens)
-    else:
-        _in_postings = sum(
-            int((read_manifest(paths.root, f"runs_group_{g}") or {}).get("postings", 0) or 0)
-            for g in group_ids
-        )
-    if _in_postings <= DRIVER_MERGE_MAX_POSTINGS:
-        gd = _driver_merge_to_generation(
-            paths, cfg, group_ids, gen_id, source_gens=source_gens,
-            tombstones=tombstones,
-        )
-        if gd is not None:
-            return gd
-    elif source_gens is not None:
-        # big segment-sourced merge (purge / large compaction): the
-        # bucket layout already groups every (term, range) — merge per
-        # bucket with zero exchanges instead of re-shuffling every blob
-        gd = _bucket_merge_to_generation(
-            spark, paths, cfg, group_ids, gen_id, source_gens,
-            tombstones=tombstones,
-        )
-        if gd is not None:
-            return gd
+    ``tombstones`` (doc_ids) drops those docs' postings during the merge —
+    the purge path of the delete lifecycle.
 
-    gdirs = [os.path.join(paths.runs, f"group={g}") for g in group_ids]
-    if source_gens is not None and not all(os.path.isdir(d) for d in gdirs):
-        src_dirs = [
-            os.path.join(paths.segments, f"gen={int(g['gen'])}")
-            for g in source_gens
-            if int(g.get("rows", 0)) > 0
-        ]
-        src_groups = sorted(int(x) for g in source_gens for x in g["groups"])
-        if src_groups != sorted(int(g) for g in group_ids):
-            raise RuntimeError(
-                f"segment-sourced merge needs generations covering exactly "
-                f"the requested groups (gens cover {src_groups}, "
-                f"requested {sorted(group_ids)})"
-            )
-        if src_dirs:
-            runs_raw = (
-                spark.read.option("basePath", paths.segments)
-                .parquet(*src_dirs)
-                .select(
-                    "term",
-                    F.col("range_id").alias("salt"),
-                    "n_docs",
-                    "tf_sum",
-                    "doc_blob",
-                    "tf_blob",
-                    "dl_blob",
-                    F.col("gen").cast("long").alias("group"),
-                )
-            )
-        else:  # all-empty source generations
-            from dawnsearch_spark.operators.postings import RUN_SCHEMA
+    Placement, by input postings: at or under ``DRIVER_MERGE_MAX_POSTINGS``
+    the driver runs :func:`_merge_bucket` per bucket (zero Spark jobs);
+    above it a segment-sourced merge runs the same kernel as one Spark
+    task per bucket, and a runs-sourced merge takes the (term, salt)
+    shuffle. Every placement writes the same rows."""
+    import shutil
 
-            runs_raw = spark.createDataFrame([], RUN_SCHEMA + ", group long")
-    else:
-        runs_raw = spark.read.option("basePath", paths.runs).parquet(*gdirs)
-    # Within ONE generation a term is served either as one light row
-    # or as range rows, never both (uniform layout per gen keeps the
-    # merge single-pass); ACROSS generations a term may be mixed —
-    # the query layer treats every row as an additive disjoint
-    # posting set. Split set = globally-heavy terms plus any term
-    # already salted in these runs.
-    split_terms = (
-        heavy_terms.select("term")
-        .union(runs_raw.filter(F.col("salt") >= 0).select("term"))
-        .distinct()
-    )
-    tomb_bc = None
-    if tombstones is not None and len(tombstones):
-        import numpy as np
+    import numpy as np
 
-        tomb_bc = spark.sparkContext.broadcast(
-            np.sort(np.asarray(tombstones, np.int64))
-        )
-    # Size the merge to its INPUT, not the cluster: an append merges one
-    # small generation's worth of runs, and 32 near-empty shuffle tasks
-    # cost whole seconds of fixed overhead on tiny input (the same
-    # rationale as _doc_partitions). ~250k postings per merge task; a
-    # full build still fans out to build_partitions.
+    salt_col, files = _merge_source(paths, group_ids, source_gens)
     if source_gens is not None:
         in_postings = sum(int(g.get("postings", 0) or 0) for g in source_gens)
     else:
@@ -777,72 +596,37 @@ def merge_groups_to_generation(
             int((read_manifest(paths.root, f"runs_group_{g}") or {}).get("postings", 0) or 0)
             for g in group_ids
         )
-    merge_parts = max(1, min(cfg.build_partitions, in_postings // 250_000 + 1))
-    runs = reclassify_runs(runs_raw, split_terms, cfg)
-    # one (term, salt)-keyed exchange merges light AND salted keys (light
-    # keys have constant salt = -1, so the unified key loses nothing) —
-    # the former two-branch plan paid two exchanges + two Python stages
-    # plus a persist of the reclassified runs to feed both branches
-    from dawnsearch_spark.operators.merge import merge_runs_segments
-
-    seg = merge_runs_segments(runs, cfg, merge_parts, tombstones_bc=tomb_bc)
     gdir = os.path.join(paths.segments, f"gen={gen_id}")
-    (
-        seg.repartition(merge_parts, "bucket")
-        .sortWithinPartitions("term", "range_id")
-        # term-sorted files + small row groups = every row group's
-        # (min_term, max_term) stats span a narrow slice, so a
-        # query-term filter prunes to 1-2 row groups per bucket —
-        # parquet footers become the term directory pages of a
-        # classical inverted index (drives both the pyarrow serving
-        # reads and Spark's scan-level row-group skipping)
-        .write.mode("overwrite")
-        .option("parquet.block.size", str(1 << 20))
-        .partitionBy("bucket")
-        .parquet(gdir)
-    )
-    import glob as _glob
-
-    # an all-empty-content batch produces ZERO segment rows: the
-    # partitionBy write then leaves no schema-bearing file, so the
-    # read-back would fail — record a 0-row generation instead
-    # (readers skip rows == 0 generations entirely)
-    files = _glob.glob(os.path.join(gdir, "bucket=*", "*.parquet"))
-    if files:
-        _bt = _pa_read(sorted(files), columns=["n_docs"]) if "://" not in gdir else None
-        if _bt is not None:
-            rows = _bt.num_rows
-            postings = (
-                int(_bt.column("n_docs").to_numpy(zero_copy_only=False).sum())
-                if rows
-                else 0
-            )
-        else:
-            agg = (
-                spark.read.parquet(gdir)
-                .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum("n_docs").alias("postings"),
-                )
-                .collect()[0]
-            )
-            rows, postings = int(agg["rows"]), int(agg["postings"] or 0)
+    shutil.rmtree(gdir, ignore_errors=True)  # crash leftover of an uncommitted attempt
+    tomb = None
+    if tombstones is not None and len(tombstones):
+        tomb = np.sort(np.asarray(tombstones, np.int64))
+    if in_postings > DRIVER_MERGE_MAX_POSTINGS and salt_col == "salt":
+        rows, postings = _merge_shuffled(
+            spark, paths, cfg, group_ids, in_postings, tomb, gdir
+        )
     else:
-        rows, postings = 0, 0
+        heavy = _heavy_terms(paths)
+        if in_postings <= DRIVER_MERGE_MAX_POSTINGS:
+            per_bucket = _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir)
+        else:
+            per_bucket = _merge_in_tasks(spark, cfg, files, heavy, tomb, gdir)
+        _check_bucket_files(gdir, per_bucket)
+        rows = sum(n for n, _ in per_bucket.values())
+        postings = sum(p for _, p in per_bucket.values())
     return {
         "gen": int(gen_id),
         "groups": [int(g) for g in group_ids],
-        "rows": rows,
-        "postings": postings,
+        "rows": int(rows),
+        "postings": int(postings),
         "bytes": dir_bytes(gdir),
     }
 
 
-#: Metadata-row budget for the DRIVER-SIDE stage-1b dictionary path: the
+#: Metadata-row budget for the DRIVER-SIDE stage-1b aggregation: the
 #: dictionary update is a pure metadata aggregate (term, n_docs, tf_sum
-#: over runs/segment rows), so under the budget it runs in-process via
-#: pyarrow + pandas — identical sums, no Spark jobs. Larger corpora (or
-#: remote indexes) take the distributed aggregation unchanged.
+#: over run/segment rows), so under the budget pandas runs it in-process —
+#: identical sums, no Spark jobs. Larger inputs aggregate in Spark.
 DRIVER_DICT_MAX_ROWS = int(
     os.environ.get("DAWNSEARCH_SPARK_DRIVER_DICT_ROWS", 6_000_000)
 )
@@ -872,74 +656,180 @@ def _write_stats_manifest(
     )
 
 
-def _stage1b_driver(
-    spark: SparkSession,
-    paths: IndexPaths,
-    cfg: EngineConfig,
-    fp: str,
-    eff_heavy: int,
-    all_ids: set,
-    t_covered: set | None,
-    n_docs_total: int,
-    log,
-) -> bool:
-    """Driver-side (zero-Spark-job) stage-1b: dictionary update + stats
-    from metadata read via pyarrow, pandas-aggregated. Sums over disjoint
-    doc sets are exact, so df/cf/heavy/bucket come out value-identical to
-    the distributed aggregation. Returns False (fall back to
-    :func:`_stage1b_spark`) for remote indexes or over-budget inputs."""
-    import glob as _glob
+def _stage1b_plan(paths: IndexPaths, fp: str, all_ids: set, t_covered: set | None) -> dict:
+    """What stage 1b aggregates, decided once for both aggregators:
 
+    * ``stats`` — the committed dictionary already covers the plan (a crash
+      after the dictionary swap): recount the stats only;
+    * ``fold`` — only new groups are uncovered (an append): fold their run
+      metadata into the committed dictionary, O(dict + new groups);
+    * ``full`` — re-aggregate (first build / purge / crash recovery).
+      Sources per GENERATION all-or-nothing (a generation's segment rows
+      cannot be attributed to individual groups): a generation with a GC'd
+      member group contributes its segment rows (df = Σ n_docs and
+      cf = Σ tf_sum hold there too), every other group its run dir.
+
+    Returns {mode, runs, segs (metadata files), rows (metadata rows the
+    aggregation reads), log (progress line or None)}."""
+    import pyarrow.parquet as papq
+
+    def run_dir(g: int) -> str:
+        return os.path.join(paths.runs, f"group={g}")
+
+    plan = {"mode": "full", "runs": [], "segs": [], "log": None}
+    dict_files = _pa_files(paths.terms) if _has_success(paths.terms) else []
+    if dict_files and t_covered == all_ids:
+        plan["mode"] = "stats"
+        plan["log"] = "stage1b dictionary already covers the plan; stats recount only"
+    elif dict_files and t_covered and t_covered < all_ids:
+        new_ids = sorted(all_ids - t_covered)
+        plan["mode"] = "fold"
+        plan["runs"] = [f for g in new_ids for f in _pa_files(run_dir(g))]
+        plan["log"] = (
+            f"stage1b dictionary updated incrementally: groups {new_ids} "
+            "folded into the committed dictionary (old runs untouched)"
+        )
+    else:
+        dict_files = []
+        seg_m = read_manifest(paths.root, "segments") or {}
+        gen_list = (
+            (seg_m.get("generations") or []) if seg_m.get("fingerprint") == fp else []
+        )
+        used_gens = [
+            g for g in gen_list if not all(os.path.isdir(run_dir(int(x))) for x in g["groups"])
+        ]
+        gen_covered = sorted({int(x) for g in used_gens for x in g["groups"]})
+        runs_groups = sorted(g for g in all_ids if g not in set(gen_covered))
+        missing = [g for g in runs_groups if not os.path.isdir(run_dir(g))]
+        if missing:
+            raise FileNotFoundError(
+                f"dictionary rebuild: run groups {missing} have neither "
+                "run dirs nor a committed segment generation"
+            )
+        plan["runs"] = [f for g in runs_groups for f in _pa_files(run_dir(g))]
+        plan["segs"] = _generation_files(paths, used_gens)
+        if used_gens:
+            plan["log"] = (
+                f"stage1b dictionary rebuilt from segment rows for GC'd groups {gen_covered}"
+                + (f" + run groups {runs_groups}" if runs_groups else "")
+            )
+    plan["rows"] = sum(
+        papq.read_metadata(f).num_rows
+        for f in dict_files + plan["runs"] + plan["segs"]
+    )
+    return plan
+
+
+def _stage1b_pandas(plan: dict, paths: IndexPaths, cfg: EngineConfig,
+                    eff_heavy: int, tmp: str) -> tuple[int, int, int, int]:
+    """Driver aggregator: pyarrow reads + a pandas groupby; writes the new
+    dictionary to ``tmp`` (unless ``stats``). Returns (n_terms, n_heavy,
+    n_postings, total_tokens)."""
     import numpy as np
-
-    if "://" in paths.root:
-        return False
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as papq
 
     from dawnsearch_spark.operators.merge import term_bucket_py
 
-    def _run_dir(g: int) -> str:
-        return os.path.join(paths.runs, f"group={g}")
-
-    def _finish_and_commit(agg: "pd.DataFrame") -> bool:
-        """agg: index=term, columns df/cf -> write dict + manifests."""
-        import pyarrow as pa
-        import pyarrow.parquet as papq
-        import shutil
-
-        agg = agg.sort_index()
-        terms = agg.index.to_numpy(dtype=object)
-        df_v = agg["df"].to_numpy(np.int64)
-        cf_v = agg["cf"].to_numpy(np.int64)
-        heavy_v = df_v > eff_heavy
-        bucket_v = np.fromiter(
-            (term_bucket_py(str(t), cfg.num_term_buckets) for t in terms),
-            np.int64,
-            len(terms),
+    if plan["mode"] == "stats":
+        tb = _pa_read(paths.terms, columns=["df", "cf", "heavy"])
+        return (
+            tb.num_rows,
+            int(tb.column("heavy").to_numpy(zero_copy_only=False).sum()),
+            int(tb.column("df").to_numpy(zero_copy_only=False).sum()),
+            int(tb.column("cf").to_numpy(zero_copy_only=False).sum()),
         )
-        schema = pa.schema(
-            [
-                ("term", pa.string()),
-                ("df", pa.int64()),
-                ("cf", pa.int64()),
-                ("heavy", pa.bool_()),
-                ("bucket", pa.int64()),
-            ]
-        )
-        tbl = pa.table(
-            {
-                "term": terms, "df": df_v, "cf": cf_v,
-                "heavy": heavy_v, "bucket": bucket_v,
-            },
+    meta = _pa_read(plan["runs"] + plan["segs"], columns=["term", "n_docs", "tf_sum"])
+    agg = meta.to_pandas().groupby("term", sort=False).agg(
+        df=("n_docs", "sum"), cf=("tf_sum", "sum")
+    )
+    if plan["mode"] == "fold":
+        old = _pa_read(paths.terms, columns=["term", "df", "cf"]).to_pandas()
+        agg = old.set_index("term").add(agg, fill_value=0)
+    agg = agg.sort_index()
+    terms = agg.index.to_numpy(dtype=object)
+    df_v = agg["df"].to_numpy(np.int64)
+    cf_v = agg["cf"].to_numpy(np.int64)
+    heavy_v = df_v > eff_heavy
+    bucket_v = np.fromiter(
+        (term_bucket_py(str(t), cfg.num_term_buckets) for t in terms),
+        np.int64,
+        len(terms),
+    )
+    schema = pa.schema(
+        [("term", pa.string()), ("df", pa.int64()), ("cf", pa.int64()),
+         ("heavy", pa.bool_()), ("bucket", pa.int64())]
+    )
+    os.makedirs(tmp)
+    papq.write_table(
+        pa.table(
+            {"term": terms, "df": df_v, "cf": cf_v, "heavy": heavy_v, "bucket": bucket_v},
             schema=schema,
+        ),
+        os.path.join(tmp, "part-00000.parquet"),
+        compression="snappy",
+    )
+    open(os.path.join(tmp, "_SUCCESS"), "w").close()
+    return len(terms), int(heavy_v.sum()), int(df_v.sum()), int(cf_v.sum())
+
+
+def _stage1b_spark(spark: SparkSession, plan: dict, paths: IndexPaths,
+                   cfg: EngineConfig, eff_heavy: int, tmp: str) -> tuple[int, int, int, int]:
+    """Distributed aggregator over the same plan (inputs above
+    ``DRIVER_DICT_MAX_ROWS``); same outputs as :func:`_stage1b_pandas`."""
+    src = paths.terms
+    if plan["mode"] != "stats":
+        meta = spark.createDataFrame([], "term string, n_docs long, tf_sum long")
+        for files in (plan["runs"], plan["segs"]):
+            if files:
+                meta = meta.unionByName(
+                    spark.read.parquet(*files).select("term", "n_docs", "tf_sum")
+                )
+        agg = meta.groupBy("term").agg(
+            F.sum("n_docs").cast("long").alias("df"),
+            F.sum("tf_sum").cast("long").alias("cf"),
         )
-        tmp = paths.terms + "_tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.makedirs(tmp)
-        papq.write_table(
-            tbl, os.path.join(tmp, "part-00000.parquet"), compression="snappy"
-        )
-        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+        if plan["mode"] == "fold":
+            agg = (
+                spark.read.parquet(paths.terms).select("term", "df", "cf")
+                .unionByName(agg)
+                .groupBy("term")
+                .agg(F.sum("df").cast("long").alias("df"),
+                     F.sum("cf").cast("long").alias("cf"))
+            )
+        agg.withColumn("heavy", F.col("df") > F.lit(eff_heavy)).withColumn(
+            "bucket", F.pmod(F.crc32(F.col("term")), F.lit(cfg.num_term_buckets))
+        ).write.mode("overwrite").parquet(tmp)
+        src = tmp
+    t = spark.read.parquet(src).agg(
+        F.count(F.lit(1)).alias("n_terms"),
+        F.sum(F.col("heavy").cast("int")).alias("n_heavy"),
+        F.sum("df").alias("n_postings"),
+        F.sum("cf").alias("total_tokens"),
+    ).collect()[0]
+    return (
+        int(t["n_terms"]), int(t["n_heavy"] or 0),
+        int(t["n_postings"] or 0), int(t["total_tokens"] or 0),
+    )
+
+
+def _stage1b(spark: SparkSession, paths: IndexPaths, cfg: EngineConfig, fp: str,
+             eff_heavy: int, all_ids: set, t_covered: set | None,
+             n_docs_total: int, log) -> None:
+    """Stage-1b commit: plan once, aggregate in pandas at or under
+    ``DRIVER_DICT_MAX_ROWS`` (Spark above), then tmp-write → swap → terms
+    manifest → stats manifest. Crash-safe: a crash before the terms
+    manifest re-plans from scratch on the next build."""
+    import shutil
+
+    plan = _stage1b_plan(paths, fp, all_ids, t_covered)
+    tmp = paths.terms + "_tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    if plan["rows"] <= DRIVER_DICT_MAX_ROWS:
+        totals = _stage1b_pandas(plan, paths, cfg, eff_heavy, tmp)
+    else:
+        totals = _stage1b_spark(spark, plan, paths, cfg, eff_heavy, tmp)
+    if plan["mode"] != "stats":
         shutil.rmtree(paths.terms, ignore_errors=True)
         os.rename(tmp, paths.terms)
         spark.catalog.refreshByPath(paths.terms)
@@ -948,280 +838,9 @@ def _stage1b_driver(
             "terms",
             {"fingerprint": fp, "groups": sorted(int(g) for g in all_ids)},
         )
-        _write_stats_manifest(
-            paths, fp, eff_heavy, n_docs_total,
-            n_terms=len(terms), n_heavy=int(heavy_v.sum()),
-            n_postings=int(df_v.sum()), total_tokens=int(cf_v.sum()), log=log,
-        )
-        return True
-
-    meta_cols = ["term", "n_docs", "tf_sum"]
-
-    if t_covered == all_ids and _has_success(paths.terms):
-        # dictionary already current: stats recount only
-        tb = _pa_read(paths.terms, columns=["df", "cf", "heavy"])
-        if tb is None:
-            return False
-        df_v = tb.column("df").to_numpy(zero_copy_only=False)
-        cf_v = tb.column("cf").to_numpy(zero_copy_only=False)
-        hv = tb.column("heavy").to_numpy(zero_copy_only=False)
-        log("stage1b dictionary already covers the plan; stats recount only")
-        _write_stats_manifest(
-            paths, fp, eff_heavy, n_docs_total,
-            n_terms=tb.num_rows, n_heavy=int(hv.sum()),
-            n_postings=int(df_v.sum()), total_tokens=int(cf_v.sum()), log=log,
-        )
-        return True
-
-    if (
-        t_covered is not None
-        and t_covered
-        and t_covered < all_ids
-        and _has_success(paths.terms)
-    ):
-        new_ids = sorted(all_ids - t_covered)
-        delta_rows = sum(
-            int((read_manifest(paths.root, f"runs_group_{g}") or {}).get("rows", 0) or 0)
-            for g in new_ids
-        )
-        if delta_rows > DRIVER_DICT_MAX_ROWS:
-            return False
-        old = _pa_read(paths.terms, columns=["term", "df", "cf"])
-        if old is None or old.num_rows > DRIVER_DICT_MAX_ROWS:
-            return False
-        dfiles: list[str] = []
-        for g in new_ids:
-            fl = _pa_files(_run_dir(g))
-            if fl is None:
-                return False
-            dfiles.extend(fl)
-        delta = _pa_read(dfiles, columns=meta_cols)
-        dpd = delta.to_pandas()
-        dagg = dpd.groupby("term", sort=False).agg(
-            df=("n_docs", "sum"), cf=("tf_sum", "sum")
-        )
-        opd = old.to_pandas().set_index("term")[["df", "cf"]]
-        agg = opd.add(dagg, fill_value=0).astype(np.int64)
-        log(
-            f"stage1b dictionary updated incrementally: groups {new_ids} "
-            "folded into the committed dictionary (old runs untouched)"
-        )
-        return _finish_and_commit(agg)
-
-    # full re-aggregation (first build / purge / crash recovery): same
-    # per-generation-all-or-nothing source selection as the Spark path
-    seg_m_now = read_manifest(paths.root, "segments") or {}
-    gen_list = (
-        list(seg_m_now.get("generations") or [])
-        if seg_m_now.get("fingerprint") == fp
-        else []
-    )
-    used_gens: list[dict] = []
-    gen_covered: set = set()
-    for gdict in gen_list:
-        gids = {int(x) for x in gdict["groups"]}
-        if not all(os.path.isdir(_run_dir(g)) for g in gids):
-            used_gens.append(gdict)
-            gen_covered |= gids
-    runs_groups = sorted(g for g in all_ids if g not in gen_covered)
-    if any(not os.path.isdir(_run_dir(g)) for g in runs_groups):
-        return False  # let the Spark path raise its precise error
-    src_rows = sum(
-        int((read_manifest(paths.root, f"runs_group_{g}") or {}).get("rows", 0) or 0)
-        for g in runs_groups
-    ) + sum(int(g.get("rows", 0) or 0) for g in used_gens)
-    if src_rows > DRIVER_DICT_MAX_ROWS:
-        return False
-    files: list[str] = []
-    for g in runs_groups:
-        fl = _pa_files(_run_dir(g))
-        if fl is None:
-            return False
-        files.extend(fl)
-    for gdict in used_gens:
-        if int(gdict.get("rows", 0) or 0) > 0:
-            files.extend(
-                sorted(
-                    _glob.glob(
-                        os.path.join(
-                            paths.segments, f"gen={int(gdict['gen'])}",
-                            "bucket=*", "*.parquet",
-                        )
-                    )
-                )
-            )
-    meta = _pa_read(files, columns=meta_cols)
-    mpd = meta.to_pandas()
-    if len(mpd):
-        agg = mpd.groupby("term", sort=False).agg(
-            df=("n_docs", "sum"), cf=("tf_sum", "sum")
-        )
-    else:
-        agg = pd.DataFrame(
-            {"df": pd.Series(dtype="int64"), "cf": pd.Series(dtype="int64")}
-        )
-        agg.index.name = "term"
-    if used_gens:
-        log(
-            "stage1b dictionary rebuilt from segment rows for GC'd groups "
-            f"{sorted(gen_covered)}"
-            + (f" + run groups {runs_groups}" if runs_groups else "")
-        )
-    return _finish_and_commit(agg)
-
-
-def _stage1b_spark(
-    spark: SparkSession,
-    paths: IndexPaths,
-    cfg: EngineConfig,
-    fp: str,
-    eff_heavy: int,
-    all_ids: set,
-    t_covered: set | None,
-    n_docs_total: int,
-    log,
-) -> None:
-    """Distributed stage-1b dictionary + stats commit (fallback when the
-    driver-side metadata path is over budget or the index is remote)."""
-    agg_cols = [
-        F.sum("n_docs").cast("long").alias("df"),
-        F.sum("tf_sum").cast("long").alias("cf"),
-    ]
-    finish = lambda df_: (
-        df_.withColumn("heavy", F.col("df") > F.lit(eff_heavy)).withColumn(
-            "bucket", F.pmod(F.crc32(F.col("term")), F.lit(cfg.num_term_buckets))
-        )
-    )
-    if t_covered == all_ids and _has_success(paths.terms):
-        # dictionary already current (crash after the dict swap but
-        # before the stats manifest): only recompute the stats below
-        log("stage1b dictionary already covers the plan; stats recount only")
-    elif (
-        t_covered is not None
-        and t_covered
-        and t_covered < all_ids
-        and _has_success(paths.terms)
-    ):
-        new_ids = sorted(all_ids - t_covered)
-        delta = (
-            spark.read.option("basePath", paths.runs)
-            .parquet(*[os.path.join(paths.runs, f"group={g}") for g in new_ids])
-            .select("term", "n_docs", "tf_sum")
-            .groupBy("term")
-            .agg(*agg_cols)
-        )
-        old = spark.read.parquet(paths.terms).select("term", "df", "cf")
-        dict_df = finish(
-            old.unionByName(delta.selectExpr("term", "df", "cf"))
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"), F.sum("cf").cast("long").alias("cf"))
-        )
-        tmp = paths.terms + "_tmp"
-        dict_df.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        shutil.rmtree(paths.terms, ignore_errors=True)
-        os.rename(tmp, paths.terms)
-        spark.catalog.refreshByPath(paths.terms)
-        log(
-            f"stage1b dictionary updated incrementally: groups {new_ids} "
-            f"folded into the committed dictionary (old runs untouched)"
-        )
-    else:
-        # Full re-aggregation. Sources per GENERATION all-or-nothing
-        # (a generation's segment rows cannot be attributed to
-        # individual groups): any generation with a GC'd member group
-        # contributes its segment rows — df = Σ n_docs and
-        # cf = Σ tf_sum hold identically there (disjoint doc sets,
-        # rows carry the same tf_sum partial as runs) — and every
-        # group outside those generations must still have its run dir.
-        def _run_dir(g: int) -> str:
-            return os.path.join(paths.runs, f"group={g}")
-
-        seg_m_now = read_manifest(paths.root, "segments") or {}
-        gen_list = (
-            list(seg_m_now.get("generations") or [])
-            if seg_m_now.get("fingerprint") == fp
-            else []
-        )
-        used_gens: list[dict] = []
-        gen_covered: set[int] = set()
-        for gdict in gen_list:
-            gids = {int(x) for x in gdict["groups"]}
-            if not all(os.path.isdir(_run_dir(g)) for g in gids):
-                used_gens.append(gdict)
-                gen_covered |= gids
-        runs_groups = sorted(g for g in all_ids if g not in gen_covered)
-        missing = [g for g in runs_groups if not os.path.isdir(_run_dir(g))]
-        if missing:
-            raise FileNotFoundError(
-                f"dictionary rebuild: run groups {missing} have neither "
-                "run dirs nor a committed segment generation"
-            )
-        parts = []
-        if runs_groups:
-            parts.append(
-                spark.read.option("basePath", paths.runs)
-                .parquet(*[_run_dir(g) for g in runs_groups])
-                .select("term", "n_docs", "tf_sum")
-            )
-        seg_dirs = [
-            os.path.join(paths.segments, f"gen={int(g['gen'])}")
-            for g in used_gens
-            if int(g.get("rows", 0)) > 0
-        ]
-        if seg_dirs:
-            parts.append(
-                spark.read.option("basePath", paths.segments)
-                .parquet(*seg_dirs)
-                .select("term", "n_docs", "tf_sum")
-            )
-        if parts:
-            runs_meta = parts[0]
-            for p in parts[1:]:
-                runs_meta = runs_meta.unionByName(p)
-            if used_gens:
-                log(
-                    "stage1b dictionary rebuilt from segment rows for "
-                    f"GC'd groups {sorted(gen_covered)}"
-                    + (f" + run groups {runs_groups}" if runs_groups else "")
-                )
-        else:  # empty corpus: no runs were written
-            runs_meta = spark.createDataFrame(
-                [], "term string, n_docs long, tf_sum long"
-            )
-        dict_df = finish(runs_meta.groupBy("term").agg(*agg_cols))
-        dict_df.write.mode("overwrite").parquet(paths.terms)
-    write_manifest(
-        paths.root,
-        "terms",
-        {"fingerprint": fp, "groups": sorted(int(g) for g in all_ids)},
-    )
-    tstats = spark.read.parquet(paths.terms).agg(
-        F.count(F.lit(1)).alias("n_terms"),
-        F.sum(F.col("heavy").cast("int")).alias("n_heavy"),
-        F.sum("df").alias("n_postings"),
-        F.sum("cf").alias("total_tokens"),
-    ).collect()[0]
-    total_tokens = int(tstats["total_tokens"] or 0)
-    write_manifest(
-        paths.root,
-        "stats",
-        {
-            "fingerprint": fp,
-            "n_docs": n_docs_total,
-            "avgdl": total_tokens / n_docs_total if n_docs_total else 0.0,
-            "total_tokens": total_tokens,
-            "n_terms": int(tstats["n_terms"]),
-            "n_heavy_terms": int(tstats["n_heavy"] or 0),
-            "n_postings": int(tstats["n_postings"] or 0),
-            "heavy_df_threshold": eff_heavy,
-        },
-    )
-    log(
-        f"stage1b stats committed: n_docs={n_docs_total} total_tokens={total_tokens} "
-        f"heavy={int(tstats['n_heavy'] or 0)}"
-    )
+    if plan["log"]:
+        log(plan["log"])
+    _write_stats_manifest(paths, fp, eff_heavy, n_docs_total, *totals, log=log)
 
 
 def build_index(
@@ -1395,19 +1014,7 @@ def build_index(
         and _has_success(paths.terms)
     )
     if dict_ok:
-        _tb = _pa_read(paths.terms, columns=["term", "heavy"])
-        if _tb is not None:  # driver-side read: no Spark job per append
-            _hv = _tb.column("heavy").to_numpy(zero_copy_only=False)
-            _tv = _tb.column("term").to_numpy(zero_copy_only=False)
-            committed_heavy = frozenset(_tv[_hv])
-        else:
-            committed_heavy = frozenset(
-                r["term"]
-                for r in spark.read.parquet(paths.terms)
-                .filter(F.col("heavy"))
-                .select("term")
-                .collect()
-            )
+        committed_heavy = _heavy_terms(paths)  # driver-side: no Spark job per append
         sample_lo = pending_lo
         n_sample_docs = max(0, id_space - pending_lo)
     else:
@@ -1486,22 +1093,12 @@ def build_index(
         # Driver-side pyarrow read of the one metadata column — the Spark
         # readback job was pure fixed overhead per append.
         _rt = _pa_read(gdir, columns=["n_docs"])
-        if _rt is not None:
-            agg = {
-                "rows": _rt.num_rows,
-                "postings": int(
-                    _rt.column("n_docs").to_numpy(zero_copy_only=False).sum()
-                ) if _rt.num_rows else 0,
-            }
-        else:
-            agg = (
-                spark.read.parquet(gdir)
-                .agg(
-                    F.count(F.lit(1)).alias("rows"),
-                    F.sum("n_docs").alias("postings"),
-                )
-                .collect()[0]
-            )
+        agg = {
+            "rows": _rt.num_rows,
+            "postings": int(
+                _rt.column("n_docs").to_numpy(zero_copy_only=False).sum()
+            ) if _rt.num_rows else 0,
+        }
         write_manifest(
             paths.root,
             name,
@@ -1560,17 +1157,11 @@ def build_index(
             and "groups" in terms_m
         ):
             t_covered = {int(x) for x in terms_m["groups"]}
-        if not _stage1b_driver(
+        _stage1b(
             spark, paths, cfg, fp, eff_heavy, all_ids, t_covered,
             n_docs_total, log,
-        ):
-            _stage1b_spark(
-                spark, paths, cfg, fp, eff_heavy, all_ids, t_covered,
-                n_docs_total, log,
-            )
+        )
     stats = load_stats(paths.root)
-    terms_dict = spark.read.parquet(paths.terms)
-    heavy_terms = terms_dict.filter(F.col("heavy"))
 
     # ---- stage 3: merge runs -> block-max segment generations ----
     # Tiered layout (Lucene-style): segments/gen=K/bucket=B/*.parquet.
@@ -1613,8 +1204,7 @@ def build_index(
         group_ids: list[int], gen_id: int, source_gens: list[dict] | None = None
     ) -> dict:
         return merge_groups_to_generation(
-            spark, paths, cfg, heavy_terms, group_ids, gen_id,
-            source_gens=source_gens,
+            spark, paths, cfg, group_ids, gen_id, source_gens=source_gens
         )
 
     def _commit_segments(gens: list[dict]) -> None:

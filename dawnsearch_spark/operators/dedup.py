@@ -49,22 +49,6 @@ DEDUP_DRIVER_MAX_POSTINGS = int(
 )
 
 
-def drop_oversized_buckets(
-    rows: DataFrame, keys: list[str], cap: int | None
-) -> DataFrame:
-    """Skew guard: drop candidate-generation keys (shingles, band buckets)
-    with more than ``cap`` members. Oversized keys are rare by construction
-    (they are the skew), so their set is broadcast to an anti-join.
-
-    NOTE: prefer :func:`capped_pair_candidates` for pair generation — it
-    keeps oversized buckets reachable via a spanning chain instead of
-    making their clusters invisible."""
-    if cap is None:
-        return rows
-    big = rows.groupBy(*keys).count().filter(F.col("count") > cap).select(*keys)
-    return rows.join(F.broadcast(big), keys, "left_anti")
-
-
 def capped_pair_candidates(
     rows: DataFrame,
     keys: list[str],

@@ -12,11 +12,13 @@ Reference analogs:
   (/root/reference/src/search/vector.rs:136-147 — "<10% faster" as a scan
   trick; as a block-skip bound it is the core of block-max WAND).
 
-The k-way merge of docID-sorted runs is realized as a vectorized merge
-(NumPy concatenate + stable argsort over the run arrays) instead of a
-per-element Python heap — same result, no per-posting Python (the runs of
-one term are disjoint doc ranges, so this is a true multi-run merge with
-deterministic output).
+One kernel, :func:`merge_rows_columnar`, turns run rows into packed
+segment rows: a batched decode, a vectorized k-way merge (one lexsort over
+the disjoint docID-sorted runs of each key, no per-posting Python, so the
+output is fully determined by the posting keys) and a batched block pack.
+Every merge placement calls it: ``index_build._merge_bucket`` (driver
+threads or one Spark task per bucket) and :func:`merge_runs_segments`
+(the (term, salt) shuffle for large runs-sourced merges).
 
 Output layout:
 * light terms (df <= heavy_df_threshold): one row per term, range_id = -1,
@@ -473,27 +475,3 @@ def _tombstone_mask(docs: np.ndarray, tomb: np.ndarray) -> np.ndarray:
     hit = (pos < len(tomb)) & (tomb[np.minimum(pos, len(tomb) - 1)] == docs)
     return ~hit
 
-
-def merge_light_runs(
-    runs: DataFrame, cfg: EngineConfig, parts: int, tombstones_bc=None
-) -> DataFrame:
-    """Merge all runs of each light term (one per build group) into one
-    full posting list (input must carry salt = -1 rows only — light keys
-    and (term, salt) keys then coincide). ``tombstones_bc`` (Spark
-    broadcast of a sorted int64 docID array) drops those docs' postings
-    during the merge — the purge half of the delete lifecycle; a term
-    whose postings all belong to deleted docs emits no row."""
-    return merge_runs_segments(runs, cfg, parts, tombstones_bc=tombstones_bc)
-
-
-def merge_heavy_runs(
-    runs: DataFrame, cfg: EngineConfig, parts: int, tombstones_bc=None
-) -> DataFrame:
-    """Heavy terms: one output row per (term, doc-range); the stage-1 salt
-    IS the range id. Multiple runs per (term, range) can exist when build
-    groups don't align to range boundaries (incremental appends), so this
-    merges per (term, salt). No dictionary join needed: rows are
-    stats-free, and the query layer recovers global df by summing
-    ``n_docs`` across the term's rows. ``tombstones_bc``: as in
-    :func:`merge_light_runs`."""
-    return merge_runs_segments(runs, cfg, parts, tombstones_bc=tombstones_bc)

@@ -56,23 +56,6 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> np.ndarray:
     return rng.standard_normal((n_planes, dim))
 
 
-def lsh_bucket_id(vec_col, planes: np.ndarray):
-    """Bucket = bit-pattern of sign(plane . v), built from native folds."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                vec_col,
-                F.array(*[F.lit(float(x)) for x in p]),
-                lambda a, b: a.cast("double") * b,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(dot > 0, F.lit(2**i).cast("long")).otherwise(0)
-    return bucket
-
-
 def lsh_assign(
     emb: DataFrame,
     n_planes: int = 8,

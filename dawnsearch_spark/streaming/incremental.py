@@ -284,7 +284,7 @@ def _swap_tombstone_set(
     from dawnsearch_spark.manifest import read_manifest
 
     cur_count = int((read_manifest(index_root, "tombstones") or {}).get("count", 0))
-    if "://" not in index_root and cur_count <= 10_000_000:
+    if cur_count <= 10_000_000:
         # driver fast path: the set is budget-sized (it is bounded between
         # purges, and delete/upsert callers already materialize it for the
         # merge), so the union/minus is one NumPy pass and the tmp write is
@@ -513,21 +513,19 @@ def purge_deletes(
         read_manifest,
     )
 
+    paths = IndexPaths(index_root)
     tombs = tombstone_ids(index_root)
     if not len(tombs):
         log("purge: no tombstones")
         return {"purged": 0}
-    paths = IndexPaths(index_root)
     fp = config_fingerprint(cfg)
     gens = segment_generations(index_root)
     all_groups = sorted({int(x) for g in gens for x in g["groups"]})
-    heavy_terms = spark.read.parquet(paths.terms).filter(F.col("heavy"))
 
     # 1. purged merge of every generation into one fresh generation
     new_gen = max((int(g["gen"]) for g in gens), default=-1) + 1
     gd = merge_groups_to_generation(
-        spark, paths, cfg, heavy_terms, all_groups, new_gen,
-        source_gens=gens, tombstones=tombs,
+        spark, paths, cfg, all_groups, new_gen, source_gens=gens, tombstones=tombs
     )
     log(f"purge: merged {gd['rows']} rows into gen {new_gen}")
     write_manifest(

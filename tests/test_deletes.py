@@ -213,8 +213,6 @@ def test_purge_crash_window_serves_correctly(spark, cfg, tmp_path):
 
     # reproduce purge steps 1-2 only (purged merge + segments commit +
     # runs GC), then "crash" before the forward rewrite / stats rebuild
-    from pyspark.sql import functions as F
-
     from dawnsearch_spark.index_build import (
         gc_run_dirs,
         merge_groups_to_generation,
@@ -225,10 +223,9 @@ def test_purge_crash_window_serves_correctly(spark, cfg, tmp_path):
     paths = IndexPaths(d)
     gens = segment_generations(d)
     all_groups = sorted({int(x) for g in gens for x in g["groups"]})
-    heavy = spark.read.parquet(paths.terms).filter(F.col("heavy"))
     new_gen = max(int(g["gen"]) for g in gens) + 1
     gd = merge_groups_to_generation(
-        spark, paths, cfg, heavy, all_groups, new_gen,
+        spark, paths, cfg, all_groups, new_gen,
         source_gens=gens, tombstones=_tids(d),
     )
     write_manifest(

@@ -161,10 +161,25 @@ def test_gc_run_dirs_spares_unmerged_groups(spark, cfg, tmp_path):
     assert e.search("parse http request")
 
 
-def test_bucket_merge_rows_identical_to_distributed(spark, cfg, tmp_path, monkeypatch):
-    """The shuffle-free per-bucket segment-sourced merge (purge/compaction
-    over-budget path) must emit row-identical segments to the distributed
-    shuffle merge, tombstones included."""
+def _terms(spark, root: str) -> list[tuple]:
+    return sorted(
+        (r["term"], r["df"], r["cf"], r["heavy"], r["bucket"])
+        for r in spark.read.parquet(IndexPaths(root).terms).collect()
+    )
+
+
+def _keyed(engine: Engine, q: str) -> list[tuple]:
+    rows = engine.search_df(q).select("repo", "path", "commit", "score").collect()
+    return [((r["repo"], r["path"], r["commit"]), round(r["score"], 9)) for r in rows]
+
+
+def test_purge_placements_identical_and_match_fresh_build(
+    spark, cfg, tmp_path, monkeypatch
+):
+    """A segment-sourced purge merge (runs GC'd) under both placements —
+    one Spark task per bucket (budget 0) and driver threads (default) —
+    must emit row-identical segments, tombstones included, and both must
+    serve like a fresh build over the surviving docs."""
     import dawnsearch_spark.index_build as ib
     from dawnsearch_spark.streaming.incremental import (
         delete_documents,
@@ -173,26 +188,36 @@ def test_bucket_merge_rows_identical_to_distributed(spark, cfg, tmp_path, monkey
 
     gc_cfg = replace(cfg, max_segment_generations=2, gc_runs=True)
     chunks = _chunks(spark)
-    a, b = str(tmp_path / "bucketed"), str(tmp_path / "shuffled")
-    for root in (a, b):
+    tasks, driver, fresh = (str(tmp_path / n) for n in ("tasks", "driver", "fresh"))
+    for root in (tasks, driver):
         _build_appended(spark, root, gc_cfg, chunks)
 
     dels = list(range(0, 270, 7))
-    # index a: driver budget zeroed -> purge takes _bucket_merge_to_generation
-    monkeypatch.setattr(ib, "DRIVER_MERGE_MAX_POSTINGS", 0)
-    delete_documents(spark, a, gc_cfg, doc_ids=dels)
-    purge_deletes(spark, a, gc_cfg)
-    # index b: bucket path disabled too -> the distributed shuffle merge
+    task_merges = []
+    real = ib._merge_in_tasks
     monkeypatch.setattr(
-        ib, "_bucket_merge_to_generation",
-        lambda *args, **kw: None,
+        ib, "_merge_in_tasks", lambda *a, **k: task_merges.append(1) or real(*a, **k)
     )
-    delete_documents(spark, b, gc_cfg, doc_ids=dels)
-    purge_deletes(spark, b, gc_cfg)
+    delete_documents(spark, driver, gc_cfg, doc_ids=dels)
+    purge_deletes(spark, driver, gc_cfg)
+    assert task_merges == []
+    monkeypatch.setattr(ib, "DRIVER_MERGE_MAX_POSTINGS", 0)
+    delete_documents(spark, tasks, gc_cfg, doc_ids=dels)
+    purge_deletes(spark, tasks, gc_cfg)
+    assert task_merges == [1], "budget 0 must place the purge merge in tasks"
+    monkeypatch.undo()
 
-    assert _segment_rows(spark, a) == _segment_rows(spark, b), (
-        "bucket merge must be row-identical to the distributed merge"
+    assert _segment_rows(spark, tasks) == _segment_rows(spark, driver), (
+        "task placement must be row-identical to driver placement"
     )
-    ea, eb = Engine(spark, a, gc_cfg), Engine(spark, b, gc_cfg)
+    surv = spark.read.parquet(IndexPaths(driver).documents).select(
+        "repo", "path", "commit", "lang", "content"
+    )
+    build_index(spark, with_content_sha(surv), fresh, gc_cfg, n_groups=1)
+    assert _terms(spark, tasks) == _terms(spark, driver) == _terms(spark, fresh)
+    engines = [Engine(spark, r, gc_cfg) for r in (tasks, driver, fresh)]
+    assert len({(e.stats_.n_docs, e.stats_.total_tokens) for e in engines}) == 1
     for q in QUERIES:
-        assert ea.search(q) == eb.search(q), q
+        et, ed, ef = engines
+        assert et.search(q) == ed.search(q), q
+        assert [s for _, s in _keyed(ed, q)] == [s for _, s in _keyed(ef, q)], q

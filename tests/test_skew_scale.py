@@ -132,7 +132,7 @@ def test_heavy_to_light_threshold_drift_keeps_postings(
     # rise with n_docs): old salted runs remain on disk while the current
     # dictionary flags far fewer terms heavy. Verify the stage-3 merge
     # semantics at the operator level.
-    from dawnsearch_spark.operators.merge import merge_heavy_runs, merge_light_runs
+    from dawnsearch_spark.operators.merge import merge_runs_segments
     from dawnsearch_spark.operators.postings import reclassify_runs
 
     # recompute dictionary under the HIGH threshold
@@ -154,8 +154,8 @@ def test_heavy_to_light_threshold_drift_keeps_postings(
     )
     runs = reclassify_runs(runs_raw, split_terms, low)
     salted = runs.filter(F.col("salt") >= 0)
-    heavy_rows = merge_heavy_runs(salted, low, 8)
-    light_rows = merge_light_runs(runs.filter(F.col("salt") == -1), low, 8)
+    heavy_rows = merge_runs_segments(salted, low, 8)
+    light_rows = merge_runs_segments(runs.filter(F.col("salt") == -1), low, 8)
     # no salted term lost its postings, and no term serves from both layouts
     salted_terms_out = {r["term"] for r in heavy_rows.select("term").distinct().collect()}
     light_terms_out = {r["term"] for r in light_rows.select("term").distinct().collect()}
