@@ -1178,7 +1178,7 @@ def q_wand_explain(spark, sf_dir):
     root = _wand_index_root(spark, sf_dir)
     hits = search_index(spark, root, BM25_QUERY_1, _wand_cfg())
     top_doc = hits[0][0]
-    exp = explain_doc(spark, root, BM25_QUERY_1, top_doc, _wand_cfg())
+    exp = explain_doc(root, BM25_QUERY_1, top_doc, _wand_cfg())
     rows = [
         (
             int(exp["doc_id"]),

@@ -76,13 +76,14 @@ class EngineConfig:
     # max_tf, min_dl — no blobs) on the driver when the index's
     # segment-row count fits this bound: the in-RAM term dictionary of a
     # classical search engine. It removes the per-query metadata-planning
-    # job (the query then costs exactly ONE Spark job on the driver fast
-    # path). Indexes above the bound fall back to a column-pruned
-    # metadata collect per query. The dictionary is COLUMNAR (one NumPy
-    # array per column + a term->slice index, plans/query.py TermMeta):
-    # 4 int64 columns = 32 B/row plus the unique-term strings, so 2M rows
-    # ≈ 70-120 MB of driver heap (measured via TermMeta.nbytes; the
-    # previous dict-of-dicts layout cost ~300+ B/row).
+    # read, so a driver-path search reads only its posting rows. Indexes
+    # above the bound plan each query with a pruned pyarrow metadata
+    # read instead (zero Spark jobs either way). The dictionary is
+    # COLUMNAR (one NumPy array per column + a term->slice index,
+    # plans/query.py TermMeta): 4 int64 columns = 32 B/row plus the
+    # unique-term strings, so 2M rows ≈ 70-120 MB of driver heap
+    # (measured via TermMeta.nbytes; the previous dict-of-dicts layout
+    # cost ~300+ B/row).
     max_driver_meta_rows: int = 2_000_000
     # Bound (in POSTINGS) of the Engine's light-list LRU: decoded light
     # posting lists for repeated serving terms stay resident between
@@ -90,16 +91,17 @@ class EngineConfig:
     # queries, search_provider.rs:111-120). 4M postings ≈ 100 MB of int64
     # arrays. 0 disables the cache.
     light_cache_postings: int = 4_000_000
-    # Bound (in POSTINGS) of the Engine's heavy-row LRU: bound-attached,
-    # doc-decoded heavy segment rows for repeated serving terms stay
-    # resident between queries, exactly like the light-list LRU (bounds
-    # and idf are fixed per index state, so cached rows are
-    # query-independent; tf/dl blocks still decode lazily per query).
+    # Bound (in POSTINGS) of the Engine's heavy-row LRU: for repeated
+    # serving terms, each heavy term's FULLY DECODED posting list —
+    # (docs, tfs, dls) merged across generations into one docID-sorted
+    # list — stays resident between queries, and the driver TAAT path
+    # scores from it with no fetch or decode (operators/wand.py). The
+    # arrays are query-independent; qtf and idf apply per query.
     # 0 disables the cache. NOT part of the config fingerprint. Sized
     # above the light LRU because one stopword-like term spans ~N/100
     # postings: a 25-query reference working set holds ~3-4M heavy
     # postings, and an LRU at exactly that size thrashes. 16M postings
-    # ≈ 130 MB of int64 doc arrays + ~50 MB of blobs.
+    # ≈ 384 MB of int64 arrays (three per posting).
     heavy_cache_postings: int = 16_000_000
     # Tiered segment generations: an append merges only its new runs into
     # a fresh generation (O(batch) IO); above this many generations one
@@ -194,7 +196,10 @@ def load_config(toml_path: str | None = None) -> EngineConfig:
             else:
                 values[f.name] = raw
     known = {f.name for f in fields(EngineConfig)}
-    values = {k: v for k, v in values.items() if k in known}
+    for k in values:
+        if k not in known:
+            # a misspelled budget would otherwise run at its default
+            raise ValueError(f"unknown engine config key {k!r} in {toml_path}")
     if "id_cols" in values and not isinstance(values["id_cols"], tuple):
         values["id_cols"] = tuple(values["id_cols"])
     return EngineConfig(**values)  # type: ignore[arg-type]

@@ -12,20 +12,22 @@ tokenizer becomes a deterministic code-aware splitter:
   4. lowercase
   5. split on whitespace, drop empties
 
-Three equivalent implementations are provided and tested for equality:
+Four equivalent implementations are provided and tested for equality:
 
-* ``tokens_col``        — native Spark Column expressions (regexp_replace /
-                          lower / split), fully JVM-side + whole-stage
-                          codegen: the hot path for index builds.
-* ``tokenize_pandas``   — vectorized pandas (``pd.Series.str`` ops, no
-                          per-row Python), wrapped as an Arrow
-                          ``pandas_udf`` by ``tokens_pandas_udf``; used
-                          where a Python-side batch needs tokenizing
-                          (e.g. inside mapInPandas operators).
-* ``tokenize_py``       — plain Python for single strings (driver-side
-                          query tokenization; reference analog: the query
-                          and the corpus share one tokenizer,
-                          embedding_service.rs:97-139).
+* ``tokens_col``          — native Spark Column expressions (one fused
+                            regex split), fully JVM-side + whole-stage
+                            codegen: the hot path for index builds.
+* ``tokenize_pandas``     — vectorized pandas (``pd.Series.str`` ops, no
+                            per-row Python) returning per-row token lists;
+                            used inside mapInPandas operators.
+* ``tokenize_flat_arrow`` — pyarrow compute (RE2 + C++ kernels) returning
+                            ONE flat token stream plus per-row offsets;
+                            the positional matchers' and phrase serving's
+                            tokenizer.
+* ``tokenize_py``         — plain Python for single strings (driver-side
+                            query tokenization; reference analog: the query
+                            and the corpus share one tokenizer,
+                            embedding_service.rs:97-139).
 """
 
 from __future__ import annotations
@@ -35,7 +37,6 @@ import re
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # Rule regexes (Java + Python + RE2 compatible syntax).
 ACRONYM_PAT = r"([A-Z]+)([A-Z][a-z])"
@@ -47,7 +48,7 @@ NONWORD_PAT = r"[^A-Za-z0-9]+"
 # boundaries are zero-width lookarounds evaluated on the original text.
 # (All three rule patterns are computed on the same original positions, so
 # the replace-chain and the fused split produce identical tokens; the
-# equivalence is pinned by the golden tests + the three-implementation
+# equivalence is pinned by the golden tests + the per-implementation
 # equality tests in tests/test_tokenizer.py.)
 BOUNDARY_PAT = r"[^A-Za-z0-9]+|(?<=[a-z0-9])(?=[A-Z])|(?<=[A-Z])(?=[A-Z][a-z])"
 
@@ -131,16 +132,6 @@ def tokenize_flat_arrow(texts) -> tuple:
     flat = pc.utf8_lower(values.filter(pa.array(nonempty)))
     seg = np.repeat(np.arange(len(dl), dtype=np.int64), dl)
     return flat, seg, dl
-
-
-def tokens_pandas_udf():
-    """Arrow-vectorized ``pandas_udf`` returning ``array<string>``."""
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def _tok(s: pd.Series) -> pd.Series:
-        return tokenize_pandas(s)
-
-    return _tok
 
 
 def tokenize_py(text: str) -> list[str]:

@@ -100,9 +100,17 @@ class IndexPaths:
 
 def segment_generations(root: str) -> list[dict]:
     """The committed segment generation list from the segments manifest
-    (empty for an empty index or a legacy/uncommitted one)."""
+    (empty for an empty index or an uncommitted one)."""
     m = read_manifest(root, "segments") or {}
     return list(m.get("generations") or [])
+
+
+def gen_ids_with_rows(gens: list[dict]) -> list[int]:
+    """Ids of the given generations that hold rows. A rows == 0
+    generation (an all-empty-content append) has no files, so every
+    reader skips it; pass :func:`segment_generations` for the serving
+    set."""
+    return [int(g["gen"]) for g in gens if int(g.get("rows", 0) or 0) > 0]
 
 
 def read_segments(spark: SparkSession, root: str) -> DataFrame:
@@ -111,17 +119,11 @@ def read_segments(spark: SparkSession, root: str) -> DataFrame:
     preserved via basePath, so bucket pruning still prunes files). Only
     manifest-listed generations are read — a crash between a compaction's
     manifest commit and its old-directory cleanup must not double-serve
-    postings. Falls back to a root read for an empty index."""
+    postings. An index with no rows reads as an empty relation."""
     paths = IndexPaths(root)
-    gens = segment_generations(root)
-    if not gens:
-        return spark.read.parquet(paths.segments)
-    # rows == 0 generations (an all-empty-content append) have no
-    # schema-bearing files — they carry nothing and are skipped
     dirs = [
-        os.path.join(paths.segments, f"gen={int(g['gen'])}")
-        for g in gens
-        if int(g.get("rows", 0)) > 0
+        os.path.join(paths.segments, f"gen={g}")
+        for g in gen_ids_with_rows(segment_generations(root))
     ]
     if not dirs:
         from dawnsearch_spark.operators.merge import SEGMENT_SCHEMA
@@ -386,12 +388,9 @@ def _generation_files(paths: IndexPaths, gens: list[dict]) -> list[str]:
 
     return [
         f
-        for g in gens
-        if int(g.get("rows", 0) or 0) > 0
+        for g in gen_ids_with_rows(gens)
         for f in sorted(
-            _glob.glob(
-                os.path.join(paths.segments, f"gen={int(g['gen'])}", "bucket=*", "*.parquet")
-            )
+            _glob.glob(os.path.join(paths.segments, f"gen={g}", "bucket=*", "*.parquet"))
         )
     ]
 
@@ -1225,15 +1224,12 @@ def build_index(
         seg_m is not None and seg_m.get("fingerprint") == fp
     ):
         # empty corpus: no build groups exist (and no runs were ever
-        # written), so there is nothing to merge. Commit a
-        # schema-bearing EMPTY segments parquet (non-partitioned — a
-        # partitionBy write of 0 rows leaves no schema to read back)
-        # so Engine boot and searches work and return no hits.
-        from dawnsearch_spark.operators.merge import SEGMENT_SCHEMA
+        # written), so there is nothing to merge. Commit an empty
+        # generation list: Engine boot and searches read no files and
+        # return no hits.
+        import shutil
 
-        spark.createDataFrame([], SEGMENT_SCHEMA).write.mode(
-            "overwrite"
-        ).parquet(paths.segments)
+        shutil.rmtree(paths.segments, ignore_errors=True)
         write_manifest(
             paths.root,
             "segments",

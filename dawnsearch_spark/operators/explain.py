@@ -23,24 +23,25 @@ from __future__ import annotations
 from collections import Counter
 
 import numpy as np
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from dawnsearch_spark.config import EngineConfig
 from dawnsearch_spark.functions.bm25 import bm25_np, idf_np
 from dawnsearch_spark.functions.codec import decode_block, varbyte_decode
 from dawnsearch_spark.functions.tokenizer import tokenize_py
-from dawnsearch_spark.index_build import IndexPaths, load_stats, read_segments
+from dawnsearch_spark.index_build import (
+    IndexPaths,
+    gen_ids_with_rows,
+    load_stats,
+    segment_generations,
+)
 from dawnsearch_spark.operators.wand import _row_to_dict, _term_bucket
 
 
 def explain_doc(
-    spark: SparkSession,
     index_root: str,
     query: str | dict[str, int],
     doc_id: int,
     cfg: EngineConfig,
-    seg_df=None,
     stats=None,
     tombstones: np.ndarray | None = None,
 ) -> dict:
@@ -67,35 +68,16 @@ def explain_doc(
     if not terms:
         return out
 
-    from dawnsearch_spark.manifest import read_manifest
     from dawnsearch_spark.operators.segment_reader import read_segment_rows
 
     buckets = sorted({_term_bucket(t, cfg.num_term_buckets) for t in terms})
-    seg_manifest = read_manifest(index_root, "segments") or {}
-    gens = None
-    if "generations" in seg_manifest:
-        gens = [
-            int(g["gen"])
-            for g in (seg_manifest.get("generations") or [])
-            if int(g.get("rows", 0)) > 0
-        ]
+    gens = gen_ids_with_rows(segment_generations(index_root))
     rid = int(doc_id) // cfg.range_size
 
     def _rows(range_id):
-        rows = read_segment_rows(
+        return read_segment_rows(
             paths.segments, buckets, terms, range_id=range_id, gens=gens
         )
-        if rows is not None:
-            return rows
-        sdf = seg_df if seg_df is not None else read_segments(spark, index_root)
-        return [
-            r.asDict()
-            for r in sdf.filter(
-                F.col("bucket").isin(buckets)
-                & F.col("term").isin(terms)
-                & (F.col("range_id") == range_id)
-            ).collect()
-        ]
 
     # the doc lives in exactly one range; light rows span all ranges
     candidates = _rows(rid) + _rows(-1)
@@ -104,16 +86,6 @@ def explain_doc(
     meta = read_segment_rows(
         paths.segments, buckets, terms, columns=["term", "n_docs"], gens=gens
     )
-    if meta is None:
-        sdf = seg_df if seg_df is not None else read_segments(spark, index_root)
-        meta = [
-            r.asDict()
-            for r in sdf.filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-            )
-            .select("term", "n_docs")
-            .collect()
-        ]
     term_df: dict[str, int] = {}
     for r in meta:
         term_df[r["term"]] = term_df.get(r["term"], 0) + int(r["n_docs"])

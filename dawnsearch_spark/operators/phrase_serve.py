@@ -32,7 +32,13 @@ from pyspark.sql import functions as F
 from dawnsearch_spark.config import EngineConfig
 from dawnsearch_spark.functions.bm25 import bm25_np, idf_np
 from dawnsearch_spark.functions.tokenizer import tokenize_flat_arrow, tokenize_py
-from dawnsearch_spark.index_build import IndexPaths, load_stats, read_segments
+from dawnsearch_spark.index_build import (
+    IndexPaths,
+    gen_ids_with_rows,
+    load_stats,
+    read_segments,
+    segment_generations,
+)
 from dawnsearch_spark.operators.boolquery import (
     _near_hits_flat,
     _phrase_hits_flat,
@@ -41,6 +47,68 @@ from dawnsearch_spark.operators.wand import (
     _decode_row_docs,
     _term_bucket,
 )
+
+
+# posting-row columns the doc-list decodes need (no tf/dl blobs)
+_DOC_COLS = ["term", "range_id", "n_docs", "doc_blob"]
+
+
+def _term_doc_ids(rows: list[dict]) -> dict[str, np.ndarray]:
+    """Sorted doc ids per term, decoded on the driver from pruned segment
+    rows. A term's ranges and generations hold disjoint doc sets, so the
+    concatenation of its rows has no duplicates."""
+    by_term: dict[str, list[np.ndarray]] = {}
+    for r in rows:
+        by_term.setdefault(r["term"], []).append(
+            _decode_row_docs(
+                {"doc_blob": bytes(r["doc_blob"]), "n_docs": int(r["n_docs"])}
+            )
+        )
+    return {t: np.sort(np.concatenate(v)) for t, v in by_term.items()}
+
+
+def _intersect_rarest_first(doc_lists) -> np.ndarray:
+    """Successive sorted-array intersection, shortest list first."""
+    lists = sorted(doc_lists, key=len)
+    if not lists:
+        return np.zeros(0, np.int64)
+    out = lists[0]
+    for d in lists[1:]:
+        out = out[np.isin(out, d, assume_unique=True)]
+        if not len(out):
+            break
+    return out
+
+
+def _drop_tombstoned(doc_ids: np.ndarray, tombstones) -> np.ndarray:
+    if tombstones is None or not len(doc_ids):
+        return doc_ids
+    from dawnsearch_spark.operators.merge import _tombstone_mask
+
+    return doc_ids[_tombstone_mask(doc_ids, tombstones)]
+
+
+def _decode_docs_gen(batches):
+    """mapInPandas body: one (doc_id, term) row per posting."""
+    for pdf in batches:
+        for i in range(len(pdf)):
+            docs = _decode_row_docs(
+                {
+                    "doc_blob": bytes(pdf["doc_blob"].iloc[i]),
+                    "n_docs": int(pdf["n_docs"].iloc[i]),
+                }
+            )
+            yield pd.DataFrame({"doc_id": docs, "term": pdf["term"].iloc[i]})
+
+
+def _posting_docs(seg_df: DataFrame, buckets: list[int], terms: list[str]) -> DataFrame:
+    """(doc_id, term) for every posting of the query terms, decoded in
+    tasks — the distributed twin of :func:`_term_doc_ids`."""
+    return (
+        seg_df.filter(F.col("bucket").isin(buckets) & F.col("term").isin(terms))
+        .select(*_DOC_COLS)
+        .mapInPandas(_decode_docs_gen, "doc_id long, term string")
+    )
 
 
 def _score_matches(
@@ -141,71 +209,28 @@ def count_matches_index(
     if tombstones is not None and not len(tombstones):
         tombstones = None
 
-    from dawnsearch_spark.manifest import read_manifest
     from dawnsearch_spark.operators.segment_reader import read_segment_rows
 
     buckets = sorted({_term_bucket(t, cfg.num_term_buckets) for t in terms})
-    seg_manifest = read_manifest(index_root, "segments") or {}
-    gens = None
-    if "generations" in seg_manifest:
-        gens = [
-            int(g["gen"])
-            for g in (seg_manifest.get("generations") or [])
-            if int(g.get("rows", 0)) > 0
-        ]
-    doc_cols = ["term", "range_id", "n_docs", "doc_blob"]
-    rows = read_segment_rows(paths.segments, buckets, terms, columns=doc_cols, gens=gens)
-    if rows is not None:
-        total = sum(int(r["n_docs"]) for r in rows)
-        if total <= cfg.max_driver_postings:
-            ctr["path"] = "driver"
-            by_term: dict[str, list[np.ndarray]] = {}
-            for r in rows:
-                by_term.setdefault(r["term"], []).append(
-                    _decode_row_docs(
-                        {"doc_blob": bytes(r["doc_blob"]), "n_docs": int(r["n_docs"])}
-                    )
-                )
-            if mode == "and" and len(by_term) < len(terms):
-                return 0  # a term matches nothing: conjunction is empty
-            sets = sorted(
-                (np.sort(np.concatenate(v)) for v in by_term.values()), key=len
-            )
-            if not sets:
-                return 0
-            if mode == "or":
-                out = np.unique(np.concatenate(sets))
-            else:
-                out = sets[0]
-                for s in sets[1:]:
-                    out = out[np.isin(out, s, assume_unique=True)]
-                    if not len(out):
-                        return 0
-            if tombstones is not None and len(out):
-                from dawnsearch_spark.operators.merge import _tombstone_mask
-
-                out = out[_tombstone_mask(out, tombstones)]
-            return int(len(out))
+    gens = gen_ids_with_rows(segment_generations(index_root))
+    rows = read_segment_rows(
+        paths.segments, buckets, terms, columns=_DOC_COLS, gens=gens
+    )
+    if sum(int(r["n_docs"]) for r in rows) <= cfg.max_driver_postings:
+        ctr["path"] = "driver"
+        docs_by_term = _term_doc_ids(rows)
+        if not docs_by_term or (mode == "and" and len(docs_by_term) < len(terms)):
+            return 0  # nothing matches / a term matches nothing
+        if mode == "or":
+            out = np.unique(np.concatenate(list(docs_by_term.values())))
+        else:
+            out = _intersect_rarest_first(docs_by_term.values())
+        return int(len(_drop_tombstoned(out, tombstones)))
 
     # distributed: decode query-term postings in tasks, count in Spark
     ctr["path"] = "distributed"
     sdf = seg_df if seg_df is not None else read_segments(spark, index_root)
-    rows_df = sdf.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-    ).select(*doc_cols)
-
-    def decode_gen(batches):
-        for pdf in batches:
-            for i in range(len(pdf)):
-                docs = _decode_row_docs(
-                    {
-                        "doc_blob": bytes(pdf["doc_blob"].iloc[i]),
-                        "n_docs": int(pdf["n_docs"].iloc[i]),
-                    }
-                )
-                yield pd.DataFrame({"doc_id": docs, "term": pdf["term"].iloc[i]})
-
-    pdocs = rows_df.mapInPandas(decode_gen, "doc_id long, term string")
+    pdocs = _posting_docs(sdf, buckets, terms)
     if tombstones is not None:
         tomb_df = spark.createDataFrame(
             [(int(d),) for d in np.asarray(tombstones)], "doc_id long"
@@ -254,21 +279,13 @@ def positional_search_index(
     if tombstones is not None and not len(tombstones):
         tombstones = None
 
-    from dawnsearch_spark.manifest import read_manifest
     from dawnsearch_spark.operators.segment_reader import (
         META_COLUMNS,
         read_segment_rows,
     )
 
     buckets = sorted({_term_bucket(t, cfg.num_term_buckets) for t in uniq})
-    seg_manifest = read_manifest(index_root, "segments") or {}
-    gens = None
-    if "generations" in seg_manifest:
-        gens = [
-            int(g["gen"])
-            for g in (seg_manifest.get("generations") or [])
-            if int(g.get("rows", 0)) > 0
-        ]
+    gens = gen_ids_with_rows(segment_generations(index_root))
 
     # metadata plan: per-term df from the term dictionary / meta rows
     if meta_by_term is not None:
@@ -277,16 +294,6 @@ def positional_search_index(
         meta = read_segment_rows(
             paths.segments, buckets, uniq, columns=META_COLUMNS, gens=gens
         )
-        if meta is None:
-            sdf = seg_df if seg_df is not None else read_segments(spark, index_root)
-            meta = [
-                r.asDict()
-                for r in sdf.filter(
-                    F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
-                )
-                .select(*META_COLUMNS)
-                .collect()
-            ]
     term_df: dict[str, int] = {}
     for r in meta:
         term_df[r["term"]] = term_df.get(r["term"], 0) + int(r["n_docs"])
@@ -295,38 +302,20 @@ def positional_search_index(
         return []  # a phrase term absent from the corpus: no match possible
     total_postings = sum(term_df.values())
 
-    doc_cols = ["term", "range_id", "n_docs", "doc_blob"]
     content_col = cfg.content_col
 
     cand: np.ndarray | None = None
     if total_postings <= cfg.max_driver_postings:
-        rows = read_segment_rows(
-            paths.segments, buckets, uniq, columns=doc_cols, gens=gens
-        )
-        if rows is not None:
-            ctr["path"] = "driver"
-            ctr["driver_postings_decoded"] = total_postings
-            by_term: dict[str, list[np.ndarray]] = {}
-            for r in rows:
-                by_term.setdefault(r["term"], []).append(
-                    _decode_row_docs({"doc_blob": bytes(r["doc_blob"]),
-                                      "n_docs": int(r["n_docs"])})
-                )
-            # rarest-first successive intersection (each term's ranges and
-            # generations are disjoint, so concatenation has no dups)
-            sets = sorted(
-                (np.sort(np.concatenate(v)) for v in by_term.values()), key=len
+        ctr["path"] = "driver"
+        ctr["driver_postings_decoded"] = total_postings
+        docs_by_term = _term_doc_ids(
+            read_segment_rows(
+                paths.segments, buckets, uniq, columns=_DOC_COLS, gens=gens
             )
-            cand = sets[0]
-            for s in sets[1:]:
-                cand = cand[np.isin(cand, s, assume_unique=True)]
-                if not len(cand):
-                    break
-    if cand is not None and tombstones is not None and len(cand):
-        from dawnsearch_spark.operators.merge import _tombstone_mask
-
-        cand = cand[_tombstone_mask(cand, tombstones)]
-    if cand is not None:
+        )
+        cand = _drop_tombstoned(
+            _intersect_rarest_first(docs_by_term.values()), tombstones
+        )
         ctr["candidates"] = int(len(cand))
         if not len(cand):
             return []
@@ -335,25 +324,21 @@ def positional_search_index(
         # zero-job adjacency: pyarrow read of the forward index pruned to
         # the candidate ids (row-group stats skip everything else — the
         # doc_id-ranged layout makes this the J1 point-lookup shape)
-        try:
-            import pyarrow.dataset as pds
+        import pyarrow.dataset as pds
 
-            tbl = pds.dataset(paths.documents).to_table(
-                columns=["doc_id", content_col],
-                filter=pds.field("doc_id").isin([int(d) for d in cand]),
-            )
-        except (OSError, ValueError, ImportError):
-            tbl = None
-        if tbl is not None:
-            flat, seg, dl = tokenize_flat_arrow(tbl.column(content_col))
-            ptf = matcher(flat, seg, len(dl))
-            out = _score_matches(
-                tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64),
-                ptf, dl,
-                float(stats.n_docs), stats.avgdl, cfg, k,
-            )
-            ctr["phrase_df"] = int((ptf > 0).sum())
-            return out
+        tbl = pds.dataset(paths.documents).to_table(
+            columns=["doc_id", content_col],
+            filter=pds.field("doc_id").isin([int(d) for d in cand]),
+        )
+        flat, seg, dl = tokenize_flat_arrow(tbl.column(content_col))
+        ptf = matcher(flat, seg, len(dl))
+        out = _score_matches(
+            tbl.column("doc_id").to_numpy(zero_copy_only=False).astype(np.int64),
+            ptf, dl,
+            float(stats.n_docs), stats.avgdl, cfg, k,
+        )
+        ctr["phrase_df"] = int((ptf > 0).sum())
+        return out
 
     # ---- distributed branch: candidates (or their excess) in Spark ----
     ctr["path"] = "distributed"
@@ -362,24 +347,7 @@ def positional_search_index(
         documents if documents is not None else spark.read.parquet(paths.documents)
     )
     if cand is None:
-        rows_df = sdf.filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
-        ).select(*doc_cols)
-
-        def decode_gen(batches):
-            for pdf in batches:
-                for i in range(len(pdf)):
-                    docs = _decode_row_docs(
-                        {
-                            "doc_blob": bytes(pdf["doc_blob"].iloc[i]),
-                            "n_docs": int(pdf["n_docs"].iloc[i]),
-                        }
-                    )
-                    yield pd.DataFrame(
-                        {"doc_id": docs, "term": pdf["term"].iloc[i]}
-                    )
-
-        posting_docs = rows_df.mapInPandas(decode_gen, "doc_id long, term string")
+        posting_docs = _posting_docs(sdf, buckets, uniq)
         cand_df = (
             posting_docs.groupBy("doc_id")
             .agg(F.count(F.lit(1)).alias("_nt"))

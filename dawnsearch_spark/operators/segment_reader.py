@@ -1,4 +1,4 @@
-"""Driver-side pruned segment reads via pyarrow — the serving fast path.
+"""Driver-side pruned segment reads via pyarrow — the one serving read.
 
 Reference analog: the serving node answers a query by scanning its OWN
 segment files in-process (mmap zero-copy reads,
@@ -7,26 +7,23 @@ dispatch a cluster job to look up a handful of posting lists. Here the
 analog is a direct pyarrow read of the bucket-pruned segment parquet
 files with a ``term IN (...)`` row-group filter.
 
-Why this exists: the WAND driver fast path touches a few KB of postings,
-but a Spark collect costs one full job dispatch (measured ~0.3-0.7 s per
-job in multi-executor local-cluster mode — more than 100x the actual read).
+Why this exists: the serving fast paths touch a few KB of postings, but
+a Spark collect costs one full job dispatch (measured ~0.3-0.7 s per job
+in multi-executor local-cluster mode — more than 100x the actual read).
 The pyarrow read keeps the same files, the same pruning (bucket dirs =
 partition pruning, term filter = row-group statistics/dictionary pushdown)
-and the same rows, without the scheduler round-trip.
-
-Scale behavior: the fast path now covers BOTH driver-local directories
-and any filesystem ``pyarrow.fs`` can mount from a URI (s3://, hdfs://,
-file://, gs:// via fsspec) — at 100 TB the index lives in object storage
-and the in-process read is exactly the deployment that matters. URIs
-pyarrow cannot serve fall back to a Spark collect. Truly large row sets
-take the distributed range-task branch either way — this is strictly the
-small-pruned-read optimization.
+and the same rows, without the scheduler round-trip. Index roots are
+local paths (``IndexPaths``), so every WAND, phrase, count and explain
+call and the Engine's term dictionary read through here; row sets above
+the driver budgets take the distributed branches instead.
 
 Tiered generations: segments live under ``gen=K/bucket=B/*.parquet``
 (index_build.py stage 3). Callers pass the MANIFEST-LISTED generation ids
-so a crash between a compaction's manifest commit and its directory
-cleanup can never double-serve postings; ``gens=None`` autodetects (and
-also handles the legacy single-level and empty-index layouts).
+(``index_build.live_gen_ids``) so a crash between a compaction's manifest
+commit and its directory cleanup can never double-serve postings. A
+listed generation whose directory is gone raises ``FileNotFoundError``:
+serving without it would silently drop its docs. A bucket directory may
+be absent (a generation need not have rows in every bucket).
 """
 
 from __future__ import annotations
@@ -36,49 +33,25 @@ import os
 META_COLUMNS = ["term", "range_id", "n_docs", "max_tf", "min_dl"]
 
 
-def _filesystem_for(path: str):
-    """(pyarrow FileSystem, normalized root path) for a segments dir, or
-    (None, None) when pyarrow cannot serve it (caller falls back to a
-    Spark collect). Local bare paths avoid the URI parser entirely."""
+def _bucket_files(fs, root: str, buckets, gens: list[int]) -> list[str]:
     from pyarrow import fs as pafs
 
-    if "://" not in path:
-        if not os.path.isdir(path):
-            return None, None
-        return pafs.LocalFileSystem(), os.path.abspath(path)
-    try:
-        fs, p = pafs.FileSystem.from_uri(path)
-        if fs.get_file_info(p).type != pafs.FileType.Directory:
-            return None, None
-        return fs, p
-    except Exception:
-        return None, None
-
-
-def _subdirs(fs, root: str, prefix: str) -> list[str]:
-    from pyarrow import fs as pafs
-
-    sel = pafs.FileSelector(root, allow_not_found=True)
-    return sorted(
-        i.path
-        for i in fs.get_file_info(sel)
-        if i.type == pafs.FileType.Directory and i.base_name.startswith(prefix)
-    )
-
-
-def _bucket_files(fs, root: str, buckets=None, gens=None) -> list[str]:
-    from pyarrow import fs as pafs
-
-    if gens is None:
-        gen_dirs = _subdirs(fs, root, "gen=") or [root]
-    elif not gens:
-        gen_dirs = [root]
-    else:
-        gen_dirs = [f"{root}/gen={int(g)}" for g in gens]
     files: list[str] = []
-    for g in gen_dirs:
+    for gen in gens:
+        g = f"{root}/gen={int(gen)}"
+        if not os.path.isdir(g):
+            raise FileNotFoundError(
+                f"segment generation {int(gen)} is listed in the segments "
+                f"manifest but {g} does not exist"
+            )
         if buckets is None:
-            bdirs = _subdirs(fs, g, "bucket=")
+            sel = pafs.FileSelector(g, allow_not_found=True)
+            bdirs = sorted(
+                i.path
+                for i in fs.get_file_info(sel)
+                if i.type == pafs.FileType.Directory
+                and i.base_name.startswith("bucket=")
+            )
         else:
             bdirs = [f"{g}/bucket={b}" for b in sorted(buckets)]
         for d in bdirs:
@@ -100,22 +73,22 @@ def read_segment_rows(
     terms=None,
     columns: list[str] | None = None,
     range_id: int | None = None,
-    gens: list[int] | None = None,
+    *,
+    gens: list[int],
     heavy_only: bool = False,
-) -> list[dict] | None:
-    """Pruned segment rows as dicts, or None when the directory is not
-    pyarrow-readable (caller falls back to a Spark collect).
+) -> list[dict]:
+    """Pruned segment rows of the listed generations, as dicts.
 
     ``buckets`` prunes partition directories, ``terms`` pushes a term
     filter into parquet row-group stats, ``range_id`` optionally restricts
     to one doc-range row (-1 = light rows), ``heavy_only`` keeps only
-    range rows (range_id >= 0), ``gens`` restricts to the manifest-listed
-    generation directories.
+    range rows (range_id >= 0), ``gens`` names the manifest-listed
+    generation directories to read (``[]`` reads nothing).
     """
-    tbl = read_segment_table(
-        segments_dir, buckets, terms, columns, range_id, gens, heavy_only
-    )
-    return None if tbl is None else tbl.to_pylist()
+    return read_segment_table(
+        segments_dir, buckets, terms, columns, range_id,
+        gens=gens, heavy_only=heavy_only,
+    ).to_pylist()
 
 
 def read_segment_table(
@@ -124,21 +97,26 @@ def read_segment_table(
     terms=None,
     columns: list[str] | None = None,
     range_id: int | None = None,
-    gens: list[int] | None = None,
+    *,
+    gens: list[int],
     heavy_only: bool = False,
 ):
     """Same pruned read as :func:`read_segment_rows`, returned as a
     pyarrow Table (columnar — the Engine's driver term dictionary builds
-    straight from the column buffers without materializing row dicts)."""
-    fs, root = _filesystem_for(segments_dir)
-    if fs is None:
-        return None
+    straight from the column buffers without materializing row dicts).
+    Raises ``ValueError`` for a URI: segments are local directories."""
+    if "://" in segments_dir:
+        raise ValueError(
+            f"segments dir {segments_dir!r} is a URI; segment reads are "
+            "local-only, like index roots"
+        )
+    import pyarrow as pa
     import pyarrow.dataset as ds
+    from pyarrow import fs as pafs
 
-    files = _bucket_files(fs, root, buckets, gens)
+    fs = pafs.LocalFileSystem()
+    files = _bucket_files(fs, os.path.abspath(segments_dir), buckets, gens)
     if not files:
-        import pyarrow as pa
-
         return pa.table({c: [] for c in (columns or META_COLUMNS)})
     dataset = ds.dataset(files, format="parquet", filesystem=fs)
     filt = None

@@ -23,15 +23,14 @@ Execution shape (serving fast path: ZERO Spark jobs; distributed path:
 one pruned scan job + a tiny collect):
   query terms -> bucket + term pruning; metadata comes from the Engine's
      COLUMNAR driver-resident term dictionary (plans/query.py TermMeta),
-     else a column-pruned fetch. Global df per term = Σ n_docs over the
+     else a pruned metadata read. Global df per term = Σ n_docs over the
      term's rows (ranges and generations are disjoint doc sets), so idf
      is exact under incremental appends with nothing stats-dependent
      stored in the index
-  -> pruned segment rows read driver-side via pyarrow.fs whenever it can
-     mount the segments dir (local paths AND object-store URIs —
-     reference S7 in-process segment scan, document_embeddings.rs:17-54);
-     Spark collect otherwise. Only MANIFEST-LISTED generation dirs are
-     read (never compaction leftovers)
+  -> pruned segment rows read driver-side via pyarrow from the local
+     segments dir (operators/segment_reader.py — reference S7 in-process
+     segment scan, document_embeddings.rs:17-54), zero Spark jobs. Only
+     MANIFEST-LISTED generation dirs are read (never compaction leftovers)
   -> light rows decoded on the driver through the Engine's bounded
      LightListCache LRU (repeated serving terms skip fetch+decode),
      smallest-TERM-first under a hard ``max_driver_postings`` budget;
@@ -70,7 +69,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from dawnsearch_spark.config import EngineConfig
@@ -140,9 +139,11 @@ class LightListCache:
     decode entirely. It caches only the query-independent arrays
     (docs/tfs/dls per generation row) — qtf and idf are query-time.
     Bounded by total cached POSTINGS (the actual memory driver), evicted
-    LRU. One cache belongs to ONE immutable segment state: the Engine
-    rebuilds it on ``refresh()`` (appends rewrite the generation list, so
-    a stale cache could serve dropped rows)."""
+    LRU. Cached lists must match the served generations: on
+    ``refresh()`` the Engine drops only the terms that gained a row in a
+    new generation after a plain append, and starts a fresh cache after a
+    compaction or a full reload (the generation list changed, so any
+    cached list could hold dropped rows)."""
 
     def __init__(self, max_postings: int = 4_000_000):
         import threading
@@ -673,68 +674,29 @@ def search_index(
     if not terms:
         return []
     buckets = sorted({_term_bucket(t, cfg.num_term_buckets) for t in terms})
-    from dawnsearch_spark.index_build import read_segments
-    from dawnsearch_spark.manifest import read_manifest
-
-    # Spark relations are built LAZILY: the serving fast path (pyarrow
-    # reads) never touches them, and even constructing a .filter() costs
-    # py4j round-trips per query
-    _rel: dict[str, DataFrame] = {}
-
-    def _seg_all() -> DataFrame:
-        if "all" not in _rel:
-            _rel["all"] = (
-                seg_df if seg_df is not None else read_segments(spark, index_root)
-            )
-        return _rel["all"]
-
-    def _seg() -> DataFrame:
-        if "seg" not in _rel:
-            _rel["seg"] = _seg_all().filter(
-                F.col("bucket").isin(buckets) & F.col("term").isin(terms)
-            )
-        return _rel["seg"]
-
-    # manifest-listed generation dirs only (a compaction crash may leave
-    # unlisted garbage dirs — serving must never double-read postings)
-    seg_manifest = read_manifest(index_root, "segments")
-    if seg_manifest is not None and "generations" in seg_manifest:
-        gens = [
-            int(g["gen"])
-            for g in (seg_manifest.get("generations") or [])
-            if int(g.get("rows", 0)) > 0  # empty gens have no files
-        ]
-    else:
-        gens = None  # legacy layout: autodetect
-
+    from dawnsearch_spark.index_build import (
+        gen_ids_with_rows,
+        read_segments,
+        segment_generations,
+    )
     from dawnsearch_spark.operators.segment_reader import (
         META_COLUMNS,
         read_segment_rows,
     )
 
+    # manifest-listed generation dirs only (a compaction crash may leave
+    # unlisted garbage dirs — serving must never double-read postings)
+    gens = gen_ids_with_rows(segment_generations(index_root))
+
     def _fetch(columns=None, range_id=None, only_terms=None, heavy_only=False) -> list[dict]:
-        """Pruned segment rows as plain dicts. Serving fast path: a direct
-        pyarrow read of the pruned bucket files on the driver (reference
-        S7 — in-process segment scan, document_embeddings.rs:17-54) —
-        covers local dirs and pyarrow.fs-mountable URIs (s3://, hdfs://);
-        falls back to a Spark collect job otherwise."""
+        """Pruned segment rows as plain dicts: a direct pyarrow read of
+        the pruned bucket files on the driver (reference S7 — in-process
+        segment scan, document_embeddings.rs:17-54), zero Spark jobs."""
         want = terms if only_terms is None else sorted(only_terms)
-        rows = read_segment_rows(
+        return read_segment_rows(
             paths.segments, buckets, want, columns=columns, range_id=range_id,
             gens=gens, heavy_only=heavy_only,
         )
-        if rows is not None:
-            return rows
-        q = _seg() if only_terms is None else _seg_all().filter(
-            F.col("bucket").isin(buckets) & F.col("term").isin(want)
-        )
-        if range_id is not None:
-            q = q.filter(F.col("range_id") == range_id)
-        if heavy_only:
-            q = q.filter(F.col("range_id") >= 0)
-        if columns is not None:
-            q = q.select(*columns)
-        return [r.asDict() for r in q.collect()]
 
     # ---- metadata-only plan (column-pruned: no blobs leave the scan) ----
     # ``meta_by_term`` (the Engine's driver-resident term dictionary)
@@ -1047,9 +1009,14 @@ def search_index(
 
     from dawnsearch_spark.operators.merge import SEGMENT_COLS, SEGMENT_SCHEMA
 
-    rows_df = _seg().filter(F.col("range_id") >= 0).select(*SEGMENT_COLS)
+    # the Spark relation is built only here: even constructing a
+    # .filter() costs py4j round-trips the driver paths never pay
+    seg = (seg_df if seg_df is not None else read_segments(spark, index_root)).filter(
+        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+    )
+    rows_df = seg.filter(F.col("range_id") >= 0).select(*SEGMENT_COLS)
     if overflow_terms:
-        ov = _seg().filter(
+        ov = seg.filter(
             (F.col("range_id") == -1) & F.col("term").isin(overflow_terms)
         ).select(*SEGMENT_COLS)
         split = ov.mapInPandas(_split_light_rows_gen(cfg), SEGMENT_SCHEMA)

@@ -23,9 +23,9 @@ from dawnsearch_spark.functions.tokenizer import tokenize_py
 from dawnsearch_spark.index_build import (
     IndexPaths,
     build_index,
+    gen_ids_with_rows,
     load_stats,
     read_segments,
-    segment_generations,
 )
 from dawnsearch_spark.manifest import list_manifests
 from dawnsearch_spark.operators.hydrate import hydrate_topk, verify_corpus
@@ -142,10 +142,11 @@ class Engine:
         # engine warms its row store once), not inside the first query
         self._documents: DataFrame | None = spark.read.parquet(self.paths.documents)
         # driver-resident term dictionary (metadata only, no blobs): paid
-        # once here, it removes the per-query metadata-planning Spark job —
-        # the driver fast path is then exactly ONE job per search. Loaded
-        # only while the segment-row count fits max_driver_meta_rows; a
-        # bigger index falls back to a per-query column-pruned collect.
+        # once here, it removes the per-query metadata-planning read — a
+        # driver-path search then reads only its posting rows, with zero
+        # Spark jobs. Loaded only while the segment-row count fits
+        # max_driver_meta_rows; a bigger index plans each query with a
+        # pruned pyarrow metadata read instead.
         self._meta_gens: list[int] = []
         self.last_meta_load: dict = {}
         self._last_new_heavy_terms: set = set()
@@ -209,39 +210,22 @@ class Engine:
             read_segment_table,
         )
 
-        gens = [
-            int(g["gen"])
-            for g in segment_generations(self.paths.root)
-            if int(g.get("rows", 0)) > 0
-        ]
+        gens = gen_ids_with_rows(seg_m.get("generations") or [])
         if prev is not None and prev_gens is not None and set(prev_gens) <= set(gens):
             read_gens = [g for g in gens if g not in set(prev_gens)]
             mode = "incremental"
         else:
             prev, read_gens, mode = None, gens, "full"
 
-        cols = None
-        if read_gens:
+        if read_gens:  # zero Spark jobs, columnar
             tbl = read_segment_table(
                 self.paths.segments, columns=META_COLUMNS, gens=read_gens
             )
-            if tbl is not None:  # pyarrow-readable: zero Spark jobs, columnar
-                cols = {
-                    c: tbl.column(c).to_numpy(zero_copy_only=False)
-                    for c in META_COLUMNS
-                }
-            else:
-                # pyarrow cannot mount the dir — no per-gen pruned read;
-                # one full column-pruned Spark job instead
-                prev, read_gens, mode = None, gens, "full"
-                recs = self._segments.select(*META_COLUMNS).collect()
-                cols = {
-                    c: np.asarray(
-                        [r[c] for r in recs], dtype=object if c == "term" else None
-                    )
-                    for c in META_COLUMNS
-                }
-        if cols is None:  # incremental refresh with nothing new to read
+            cols = {
+                c: tbl.column(c).to_numpy(zero_copy_only=False)
+                for c in META_COLUMNS
+            }
+        else:  # an empty index, or an incremental refresh with nothing new
             cols = {
                 c: np.asarray([], dtype=object if c == "term" else np.int64)
                 for c in META_COLUMNS
@@ -576,12 +560,10 @@ class Engine:
         from dawnsearch_spark.operators.explain import explain_doc
 
         return explain_doc(
-            self.spark,
             self.paths.root,
             query,
             doc_id,
             self.cfg,
-            seg_df=self._segments,
             stats=self.stats_,
             tombstones=self._tombstones,
         )

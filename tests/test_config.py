@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from dawnsearch_spark.config import EngineConfig, load_config
 from dawnsearch_spark.manifest import config_fingerprint
 
@@ -18,6 +20,8 @@ def test_toml_example_loads():
     cfg = load_config(os.path.join(os.path.dirname(__file__), "..", "dawnsearch_spark.toml.example"))
     assert cfg.k1 == 1.2 and cfg.num_term_buckets == 32
     assert cfg.id_cols == ("repo", "path", "commit")
+    assert cfg.max_driver_phrase_docs == 4096
+    assert cfg.heavy_cache_postings == 16_000_000
 
 
 def test_env_overrides_toml(monkeypatch):
@@ -31,3 +35,10 @@ def test_fingerprint_tracks_layout_fields():
     a = config_fingerprint(EngineConfig())
     assert a == config_fingerprint(EngineConfig(top_k=99))  # serving knob: no rebuild
     assert a != config_fingerprint(EngineConfig(block_size=64))  # layout: rebuild
+
+
+def test_unknown_key_raises(tmp_path):
+    p = tmp_path / "typo.toml"
+    p.write_text("[engine]\nmax_driver_posting = 5\n")
+    with pytest.raises(ValueError, match="max_driver_posting"):
+        load_config(str(p))

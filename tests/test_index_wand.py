@@ -180,9 +180,12 @@ def test_group_count_invariance(spark, small_corpus, cfg, tmp_path, oracle_input
 
 def test_segment_reader_matches_spark_collect(spark, index_dir, cfg):
     """The pyarrow serving-path reader returns exactly the rows the Spark
-    collect would (same pruning semantics), and politely declines
-    non-local locations so callers fall back to Spark."""
-    from dawnsearch_spark.index_build import IndexPaths
+    collect would (same pruning semantics)."""
+    from dawnsearch_spark.index_build import (
+        IndexPaths,
+        gen_ids_with_rows,
+        segment_generations,
+    )
     from dawnsearch_spark.operators.segment_reader import (
         META_COLUMNS,
         read_segment_rows,
@@ -192,8 +195,8 @@ def test_segment_reader_matches_spark_collect(spark, index_dir, cfg):
     seg_dir = IndexPaths(index_dir).segments
     terms = ["http", "request", "parse"]
     buckets = sorted({_term_bucket(t, cfg.num_term_buckets) for t in terms})
-    local = read_segment_rows(seg_dir, buckets, terms, columns=META_COLUMNS)
-    assert local is not None
+    gens = gen_ids_with_rows(segment_generations(index_dir))
+    local = read_segment_rows(seg_dir, buckets, terms, columns=META_COLUMNS, gens=gens)
     spark_rows = [
         r.asDict()
         for r in spark.read.parquet(seg_dir)
@@ -205,12 +208,9 @@ def test_segment_reader_matches_spark_collect(spark, index_dir, cfg):
     assert sorted(local, key=key) == sorted(spark_rows, key=key)
     assert len(local) > 0
 
-    light = read_segment_rows(seg_dir, buckets, terms, range_id=-1)
+    light = read_segment_rows(seg_dir, buckets, terms, range_id=-1, gens=gens)
     assert all(r["range_id"] == -1 for r in light)
     assert {r["term"] for r in light} <= set(terms)
-
-    assert read_segment_rows("s3://bucket/segments") is None
-    assert read_segment_rows(seg_dir + "/does-not-exist") is None
 
 
 def test_search_without_driver_meta_dictionary(spark, index_dir, cfg):

@@ -196,3 +196,38 @@ def test_engine_method_and_tombstones(spark, phrase_index, cfg, a_phrase, small_
     before_ids = {d for d, _, _ in hits}
     after_ids = {d for d, _, _ in hits2}
     assert after_ids <= before_ids - {top_doc} or len(hits) == e.cfg.top_k
+
+
+def test_driver_paths_launch_no_spark_job(spark, phrase_index, cfg, a_phrase):
+    """Every serving call that takes its driver path reads segments and
+    the forward index with pyarrow only: no Spark job runs under the
+    group."""
+    from dawnsearch_spark.operators.phrase_serve import count_matches_index
+
+    e = Engine(spark, phrase_index, cfg)  # opening may run schema jobs
+    ta, tb = a_phrase.split()
+    sc = spark.sparkContext
+    group = "driver-path-serving"
+    sc.setJobGroup(group, "driver-path serving must launch no job")
+    try:
+        assert e.search(a_phrase)
+        assert e.last_search_counters["path"] in ("driver", "light_only")
+        assert e.search_phrase(a_phrase)
+        assert e.last_search_counters["path"] == "driver"
+        assert e.search_near(ta, tb, 4)
+        assert e.last_search_counters["path"] == "driver"
+        for mode in ("or", "and"):
+            assert e.count(a_phrase, mode=mode) > 0
+            ctr: dict = {}
+            count_matches_index(
+                spark, phrase_index, a_phrase, cfg, mode,
+                tombstones=e._tombstones, counters=ctr,
+            )
+            assert ctr["path"] == "driver"
+        assert e.explain(a_phrase, e.search(a_phrase)[0][0])["matched"]
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        # control: a job in the same group is visible to the tracker
+        spark.range(3).count()
+        assert list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -1,5 +1,5 @@
-"""Serving-path features: light-list LRU and pyarrow.fs remote reads
-(VERDICT r3 demands #4 and #6)."""
+"""Serving-path features: the light-list LRU and the local-only segment
+reader."""
 
 from __future__ import annotations
 
@@ -98,20 +98,34 @@ def test_refresh_invalidates_light_cache(spark, served_index, cfg, tmp_path):
     assert got == fresh
 
 
-def test_pyarrow_serves_file_uri(served_index):
-    """file:// URIs take the pyarrow.fs branch — the shape of the
-    object-store serving path (s3://, hdfs://) without needing cloud
-    credentials in the sandbox."""
+def test_segment_reader_rejects_uri(served_index):
+    """Segment reads are local-only, like index roots: a URI raises."""
     seg = IndexPaths(served_index).segments
-    direct = read_segment_rows(seg, gens=[0])
-    via_uri = read_segment_rows("file://" + seg, gens=[0])
-    assert via_uri is not None, "file:// must be pyarrow-served, not Spark"
-    key = lambda r: (r["term"], r["range_id"])
-    assert sorted((r["term"], r["range_id"]) for r in via_uri) == sorted(
-        (r["term"], r["range_id"]) for r in direct
-    )
+    with pytest.raises(ValueError, match="URI"):
+        read_segment_rows("file://" + seg, gens=[0])
 
 
-def test_unservable_uri_falls_back_to_none():
-    assert read_segment_rows("notascheme://bucket/segments") is None
-    assert read_segment_rows("/nonexistent/path/segments") is None
+def test_missing_listed_generation_raises(tmp_path, spark, small_corpus, cfg):
+    """A manifest-listed generation whose directory vanished must fail
+    loudly: serving without it would silently drop its docs."""
+    import shutil
+
+    from dawnsearch_spark.operators.phrase_serve import count_matches_index
+
+    from dawnsearch_spark.functions.tokenizer import tokenize_py
+
+    d = str(tmp_path / "idx")
+    build_index(spark, small_corpus, d, cfg, n_groups=1)
+    e = Engine(spark, d, cfg)
+    row = small_corpus.orderBy("doc_id").limit(1).collect()[0]
+    q = " ".join(tokenize_py(row["content"])[:3])
+    seg = IndexPaths(d).segments
+    shutil.rmtree(f"{seg}/gen=0")
+    with pytest.raises(FileNotFoundError, match="generation 0"):
+        read_segment_rows(seg, gens=[0])
+    with pytest.raises(FileNotFoundError, match="generation 0"):
+        count_matches_index(spark, d, q, cfg, "or")
+    # the terms are in the index but not in the Engine's LRUs yet, so
+    # the search must read their posting rows
+    with pytest.raises(FileNotFoundError, match="generation 0"):
+        e.search(q)

@@ -1,4 +1,4 @@
-"""Tokenizer: golden outputs + three-implementation equivalence
+"""Tokenizer: golden outputs + every implementation equal to tokenize_py
 (SURVEY.md §5: golden token lists incl. camelCase/snake_case/unicode)."""
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ from dawnsearch_spark.functions.tokenizer import (
     tokenize_pandas,
     tokenize_py,
     tokens_col,
-    tokens_pandas_udf,
 )
 
 GOLDEN = [
@@ -48,13 +47,6 @@ def test_spark_native_matches_py(spark):
     texts = [t for t, _ in GOLDEN] + ["abcDefGHIjkl", "a1B2c3"]
     df = spark.createDataFrame([(t,) for t in texts], "content string")
     rows = df.select(tokens_col("content").alias("toks")).collect()
-    assert [r["toks"] for r in rows] == [tokenize_py(t) for t in texts]
-
-
-def test_pandas_udf_matches_py(spark):
-    texts = [t for t, _ in GOLDEN]
-    df = spark.createDataFrame([(t,) for t in texts], "content string")
-    rows = df.select(tokens_pandas_udf()("content").alias("toks")).collect()
     assert [r["toks"] for r in rows] == [tokenize_py(t) for t in texts]
 
 
