@@ -2074,7 +2074,7 @@ _WAND_CFG = None  # lazy singleton (EngineConfig import is at module top)
 def _wand_cfg() -> "EngineConfig":
     """Index config for the driver-table WAND entries: small ranges/blocks
     and a low heavy-df threshold so even the sf0.01 documents table
-    exercises heavy (salted) lists, multi-block rows and multi-range
+    exercises heavy (range-split) lists, multi-block rows and multi-range
     merges — the full segment/codec/merge/WAND stack, not a degenerate
     all-light index."""
     global _WAND_CFG
@@ -2086,7 +2086,6 @@ def _wand_cfg() -> "EngineConfig":
             range_size=256,
             block_size=32,
             heavy_df_threshold=64,
-            num_salts=4,
             num_term_buckets=8,
             build_partitions=8,
         )
@@ -2129,7 +2128,7 @@ def _wand_index_root(spark: SparkSession, sf_dir: str) -> str:
 
 
 def _wand_topk(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
-    """T2/T4/S4/S6/S7/X8 end-to-end: tokenize -> salted posting runs ->
+    """T2/T4/S4/S6/S7/X8 end-to-end: tokenize -> posting runs ->
     varbyte block-max segments -> k-way merge -> block-max WAND top-k.
     Driver-verified against the same exact-BM25 SQL oracle as the
     full-scan scorer (reference oracle pattern:

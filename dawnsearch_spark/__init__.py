@@ -2,8 +2,8 @@
 
 A from-scratch re-expression of the capabilities of dawn-search/dawnsearch
 (reference at /root/reference, Rust) on Apache Spark: batch inverted-index
-construction (salted groupBy-term shuffle, docID-delta varbyte compression,
-k-way merged block-max segments), BM25 top-k query execution (block-max
+construction (per-batch posting runs, docID-delta varbyte compression,
+k-way merged block-max segments with heavy terms split by doc-range), BM25 top-k query execution (block-max
 WAND with threshold pruning), the full index lifecycle (resumable
 checkpointed builds with per-partition lineage manifests, O(batch)
 generational appends, tombstone delete + purge, size-tiered compaction),

@@ -39,24 +39,25 @@ class EngineConfig:
     # Postings per block inside a posting row (block-max WAND skip unit).
     block_size: int = 128
 
-    # --- skew handling (north_rule: salted groupBy-term) ---
+    # --- skew handling ---
     # A term whose df exceeds the EFFECTIVE threshold is "heavy"
-    # (stopword-like): its postings shuffle as (term, doc_id // range_size)
-    # so no reducer group exceeds range_size postings. An absolute value
-    # here overrides; the default None scales the threshold with the
-    # corpus: clamp(n_docs * heavy_df_ratio, heavy_df_min, heavy_df_max).
+    # (stopword-like): the merge writes its postings as one segment row
+    # per (term, doc_id // range_size) instead of one light row, so no
+    # single row (and no query task) holds more than range_size postings.
+    # An absolute value here overrides; the default None scales the
+    # threshold with the corpus:
+    # clamp(n_docs * heavy_df_ratio, heavy_df_min, heavy_df_max).
     # Why a ratio: with threshold = r*N the heavy-set size is bounded by
-    # total_postings / (r*N) = avgdl / r — INDEPENDENT of corpus size — so
-    # the broadcast stays small from 10^5 to 10^12 docs, while a fixed
-    # 100k threshold at 10^12 files makes millions of terms heavy.
+    # total_postings / (r*N) = avgdl / r — INDEPENDENT of corpus size —
+    # while a fixed 100k threshold at 10^12 docs makes millions of terms
+    # heavy.
     heavy_df_threshold: int | None = None
     heavy_df_ratio: float = 0.01
     heavy_df_min: int = 1024
-    # Ceiling so no single unsalted (light) posting list can exceed one
-    # reducer/task's memory regardless of corpus size (1M postings packs
-    # to a few MB of varbyte).
+    # Ceiling so no single light posting list can exceed one task's
+    # memory regardless of corpus size (1M postings packs to a few MB of
+    # varbyte).
     heavy_df_max: int = 1_000_000
-    num_salts: int = 16
     # Query-time budget on postings decoded ON THE DRIVER (light lists +
     # the fast-path heavy rows + the θ-seed range). Light lists are taken
     # smallest-first until the budget is hit; the rest are range-split on
@@ -109,22 +110,10 @@ class EngineConfig:
     # Query-time read amplification is bounded by this count (a term adds
     # at most one light row per generation).
     max_segment_generations: int = 6
-    # The heavy-term set ships to stage-2 tasks as a Spark broadcast while
-    # it is small; above this size the build falls back to the join-based
-    # salting path (postings.with_salt, shuffle join — slower, unbounded).
-    max_broadcast_heavy_terms: int = 200_000
-    # Heavy-term detection for SALTING runs on a sampled pass (exact df is
-    # derived later from run metadata at zero extra cost): fraction of the
-    # corpus tokenized, floored so at least `heavy_sample_min_docs` docs
-    # are sampled (tiny corpora -> exact). Misclassification near the
-    # boundary is safe either way: sampled-heavy-but-light terms serve
-    # from salted rows, sampled-light-but-heavy runs are re-salted at
-    # merge (reclassify_runs).
-    heavy_sample_fraction: float = 0.01
-    heavy_sample_min_docs: int = 20_000
 
     # --- build ---
-    # Stage-1 shuffle partitions for the posting-run build.
+    # Upper bound on forward-index files, i.e. on the task parallelism of
+    # the stage-2 tokenize (index_build._doc_partitions).
     build_partitions: int = 32
     # Columns that define document identity / deterministic docID order.
     id_cols: tuple[str, ...] = ("repo", "path", "commit")
@@ -141,14 +130,12 @@ class EngineConfig:
     # not index layout).
     gc_runs: bool = False
 
-    # --- checkpoint / resume ---
-    checkpoint_dir: str = ""
-
     # --- misc ---
     snippet_len: int = 500  # serve-time snippet truncation (web.rs:328 analog)
 
     def effective_heavy_df_threshold(self, n_docs: int) -> int:
-        """The df above which a term is salted, for a corpus of n_docs."""
+        """The df above which a term is heavy (range-split), for a corpus
+        of n_docs."""
         if self.heavy_df_threshold is not None:
             return self.heavy_df_threshold
         return max(
@@ -163,7 +150,6 @@ class EngineConfig:
             range_size=64,
             block_size=8,
             heavy_df_threshold=32,
-            num_salts=4,
             num_term_buckets=8,
             build_partitions=8,
         )

@@ -13,7 +13,7 @@ source-code corpus. Generation is:
   local[8]-vs-local[32] scaling evidence and byte-identical resume tests);
 * **Zipf-skewed** — token ranks follow ~1/rank, so keyword-like terms
   (``def``, ``import``, ``public``, ...) appear in most docs and exercise
-  the heavy-term salting path (SURVEY.md §7 hard part 2/5);
+  the heavy-term doc-range split (SURVEY.md §7 hard part 2/5);
 * **code-shaped** — camelCase and snake_case identifiers in raw form so the
   code-aware tokenizer's splitting is exercised, plus per-doc unique terms
   (singleton postings) and punctuation noise.

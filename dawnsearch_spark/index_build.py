@@ -27,11 +27,13 @@ Scale notes (100 TB thinking):
   (:func:`_stage1b_plan`) and aggregates them in pandas at or under
   ``DRIVER_DICT_MAX_ROWS`` metadata rows, in Spark above. Stage 3 merges
   every bucket with one kernel (:func:`_merge_bucket`): on driver threads
-  at or under ``DRIVER_MERGE_MAX_POSTINGS`` input postings; above it as
-  one Spark task per bucket when the input is segment rows (purge,
-  compaction after ``gc_runs``), and through the salted (term, salt) run
-  shuffle when the input is runs (first build, large append) — the salt
-  bounds every reducer group by ``range_size`` postings;
+  at or under ``DRIVER_MERGE_MAX_POSTINGS`` input postings, as one Spark
+  task per bucket above it. Segment-sourced inputs (purge, compaction
+  after ``gc_runs``) are already bucketed on disk, so their tasks need no
+  exchange; runs-sourced inputs (first build, large append) reach their
+  bucket's task through one exchange keyed by ``bucket``. Stage-2 runs
+  are salt-free: the kernel alone decides each term's layout from the
+  exact dictionary;
 * index roots are local paths (:class:`IndexPaths` rejects URIs), since
   manifests commit through ``os``.
 """
@@ -54,14 +56,8 @@ from dawnsearch_spark.manifest import (
     write_manifest,
 )
 from dawnsearch_spark.operators.docids import assign_doc_ids
-from dawnsearch_spark.operators.postings import (
-    build_posting_miniruns,
-    reclassify_runs,
-)
-from dawnsearch_spark.operators.tf import (
-    CorpusStats,
-    document_frequencies_fast,
-)
+from dawnsearch_spark.operators.postings import build_posting_miniruns
+from dawnsearch_spark.operators.tf import CorpusStats
 
 
 @dataclass(frozen=True)
@@ -308,17 +304,20 @@ def _heavy_terms(paths: IndexPaths) -> frozenset:
     return frozenset(td.column("term").to_pylist())
 
 
-def _merge_bucket(rows, salt_col: str, heavy, tomb, cfg: EngineConfig,
+def _merge_bucket(rows, salt_col: str | None, heavy, tomb, cfg: EngineConfig,
                   bucket_dir: str) -> tuple[int, int]:
     """THE merge kernel: merge, pack and write one term bucket.
 
     ``rows`` is a pyarrow table of run-shaped rows of ONE bucket — posting
-    runs (``salt_col="salt"``) or segment rows reinterpreted as runs
+    runs (``salt_col=None``: runs are salt-free, and a ``salt`` column
+    left by older runs is ignored, since a term's run rows hold disjoint
+    docs whatever their salt) or segment rows reinterpreted as runs
     (``salt_col="range_id"``: a segment row's blobs are valid run blobs).
     Keys never span buckets (bucket = crc32(term)), so a bucket merges on
-    its own. Split set = dictionary-heavy terms ∪ terms already salted in
-    these rows: within one generation a term is served either as one light
-    row or as range rows, never both. Output: ``bucket_dir/part-00000``
+    its own. Split set = dictionary-heavy terms, plus (segment rows only)
+    terms an input generation already holds range-split: within one
+    generation a term is served either as one light row or as range rows,
+    never both. Output: ``bucket_dir/part-00000``
     sorted by (term, range_id), ~1 MB row groups (parquet footers become
     the term directory pages the serving reads prune by). Returns
     (rows, postings) written; an empty result writes nothing."""
@@ -336,8 +335,12 @@ def _merge_bucket(rows, salt_col: str, heavy, tomb, cfg: EngineConfig,
     if not rows.num_rows:
         return 0, 0
     terms = rows.column("term").to_numpy(zero_copy_only=False)
-    salts = rows.column(salt_col).to_numpy(zero_copy_only=False).astype(np.int64)
-    salted = {t for t, s in zip(terms, salts) if s >= 0}
+    if salt_col is None:
+        salts = np.full(len(terms), -1, np.int64)
+        salted = None
+    else:
+        salts = rows.column(salt_col).to_numpy(zero_copy_only=False).astype(np.int64)
+        salted = {t for t, s in zip(terms, salts) if s >= 0}
     cols = merge_rows_columnar(
         terms,
         salts,
@@ -397,9 +400,10 @@ def _generation_files(paths: IndexPaths, gens: list[dict]) -> list[str]:
 
 def _merge_source(
     paths: IndexPaths, group_ids: list[int], source_gens: list[dict] | None
-) -> tuple[str, list[str]]:
-    """(salt column, input files) of a merge. Runs-sourced while every
-    group's run dir exists; otherwise (compaction / purge after
+) -> tuple[str | None, list[str]]:
+    """(salt column, input files) of a merge. Runs-sourced (salt column
+    None: runs are salt-free) while every group's run dir exists;
+    otherwise (compaction / purge after
     ``gc_runs``) the source generations' segment files, which must cover
     exactly the requested groups."""
     gdirs = [os.path.join(paths.runs, f"group={g}") for g in group_ids]
@@ -407,7 +411,7 @@ def _merge_source(
         missing = [g for g, d in zip(group_ids, gdirs) if not os.path.isdir(d)]
         if missing:
             raise FileNotFoundError(f"merge: run groups {missing} have no run dir")
-        return "salt", [f for d in gdirs for f in _pa_files(d)]
+        return None, [f for d in gdirs for f in _pa_files(d)]
     src_groups = sorted(int(x) for g in source_gens for x in g["groups"])
     if src_groups != sorted(int(g) for g in group_ids):
         raise RuntimeError(
@@ -416,6 +420,10 @@ def _merge_source(
             f"requested {sorted(group_ids)})"
         )
     return "range_id", _generation_files(paths, source_gens)
+
+
+def _merge_in_cols(salt_col: str | None) -> list[str]:
+    return ["term"] + ([salt_col] if salt_col else []) + _MERGE_IN_COLS
 
 
 def _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir) -> dict[int, tuple[int, int]]:
@@ -427,7 +435,7 @@ def _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir) -> dict[int, tuple
 
     from dawnsearch_spark.operators.merge import term_bucket_py
 
-    tbl = _pa_read(files, columns=["term", salt_col] + _MERGE_IN_COLS)
+    tbl = _pa_read(files, columns=_merge_in_cols(salt_col))
     uterms, tinv = np.unique(
         tbl.column("term").to_numpy(zero_copy_only=False), return_inverse=True
     )
@@ -451,41 +459,85 @@ def _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir) -> dict[int, tuple
         return dict(pool.map(one, present))
 
 
-def _merge_in_tasks(spark, cfg, files, heavy, tomb, gdir) -> dict[int, tuple[int, int]]:
-    """Task placement for big SEGMENT-sourced merges: one Spark task per
-    bucket reads that bucket's files and runs the kernel. No exchange —
-    every row of a (term, range), in every generation, already lives under
-    the same ``bucket=B`` directories."""
-    by_bucket: dict[int, list[str]] = {}
-    for f in files:
-        b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
-        by_bucket.setdefault(b, []).append(f)
+def _exchanged_buckets(batches):
+    """(bucket, rows) per bucket of a partition sorted by its exchanged
+    ``bucket`` column: a bucket's slices gather across Arrow batches, and
+    only one bucket is held at a time."""
+    import numpy as np
+    import pyarrow as pa
+
+    cur, parts = None, []
+    for rb in batches:
+        bk = rb.column("bucket").to_numpy(zero_copy_only=False)
+        if not len(bk):
+            continue
+        cuts = np.flatnonzero(bk[1:] != bk[:-1]) + 1
+        for lo, hi in zip(np.r_[0, cuts], np.r_[cuts, len(bk)]):
+            if int(bk[lo]) != cur:
+                if parts:
+                    yield cur, pa.Table.from_batches(parts)
+                cur, parts = int(bk[lo]), []
+            parts.append(rb.slice(int(lo), int(hi - lo)))
+    if parts:
+        yield cur, pa.Table.from_batches(parts)
+
+
+def _merge_in_tasks(spark, cfg, files, salt_col, heavy, tomb, gdir) -> dict[int, tuple[int, int]]:
+    """Task placement: the kernel runs once per bucket inside Spark tasks.
+
+    * Segment-sourced (purge, compaction after ``gc_runs``): one task per
+      bucket reads that bucket's files. No exchange — every row of a
+      (term, range), in every generation, already lives under the same
+      ``bucket=B`` directories.
+    * Runs-sourced (first build, large append): run files are not
+      bucketed, so Spark reads them, adds ``bucket`` (= ``term_bucket_py``)
+      and exchanges once by it; each task streams its partition sorted by
+      that column, one bucket at a time.
+
+    Memory bound: a task holds one bucket, about input postings /
+    ``num_term_buckets`` (plus that bucket's output rows)."""
+    import pyarrow as pa
+
+    n_b = cfg.num_term_buckets
+    cols = _merge_in_cols(salt_col)
+    if salt_col is None:
+        if not files:
+            return {}
+        by_bucket = None
+        src = (
+            spark.read.parquet(*files).select(*cols)
+            .withColumn("bucket", F.pmod(F.crc32(F.col("term")), F.lit(n_b)))
+            .repartition(n_b, "bucket")
+            .sortWithinPartitions("bucket")
+        )
+    else:
+        by_bucket = {}
+        for f in files:
+            b = int(os.path.basename(os.path.dirname(f)).split("=", 1)[1])
+            by_bucket.setdefault(b, []).append(f)
+        src = spark.range(0, n_b, 1, numPartitions=n_b)
     sc = spark.sparkContext
     files_bc, heavy_bc, tomb_bc = (
         sc.broadcast(by_bucket), sc.broadcast(heavy), sc.broadcast(tomb)
     )
 
     def task(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            for b in pdf["id"].tolist():
-                fl = files_bc.value.get(b)
-                if fl:
-                    n, p = _merge_bucket(
-                        _pa_read(fl, columns=["term", "range_id"] + _MERGE_IN_COLS),
-                        "range_id", heavy_bc.value, tomb_bc.value, cfg,
-                        os.path.join(gdir, f"bucket={b}"),
-                    )
-                    yield pd.DataFrame({"bucket": [b], "rows": [n], "postings": [p]})
-
-    n_b = cfg.num_term_buckets
-    try:
-        out = (
-            spark.range(0, n_b, 1, numPartitions=n_b)
-            .mapInPandas(task, "bucket long, rows long, postings long")
-            .collect()
+        fl = files_bc.value
+        pairs = _exchanged_buckets(batches) if fl is None else (
+            (b, _pa_read(fl[b], columns=cols))
+            for rb in batches for b in rb.column("id").to_pylist() if b in fl
         )
+        for b, rows in pairs:
+            n, p = _merge_bucket(
+                rows, salt_col, heavy_bc.value, tomb_bc.value, cfg,
+                os.path.join(gdir, f"bucket={b}"),
+            )
+            yield pa.RecordBatch.from_pydict(
+                {"bucket": [b], "rows": [n], "postings": [p]}
+            )
+
+    try:
+        out = src.mapInArrow(task, "bucket long, rows long, postings long").collect()
     finally:
         for bc in (files_bc, heavy_bc, tomb_bc):
             bc.destroy()
@@ -507,55 +559,6 @@ def _check_bucket_files(gdir: str, per_bucket: dict[int, tuple[int, int]]) -> No
             "files are not visible to the driver (executors must write to "
             "a path the driver shares)"
         )
-
-
-def _merge_shuffled(spark, paths, cfg, group_ids, in_postings, tomb, gdir) -> tuple[int, int]:
-    """Big RUNS-sourced merge (first build / large append): reclassify
-    runs against the split set, then one (term, salt) shuffle into
-    :func:`merge_runs_segments` — the salt spreads one heavy term's doc
-    ranges over many tasks. Returns (rows, postings) written."""
-    from dawnsearch_spark.operators.merge import merge_runs_segments
-
-    runs_raw = spark.read.option("basePath", paths.runs).parquet(
-        *[os.path.join(paths.runs, f"group={g}") for g in group_ids]
-    )
-    split_terms = (
-        spark.read.parquet(paths.terms).filter(F.col("heavy")).select("term")
-        .union(runs_raw.filter(F.col("salt") >= 0).select("term"))
-        .distinct()
-    )
-    tomb_bc = spark.sparkContext.broadcast(tomb) if tomb is not None else None
-    # sized to the INPUT, not the cluster: ~250k postings per merge task
-    # (32 near-empty shuffle tasks cost whole seconds on small input)
-    merge_parts = max(1, min(cfg.build_partitions, in_postings // 250_000 + 1))
-    seg = merge_runs_segments(
-        reclassify_runs(runs_raw, split_terms, cfg), cfg, merge_parts,
-        tombstones_bc=tomb_bc,
-    )
-    try:
-        (
-            seg.repartition(merge_parts, "bucket")
-            .sortWithinPartitions("term", "range_id")
-            # term-sorted files + ~1 MB row groups: the same term-pruning
-            # layout the kernel writes
-            .write.mode("overwrite")
-            .option("parquet.block.size", str(1 << 20))
-            .partitionBy("bucket")
-            .parquet(gdir)
-        )
-    finally:
-        if tomb_bc is not None:
-            tomb_bc.destroy()
-    import glob as _glob
-
-    # an all-empty-content batch leaves no schema-bearing file: 0 rows
-    bt = _pa_read(
-        sorted(_glob.glob(os.path.join(gdir, "bucket=*", "*.parquet"))),
-        columns=["n_docs"],
-    )
-    if not bt.num_rows:
-        return 0, 0
-    return bt.num_rows, int(bt.column("n_docs").to_numpy(zero_copy_only=False).sum())
 
 
 def merge_groups_to_generation(
@@ -580,9 +583,8 @@ def merge_groups_to_generation(
 
     Placement, by input postings: at or under ``DRIVER_MERGE_MAX_POSTINGS``
     the driver runs :func:`_merge_bucket` per bucket (zero Spark jobs);
-    above it a segment-sourced merge runs the same kernel as one Spark
-    task per bucket, and a runs-sourced merge takes the (term, salt)
-    shuffle. Every placement writes the same rows."""
+    above it the same kernel runs per bucket in Spark tasks
+    (:func:`_merge_in_tasks`). Every placement writes the same files."""
     import shutil
 
     import numpy as np
@@ -600,19 +602,14 @@ def merge_groups_to_generation(
     tomb = None
     if tombstones is not None and len(tombstones):
         tomb = np.sort(np.asarray(tombstones, np.int64))
-    if in_postings > DRIVER_MERGE_MAX_POSTINGS and salt_col == "salt":
-        rows, postings = _merge_shuffled(
-            spark, paths, cfg, group_ids, in_postings, tomb, gdir
-        )
+    heavy = _heavy_terms(paths)
+    if in_postings <= DRIVER_MERGE_MAX_POSTINGS:
+        per_bucket = _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir)
     else:
-        heavy = _heavy_terms(paths)
-        if in_postings <= DRIVER_MERGE_MAX_POSTINGS:
-            per_bucket = _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir)
-        else:
-            per_bucket = _merge_in_tasks(spark, cfg, files, heavy, tomb, gdir)
-        _check_bucket_files(gdir, per_bucket)
-        rows = sum(n for n, _ in per_bucket.values())
-        postings = sum(p for _, p in per_bucket.values())
+        per_bucket = _merge_in_tasks(spark, cfg, files, salt_col, heavy, tomb, gdir)
+    _check_bucket_files(gdir, per_bucket)
+    rows = sum(n for n, _ in per_bucket.values())
+    postings = sum(p for _, p in per_bucket.values())
     return {
         "gen": int(gen_id),
         "groups": [int(g) for g in group_ids],
@@ -957,16 +954,7 @@ def build_index(
     id_space = int(docs_m.get("id_space", n_docs_total))
     eff_heavy = cfg.effective_heavy_df_threshold(n_docs_total)
 
-    # ---- stage 1a: group plan + SAMPLED heavy-term detection ----
-    # The build makes exactly ONE full pass over document content (stage
-    # 2): salting decisions come from a cheap sampled tokenize here, and
-    # the exact term dictionary + BM25 globals are derived later from run
-    # METADATA (stage 1b) at no extra content cost. Sampling noise at the
-    # heavy boundary is safe in both directions: sampled-heavy-but-light
-    # terms simply serve from salted rows, sampled-light-but-heavy runs
-    # are re-salted at merge (reclassify_runs). The sample is seeded and
-    # the forward index is immutable between resumes, so resumed builds
-    # make identical salting decisions (segment byte-identity holds).
+    # ---- stage 1a: group plan ----
     plan = _plan_groups(paths.root, id_space, n_groups, cfg.range_size, fp)
     actual_groups = len(plan)
     pending = [(g, lo, hi) for g, lo, hi, committed in plan if not committed]
@@ -982,108 +970,12 @@ def build_index(
             if d.startswith("group=") and int(d.split("=", 1)[1]) not in plan_ids:
                 shutil.rmtree(os.path.join(paths.runs, d), ignore_errors=True)
                 log(f"stage1a: removed stale run dir {d}")
-
-    heavy_bc = None
-    use_join_salting = False
-    sampled_heavy = None
-    # Detection scope: salting only affects the PENDING groups' runs (a
-    # misclassification either way is repaired at merge by
-    # reclassify_runs), so on an APPEND the committed dictionary supplies
-    # the old corpus's heavy set EXACTLY — one column-pruned read of the
-    # (bounded, ~avgdl/heavy_df_ratio) heavy terms — and only the NEW doc
-    # range is ever sampled. Detection cost is O(batch), never O(corpus):
-    # the pre-round-5 behavior sampled the WHOLE corpus per append (the
-    # min-docs floor drove the fraction toward 1.0 — a full re-tokenize
-    # of the index to salt one batch).
-    committed_heavy: frozenset = frozenset()
-    pending_lo = min((lo for _, lo, _ in pending), default=0)
-    terms_m0 = read_manifest(paths.root, "terms")
-    # the range restriction applies only when the committed dictionary
-    # actually covers the committed groups (a real append). A partial
-    # FIRST build resumed after a crash has no dictionary yet — it keeps
-    # the whole-corpus sample, so a resumed build makes the SAME salting
-    # decisions as a never-crashed one (segment byte-identity on resume).
-    dict_ok = (
-        bool(pending)
-        and pending_lo > 0
-        and terms_m0 is not None
-        and terms_m0.get("fingerprint") == fp
-        and {int(x) for x in terms_m0.get("groups", [])}
-        == {g for g, _, _, c in plan if c}
-        and _has_success(paths.terms)
-    )
-    if dict_ok:
-        committed_heavy = _heavy_terms(paths)  # driver-side: no Spark job per append
-        sample_lo = pending_lo
-        n_sample_docs = max(0, id_space - pending_lo)
-    else:
-        sample_lo = 0
-        n_sample_docs = n_docs_total
-    if pending and n_sample_docs <= cfg.heavy_sample_min_docs:
-        # Small pending range: the "sampled" detection would run at
-        # frac ≈ 1.0, i.e. a full tokenize pass over the pending content
-        # (this was the round-2 bench regression at exactly 20k docs).
-        # Skip the pass — pending runs salt by the committed heavy set
-        # alone (empty on a first build), and the merge re-salts the
-        # exactly-heavy remainder from the exact dictionary
-        # (reclassify_runs): identical final layout, since a term is
-        # served salted iff its exact df exceeds the threshold.
-        heavy_bc = spark.sparkContext.broadcast(committed_heavy)
-        log(
-            f"stage1a: pending range <= heavy_sample_min_docs — detection "
-            f"pass skipped; {len(committed_heavy)} committed heavy terms "
-            "pre-salt, merge-time reclassify covers the rest"
-        )
-    elif pending:
-        frac = max(
-            cfg.heavy_sample_fraction, cfg.heavy_sample_min_docs / n_sample_docs
-        )
-        sample = (
-            documents.filter(F.col("doc_id") >= sample_lo) if sample_lo else documents
-        ).sample(fraction=frac, seed=42)
-        sampled_heavy = document_frequencies_fast(sample, cfg.content_col).filter(
-            F.col("df") > F.lit(max(1.0, eff_heavy * frac))
-        ).select("term")
-        probe = sampled_heavy.limit(cfg.max_broadcast_heavy_terms + 1).collect()
-        if len(probe) + len(committed_heavy) <= cfg.max_broadcast_heavy_terms:
-            # tiny (stopword-like terms only): ship once per executor as a
-            # Spark broadcast, NOT captured in each task closure
-            heavy_set = frozenset(r["term"] for r in probe) | committed_heavy
-            heavy_bc = spark.sparkContext.broadcast(heavy_set)
-            log(
-                f"stage1a sampled heavy terms: {len(heavy_set)} "
-                f"(fraction={frac:.4f} over docs >= {sample_lo}, "
-                f"threshold={eff_heavy})"
-            )
-        else:
-            # the heavy set itself is too large to ship — fall back to the
-            # fully-distributed join-based salting (with_salt shuffle join)
-            use_join_salting = True
-            if committed_heavy:
-                sampled_heavy = sampled_heavy.unionByName(
-                    spark.createDataFrame(
-                        [(t,) for t in committed_heavy], "term string"
-                    )
-                ).distinct()
-            log(
-                f"stage1a: > {cfg.max_broadcast_heavy_terms} sampled heavy terms; "
-                "using join-based salting"
-            )
+    log(f"stage1a group plan: {actual_groups} groups, {len(pending)} pending")
 
     def _build_group(g: int, lo: int, hi: int) -> None:
         name = f"runs_group_{g}"
         group_docs = documents.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        if use_join_salting:
-            from dawnsearch_spark.operators.postings import build_posting_runs, with_salt
-            from dawnsearch_spark.operators.tf import term_frequencies
-
-            tf = term_frequencies(group_docs, cfg.content_col)
-            salted = with_salt(tf, sampled_heavy, cfg.range_size, broadcast=False)
-            runs = build_posting_runs(salted, cfg.build_partitions)
-        else:
-            runs = build_posting_miniruns(
-                group_docs, heavy_bc, cfg.range_size, cfg.content_col
-            )
+        runs = build_posting_miniruns(group_docs, cfg.content_col)
         gdir = os.path.join(paths.runs, f"group={g}")
         runs.write.mode("overwrite").parquet(gdir)
         # counters: rows + postings only (countDistinct(term) would be an

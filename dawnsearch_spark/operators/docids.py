@@ -9,7 +9,8 @@ a dense rank over the identity key (repo, path, commit):
   1. range-partition + sort-within-partition on the key (parallel sort,
      no global single-reducer stage) — the ONLY shuffle;
   2. count (dedup-aware) rows per partition (tiny aggregate job);
-  3. cumulative offsets on the driver, shipped as a broadcast; one Arrow
+  3. cumulative offsets on the driver (one int per partition, shipped in
+     the task closure — no broadcast to own and release); one Arrow
      ``mapInPandas`` pass adds ``offset[pid] + arange`` — and performs the
      identity-key dedup as a vectorized shift-compare in the same pass.
 
@@ -93,7 +94,6 @@ def assign_doc_ids(
     for r in sorted(rows, key=lambda r: int(r["_pid"])):
         offsets[int(r["_pid"])] = off
         off += int(r["n"])
-    bc = spark.sparkContext.broadcast(offsets)
 
     out_fields = [f for f in ranged.schema.fields if f.name != "_pid"]
     schema = StructType(out_fields + [StructField("doc_id", LongType(), False)])
@@ -103,12 +103,11 @@ def assign_doc_ids(
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counter: int | None = None
         last_key: tuple | None = None
-        offs = bc.value
         for pdf in batches:
             if not len(pdf):
                 continue
             if counter is None:
-                counter = offs[int(pdf["_pid"].iloc[0])]
+                counter = offsets[int(pdf["_pid"].iloc[0])]
             if dedup:
                 keys = pdf[ids]
                 # null-safe equality: the kept-row counts come from Spark's

@@ -16,25 +16,23 @@ One kernel, :func:`merge_rows_columnar`, turns run rows into packed
 segment rows: a batched decode, a vectorized k-way merge (one lexsort over
 the disjoint docID-sorted runs of each key, no per-posting Python, so the
 output is fully determined by the posting keys) and a batched block pack.
-Every merge placement calls it: ``index_build._merge_bucket`` (driver
-threads or one Spark task per bucket) and :func:`merge_runs_segments`
-(the (term, salt) shuffle for large runs-sourced merges).
+Its one caller is ``index_build._merge_bucket``, which every merge
+placement runs per term bucket (driver threads, or one Spark task per
+bucket).
 
 Output layout:
 * light terms (df <= heavy_df_threshold): one row per term, range_id = -1,
   full posting list;
-* heavy terms: one row per (term, doc-range), range_id = salt from stage 1
-  — the query executor prunes these rows by range.
+* heavy terms (and terms an input generation already holds range-split):
+  one row per (term, doc-range), range_id = doc_id // range_size — the
+  query executor prunes these rows by range.
 """
 
 from __future__ import annotations
 
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
 
 from dawnsearch_spark.config import EngineConfig
 from dawnsearch_spark.functions.codec import encode_posting_blocks, varbyte_decode
@@ -141,8 +139,8 @@ def _merge_key_postings(
     Decodes ALL rows' streams in ONE varbyte call per stream (the
     per-row/per-key NumPy fixed overhead dominated the merge at O(batch)
     input sizes), assigns every posting its final (term, salt) key —
-    splitting light rows of ``split_terms`` members by doc-range exactly
-    like ``reclassify_runs`` — applies the tombstone mask, and merges via
+    splitting light rows (salt = -1) of ``split_terms`` members by
+    doc-range (salt = doc_id // range_size) — applies the tombstone mask, and merges via
     one global lexsort (docs are disjoint across a key's runs, so the
     permutation is fully determined — same output as the per-key stable
     argsort). Returns (key_terms, key_tids, key_salts, key_starts, docs,
@@ -416,56 +414,6 @@ def merge_rows_columnar(
     return encode_segment_columns(
         key_terms, key_tid, key_salts, key_starts, d, t, l, cfg
     )
-
-
-def merge_runs_segments(
-    runs: DataFrame, cfg: EngineConfig, parts: int, tombstones_bc=None
-) -> DataFrame:
-    """Unified run merge: one (term, salt)-keyed exchange + mapInPandas
-    whose batches run the fully-batched :func:`merge_rows_columnar`
-    kernel — light keys (salt = -1) come out as light rows, salted keys
-    as range rows, exactly the rows the former light/heavy branch pair
-    produced, with one exchange + one Python stage instead of two of
-    each. Key groups are reassembled across Arrow batches (trailing-group
-    carry-over)."""
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        tomb = tombstones_bc.value if tombstones_bc is not None else None
-        cols = merge_rows_columnar(
-            pdf["term"].to_numpy(),
-            pdf["salt"].to_numpy(np.int64),
-            pdf["n_docs"].to_numpy(np.int64),
-            pdf["doc_blob"].to_numpy(),
-            pdf["tf_blob"].to_numpy(),
-            pdf["dl_blob"].to_numpy(),
-            cfg,
-            tomb=tomb,
-        )
-        return pd.DataFrame(segment_columns_to_rows(cols))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        pending: pd.DataFrame | None = None
-        for pdf in batches:
-            if pending is not None and len(pending):
-                pdf = pd.concat([pending, pdf], ignore_index=True)
-                pending = None
-            if not len(pdf):
-                continue
-            term = pdf["term"].to_numpy()
-            salt = pdf["salt"].to_numpy()
-            same_tail = (term == term[-1]) & (salt == salt[-1])
-            diff = np.flatnonzero(~same_tail)
-            start = int(diff[-1]) + 1 if len(diff) else 0
-            complete, pending = pdf.iloc[:start], pdf.iloc[start:]
-            if len(complete):
-                yield emit(complete.reset_index(drop=True))
-        if pending is not None and len(pending):
-            yield emit(pending.reset_index(drop=True))
-
-    sorted_runs = runs.repartition(parts, "term", "salt").sortWithinPartitions(
-        "term", "salt", "group"
-    )
-    return sorted_runs.mapInPandas(gen, SEGMENT_SCHEMA)
 
 
 def _tombstone_mask(docs: np.ndarray, tomb: np.ndarray) -> np.ndarray:

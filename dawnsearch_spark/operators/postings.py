@@ -1,23 +1,17 @@
-"""Stage-1 posting-run construction: salted groupBy-term shuffle -> packed runs.
+"""Stage-2 posting-run construction: documents -> packed, salt-free runs.
 
 Reference analog: the segment writer that turns an input slice into packed
 fixed-width entries + side payload files
 (/root/reference/src/index/warc.rs:45-125); one run row here = one term's
-docID-sorted, delta+varbyte-packed postings for one (build-group, salt).
+docID-sorted, delta+varbyte-packed postings for one Arrow batch of one
+build group.
 
-Skew handling (north_rule; reference analog P10 — the reference's only
-placement strategy is random 3-peer replication, udp_service.rs:388-393,
-with semantic placement left as a README TODO): stopword-like terms whose
-global df exceeds ``heavy_df_threshold`` are salted — their shuffle key is
-(term, doc_id // range_size), so no reducer group ever exceeds
-``range_size`` postings AND the salt doubles as the serving doc-range chunk
-of the final index. Light terms use salt = -1 (one group per term per
-build group).
-
-The pack runs inside ``mapInPandas`` over partitions sorted by
-(term, salt, doc_id): groups are reassembled streamingly across Arrow
-batches (carry-over of the trailing group), split with NumPy boundary
-detection — no per-row Python.
+Runs carry no layout decision: whether a term is served as one light row
+or range-split into (term, doc_id // range_size) rows is decided at merge
+time, from the exact term dictionary (``index_build._merge_bucket``). A
+run row is just a term's disjoint postings, so the merge kernel combines a
+term's rows in any grouping — including older runs on disk that still
+carry a ``salt`` column, which the merge ignores.
 """
 
 from __future__ import annotations
@@ -27,41 +21,16 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
 
 RUN_SCHEMA = (
-    "term string, salt long, n_docs long, tf_sum long, "
+    "term string, n_docs long, tf_sum long, "
     "doc_blob binary, tf_blob binary, dl_blob binary"
 )
 
-RUN_COLS = ["term", "salt", "doc_id", "tf", "dl"]
-
-
-def with_salt(
-    tf: DataFrame, heavy_terms: DataFrame, range_size: int, broadcast: bool = True
-) -> DataFrame:
-    """Add the shuffle salt: doc-range id for heavy terms, -1 for light.
-
-    ``broadcast=False`` drops the broadcast hint for the case that makes
-    this path necessary at all — a heavy set too large to ship (see
-    ``EngineConfig.max_broadcast_heavy_terms``); the join then goes through
-    a regular shuffle join (AQE picks the strategy)."""
-    marked_dim = heavy_terms.select("term").withColumn("_heavy", F.lit(True))
-    if broadcast:
-        marked_dim = F.broadcast(marked_dim)
-    marked = tf.join(marked_dim, "term", "left")
-    return marked.withColumn(
-        "salt",
-        F.when(F.col("_heavy"), (F.col("doc_id") / F.lit(range_size)).cast("long")).otherwise(
-            F.lit(-1)
-        ),
-    ).drop("_heavy")
-
 
 def _pack_complete(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Pack a frame containing only complete (term, salt) groups, sorted.
+    """Pack a frame of (term, doc_id, tf, dl) postings sorted by
+    (term, doc_id): one run row per term.
 
     Batched: the whole frame's gap/tf/dl streams are varbyte-encoded in ONE
     call each, then sliced per group by byte offset — a code corpus has
@@ -71,11 +40,10 @@ def _pack_complete(pdf: pd.DataFrame) -> pd.DataFrame:
 
     n = len(pdf)
     term = pdf["term"].to_numpy()
-    salt = pdf["salt"].to_numpy(np.int64)
     docs = pdf["doc_id"].to_numpy(np.int64)
     tfs = pdf["tf"].to_numpy(np.int64)
     dls = pdf["dl"].to_numpy(np.int64)
-    change = np.flatnonzero((term[1:] != term[:-1]) | (salt[1:] != salt[:-1])) + 1
+    change = np.flatnonzero(term[1:] != term[:-1]) + 1
     bounds = np.concatenate(([0], change, [n]))
     starts = bounds[:-1]
 
@@ -102,7 +70,6 @@ def _pack_complete(pdf: pd.DataFrame) -> pd.DataFrame:
     return pd.DataFrame(
         {
             "term": term[starts],
-            "salt": salt[starts],
             "n_docs": (bounds[1:] - starts).astype(np.int64),
             "tf_sum": tf_sums.astype(np.int64),
             "doc_blob": [doc_all[od[i] : od[i + 1]] for i in range(g)],
@@ -112,171 +79,22 @@ def _pack_complete(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def _split_trailing_group(pdf: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
-    """Split off the trailing (term, salt) group (it may continue in the
-    next Arrow batch)."""
-    term = pdf["term"].to_numpy()
-    salt = pdf["salt"].to_numpy()
-    same = (term == term[-1]) & (salt == salt[-1])
-    diff_idx = np.flatnonzero(~same)
-    start = int(diff_idx[-1]) + 1 if len(diff_idx) else 0
-    return pdf.iloc[:start], pdf.iloc[start:]
-
-
-def _pack_runs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    pending: pd.DataFrame | None = None
-    for pdf in batches:
-        if pending is not None and len(pending):
-            pdf = pd.concat([pending, pdf], ignore_index=True)
-            pending = None
-        if not len(pdf):
-            continue
-        complete, pending = _split_trailing_group(pdf)
-        if len(complete):
-            yield _pack_complete(complete)
-    if pending is not None and len(pending):
-        yield _pack_complete(pending.reset_index(drop=True))
-
-
-def reclassify_runs(runs: DataFrame, heavy_terms: DataFrame, cfg) -> DataFrame:
-    """Split light runs (salt = -1) of terms that are heavy under the
-    *current* term dictionary into range-salted runs.
-
-    Needed after incremental appends: a term light at the time group g was
-    built may have crossed ``heavy_df_threshold`` since; its old runs must
-    be re-salted so the merge produces uniformly range-chunked rows
-    (df only grows, so heavy->light never happens)."""
-    from dawnsearch_spark.functions.codec import varbyte_decode
-
-    marked = runs.join(
-        F.broadcast(heavy_terms.select("term").withColumn("_h", F.lit(True))),
-        "term",
-        "left",
-    )
-    ok = marked.filter(~(F.col("_h").isNotNull() & (F.col("salt") == -1))).drop("_h")
-    to_split = marked.filter(F.col("_h").isNotNull() & (F.col("salt") == -1)).drop("_h")
-    range_size = cfg.range_size
-    out_cols = [c for c in runs.columns]
-    schema = ", ".join(
-        f"{c} {'string' if c == 'term' else ('binary' if c.endswith('_blob') else 'long')}"
-        for c in out_cols
-    )
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # Vectorized re-encode: per row only the (unavoidable) varbyte
-        # decode loops; every output slice of the whole batch is encoded
-        # in ONE varbyte call per stream and sliced by byte offsets —
-        # the _pack_complete pattern. Matters because the small-corpus
-        # build path (detection skipped) routes ALL heavy terms through
-        # here, and per-slice NumPy calls cost ~50x their vector form.
-        from dawnsearch_spark.functions.codec import varbyte_encode_with_sizes
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            docs_l, tfs_l, dls_l = [], [], []
-            row_starts = [0]
-            for r in pdf.itertuples(index=False):
-                n = int(r.n_docs)
-                gaps = varbyte_decode(r.doc_blob, n)
-                docs_l.append(np.cumsum(gaps.astype(np.int64)))
-                tfs_l.append(varbyte_decode(r.tf_blob, n).astype(np.int64))
-                dls_l.append(varbyte_decode(r.dl_blob, n).astype(np.int64))
-                row_starts.append(row_starts[-1] + n)
-            docs = np.concatenate(docs_l)
-            tfs = np.concatenate(tfs_l)
-            dls = np.concatenate(dls_l)
-            total = len(docs)
-            row_starts = np.asarray(row_starts, np.int64)
-            # slice bounds = row starts ∪ range changes within a row
-            ranges = docs // range_size
-            change = np.flatnonzero(ranges[1:] != ranges[:-1]) + 1
-            bounds = np.unique(np.concatenate((row_starts, change)))
-            if bounds[-1] != total:
-                bounds = np.concatenate((bounds, [total]))
-            starts, ends = bounds[:-1], bounds[1:]
-            # first posting of each slice stores the absolute docID
-            gaps_all = np.empty(total, np.uint64)
-            gaps_all[1:] = (docs[1:] - docs[:-1]).astype(np.uint64)
-            gaps_all[starts] = docs[starts].astype(np.uint64)
-            doc_all, nb_d = varbyte_encode_with_sizes(gaps_all)
-            tf_all, nb_t = varbyte_encode_with_sizes(tfs.astype(np.uint64))
-            dl_all, nb_l = varbyte_encode_with_sizes(dls.astype(np.uint64))
-
-            def offs(nb: np.ndarray) -> np.ndarray:
-                c = np.zeros(total + 1, np.int64)
-                np.cumsum(nb, out=c[1:])
-                return c[bounds]
-
-            od, ot, ol = offs(nb_d), offs(nb_t), offs(nb_l)
-            src_row = np.searchsorted(row_starts, starts, side="right") - 1
-            out = {
-                "term": pdf["term"].to_numpy()[src_row],
-                "salt": ranges[starts].astype(np.int64),
-                "n_docs": (ends - starts).astype(np.int64),
-                "doc_blob": [doc_all[od[i]: od[i + 1]] for i in range(len(starts))],
-                "tf_blob": [tf_all[ot[i]: ot[i + 1]] for i in range(len(starts))],
-                "dl_blob": [dl_all[ol[i]: ol[i + 1]] for i in range(len(starts))],
-            }
-            if "tf_sum" in out_cols:
-                out["tf_sum"] = np.add.reduceat(tfs, starts).astype(np.int64)
-            if "group" in out_cols:
-                out["group"] = pdf["group"].to_numpy()[src_row]
-            yield pd.DataFrame({c: out[c] for c in out_cols})
-
-    return ok.unionByName(to_split.mapInPandas(gen, schema))
-
-
-def build_posting_runs(tf_salted: DataFrame, parts: int) -> DataFrame:
-    """(term, salt, doc_id, tf, dl) -> packed run rows.
-
-    One shuffle on (term, salt) with in-partition sort; the pack itself is
-    a streaming mapInPandas (Arrow-batched), so a partition never needs to
-    fit a pandas frame of the whole partition in memory at once.
-    """
-    sorted_parts = tf_salted.select(*RUN_COLS).repartition(
-        parts, "term", "salt"
-    ).sortWithinPartitions("term", "salt", "doc_id")
-    return sorted_parts.mapInPandas(_pack_runs, RUN_SCHEMA)
-
-
-def build_posting_miniruns(
-    docs: DataFrame,
-    heavy_terms,
-    range_size: int,
-    content_col: str = "content",
-) -> DataFrame:
+def build_posting_miniruns(docs: DataFrame, content_col: str = "content") -> DataFrame:
     """Documents -> packed posting mini-runs, entirely inside one Arrow
-    stage: tokenize + TF + salt + docID-sorted varbyte pack per batch.
+    stage: tokenize + TF + docID-sorted varbyte pack per batch.
 
     This is the build hot path: the JVM never materializes per-posting
-    rows — it only shuffles ~10x fewer compact blob rows (one per
-    (term, salt) per batch), which the stage-3 merge combines into final
-    posting lists exactly like multi-group runs. Salting: heavy
-    (stopword-like) terms get salt = doc_id // range_size (the doc-range
-    chunk of the final index); light terms salt = -1.
-
-    ``heavy_terms`` is a frozenset OR a ``pyspark.Broadcast`` of one — a
-    broadcast ships the set once per executor instead of pickling it into
-    every task closure (the set is bounded ~avgdl/heavy_df_ratio by the
-    ratio threshold, but once-per-executor is the right transport anyway;
-    sets above ``max_broadcast_heavy_terms`` use ``with_salt`` instead).
-    """
+    rows — it only writes compact blob rows (one per (term, batch)),
+    which the stage-3 merge combines into final posting lists."""
     from dawnsearch_spark.operators.tf import tf_frame
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        hv = heavy_terms.value if hasattr(heavy_terms, "value") else heavy_terms
         for pdf in batches:
             if not len(pdf):
                 continue
             tf = tf_frame(pdf, content_col)
             if not len(tf):
                 continue
-            heavy_mask = tf["term"].isin(hv).to_numpy()
-            salt = np.full(len(tf), -1, np.int64)
-            salt[heavy_mask] = tf["doc_id"].to_numpy(np.int64)[heavy_mask] // range_size
-            tf["salt"] = salt
-            tf = tf.sort_values(["term", "salt", "doc_id"], ignore_index=True)
-            yield _pack_complete(tf)
+            yield _pack_complete(tf.sort_values(["term", "doc_id"], ignore_index=True))
 
     return docs.select("doc_id", content_col).mapInPandas(gen, RUN_SCHEMA)

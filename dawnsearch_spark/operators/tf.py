@@ -158,28 +158,6 @@ def term_frequencies_pruned(
     return docs.select("doc_id", content_col).mapInPandas(gen, TF_SCHEMA)
 
 
-def term_frequency_partials(docs: DataFrame, content_col: str = "content") -> DataFrame:
-    """Per-batch (term, df_part, cf_part) partial aggregates — the map-side
-    combine for the term dictionary done in pandas, so the JVM aggregates
-    ~10x fewer rows than the full TF relation."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            tf = tf_frame(pdf, content_col)
-            if not len(tf):
-                continue
-            g = tf.groupby("term", sort=False).agg(
-                df_part=("doc_id", "size"), cf_part=("tf", "sum")
-            )
-            yield g.reset_index()
-
-    return docs.select("doc_id", content_col).mapInPandas(
-        gen, "term string, df_part long, cf_part long"
-    )
-
-
 def doc_lengths(docs: DataFrame, content_col: str = "content") -> DataFrame:
     """(doc_id, dl) token counts (same vectorized tokenizer)."""
 
@@ -222,10 +200,3 @@ def document_frequencies(tf: DataFrame) -> DataFrame:
         F.sum("tf").cast("long").alias("cf"),
     )
 
-
-def document_frequencies_fast(docs: DataFrame, content_col: str = "content") -> DataFrame:
-    """(term, df, cf) via pandas partial aggregates (build hot path)."""
-    return term_frequency_partials(docs, content_col).groupBy("term").agg(
-        F.sum("df_part").cast("long").alias("df"),
-        F.sum("cf_part").cast("long").alias("cf"),
-    )

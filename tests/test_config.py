@@ -42,3 +42,20 @@ def test_unknown_key_raises(tmp_path):
     p.write_text("[engine]\nmax_driver_posting = 5\n")
     with pytest.raises(ValueError, match="max_driver_posting"):
         load_config(str(p))
+
+
+def test_toml_example_covers_every_field():
+    """The example file names every EngineConfig field (a commented
+    ``# key = ...`` line counts) and nothing else, so a removed or added
+    knob cannot drift out of step with it."""
+    import re
+    from dataclasses import fields
+
+    path = os.path.join(os.path.dirname(__file__), "..", "dawnsearch_spark.toml.example")
+    with open(path) as f:
+        keys = {
+            m.group(1)
+            for line in f
+            if (m := re.match(r"^#?\s*([a-z_][a-z0-9_]*)\s*=", line))
+        }
+    assert keys == {f.name for f in fields(EngineConfig)}

@@ -68,16 +68,27 @@ def _stats(root: str) -> dict:
     return m
 
 
-def test_runs_shuffle_merge_identical_to_driver(spark, cfg, tmp_path, monkeypatch):
+def _bucket_files(root: str) -> dict[str, bytes]:
+    seg = IndexPaths(root).segments
+    return {
+        os.path.relpath(os.path.join(d, f), seg): open(os.path.join(d, f), "rb").read()
+        for d, _, files in os.walk(seg)
+        for f in files
+        if f.endswith(".parquet")
+    }
+
+
+def test_runs_task_merge_identical_to_driver(spark, cfg, tmp_path, monkeypatch):
     """Runs-sourced merges over the budget (first build, appends and a
-    compaction with runs retained) take the (term, salt) shuffle and must
-    write the rows the driver placement writes."""
+    compaction with runs retained) run the kernel in per-bucket Spark
+    tasks fed by one exchange keyed by bucket, and must write the very
+    files the driver placement writes."""
     keep_cfg = replace(cfg, max_segment_generations=2)
     chunks = _chunks(spark)
-    shuffled, driver = str(tmp_path / "shuffled"), str(tmp_path / "driver")
-    for root, budget in ((driver, ib.DRIVER_MERGE_MAX_POSTINGS), (shuffled, 0)):
+    tasks, driver = str(tmp_path / "tasks"), str(tmp_path / "driver")
+    for root, budget in ((driver, ib.DRIVER_MERGE_MAX_POSTINGS), (tasks, 0)):
         monkeypatch.setattr(ib, "DRIVER_MERGE_MAX_POSTINGS", budget)
-        calls = _spy(monkeypatch, "_merge_shuffled")
+        calls = _spy(monkeypatch, "_merge_in_tasks")
         build_index(spark, chunks[0], root, keep_cfg, n_groups=1)
         for c in chunks[1:]:
             append_documents(spark, root, c, keep_cfg, n_groups=1)
@@ -85,16 +96,35 @@ def test_runs_shuffle_merge_identical_to_driver(spark, cfg, tmp_path, monkeypatc
         assert len(calls) == (4 if budget == 0 else 0), root
         monkeypatch.undo()
 
-    gens = segment_generations(shuffled)
+    gens = segment_generations(tasks)
     assert any(len(g["groups"]) > 1 for g in gens), "no compaction ran"
     assert [(g["gen"], g["groups"], g["rows"], g["postings"]) for g in gens] == [
         (g["gen"], g["groups"], g["rows"], g["postings"])
         for g in segment_generations(driver)
     ]
-    assert _segment_rows(spark, shuffled) == _segment_rows(spark, driver)
-    es, ed = Engine(spark, shuffled, keep_cfg), Engine(spark, driver, keep_cfg)
+    got, want = _bucket_files(tasks), _bucket_files(driver)
+    assert got and all(k.endswith("/" + ib.BUCKET_FILE) for k in got)
+    assert got == want, "task placement must write byte-identical bucket files"
+    assert _segment_rows(spark, tasks) == _segment_rows(spark, driver)
+    es, ed = Engine(spark, tasks, keep_cfg), Engine(spark, driver, keep_cfg)
     for q in QUERIES:
         assert es.search(q) == ed.search(q), q
+
+
+def test_exchanged_buckets_gather_across_batches():
+    """A task's sorted partition yields each bucket once, whole, even when
+    its rows span Arrow batches (and empty batches arrive)."""
+    import pyarrow as pa
+
+    def rb(buckets):
+        return pa.RecordBatch.from_pydict(
+            {"bucket": buckets, "term": [f"t{i}" for i in range(len(buckets))]},
+            schema=pa.schema([("bucket", pa.int64()), ("term", pa.string())]),
+        )
+
+    batches = [rb([0, 0, 1]), rb([]), rb([1, 1, 3]), rb([3]), rb([5])]
+    got = [(b, t.column("bucket").to_pylist()) for b, t in ib._exchanged_buckets(batches)]
+    assert got == [(0, [0, 0]), (1, [1, 1, 1]), (3, [3, 3]), (5, [5])]
 
 
 def test_stage1b_spark_aggregator_identical_to_pandas(spark, cfg, tmp_path, monkeypatch):
@@ -150,8 +180,9 @@ def test_missing_bucket_file_blocks_commit(spark, cfg, tmp_path, monkeypatch):
     before = read_manifest(d, "segments")
     real = ib._merge_in_tasks
 
-    def lose_one_file(spark_, cfg_, files, heavy, tomb, gdir):
-        out = real(spark_, cfg_, files, heavy, tomb, gdir)
+    def lose_one_file(*args):
+        out = real(*args)
+        gdir = args[-1]
         b = min(b for b, (n, _) in out.items() if n)
         os.remove(os.path.join(gdir, f"bucket={b}", ib.BUCKET_FILE))
         return out
@@ -165,3 +196,55 @@ def test_missing_bucket_file_blocks_commit(spark, cfg, tmp_path, monkeypatch):
     assert purge_deletes(spark, d, gc_cfg)["purged"] == 3
     got = Engine(spark, d, gc_cfg).search("parse http request", k=50)
     assert got and not {doc for doc, _ in got} & {1, 2, 3}
+
+
+def _spy_broadcasts(monkeypatch) -> tuple[list, set]:
+    """(broadcasts created, ids of broadcasts destroyed) from here on."""
+    from pyspark import Broadcast, SparkContext
+
+    created: list = []
+    destroyed: set = set()
+    real_bc, real_destroy = SparkContext.broadcast, Broadcast.destroy
+
+    def broadcast(self, value):
+        bc = real_bc(self, value)
+        created.append(bc)
+        return bc
+
+    def destroy(self, *a, **k):
+        destroyed.add(id(self))
+        return real_destroy(self, *a, **k)
+
+    monkeypatch.setattr(SparkContext, "broadcast", broadcast)
+    monkeypatch.setattr(Broadcast, "destroy", destroy)
+    return created, destroyed
+
+
+def test_driver_placement_build_and_append_broadcast_nothing(spark, cfg, tmp_path, monkeypatch):
+    """Build and append under the driver budgets ship nothing to executors
+    as a broadcast, so a long-lived session accumulates none."""
+    chunks = _chunks(spark)
+    d = str(tmp_path / "idx")
+    created, _ = _spy_broadcasts(monkeypatch)
+    build_index(spark, chunks[0], d, cfg, n_groups=2)
+    append_documents(spark, d, chunks[1], cfg)
+    assert created == []
+
+
+def test_task_placement_destroys_every_broadcast(spark, cfg, tmp_path, monkeypatch):
+    """Forced task placement through build, append, delete and purge —
+    runs-sourced and (runs GC'd) segment-sourced merges — destroys every
+    broadcast it creates."""
+    gc_cfg = replace(cfg, gc_runs=True)
+    chunks = _chunks(spark)
+    d = str(tmp_path / "idx")
+    monkeypatch.setattr(ib, "DRIVER_MERGE_MAX_POSTINGS", 0)
+    tasks = _spy(monkeypatch, "_merge_in_tasks")
+    created, destroyed = _spy_broadcasts(monkeypatch)
+    build_index(spark, chunks[0], d, gc_cfg, n_groups=2)
+    append_documents(spark, d, chunks[1], gc_cfg)
+    delete_documents(spark, d, gc_cfg, doc_ids=[1, 2, 3])
+    assert purge_deletes(spark, d, gc_cfg)["purged"] == 3
+    assert len(tasks) == 3
+    assert created, "task placement ships heavy/tomb sets as broadcasts"
+    assert [bc for bc in created if id(bc) not in destroyed] == []

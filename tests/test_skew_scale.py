@@ -1,5 +1,5 @@
-"""Scale-parameterized skew handling: ratio-based heavy threshold, the
-broadcast-size guard with join-based salting fallback, and fresh-build
+"""Scale-parameterized skew handling: ratio-based heavy threshold,
+mass-heavy dictionaries, threshold drift across appends, and fresh-build
 identity-key dedup (VERDICT r1 items 5/8/10)."""
 
 from __future__ import annotations
@@ -10,8 +10,16 @@ from dataclasses import replace
 import pytest
 from pyspark.sql import functions as F
 
+import dawnsearch_spark.index_build as ib
 from dawnsearch_spark.config import EngineConfig
-from dawnsearch_spark.index_build import build_index
+from dawnsearch_spark.corpus import generate_corpus, with_content_sha
+from dawnsearch_spark.index_build import (
+    IndexPaths,
+    build_index,
+    read_segments,
+    segment_generations,
+)
+from dawnsearch_spark.manifest import read_manifest
 from dawnsearch_spark.operators.oracle import bm25_exact_topk
 from dawnsearch_spark.operators.tf import (
     corpus_stats,
@@ -20,6 +28,7 @@ from dawnsearch_spark.operators.tf import (
     term_frequencies,
 )
 from dawnsearch_spark.plans.query import Engine
+from dawnsearch_spark.streaming.incremental import append_documents
 
 QUERIES = ["def import", "parse http request", "getValue config"]
 
@@ -40,9 +49,9 @@ def _oracle(spark, corpus):
     return tf, stats, dfs
 
 
-def _assert_rank_identical(engine, oracle_inputs, cfg):
+def _assert_rank_identical(engine, oracle_inputs, cfg, queries=QUERIES):
     tf, stats, dfs = oracle_inputs
-    for query in QUERIES:
+    for query in queries:
         want = [
             (r["doc_id"], r["score"])
             for r in bm25_exact_topk(tf, dfs, stats, query, cfg).collect()
@@ -51,18 +60,6 @@ def _assert_rank_identical(engine, oracle_inputs, cfg):
         assert [g[0] for g in got] == [w[0] for w in want], query
         for (_, gs), (_, ws) in zip(got, want):
             assert math.isclose(gs, ws, rel_tol=1e-9)
-
-
-def test_join_salting_fallback_rank_identical(spark, small_corpus, cfg, tmp_path):
-    """max_broadcast_heavy_terms=0 forces the fully-distributed with_salt
-    join path; the index must answer rank-identically to the oracle."""
-    jcfg = replace(cfg, max_broadcast_heavy_terms=0)
-    d = str(tmp_path / "joinpath")
-    counters = build_index(spark, small_corpus, d, jcfg, n_groups=2)
-    assert counters["n_docs"] == 400
-    seg = spark.read.parquet(d + "/segments")
-    assert seg.filter(F.col("range_id") >= 0).count() > 0  # salted rows exist
-    _assert_rank_identical(Engine(spark, d, jcfg), _oracle(spark, small_corpus), jcfg)
 
 
 def test_mass_heavy_terms_build(spark, small_corpus, cfg, tmp_path):
@@ -112,58 +109,79 @@ def test_fresh_build_dedups_identity_key(spark, small_corpus, cfg, tmp_path):
         assert e1.search(q) == e2.search(q)
 
 
-def test_heavy_to_light_threshold_drift_keeps_postings(
-    spark, small_corpus, cfg, tmp_path
-):
-    """A term salted under an old (lower) threshold must keep serving after
-    the effective threshold rises above its df (ratio thresholds move with
-    n_docs): its salted runs merge with df from the full dictionary and new
-    light runs are re-salted, never dropped or double-served."""
-    d = str(tmp_path / "drift")
-    # salts mid-frequency terms AT STAGE 2 (the drift scenario needs old
-    # salted runs ON DISK, i.e. the large-corpus sampled-detection path —
-    # small corpora now skip detection and salt only at merge, so force
-    # the detection branch with a zero floor + full sample)
-    low = replace(
-        cfg, heavy_df_threshold=8, heavy_sample_min_docs=0, heavy_sample_fraction=1.0
+def _rot13(df):
+    """Same Zipf shape, (almost) disjoint vocabulary: appended docs leave
+    every original term's df where it was while n_docs grows."""
+    lo = "abcdefghijklmnopqrstuvwxyz"
+    up = lo.upper()
+    return df.withColumn(
+        "content",
+        F.translate("content", lo + up, lo[13:] + lo[:13] + up[13:] + up[:13]),
     )
-    build_index(spark, small_corpus, d, low, n_groups=2)
-    # simulate the effective threshold drifting up to 200 (ratio thresholds
-    # rise with n_docs): old salted runs remain on disk while the current
-    # dictionary flags far fewer terms heavy. Verify the stage-3 merge
-    # semantics at the operator level.
-    from dawnsearch_spark.operators.merge import merge_runs_segments
-    from dawnsearch_spark.operators.postings import reclassify_runs
 
-    # recompute dictionary under the HIGH threshold
-    from dawnsearch_spark.operators.tf import document_frequencies_fast
 
-    docs = spark.read.parquet(d + "/documents")
-    dfs = document_frequencies_fast(docs, "content").withColumn(
-        "heavy", F.col("df") > F.lit(200)
+def test_heavy_to_light_threshold_drift_keeps_postings(spark, cfg, tmp_path, monkeypatch):
+    """A ratio threshold rises with n_docs, so a term range-split in gen 0
+    can be light under the dictionary by the time a compaction re-merges
+    gen 0. With runs retained the compaction re-decides the layout from
+    the dictionary (one light row); after gc_runs it re-merges segment
+    rows and keeps the range split. Under both placements no posting is
+    lost, no term serves both layouts within a generation, and answers
+    stay rank-identical to the oracle."""
+    drift = replace(
+        cfg, heavy_df_threshold=None, heavy_df_ratio=0.05, heavy_df_min=2,
+        max_segment_generations=2,
     )
-    runs_raw = spark.read.parquet(d + "/runs")
-    salted_before = runs_raw.filter(F.col("salt") >= 0)
-    n_salted_terms = salted_before.select("term").distinct().count()
-    assert n_salted_terms > 0
-    heavy_now = dfs.filter(F.col("heavy"))
-    split_terms = (
-        heavy_now.select("term")
-        .union(salted_before.select("term"))
-        .distinct()
-    )
-    runs = reclassify_runs(runs_raw, split_terms, low)
-    salted = runs.filter(F.col("salt") >= 0)
-    heavy_rows = merge_runs_segments(salted, low, 8)
-    light_rows = merge_runs_segments(runs.filter(F.col("salt") == -1), low, 8)
-    # no salted term lost its postings, and no term serves from both layouts
-    salted_terms_out = {r["term"] for r in heavy_rows.select("term").distinct().collect()}
-    light_terms_out = {r["term"] for r in light_rows.select("term").distinct().collect()}
-    assert len(salted_terms_out) == n_salted_terms
-    assert not (salted_terms_out & light_terms_out)
-    # posting mass preserved across the whole merge
-    total_in = runs_raw.agg(F.sum("n_docs")).collect()[0][0]
-    total_out = heavy_rows.agg(F.sum("n_docs")).collect()[0][0] + (
-        light_rows.agg(F.sum("n_docs")).collect()[0][0] or 0
-    )
-    assert total_in == total_out
+    base = with_content_sha(generate_corpus(spark, 200, seed=7, vocab_size=1500))
+    appends = [
+        with_content_sha(
+            _rot13(generate_corpus(spark, 300, seed=7 + i, vocab_size=1500, start=start))
+        )
+        for i, start in ((1, 200), (2, 500))
+    ]
+    oracle, rows_by = None, {}
+    for gc_runs in (False, True):
+        for budget in (ib.DRIVER_MERGE_MAX_POSTINGS, 0):
+            c = replace(drift, gc_runs=gc_runs)
+            root = str(tmp_path / f"gc{int(gc_runs)}-b{budget}")
+            monkeypatch.setattr(ib, "DRIVER_MERGE_MAX_POSTINGS", budget)
+            build_index(spark, base, root, c, n_groups=1)
+            gen0_split = {
+                r["term"]
+                for r in read_segments(spark, root)
+                .filter(F.col("range_id") >= 0).select("term").distinct().collect()
+            }
+            for a in appends:
+                append_documents(spark, root, a, c, n_groups=1)
+            monkeypatch.undo()
+
+            (comp,) = [g for g in segment_generations(root) if 0 in g["groups"]]
+            assert len(comp["groups"]) > 1, "gen 0 was never compacted"
+            light_now = {
+                r["term"]
+                for r in spark.read.parquet(IndexPaths(root).terms)
+                .filter(~F.col("heavy")).select("term").collect()
+            }
+            drifted = gen0_split & light_now
+            assert drifted, "no gen-0 range-split term fell under the threshold"
+
+            seg = read_segments(spark, root).select("gen", "term", "range_id", "n_docs")
+            pdf = seg.toPandas()
+            rows_by[(gc_runs, budget)] = sorted(map(tuple, pdf.to_numpy().tolist()))
+            # posting mass preserved: every posting served exactly once
+            assert int(pdf["n_docs"].sum()) == read_manifest(root, "stats")["n_postings"]
+            # within a generation a term is light or range-split, never both
+            layouts = pdf.assign(split=pdf["range_id"] >= 0).groupby(["gen", "term"])["split"]
+            assert (layouts.nunique() == 1).all()
+            # the compacted generation's layout of the drifted terms
+            mine = pdf[(pdf["gen"] == comp["gen"]) & pdf["term"].isin(drifted)]
+            assert len(mine) and ((mine["range_id"] >= 0) == gc_runs).all()
+
+            if oracle is None:
+                oracle = _oracle(spark, spark.read.parquet(IndexPaths(root).documents))
+            _assert_rank_identical(
+                Engine(spark, root, c), oracle, c,
+                QUERIES + [" ".join(sorted(drifted)[:3])],
+            )
+    for gc_runs in (False, True):
+        assert rows_by[(gc_runs, 0)] == rows_by[(gc_runs, ib.DRIVER_MERGE_MAX_POSTINGS)]
