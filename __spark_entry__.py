@@ -2170,9 +2170,9 @@ def q_wand_topk_2(spark, sf_dir):
 
 
 def q_wand_topk_dist(spark, sf_dir):
-    """T4 under the driver gate with the DISTRIBUTED branch forced:
-    max_driver_heavy_rows=0 disables the driver fast path and a tiny
-    max_driver_postings budget overflows the light lists, so heavy range
+    """T4 under the driver gate with the DISTRIBUTED branch forced: a
+    tiny max_driver_postings budget keeps the query off the driver path
+    and overflows the light lists, so heavy range
     fan-out AND executor-side range-splitting of light lists
     (applyInPandas + mapInPandas) both run — against the same exact-BM25
     oracle. Round 2's gap: the sf0.1/sf0.01 indexes always fit the driver
@@ -2183,9 +2183,7 @@ def q_wand_topk_dist(spark, sf_dir):
 
     root = _wand_index_root(spark, sf_dir)
     cfg = _replace(_wand_cfg(), max_driver_postings=64)
-    hits = search_index(
-        spark, root, BM25_QUERY_2, cfg, max_driver_heavy_rows=0, task_groups=8
-    )
+    hits = search_index(spark, root, BM25_QUERY_2, cfg, task_groups=8)
     out = spark.createDataFrame(
         [(int(d), float(s)) for d, s in hits] or [], "doc_id long, score double"
     )

@@ -256,21 +256,25 @@ def main() -> None:
             .limit(6)
             .collect()
         ]
-        heavy_terms_b = [
-            r["term"]
-            for r in tdict.orderBy(F.desc("df"), F.asc("term")).limit(2).collect()
-        ]
+        heavy_b = tdict.orderBy(F.desc("df"), F.asc("term")).limit(2).collect()
+        heavy_terms_b = [r["term"] for r in heavy_b]
+        from dataclasses import replace as _replace
+
+        # a budget one short of the two heavy lists keeps every
+        # rare + heavy + heavy query on the distributed branch, with its
+        # rare light list on the driver and the range θ seed
+        prune_engine = Engine(
+            spark, idx_dir,
+            _replace(cfg, max_driver_postings=sum(r["df"] for r in heavy_b) - 1),
+        )
         # two passes over the same query set: pass 2's light (rare-term)
         # lists come from the LRU — hits recorded, decode drops to zero
         for pass_name in ("wand_prune_counters", "wand_prune_repeat_counters"):
             prune_ctr: dict = {}
             t0 = time.time()
             for t in rare_terms:
-                engine.search(
-                    {t: 1, heavy_terms_b[0]: 1, heavy_terms_b[1]: 1},
-                    max_driver_heavy_rows=0,
-                )
-                _acc(prune_ctr, engine.last_search_counters, _CTRS)
+                prune_engine.search({t: 1, heavy_terms_b[0]: 1, heavy_terms_b[1]: 1})
+                _acc(prune_ctr, prune_engine.last_search_counters, _CTRS)
             if rare_terms:
                 timings[
                     "wand_pruned_avg" if pass_name == "wand_prune_counters"
@@ -279,18 +283,16 @@ def main() -> None:
             extras[pass_name] = prune_ctr
 
         # distributed branch (round-2 gap: the sf0.1 index always fits the
-        # driver fast path, so the fan-out latency was never measured):
-        # max_driver_heavy_rows=0 forces the applyInPandas range tasks and
-        # a tight postings budget forces executor-side light-list splits
-        from dataclasses import replace as _replace
-
+        # driver path, so the fan-out latency was never measured): a tight
+        # postings budget forces the applyInPandas range tasks and
+        # executor-side light-list splits
         dist_engine = Engine(
             spark, idx_dir, _replace(cfg, max_driver_postings=1000)
         )
         dist_ctr: dict = {}
         t0 = time.time()
         for qid in qids[:5]:
-            dist_engine.search(REFERENCE_QUERIES[qid], max_driver_heavy_rows=0)
+            dist_engine.search(REFERENCE_QUERIES[qid])
             _acc(dist_ctr, dist_engine.last_search_counters, _CTRS)
         timings["wand_topk_dist_avg"] = round((time.time() - t0) / 5, 3)
         extras["wand_dist_counters"] = dist_ctr
@@ -307,10 +309,7 @@ def main() -> None:
         seed_modes: dict = {}
         t0 = time.time()
         for t in rare_terms:
-            stress_engine.search(
-                {t: 1, heavy_terms_b[0]: 1, heavy_terms_b[1]: 1},
-                max_driver_heavy_rows=0,
-            )
+            stress_engine.search({t: 1, heavy_terms_b[0]: 1, heavy_terms_b[1]: 1})
             c = stress_engine.last_search_counters
             _acc(stress_ctr, c, _CTRS)
             m = c.get("theta_seed_mode", "")
@@ -410,7 +409,7 @@ def main() -> None:
         timings["appends_total"] = round(time.time() - t_app0, 3)
         engine.refresh()
         refresh_mode = dict(engine.last_meta_load)
-        refresh_mode["new_light_terms"] = len(refresh_mode.get("new_light_terms", ()))
+        refresh_mode["new_terms"] = len(refresh_mode.get("new_terms", ()))
         post_ctr: dict = {}
         t0 = time.time()
         for qid in qids:

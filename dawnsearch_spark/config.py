@@ -58,9 +58,11 @@ class EngineConfig:
     # memory regardless of corpus size (1M postings packs to a few MB of
     # varbyte).
     heavy_df_max: int = 1_000_000
-    # Query-time budget on postings decoded ON THE DRIVER (light lists +
-    # the fast-path heavy rows + the θ-seed range). Light lists are taken
-    # smallest-first until the budget is hit; the rest are range-split on
+    # Query-time budget on postings decoded ON THE DRIVER. A query whose
+    # total postings (every row of every term) fit it is scored whole on
+    # the driver; any other query takes the distributed branch, where
+    # light lists are taken smallest-first until the budget is hit (the
+    # θ-seed range counts against it too) and the rest are range-split on
     # the executors and scored in the distributed range tasks, so a
     # 10-term query of mid-frequency terms (df just under heavy_df_max)
     # can never accumulate hundreds of MB of driver NumPy. 2M postings
@@ -86,24 +88,17 @@ class EngineConfig:
     # (measured via TermMeta.nbytes; the previous dict-of-dicts layout
     # cost ~300+ B/row).
     max_driver_meta_rows: int = 2_000_000
-    # Bound (in POSTINGS) of the Engine's light-list LRU: decoded light
-    # posting lists for repeated serving terms stay resident between
-    # queries (the reference keeps its whole index in RAM between
-    # queries, search_provider.rs:111-120). 4M postings ≈ 100 MB of int64
-    # arrays. 0 disables the cache.
-    light_cache_postings: int = 4_000_000
-    # Bound (in POSTINGS) of the Engine's heavy-row LRU: for repeated
-    # serving terms, each heavy term's FULLY DECODED posting list —
-    # (docs, tfs, dls) merged across generations into one docID-sorted
-    # list — stays resident between queries, and the driver TAAT path
-    # scores from it with no fetch or decode (operators/wand.py). The
-    # arrays are query-independent; qtf and idf apply per query.
-    # 0 disables the cache. NOT part of the config fingerprint. Sized
-    # above the light LRU because one stopword-like term spans ~N/100
-    # postings: a 25-query reference working set holds ~3-4M heavy
-    # postings, and an LRU at exactly that size thrashes. 16M postings
-    # ≈ 384 MB of int64 arrays (three per posting).
-    heavy_cache_postings: int = 16_000_000
+    # Bound (in POSTINGS) of the Engine's posting-list LRU: each repeated
+    # serving term's whole decoded list — (docs, tfs, dls) merged across
+    # its rows into one docID-sorted list, whatever its layout — stays
+    # resident between queries (the reference keeps its whole index in
+    # RAM between queries, search_provider.rs:111-120), so the driver
+    # path scores it with no fetch or decode. One stopword-like term spans
+    # ~N/100 postings: a 25-query reference working set holds ~3-4M of
+    # them, and an LRU at exactly that size thrashes. 20M postings ≈ 480 MB
+    # of int64 arrays (three per posting). 0 disables the cache. NOT part
+    # of the config fingerprint.
+    cache_postings: int = 20_000_000
     # Tiered segment generations: an append merges only its new runs into
     # a fresh generation (O(batch) IO); above this many generations one
     # compaction job re-merges everything into a single generation.

@@ -10,8 +10,8 @@ range row is fetched via the pruned pyarrow segment read (bucket + term +
 range_id filters), the block containing the doc comes from one binary
 search of the row's block directory (``block_last``), and only that block
 decodes — O(block_size) work per term, the same skip machinery WAND uses,
-exercised one doc at a time. Light rows decode whole (they are small by
-definition).
+exercised one doc at a time. Light rows (range_id -1) use the same blocked
+layout, so they take the same lookup.
 
 The per-term contributions fold in ascending-term order, so the reported
 total is bit-identical to the score :func:`operators.wand.search_index`
@@ -26,7 +26,7 @@ import numpy as np
 
 from dawnsearch_spark.config import EngineConfig
 from dawnsearch_spark.functions.bm25 import bm25_np, idf_np
-from dawnsearch_spark.functions.codec import decode_block, varbyte_decode
+from dawnsearch_spark.functions.codec import decode_block
 from dawnsearch_spark.functions.tokenizer import tokenize_py
 from dawnsearch_spark.index_build import (
     IndexPaths,
@@ -95,25 +95,16 @@ def explain_doc(
         t = r["term"]
         if t in found:
             continue
+        # block directory point lookup: one binary search + one block
+        # (light and range rows share the blocked layout)
         rd = _row_to_dict(r)
-        if int(rd["range_id"]) == -1:
-            gaps = np.cumsum(
-                varbyte_decode(rd["doc_blob"], rd["n_docs"]).astype(np.int64)
-            )
-            j = int(np.searchsorted(gaps, doc_id))
-            if j < len(gaps) and int(gaps[j]) == int(doc_id):
-                tf = int(varbyte_decode(rd["tf_blob"], rd["n_docs"])[j])
-                dl = int(varbyte_decode(rd["dl_blob"], rd["n_docs"])[j])
-                found[t] = (tf, dl)
-        else:
-            # block directory point lookup: one binary search + one block
-            b = int(np.searchsorted(rd["block_last"], doc_id))
-            if b >= len(rd["block_last"]):
-                continue
-            docs_b, tfs_b, dls_b = decode_block(rd, b, cfg.block_size)
-            j = int(np.searchsorted(docs_b, doc_id))
-            if j < len(docs_b) and int(docs_b[j]) == int(doc_id):
-                found[t] = (int(tfs_b[j]), int(dls_b[j]))
+        b = int(np.searchsorted(rd["block_last"], doc_id))
+        if b >= len(rd["block_last"]):
+            continue
+        docs_b, tfs_b, dls_b = decode_block(rd, b, cfg.block_size)
+        j = int(np.searchsorted(docs_b, doc_id))
+        if j < len(docs_b) and int(docs_b[j]) == int(doc_id):
+            found[t] = (int(tfs_b[j]), int(dls_b[j]))
 
     total = 0.0
     for t in terms:  # ascending-term fold: identical to the scorer

@@ -58,29 +58,6 @@ def term_bucket_py(term: str, num_buckets: int) -> int:
     return (zlib.crc32(term.encode("utf-8")) & 0xFFFFFFFF) % num_buckets
 
 
-def _decode_runs_merged(
-    cols: dict[str, np.ndarray], s: int, e: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode run rows [s, e) of one key group and k-way merge them
-    (vectorized: concat + stable argsort of docID-sorted disjoint runs)."""
-    docs_l, tfs_l, dls_l = [], [], []
-    n_docs = cols["n_docs"]
-    doc_b, tf_b, dl_b = cols["doc_blob"], cols["tf_blob"], cols["dl_blob"]
-    for i in range(s, e):
-        n = int(n_docs[i])
-        gaps = varbyte_decode(doc_b[i], n)
-        docs_l.append(np.cumsum(gaps.astype(np.int64)))
-        tfs_l.append(varbyte_decode(tf_b[i], n).astype(np.int64))
-        dls_l.append(varbyte_decode(dl_b[i], n).astype(np.int64))
-    if e - s == 1:
-        return docs_l[0], tfs_l[0], dls_l[0]
-    docs = np.concatenate(docs_l)
-    tfs = np.concatenate(tfs_l)
-    dls = np.concatenate(dls_l)
-    order = np.argsort(docs, kind="stable")
-    return docs[order], tfs[order], dls[order]
-
-
 def _make_segment_row(
     term: str,
     range_id: int,
@@ -145,8 +122,6 @@ def _merge_key_postings(
     permutation is fully determined — same output as the per-key stable
     argsort). Returns (key_terms, key_tids, key_salts, key_starts, docs,
     tfs, dls); ``key_starts`` has a trailing total-length sentinel."""
-    from dawnsearch_spark.functions.codec import varbyte_decode
-
     n_docs = np.ascontiguousarray(n_docs, np.int64)
     keep_rows = n_docs > 0
     if not keep_rows.all():

@@ -75,19 +75,16 @@ def read_segment_rows(
     range_id: int | None = None,
     *,
     gens: list[int],
-    heavy_only: bool = False,
 ) -> list[dict]:
     """Pruned segment rows of the listed generations, as dicts.
 
     ``buckets`` prunes partition directories, ``terms`` pushes a term
     filter into parquet row-group stats, ``range_id`` optionally restricts
-    to one doc-range row (-1 = light rows), ``heavy_only`` keeps only
-    range rows (range_id >= 0), ``gens`` names the manifest-listed
+    to one doc-range row (-1 = light rows), ``gens`` names the manifest-listed
     generation directories to read (``[]`` reads nothing).
     """
     return read_segment_table(
-        segments_dir, buckets, terms, columns, range_id,
-        gens=gens, heavy_only=heavy_only,
+        segments_dir, buckets, terms, columns, range_id, gens=gens
     ).to_pylist()
 
 
@@ -99,7 +96,6 @@ def read_segment_table(
     range_id: int | None = None,
     *,
     gens: list[int],
-    heavy_only: bool = False,
 ):
     """Same pruned read as :func:`read_segment_rows`, returned as a
     pyarrow Table (columnar — the Engine's driver term dictionary builds
@@ -125,7 +121,4 @@ def read_segment_table(
     if range_id is not None:
         f2 = ds.field("range_id") == range_id
         filt = f2 if filt is None else (filt & f2)
-    if heavy_only:
-        f3 = ds.field("range_id") >= 0
-        filt = f3 if filt is None else (filt & f3)
     return dataset.to_table(columns=columns, filter=filt)

@@ -19,24 +19,30 @@ Reference semantics being preserved (SURVEY.md §2.5 T1/T4, §4 P1/P2):
   complete — results are exact, verified rank-identical to the full-scan
   oracle.
 
-Execution shape (serving fast path: ZERO Spark jobs; distributed path:
-one pruned scan job + a tiny collect):
+Execution shape (driver path: ZERO Spark jobs; distributed branch: one
+pruned scan job + a tiny collect):
   query terms -> bucket + term pruning; metadata comes from the Engine's
      COLUMNAR driver-resident term dictionary (plans/query.py TermMeta),
      else a pruned metadata read. Global df per term = Σ n_docs over the
      term's rows (ranges and generations are disjoint doc sets), so idf
      is exact under incremental appends with nothing stats-dependent
      stored in the index
-  -> pruned segment rows read driver-side via pyarrow from the local
-     segments dir (operators/segment_reader.py — reference S7 in-process
-     segment scan, document_embeddings.rs:17-54), zero Spark jobs. Only
-     MANIFEST-LISTED generation dirs are read (never compaction leftovers)
-  -> light rows decoded on the driver through the Engine's bounded
-     LightListCache LRU (repeated serving terms skip fetch+decode),
-     smallest-TERM-first under a hard ``max_driver_postings`` budget;
-     overflow light lists are RANGE-SPLIT on the executors (mapInPandas
-     decode -> per-doc-range re-pack) into rows shaped exactly like
-     heavy range rows
+  -> ONE choice, by the query's total postings (Σ n_docs over its rows,
+     light and range alike) against ``max_driver_postings``:
+  driver path (the total fits): every term's whole posting list is
+     scored exactly on the driver (TAAT). A list comes from the Engine's
+     PostingListCache LRU — one merged, docID-sorted (docs, tfs, dls) per
+     term, whatever its layout — or, on a miss, from one pyarrow read of
+     the term's rows in the local segments dir (operators/segment_reader.py
+     — reference S7 in-process segment scan, document_embeddings.rs:17-54;
+     only MANIFEST-LISTED generation dirs, never compaction leftovers)
+     and a full decode.
+  distributed branch (the total exceeds the budget — the scale path):
+  -> light lists of terms with no range row come through the same LRU,
+     smallest-TERM-first under the budget, and seed θ; overflow light
+     lists (and the light rows of terms that also have range rows) are
+     RANGE-SPLIT on the executors (mapInPandas decode -> per-doc-range
+     re-pack) into rows shaped exactly like heavy range rows
   -> heavy + split rows grouped into range tasks (applyInPandas); each
      task derives EXACT per-block BM25 maxima from the rows' stats-free
      (tf, dl) Pareto fronts under current stats (_attach_bounds),
@@ -57,8 +63,9 @@ DISJOINT doc subsets: per-term bounds take the MAX over rows, exact
 contributions accumulate row by row (each doc matches at most one row).
 
 All per-posting work is NumPy-vectorized. Scores accumulate per doc in
-ascending-term order in float64 — bitwise identical to the oracle's fold
-(SURVEY.md §7 hard part 1).
+ascending-term order in float64, the oracle's fold order (SURVEY.md §7
+hard part 1). They can still differ from the oracle's in the last ulp:
+idf's ``log`` runs in NumPy here and in the JVM there (ROADMAP item 2).
 """
 
 from __future__ import annotations
@@ -111,7 +118,9 @@ def new_counters() -> dict:
         # whole, "block" when it did not and the single best block of its
         # best row seeded θ instead (the 100x-index shape), "" otherwise
         "theta_seed_mode": "",
-        # light-list LRU (Engine serving only; 0/0 when no cache in play)
+        # posting-list LRU lookups of THIS search, one per cached term
+        # lookup of any layout (Engine serving only; 0/0 when no cache in
+        # play). The keys keep their "light_" names for existing readers.
         "light_cache_hits": 0,
         "light_cache_misses": 0,
         # active tombstoned docIDs filtered from this search (Lucene-style
@@ -130,26 +139,29 @@ class LightList:
     dls: np.ndarray
 
 
-class LightListCache:
-    """Bounded LRU of DECODED light posting lists, keyed by term.
+class PostingListCache:
+    """Bounded LRU of DECODED posting lists, keyed by term.
 
     The reference keeps its whole index resident in RAM between queries
     (load once, serve many — search_provider.rs:111-120); our driver
     analog is this cache: repeated serving terms skip the fetch+varbyte
-    decode entirely. It caches only the query-independent arrays
-    (docs/tfs/dls per generation row) — qtf and idf are query-time.
-    Bounded by total cached POSTINGS (the actual memory driver), evicted
-    LRU. Cached lists must match the served generations: on
-    ``refresh()`` the Engine drops only the terms that gained a row in a
-    new generation after a plain append, and starts a fresh cache after a
-    compaction or a full reload (the generation list changed, so any
-    cached list could hold dropped rows)."""
+    decode entirely. Each entry is one term's whole posting list, merged
+    across its rows into one docID-sorted ``(docs, tfs, dls)`` whatever
+    its layout (light rows, range rows, or both across generations) —
+    only the query-independent, UNMASKED arrays; qtf, idf and the
+    tombstone mask are query-time. Bounded by total cached POSTINGS (the
+    actual memory driver), evicted LRU. Cached lists must match the
+    served generations: on ``refresh()`` the Engine drops only the terms
+    that gained a row in a new generation after a plain append, and
+    starts a fresh cache after a compaction or a full reload (the
+    generation list changed, so any cached list could hold dropped
+    rows)."""
 
-    def __init__(self, max_postings: int = 4_000_000):
+    def __init__(self, max_postings: int):
         import threading
         from collections import OrderedDict
 
-        self._d: "OrderedDict[str, list[tuple]]" = OrderedDict()
+        self._d: "OrderedDict[str, tuple]" = OrderedDict()
         self._postings: dict[str, int] = {}
         self._total = 0
         self.max_postings = int(max_postings)
@@ -164,18 +176,18 @@ class LightListCache:
 
     def get(self, term: str):
         with self._lock:
-            rows = self._d.get(term)
-            if rows is None:
+            lists = self._d.get(term)
+            if lists is None:
                 self.misses += 1
                 return None
             self._d.move_to_end(term)
             self.hits += 1
-            return rows
+            return lists
 
     def drop_terms(self, terms) -> int:
         """Evict specific terms (incremental refresh: only terms that
-        gained a light row in a NEW generation go stale — every other
-        cached list still matches the on-disk rows). Returns evictions."""
+        gained a row in a NEW generation go stale — every other cached
+        list still matches the on-disk rows). Returns evictions."""
         n = 0
         with self._lock:
             for t in terms:
@@ -185,13 +197,13 @@ class LightListCache:
                     n += 1
         return n
 
-    def put(self, term: str, rows: list[tuple], n_postings: int) -> None:
+    def put(self, term: str, lists: tuple, n_postings: int) -> None:
         if n_postings > self.max_postings:
             return  # never let one giant term flush the whole cache
         with self._lock:
             if term in self._d:
                 self._total -= self._postings[term]
-            self._d[term] = rows
+            self._d[term] = lists
             self._postings[term] = int(n_postings)
             self._total += int(n_postings)
             self._d.move_to_end(term)
@@ -480,8 +492,8 @@ def _score_ranges(
     ctr: dict,
     tomb: np.ndarray | None = None,
 ) -> list[tuple[float, int]]:
-    """Shared WAND core for both the driver fast path and the range
-    tasks: visit doc-ranges in descending upper-bound order so the local
+    """WAND core of one distributed range task: visit doc-ranges in
+    descending upper-bound order so the local
     θ rises fast (reference analog: local top-k first, then pruned
     remote merge, search_service.rs:201-236). Per term the range bound
     is the MAX over its generation rows (disjoint doc sets), never the
@@ -627,13 +639,11 @@ def search_index(
     cfg: EngineConfig,
     k: int | None = None,
     task_groups: int = 64,
-    max_driver_heavy_rows: int = 4096,
     seg_df=None,
     stats: CorpusStats | None = None,
     counters: dict | None = None,
     meta_by_term=None,
-    light_cache: "LightListCache | None" = None,
-    heavy_cache: "LightListCache | None" = None,
+    cache: "PostingListCache | None" = None,
     tombstones: np.ndarray | None = None,
 ) -> list[tuple[int, float]]:
     """Top-k (doc_id, score) for a query string or a {term: weight} bag.
@@ -642,12 +652,14 @@ def search_index(
     (reference: internal k=20, displayed 10 — search_provider.rs:214,
     examples_old/search.rs:55-63).
 
-    Driver memory is bounded by ``cfg.max_driver_postings``: light lists
-    are decoded on the driver smallest-first under that budget (they seed
-    θ); overflow light lists are range-split on the executors and scored
-    in the distributed range tasks. The heavy-row fast path (score on the
-    driver, the reference's local-search-first shape) is taken only when
-    the TOTAL postings it would decode also fit the budget.
+    Driver memory is bounded by ``cfg.max_driver_postings``. A query whose
+    total postings (Σ ``n_docs`` over its rows, light and range alike) fit
+    the budget takes the driver path — the reference's local-search-first
+    shape: every term's whole list, from ``cache`` or one segment read,
+    scored exactly on the driver. Any larger query takes the distributed
+    branch: light lists are decoded on the driver smallest-first under the
+    budget (they seed θ), and overflow light lists are range-split on the
+    executors and scored in the block-max range tasks.
 
     ``counters``: pass a dict to receive per-search observability counters
     (see :func:`new_counters`) — the reference's servers_contacted /
@@ -688,14 +700,14 @@ def search_index(
     # unlisted garbage dirs — serving must never double-read postings)
     gens = gen_ids_with_rows(segment_generations(index_root))
 
-    def _fetch(columns=None, range_id=None, only_terms=None, heavy_only=False) -> list[dict]:
+    def _fetch(columns=None, range_id=None, only_terms=None) -> list[dict]:
         """Pruned segment rows as plain dicts: a direct pyarrow read of
         the pruned bucket files on the driver (reference S7 — in-process
         segment scan, document_embeddings.rs:17-54), zero Spark jobs."""
         want = terms if only_terms is None else sorted(only_terms)
         return read_segment_rows(
             paths.segments, buckets, want, columns=columns, range_id=range_id,
-            gens=gens, heavy_only=heavy_only,
+            gens=gens,
         )
 
     # ---- metadata-only plan (column-pruned: no blobs leave the scan) ----
@@ -725,172 +737,103 @@ def search_index(
     ]
     idf_by_term = {t: idf for t, _qtf, idf in qmeta}
 
+    cache_base = (cache.hits, cache.misses) if cache is not None else (0, 0)
+
+    def _term_lists(wanted: list[str]) -> list[LightList]:
+        """Whole posting lists of the given terms, one merged docID-sorted
+        list per term whatever its layout, through the Engine's LRU when
+        present: cache hits skip both the segment fetch and the decode
+        (driver_postings_decoded counts ACTUAL decodes, so repeated
+        serving terms show up as zero decode). Counters report THIS
+        search's hits/misses (delta vs the cache's running totals)."""
+        got: dict[str, tuple] = {}
+        missing: list[str] = []
+        for t in wanted:
+            cached = cache.get(t) if cache is not None else None
+            if cached is None:
+                missing.append(t)
+            else:
+                got[t] = cached
+        if missing:
+            # looked up per call, not bound at import: callers may wrap it
+            from dawnsearch_spark.functions.codec import decode_all_postings
+
+            parts: dict[str, list[tuple]] = {}
+            for r in _fetch(only_terms=missing):
+                parts.setdefault(r["term"], []).append(
+                    decode_all_postings(r, cfg.block_size)
+                )
+                ctr["driver_postings_decoded"] += int(r["n_docs"])
+            for t, ps in parts.items():
+                # generation and range rows hold disjoint doc sets, so a
+                # stable sort of the concatenation is the term's full
+                # docID-ascending posting list
+                if len(ps) == 1:
+                    got[t] = ps[0]
+                else:
+                    cat = [np.concatenate([p[i] for p in ps]) for i in range(3)]
+                    order = np.argsort(cat[0], kind="stable")
+                    got[t] = tuple(c[order] for c in cat)
+                if cache is not None:
+                    cache.put(t, got[t], len(got[t][0]))
+        if cache is not None:
+            ctr["light_cache_hits"] = cache.hits - cache_base[0]
+            ctr["light_cache_misses"] = cache.misses - cache_base[1]
+        out = []
+        for t in wanted:
+            docs, tfs, dls = got[t]
+            if tombstones is not None:
+                # the cache holds UNMASKED arrays — they match the
+                # immutable segment rows; masking is per-query state
+                from dawnsearch_spark.operators.merge import _tombstone_mask
+
+                m = _tombstone_mask(docs, tombstones)
+                if not m.all():
+                    docs, tfs, dls = docs[m], tfs[m], dls[m]
+            out.append(LightList(t, bag[t], idf_by_term[t], docs, tfs, dls))
+        return out
+
+    light_terms = {r["term"] for r in light_meta}
+    if sum(term_df.values()) <= budget:
+        # driver path (reference's local-search-first, E1 step 3): exact
+        # TAAT over WHOLE lists instead of the block-max range walk. When
+        # every posting fits driver RAM the WAND machinery (per-range
+        # candidate building, block-bound screens, lazy per-block tf/dl
+        # decodes) is pure overhead — profiled at ~190 range iterations
+        # and ~1k small varbyte calls per query at 200k docs, ~50x the
+        # cost of one vectorized ascending-term accumulation over the same
+        # postings. Block-max pruning carries the distributed branch
+        # below — the path for queries that outgrow the driver budget.
+        ctr["path"] = "driver"
+        ctr["light_terms_driver"] = len(light_terms)
+        lists = _term_lists([t for t, _qtf, _idf in qmeta])
+        ctr["postings_scored"] += int(sum(len(l.docs) for l in lists))
+        ldocs, lscores = _exact_light_scores(lists, stats, cfg)
+        return _topk_unique(ldocs, lscores, k)[:k_out]
+
+    # ---- distributed branch ----
+    ctr["path"] = "distributed"
     # driver-resident light lists: smallest TERM first, under the budget.
-    # The budget decision is per term, not per row — a term may have one
-    # light row per generation and they are fetched/decoded together.
-    light_total: dict[str, int] = {}
-    for r in light_meta:
-        light_total[r["term"]] = light_total.get(r["term"], 0) + int(r["n_docs"])
+    # A term with range rows too keeps its light rows on the executors
+    # (overflow): the cached list is the term's WHOLE list, and its range
+    # rows are scored in the range tasks.
+    heavy_terms = {r["term"] for r in heavy_meta}
     driver_terms: list[str] = []
-    overflow_terms: list[str] = []
+    overflow_terms = sorted(light_terms & heavy_terms)
     cum = 0
-    for t in sorted(light_total, key=lambda t: (light_total[t], t)):
-        if cum + light_total[t] <= budget:
-            cum += light_total[t]
+    for t in sorted(light_terms - heavy_terms, key=lambda t: (term_df[t], t)):
+        if cum + term_df[t] <= budget:
+            cum += term_df[t]
             driver_terms.append(t)
         else:
             overflow_terms.append(t)
     ctr["light_terms_driver"] = len(driver_terms)
     ctr["light_terms_overflow"] = len(overflow_terms)
-
-    def _decode_light(r) -> LightList:
-        rd = _row_to_dict(r)
-        gaps = varbyte_decode(rd["doc_blob"], rd["n_docs"])
-        return LightList(
-            term=rd["term"],
-            qtf=bag[rd["term"]],
-            idf=idf_by_term[rd["term"]],
-            docs=np.cumsum(gaps.astype(np.int64)),
-            tfs=varbyte_decode(rd["tf_blob"], rd["n_docs"]).astype(np.int64),
-            dls=varbyte_decode(rd["dl_blob"], rd["n_docs"]).astype(np.int64),
-        )
-
-    def _light_pass(lights: list[LightList]) -> tuple[np.ndarray, np.ndarray, float]:
-        ldocs, lscores = _exact_light_scores(lights, stats, cfg)
-        theta0 = 0.0
-        if len(lscores) >= k:
-            theta0 = float(np.partition(lscores, -k)[-k])
-        return ldocs, lscores, theta0
-
-    cache_base = (
-        (light_cache.hits, light_cache.misses) if light_cache is not None else (0, 0)
-    )
-
-    def _mask_light(ll: LightList) -> LightList:
-        """Tombstone-filter one decoded light list (the cache stores the
-        UNMASKED arrays — they match the immutable segment rows; masking
-        is per-query state)."""
-        if tombstones is None:
-            return ll
-        from dawnsearch_spark.operators.merge import _tombstone_mask
-
-        m = _tombstone_mask(ll.docs, tombstones)
-        if m.all():
-            return ll
-        return LightList(ll.term, ll.qtf, ll.idf, ll.docs[m], ll.tfs[m], ll.dls[m])
-
-    def _get_lights(wanted: list[str]) -> list[LightList]:
-        """Decoded light lists for the given terms, through the Engine's
-        LRU when present: cache hits skip both the segment fetch and the
-        varbyte decode (driver_postings_decoded counts ACTUAL decodes, so
-        repeated serving terms show up as zero decode). Counters report
-        THIS search's hits/misses (delta vs the cache's running totals)."""
-        out: list[LightList] = []
-        missing: list[str] = []
-        for t in wanted:
-            cached = light_cache.get(t) if light_cache is not None else None
-            if cached is None:
-                missing.append(t)
-            else:
-                out.extend(
-                    LightList(t, bag[t], idf_by_term[t], docs, tfs, dls)
-                    for docs, tfs, dls in cached
-                )
-        if missing:
-            by_term: dict[str, list[tuple]] = {}
-            for r in _fetch(range_id=-1, only_terms=missing):
-                ll = _decode_light(r)
-                ctr["driver_postings_decoded"] += len(ll.docs)
-                by_term.setdefault(ll.term, []).append((ll.docs, ll.tfs, ll.dls))
-                out.append(ll)
-            if light_cache is not None:
-                for t, rows in by_term.items():
-                    light_cache.put(t, rows, sum(len(d) for d, _, _ in rows))
-        if light_cache is not None:
-            ctr["light_cache_hits"] = light_cache.hits - cache_base[0]
-            ctr["light_cache_misses"] = light_cache.misses - cache_base[1]
-        return [_mask_light(ll) for ll in out]
-
-    heavy_postings = sum(int(r["n_docs"]) for r in heavy_meta)
-
-    if not heavy_meta and not overflow_terms:
-        ctr["path"] = "light_only"
-        lights = _get_lights(driver_terms)
-        ldocs, lscores, _ = _light_pass(lights)
-        return _topk_unique(ldocs, lscores, k)[:k_out]
-
-    if (
-        not overflow_terms
-        and len(heavy_meta) <= max_driver_heavy_rows
-        and cum + heavy_postings <= budget
-    ):
-        # driver-side scoring (reference's local-search-first, E1 step 3):
-        # overflow is empty so every matching row fits the budget.
-        # Exact TAAT over FULLY-DECODED lists instead of the block-max
-        # range walk: when every posting already fits driver RAM, the
-        # WAND machinery (per-range candidate building, block-bound
-        # screens, lazy per-block tf/dl decodes) is pure overhead —
-        # profiled at ~190 range iterations and ~1k small varbyte calls
-        # per query at 200k docs, ~50x the cost of one vectorized
-        # ascending-term accumulation over the same postings. Decoded
-        # (docs, tfs, dls) arrays per heavy term ride the Engine's LRU
-        # (the reference keeps its whole index RAM-resident between
-        # queries, search_provider.rs:111-120), so warm queries decode
-        # nothing at all. Scores are bit-identical to the range walk:
-        # same per-(doc, term) BM25 inputs, same ascending-term float64
-        # fold (each doc matches a term in exactly one generation row).
-        # Block-max pruning still carries the distributed branch below —
-        # the path that exists for indexes that outgrow driver budgets.
-        ctr["path"] = "driver"
-        lights = _get_lights(driver_terms)
-        heavy_terms_q = sorted({r["term"] for r in heavy_meta})
-        heavy_lights: list[LightList] = []
-        missing: list[str] = []
-        for t in heavy_terms_q:
-            cached = heavy_cache.get(t) if heavy_cache is not None else None
-            if cached is None:
-                missing.append(t)
-            else:
-                heavy_lights.extend(
-                    LightList(t, bag[t], idf_by_term[t], docs, tfs, dls)
-                    for docs, tfs, dls in cached
-                )
-        if missing:
-            by_term: dict[str, list[tuple]] = {}
-            for r in _fetch(heavy_only=True, only_terms=missing):
-                rd = _row_to_dict(r)
-                from dawnsearch_spark.functions.codec import decode_all_postings
-
-                docs_t, tfs_t, dls_t = decode_all_postings(rd, cfg.block_size)
-                ctr["driver_postings_decoded"] += int(rd["n_docs"])
-                by_term.setdefault(rd["term"], []).append((docs_t, tfs_t, dls_t))
-            for t, parts in by_term.items():
-                # one sorted merged list per term: generation rows hold
-                # disjoint doc sets, so a stable sort of the concatenation
-                # is the term's full docID-ascending posting list
-                if len(parts) == 1:
-                    docs_t, tfs_t, dls_t = parts[0]
-                else:
-                    docs_t = np.concatenate([p[0] for p in parts])
-                    order = np.argsort(docs_t, kind="stable")
-                    docs_t = docs_t[order]
-                    tfs_t = np.concatenate([p[1] for p in parts])[order]
-                    dls_t = np.concatenate([p[2] for p in parts])[order]
-                merged = [(docs_t, tfs_t, dls_t)]
-                if heavy_cache is not None:
-                    heavy_cache.put(t, merged, int(len(docs_t)))
-                heavy_lights.append(
-                    LightList(t, bag[t], idf_by_term[t], docs_t, tfs_t, dls_t)
-                )
-        all_lights = lights + [_mask_light(ll) for ll in heavy_lights]
-        ldocs, lscores = _exact_light_scores(all_lights, stats, cfg)
-        ctr["postings_scored"] += int(sum(len(l.docs) for l in all_lights))
-        return _topk_unique(ldocs, lscores, k)[:k_out]
-
-    # ---- distributed branch ----
-    ctr["path"] = "distributed"
-    lights = _get_lights(driver_terms) if driver_terms else []
-    ldocs, lscores, theta0 = _light_pass(lights)
+    lights = _term_lists(driver_terms)
+    ldocs, lscores = _exact_light_scores(lights, stats, cfg)
+    theta0 = 0.0
+    if len(lscores) >= k:
+        theta0 = float(np.partition(lscores, -k)[-k])
     seed_docs = np.zeros(0, np.int64)
     seed_scores = np.zeros(0, np.float64)
     if heavy_meta:

@@ -149,10 +149,8 @@ class Engine:
         # pruned pyarrow metadata read instead.
         self._meta_gens: list[int] = []
         self.last_meta_load: dict = {}
-        self._last_new_heavy_terms: set = set()
         self._meta_by_term = self._load_meta()
-        self._light_cache = self._new_light_cache()
-        self._heavy_cache = self._new_heavy_cache()
+        self._cache = self._new_cache()
         # Lucene-style deletes: tombstoned docIDs filter every search
         # until purge_deletes rewrites the segments (sorted int64 array,
         # read driver-side with zero Spark jobs)
@@ -164,22 +162,12 @@ class Engine:
         t = tombstone_ids(self.paths.root)
         return t if len(t) else None
 
-    def _new_light_cache(self):
-        from dawnsearch_spark.operators.wand import LightListCache
+    def _new_cache(self):
+        from dawnsearch_spark.operators.wand import PostingListCache
 
-        if self.cfg.light_cache_postings <= 0:
+        if self.cfg.cache_postings <= 0:
             return None
-        return LightListCache(self.cfg.light_cache_postings)
-
-    def _new_heavy_cache(self):
-        # same bounded LRU mechanics, holding the merged fully-decoded
-        # (docs, tfs, dls) arrays per heavy term that the driver TAAT
-        # fast path scores from (see EngineConfig.heavy_cache_postings)
-        from dawnsearch_spark.operators.wand import LightListCache
-
-        if getattr(self.cfg, "heavy_cache_postings", 0) <= 0:
-            return None
-        return LightListCache(self.cfg.heavy_cache_postings)
+        return PostingListCache(self.cfg.cache_postings)
 
     def _load_meta(
         self, prev: TermMeta | None = None, prev_gens: list[int] | None = None
@@ -192,14 +180,15 @@ class Engine:
         in-memory arrays (generations are immutable once committed, so
         the covered rows cannot have changed). A compaction changes the
         generation list non-monotonically and falls back to a full load.
-        ``self.last_meta_load`` records {mode, gens_read,
-        new_light_terms} — the refresh-cost observability counter."""
+        ``self.last_meta_load`` records {mode, gens_read, new_terms} —
+        the refresh-cost observability counter; ``new_terms`` is every
+        term that gained a row (of any layout) in a newly read
+        generation."""
         import numpy as np
 
         from dawnsearch_spark.manifest import read_manifest
 
-        self.last_meta_load = {"mode": "none", "gens_read": [], "new_light_terms": set()}
-        self._last_new_heavy_terms = set()
+        self.last_meta_load = {"mode": "none", "gens_read": [], "new_terms": set()}
         self._meta_gens = []
         seg_m = read_manifest(self.paths.root, "segments") or {}
         rows = seg_m.get("rows")
@@ -231,15 +220,7 @@ class Engine:
                 for c in META_COLUMNS
             }
 
-        rid_arr = np.asarray(cols["range_id"])
-        new_light = {
-            t for t, rid in zip(cols["term"], rid_arr) if int(rid) == -1
-        }
-        # heavy-cache invalidation set (NOT in last_meta_load: that dict
-        # is JSON-serialized by observability consumers)
-        self._last_new_heavy_terms = {
-            t for t, rid in zip(cols["term"], rid_arr) if int(rid) >= 0
-        }
+        new_terms = set(cols["term"].tolist())
         if prev is not None:
             old = prev.columns()
             cols = {
@@ -252,7 +233,7 @@ class Engine:
         self.last_meta_load = {
             "mode": mode,
             "gens_read": read_gens,
-            "new_light_terms": new_light,
+            "new_terms": new_terms,
         }
         return TermMeta(
             cols["term"], cols["range_id"], cols["n_docs"], cols["max_tf"], cols["min_dl"]
@@ -283,27 +264,21 @@ class Engine:
         append: committed generations are immutable, so only the new
         generations' metadata files are read and folded in — O(new-gen
         metadata) per append, never O(index metadata) (the serving-side
-        twin of the stage-1b incremental dictionary). The light-list LRU
-        likewise drops only terms that gained a light row in a new
-        generation; every other cached list still matches disk."""
+        twin of the stage-1b incremental dictionary). The posting-list LRU
+        likewise drops only terms that gained a row in a new generation;
+        every other cached list still matches disk."""
         self.spark.catalog.refreshByPath(self.paths.segments)
         self.spark.catalog.refreshByPath(self.paths.documents)
         self.stats_ = load_stats(self.paths.root)
         self._segments = read_segments(self.spark, self.paths.root)
         self._documents = None
         self._meta_by_term = self._load_meta(self._meta_by_term, self._meta_gens)
-        if self.last_meta_load.get("mode") == "incremental":
-            if self._light_cache is not None:
-                self._light_cache.drop_terms(self.last_meta_load["new_light_terms"])
-            if self._heavy_cache is not None:
-                # only terms that gained a heavy row in a NEW generation
-                # went stale; every other cached row still matches disk
-                self._heavy_cache.drop_terms(self._last_new_heavy_terms)
-        else:
+        if self.last_meta_load.get("mode") != "incremental":
             # full reload (compaction / dict overflow): the generation
             # list changed non-monotonically — cached lists may be stale
-            self._light_cache = self._new_light_cache()
-            self._heavy_cache = self._new_heavy_cache()
+            self._cache = self._new_cache()
+        elif self._cache is not None:
+            self._cache.drop_terms(self.last_meta_load["new_terms"])
         self._tombstones = self._load_tombstones()
         return self
 
@@ -316,7 +291,6 @@ class Engine:
         self,
         query: str | dict[str, float],
         k: int | None = None,
-        max_driver_heavy_rows: int = 4096,
         counters: dict | None = None,
     ) -> list[tuple[int, float]]:
         """Top-k (doc_id, score), rank-identical to the exact oracle.
@@ -328,7 +302,7 @@ class Engine:
         serves many in-flight searches — ActiveSearch,
         udp_service.rs:296-341) pass their own ``counters`` dict so the
         shared attribute is observability-only, never a data race on the
-        result path; the light-list LRU is internally locked."""
+        result path; the posting-list LRU is internally locked."""
         self.last_search_counters = counters if counters is not None else {}
         return search_index(
             self.spark,
@@ -336,13 +310,11 @@ class Engine:
             query,
             self.cfg,
             k=k,
-            max_driver_heavy_rows=max_driver_heavy_rows,
             seg_df=self._segments,
             stats=self.stats_,
             counters=self.last_search_counters,
             meta_by_term=self._meta_by_term,
-            light_cache=self._light_cache,
-            heavy_cache=self._heavy_cache,
+            cache=self._cache,
             tombstones=self._tombstones,
         )
 

@@ -1,5 +1,9 @@
 from __future__ import annotations
 
+import glob
+import os
+from dataclasses import replace
+
 import pytest
 
 from dawnsearch_spark.config import EngineConfig
@@ -27,3 +31,26 @@ def small_corpus(spark):
     df = assign_doc_ids(df, ("repo", "path", "commit"), parts=8).cache()
     df.count()
     return df
+
+
+@pytest.fixture(scope="session")
+def distributed_cfg():
+    """``f(cfg, index_root, query)``: ``cfg`` with a driver budget one
+    posting short of the query's total (Σ df over its terms, read from the
+    index's ``terms/`` dictionary), so ``search_index`` takes the
+    distributed branch by its budget alone."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    from dawnsearch_spark.functions.tokenizer import tokenize_py
+
+    def f(cfg: EngineConfig, index_root: str, query) -> EngineConfig:
+        terms = sorted(set(tokenize_py(query) if isinstance(query, str) else query))
+        files = sorted(glob.glob(os.path.join(index_root, "terms", "*.parquet")))
+        tbl = ds.dataset(files, format="parquet").to_table(
+            columns=["df"], filter=ds.field("term").isin(terms)
+        )
+        total = int(pc.sum(tbl["df"]).as_py() or 0)
+        return replace(cfg, max_driver_postings=total - 1)
+
+    return f

@@ -21,7 +21,7 @@ def test_toml_example_loads():
     assert cfg.k1 == 1.2 and cfg.num_term_buckets == 32
     assert cfg.id_cols == ("repo", "path", "commit")
     assert cfg.max_driver_phrase_docs == 4096
-    assert cfg.heavy_cache_postings == 16_000_000
+    assert cfg.cache_postings == 20_000_000
 
 
 def test_env_overrides_toml(monkeypatch):

@@ -91,8 +91,7 @@ def test_delete_filters_all_paths_with_stale_stats(spark, cfg, tmp_path):
         ctr = new_counters()
         dist = search_index(
             spark, d, q, replace(cfg, max_driver_postings=16),
-            max_driver_heavy_rows=0, task_groups=4, counters=ctr,
-            tombstones=tomb,
+            task_groups=4, counters=ctr, tombstones=tomb,
         )
         fanned_out |= ctr["path"] == "distributed"
         want = e.search(q)

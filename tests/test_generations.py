@@ -153,9 +153,10 @@ def test_mixed_light_heavy_across_generations(spark, cfg, tmp_path):
             F.sum((F.col("range_id") >= 0).cast("int")).alias("range_rows"),
         )
         .filter((F.col("light_rows") > 0) & (F.col("range_rows") > 0))
-        .count()
+        .orderBy("term")
+        .collect()
     )
-    assert mixed > 0, "fixture must exercise a cross-generation mixed-layout term"
+    assert mixed, "fixture must exercise a cross-generation mixed-layout term"
     full = with_content_sha(generate_corpus(spark, 400, seed=7, vocab_size=300))
     build_index(spark, full, fresh, cfg, n_groups=2)
     e1, e2 = Engine(spark, d, cfg), Engine(spark, fresh, cfg)
@@ -163,6 +164,13 @@ def test_mixed_light_heavy_across_generations(spark, cfg, tmp_path):
         got, want = _keyed(e1, q), _keyed(e2, q)
         assert [s for _, s in got] == [s for _, s in want], q
         _assert_same_nontied(got, want, q)
+    # the mixed term's light and range rows are cached as one list: a
+    # repeated search fetches and decodes nothing
+    q = {mixed[0]["term"]: 1}
+    first = e1.search(q)
+    assert e1.search(q) == first
+    ctr = e1.last_search_counters
+    assert ctr["light_cache_misses"] == 0 and ctr["driver_postings_decoded"] == 0, ctr
 
 
 def test_generation_union_keeps_partition_pruning(spark, cfg, tmp_path):

@@ -74,17 +74,23 @@ def test_wand_rank_identical_to_oracle(spark, index_dir, oracle_inputs, cfg, qid
 
 
 @pytest.mark.parametrize("qid", sorted(REFERENCE_QUERIES)[:8])
-def test_distributed_branch_rank_identical(spark, index_dir, oracle_inputs, cfg, qid):
+def test_distributed_branch_rank_identical(
+    spark, index_dir, oracle_inputs, cfg, distributed_cfg, qid
+):
     """Force the DISTRIBUTED executor branch (applyInPandas range tasks —
-    max_driver_heavy_rows=0 disables the driver fast path) and demand the
-    same rank identity: the θ-pruned fan-out must be semantics-free."""
-    from dawnsearch_spark.operators.wand import search_index
+    a budget one posting short of the query's lists keeps it off the
+    driver path) and demand the same rank identity: the θ-pruned fan-out
+    must be semantics-free."""
+    from dawnsearch_spark.operators.wand import new_counters, search_index
 
     tf, stats, dfs = oracle_inputs
     query = REFERENCE_QUERIES[qid]
+    ctr = new_counters()
     got = search_index(
-        spark, index_dir, query, cfg, max_driver_heavy_rows=0, task_groups=4
+        spark, index_dir, query, distributed_cfg(cfg, index_dir, query),
+        task_groups=4, counters=ctr,
     )
+    assert ctr["path"] == "distributed"
     want = [
         (r["doc_id"], r["score"])
         for r in bm25_exact_topk(tf, dfs, stats, query, cfg).collect()

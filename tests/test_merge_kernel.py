@@ -11,9 +11,8 @@ import numpy as np
 import pytest
 
 from dawnsearch_spark.config import EngineConfig
-from dawnsearch_spark.functions.codec import varbyte_encode
+from dawnsearch_spark.functions.codec import varbyte_decode, varbyte_encode
 from dawnsearch_spark.operators.merge import (
-    _decode_runs_merged,
     _make_segment_row,
     _tombstone_mask,
     merge_rows_columnar,
@@ -32,6 +31,30 @@ def _encode_run(docs, tfs, dls):
         varbyte_encode(tfs.astype(np.uint64)),
         varbyte_encode(dls.astype(np.uint64)),
     )
+
+
+def _decode_runs_merged(
+    cols: dict[str, np.ndarray], s: int, e: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Reference per-key merge: decode run rows [s, e) of one key group
+    and k-way merge them (concat + stable argsort of docID-sorted disjoint
+    runs)."""
+    docs_l, tfs_l, dls_l = [], [], []
+    n_docs = cols["n_docs"]
+    doc_b, tf_b, dl_b = cols["doc_blob"], cols["tf_blob"], cols["dl_blob"]
+    for i in range(s, e):
+        n = int(n_docs[i])
+        gaps = varbyte_decode(doc_b[i], n)
+        docs_l.append(np.cumsum(gaps.astype(np.int64)))
+        tfs_l.append(varbyte_decode(tf_b[i], n).astype(np.int64))
+        dls_l.append(varbyte_decode(dl_b[i], n).astype(np.int64))
+    if e - s == 1:
+        return docs_l[0], tfs_l[0], dls_l[0]
+    docs = np.concatenate(docs_l)
+    tfs = np.concatenate(tfs_l)
+    dls = np.concatenate(dls_l)
+    order = np.argsort(docs, kind="stable")
+    return docs[order], tfs[order], dls[order]
 
 
 def _random_fixture(rng, n_terms=12, max_runs=4, doc_space=500):

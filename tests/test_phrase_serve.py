@@ -133,6 +133,20 @@ def test_explain_matches_search_score(spark, small_corpus, phrase_index, cfg):
         and not e.explain(q, i)["matched"]
     )
     assert e.explain(q, other)["score"] == 0.0
+    # a light term and a heavy term (df >= 32 under scaled_for_tests):
+    # light and range rows take the same block-directory lookup
+    from pyspark.sql import functions as F
+
+    terms = spark.read.parquet(phrase_index + "/terms")
+    light = terms.filter((~F.col("heavy")) & (F.col("df") >= 4)).orderBy("df", "term")
+    heavy = terms.filter(F.col("heavy")).orderBy(F.desc("df"), "term")
+    q = f"{light.first()['term']} {heavy.first()['term']}"
+    hits = e.search(q)
+    assert hits
+    for doc_id, score in hits[:3]:
+        exp = e.explain(q, doc_id)
+        assert exp["score"] == score, f"doc {doc_id}: {exp['score']} != {score}"
+    assert len(e.explain(q, hits[0][0])["matched"]) == 2, q
 
 
 def test_served_near_matches_batch(spark, small_corpus, phrase_index, cfg, a_phrase):
@@ -211,7 +225,7 @@ def test_driver_paths_launch_no_spark_job(spark, phrase_index, cfg, a_phrase):
     sc.setJobGroup(group, "driver-path serving must launch no job")
     try:
         assert e.search(a_phrase)
-        assert e.last_search_counters["path"] in ("driver", "light_only")
+        assert e.last_search_counters["path"] == "driver"
         assert e.search_phrase(a_phrase)
         assert e.last_search_counters["path"] == "driver"
         assert e.search_near(ta, tb, 4)

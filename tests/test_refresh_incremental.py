@@ -4,8 +4,8 @@ The scale claim under test: after a plain append, re-syncing a live
 serving Engine reads ONLY the new generations' metadata files — committed
 generations are immutable, so re-reading them per append is O(index
 metadata) wasted IO (the serving-side twin of the stage-1b incremental
-dictionary). The light-list LRU survives the refresh except for terms
-that actually gained a light row. Reference analog: the in-RAM index is
+dictionary). The posting-list LRU survives the refresh except for terms
+that actually gained a row, of any layout. Reference analog: the in-RAM index is
 updated in place on insert, never reloaded from disk
 (/root/reference/src/search/search_provider.rs:250-286).
 """
@@ -59,9 +59,10 @@ def test_refresh_reads_only_new_generations(spark, cfg, tmp_path):
 
 
 def test_refresh_keeps_unaffected_cache_entries(spark, cfg, tmp_path):
-    """A cached light list whose term is absent from the appended batch
-    must survive the incremental refresh: the second search after refresh
-    is a cache HIT with zero light decode."""
+    """A cached list whose term is absent from the appended batch must
+    survive the incremental refresh: the search after refresh is a cache
+    HIT with zero decode. A cached HEAVY (range-row) term that the batch
+    does contain must miss and decode again."""
     d = str(tmp_path / "idx")
     base = with_content_sha(generate_corpus(spark, 300, seed=13, vocab_size=1200))
     build_index(spark, base, d, cfg, n_groups=1)
@@ -69,21 +70,24 @@ def test_refresh_keeps_unaffected_cache_entries(spark, cfg, tmp_path):
     # pick a light term actually present in the base corpus
     from pyspark.sql import functions as F
 
+    terms = spark.read.parquet(d + "/terms")
     t = (
-        spark.read.parquet(d + "/terms")
-        .filter((~F.col("heavy")) & (F.col("df") >= 5) & (F.col("df") <= 20))
+        terms.filter((~F.col("heavy")) & (F.col("df") >= 5) & (F.col("df") <= 20))
         .orderBy("term")
         .limit(1)
         .collect()[0]["term"]
     )
-    e.search({t: 1})  # populates the LRU
-    assert e.last_search_counters["light_cache_misses"] >= 1
+    h = terms.filter(F.col("heavy")).orderBy(F.desc("df"), "term").first()["term"]
+    for q in ({t: 1}, {h: 1}):  # populates the LRU
+        e.search(q)
+        assert e.last_search_counters["light_cache_misses"] == 1
 
-    # append a batch with a DISJOINT vocabulary — no new light row for t
+    # append a batch whose vocabulary is DISJOINT from t (no new row for
+    # t) but holds the heavy term h
     extra = with_content_sha(
         spark.createDataFrame(
             [
-                (f"zr{i}", f"zp{i}", "c0", "py", f"zzuniq{i} yyuniq{i} xxuniq")
+                (f"zr{i}", f"zp{i}", "c0", "py", f"zzuniq{i} yyuniq{i} xxuniq {h}")
                 for i in range(20)
             ],
             "repo string, path string, commit string, lang string, content string",
@@ -92,7 +96,8 @@ def test_refresh_keeps_unaffected_cache_entries(spark, cfg, tmp_path):
     append_documents(spark, d, extra, cfg, n_groups=1)
     e.refresh()
     assert e.last_meta_load["mode"] == "incremental"
-    assert t not in e.last_meta_load["new_light_terms"]
+    assert t not in e.last_meta_load["new_terms"]
+    assert h in e.last_meta_load["new_terms"]
 
     got = e.search({t: 1})
     ctr = e.last_search_counters
@@ -101,9 +106,18 @@ def test_refresh_keeps_unaffected_cache_entries(spark, cfg, tmp_path):
     # and the served scores equal a cold Engine over the same state
     assert got == Engine(spark, d, cfg).search({t: 1})
 
+    # the heavy term gained rows: its cached list was dropped, so the
+    # search misses and decodes its whole (grown) list again
+    got_h = e.search({h: 1})
+    ctr = e.last_search_counters
+    assert ctr["path"] == "driver", ctr
+    assert (ctr["light_cache_hits"], ctr["light_cache_misses"]) == (0, 1), ctr
+    assert ctr["driver_postings_decoded"] == ctr["postings_scored"] > 0, ctr
+    assert got_h == Engine(spark, d, cfg).search({h: 1})
+
     # a term the append DID touch must have been evicted
     zz = "zzuniq3"
-    assert zz in e.last_meta_load["new_light_terms"]
+    assert zz in e.last_meta_load["new_terms"]
 
 
 def test_refresh_falls_back_to_full_on_compaction(spark, cfg, tmp_path):

@@ -1,4 +1,4 @@
-"""Serving-path features: the light-list LRU and the local-only segment
+"""Serving-path features: the posting-list LRU and the local-only segment
 reader."""
 
 from __future__ import annotations
@@ -8,7 +8,7 @@ import pytest
 from dawnsearch_spark.corpus import generate_corpus, with_content_sha
 from dawnsearch_spark.index_build import IndexPaths, build_index
 from dawnsearch_spark.operators.segment_reader import read_segment_rows
-from dawnsearch_spark.operators.wand import LightListCache
+from dawnsearch_spark.operators.wand import PostingListCache
 from dawnsearch_spark.plans.query import Engine
 from dawnsearch_spark.streaming.incremental import append_documents
 
@@ -20,9 +20,9 @@ def served_index(tmp_path_factory, spark, small_corpus, cfg):
     return d
 
 
-def test_light_cache_hits_skip_decode(spark, served_index, cfg):
+def test_cache_hits_skip_decode(spark, served_index, cfg):
     """Repeated serving terms must hit the LRU: the second identical
-    search decodes ZERO light postings on the driver (the reference keeps
+    search decodes ZERO postings on the driver (the reference keeps
     its index RAM-resident between queries, search_provider.rs:111-120)."""
     from pyspark.sql import functions as F
 
@@ -45,34 +45,34 @@ def test_light_cache_hits_skip_decode(spark, served_index, cfg):
     c2 = dict(e.last_search_counters)
     assert second == first
     assert c2["light_cache_hits"] >= c1["light_cache_misses"]
-    # every light list came from the cache -> decode work strictly drops
+    # every list came from the cache -> decode work strictly drops
     assert c2["driver_postings_decoded"] < first_decoded or first_decoded == 0
-    # light-only portion fully cached: the second search missed nothing
-    # (counters are per-search deltas)
+    # fully cached: the second search missed nothing (counters are
+    # per-search deltas)
     assert c2["light_cache_misses"] == 0
 
 
-def test_light_cache_eviction_bounded():
-    cache = LightListCache(max_postings=100)
+def test_cache_eviction_bounded():
+    cache = PostingListCache(max_postings=100)
     import numpy as np
 
-    def rows(n):
+    def lists(n):
         a = np.arange(n)
-        return [(a, a, a)]
+        return (a, a, a)
 
-    cache.put("a", rows(60), 60)
-    cache.put("b", rows(50), 50)  # evicts a (total would be 110)
+    cache.put("a", lists(60), 60)
+    cache.put("b", lists(50), 50)  # evicts a (total would be 110)
     assert cache.get("a") is None
     assert cache.get("b") is not None
-    cache.put("huge", rows(1000), 1000)  # over bound: never inserted
+    cache.put("huge", lists(1000), 1000)  # over bound: never inserted
     assert cache.get("huge") is None
     assert cache.get("b") is not None, "oversized insert must not flush cache"
 
 
-def test_refresh_invalidates_light_cache(spark, served_index, cfg, tmp_path):
-    """After an append, refresh() must invalidate every cached light list
-    the append made stale — any term that gained a light row in the new
-    generation — so the served results match a cold Engine exactly.
+def test_refresh_invalidates_cache(spark, served_index, cfg, tmp_path):
+    """After an append, refresh() must invalidate every cached list the
+    append made stale — any term that gained a row in the new generation
+    — so the served results match a cold Engine exactly.
     (Since round 5 the invalidation is SELECTIVE: untouched terms stay
     cached — see test_refresh_incremental for that half.)"""
     import shutil
@@ -89,10 +89,8 @@ def test_refresh_invalidates_light_cache(spark, served_index, cfg, tmp_path):
     e.refresh()
     # the shared-vocab append touched the query terms -> their cached
     # lists must be gone, the next search re-fetches and matches cold
-    stale = e.last_meta_load["new_light_terms"]
-    assert e._light_cache is None or all(
-        e._light_cache.get(t) is None for t in stale
-    )
+    stale = e.last_meta_load["new_terms"]
+    assert e._cache is None or all(e._cache.get(t) is None for t in stale)
     got = e.search(q)
     fresh = Engine(spark, d, cfg).search(q)
     assert got == fresh
@@ -125,7 +123,7 @@ def test_missing_listed_generation_raises(tmp_path, spark, small_corpus, cfg):
         read_segment_rows(seg, gens=[0])
     with pytest.raises(FileNotFoundError, match="generation 0"):
         count_matches_index(spark, d, q, cfg, "or")
-    # the terms are in the index but not in the Engine's LRUs yet, so
+    # the terms are in the index but not in the Engine's LRU yet, so
     # the search must read their posting rows
     with pytest.raises(FileNotFoundError, match="generation 0"):
         e.search(q)

@@ -122,7 +122,7 @@ def test_fast_path_within_budget_and_counters(spark, index_dir, cfg):
     engine = Engine(spark, index_dir, cfg)
     got = engine.search(REFERENCE_QUERIES[3])
     ctr = engine.last_search_counters
-    assert got and ctr["path"] in ("driver", "light_only")
+    assert got and ctr["path"] == "driver"
     assert ctr["terms"] == 3
     assert ctr["driver_postings_decoded"] > 0
     assert ctr["driver_postings_decoded"] <= cfg.max_driver_postings
@@ -130,7 +130,7 @@ def test_fast_path_within_budget_and_counters(spark, index_dir, cfg):
     assert "last_search" in engine.stats()
 
 
-def test_block_max_pruning_saves_decodes(spark, index_dir, cfg):
+def test_block_max_pruning_saves_decodes(spark, index_dir, cfg, distributed_cfg):
     """Distributed branch with θ pre-seed: across the multi-term queries
     the executor must decode strictly fewer blocks than a full decode of
     every matching heavy row would (the whole point of block-max WAND +
@@ -148,8 +148,8 @@ def test_block_max_pruning_saves_decodes(spark, index_dir, cfg):
         )
         ctr = new_counters()
         search_index(
-            spark, index_dir, query, cfg,
-            max_driver_heavy_rows=0, task_groups=4, counters=ctr,
+            spark, index_dir, query, distributed_cfg(cfg, index_dir, query),
+            task_groups=4, counters=ctr,
         )
         assert ctr["path"] == "distributed"
         assert ctr["blocks_decoded"] <= total_blocks
@@ -188,8 +188,7 @@ def test_block_seed_under_starved_budget(spark, index_dir, oracle_inputs, cfg):
         tight = replace(cfg, max_driver_postings=16, top_k_internal=5)
         ctr = new_counters()
         got = search_index(
-            spark, index_dir, query, tight, k=5,
-            max_driver_heavy_rows=0, task_groups=4, counters=ctr,
+            spark, index_dir, query, tight, k=5, task_groups=4, counters=ctr,
         )
         assert ctr["path"] == "distributed"
         assert ctr["theta_seed_mode"] == "block", ctr
@@ -205,13 +204,54 @@ def test_block_seed_under_starved_budget(spark, index_dir, oracle_inputs, cfg):
     assert pruned_somewhere, "block-seeded θ never pruned a range"
 
 
-def test_theta_seed_recorded(spark, index_dir, cfg):
+def test_theta_seed_recorded(spark, index_dir, cfg, distributed_cfg):
     """The θ pre-seed must be captured and nonzero for a query whose light
     lists alone fill the top-k (seed = kth best light/seed score)."""
+    query = REFERENCE_QUERIES[21]
     ctr = new_counters()
     search_index(
-        spark, index_dir, REFERENCE_QUERIES[21], cfg,
-        max_driver_heavy_rows=0, task_groups=4, counters=ctr,
+        spark, index_dir, query, distributed_cfg(cfg, index_dir, query),
+        task_groups=4, counters=ctr,
     )
     assert ctr["path"] == "distributed"
     assert ctr["theta_seed"] > 0.0
+
+
+def test_budget_alone_selects_path(spark, index_dir, oracle_inputs, cfg, distributed_cfg):
+    """The query's total postings (Σ df over its terms) against
+    max_driver_postings alone pick the path, for a heavy + light and a
+    light-only query: at Σ df the driver scores every list whole, one
+    posting less sends the query to the distributed branch, and both
+    answers equal each other and the oracle."""
+    terms_dict = spark.read.parquet(index_dir + "/terms")
+    light = [
+        r["term"]
+        for r in terms_dict.filter(
+            (~F.col("heavy")) & (F.col("df") >= 4) & (F.col("df") <= 20)
+        )
+        .orderBy("term")
+        .limit(2)
+        .collect()
+    ]
+    heavy = [
+        r["term"]
+        for r in terms_dict.filter(F.col("heavy"))
+        .orderBy(F.desc("df"), F.asc("term"))
+        .limit(1)
+        .collect()
+    ]
+    assert len(light) == 2 and len(heavy) == 1
+    for query in (f"{light[0]} {heavy[0]}", f"{light[0]} {light[1]}"):
+        sigma = distributed_cfg(cfg, index_dir, query).max_driver_postings + 1
+        got = {}
+        for budget, path in ((sigma, "driver"), (sigma - 1, "distributed")):
+            ctr = new_counters()
+            got[path] = search_index(
+                spark, index_dir, query, replace(cfg, max_driver_postings=budget),
+                task_groups=4, counters=ctr,
+            )
+            assert ctr["path"] == path, (query, ctr)
+            if path == "driver":
+                assert ctr["postings_scored"] == sigma, ctr
+        assert got["driver"] == got["distributed"], query
+        _assert_rank_identical(got["driver"], _oracle(oracle_inputs, cfg, query), query)
