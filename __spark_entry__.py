@@ -1176,7 +1176,7 @@ def q_wand_explain(spark, sf_dir):
     from dawnsearch_spark.operators.wand import search_index
 
     root = _wand_index_root(spark, sf_dir)
-    hits = search_index(spark, root, BM25_QUERY_1, _wand_cfg())
+    hits = search_index(root, BM25_QUERY_1, _wand_cfg())
     top_doc = hits[0][0]
     exp = explain_doc(root, BM25_QUERY_1, top_doc, _wand_cfg())
     rows = [
@@ -2136,7 +2136,7 @@ def _wand_topk(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     from dawnsearch_spark.operators.wand import search_index
 
     root = _wand_index_root(spark, sf_dir)
-    hits = search_index(spark, root, query, _wand_cfg())
+    hits = search_index(root, query, _wand_cfg())
     out = spark.createDataFrame(
         [(int(d), float(s)) for d, s in hits] or [], "doc_id long, score double"
     )
@@ -2170,20 +2170,19 @@ def q_wand_topk_2(spark, sf_dir):
 
 
 def q_wand_topk_dist(spark, sf_dir):
-    """T4 under the driver gate with the DISTRIBUTED branch forced: a
-    tiny max_driver_postings budget keeps the query off the driver path
-    and overflows the light lists, so heavy range
-    fan-out AND executor-side range-splitting of light lists
-    (applyInPandas + mapInPandas) both run — against the same exact-BM25
-    oracle. Round 2's gap: the sf0.1/sf0.01 indexes always fit the driver
-    fast path, so the fan-out code was pytest-verified only."""
+    """T4 under the driver gate with the block-max walk forced: a tiny
+    max_driver_postings budget keeps the query off the driver path and
+    overflows the light lists, so the walk visits range rows AND
+    block-span views of light rows (θ pruning, per-block decode) —
+    against the same exact-BM25 oracle. The sf0.1/sf0.01 indexes always
+    fit the driver path, so only this entry reaches the walk."""
     from dataclasses import replace as _replace
 
     from dawnsearch_spark.operators.wand import search_index
 
     root = _wand_index_root(spark, sf_dir)
     cfg = _replace(_wand_cfg(), max_driver_postings=64)
-    hits = search_index(spark, root, BM25_QUERY_2, cfg, task_groups=8)
+    hits = search_index(root, BM25_QUERY_2, cfg)
     out = spark.createDataFrame(
         [(int(d), float(s)) for d, s in hits] or [], "doc_id long, score double"
     )

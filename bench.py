@@ -147,8 +147,6 @@ def main() -> None:
             "light_terms_overflow",
             "light_cache_hits",
             "light_cache_misses",
-            "seed_blocks_decoded",
-            "seed_postings_scored",
         )
         # per-job dispatch floor of this session (scheduler round-trip for
         # a no-op job): the denominator for every sub-second latency below
@@ -239,18 +237,24 @@ def main() -> None:
         }
 
         # block-max payoff pass (VERDICT r3 #5): discriminative queries —
-        # one mid-df term + the two heaviest stopword-like terms. The θ
-        # seed (driver-scored light lists + best range) exceeds the
-        # heavy-only upper bound, so every range the rare term skips is
-        # pruned whole: ranges_pruned lands nonzero in THIS artifact, at
-        # bench scale, not just in unit-test skew fixtures.
+        # one mid-df term + the two heaviest stopword-like terms. θ0 (the
+        # driver-scored rare light list) and the walk's rising θ exceed
+        # the heavy-only upper bound, so every range the rare term skips
+        # is pruned whole: ranges_pruned lands nonzero in THIS artifact,
+        # at bench scale, not just in unit-test skew fixtures. The df
+        # band scales with the corpus (vocabulary df grows with n_docs;
+        # a fixed [25, 80] band is empty at 200k docs) and equals
+        # [25, 80] at sf0.1.
         from pyspark.sql import functions as F
 
         tdict = spark.read.parquet(os.path.join(idx_dir, "terms"))
+        band = n_docs / 20_000
         rare_terms = [
             r["term"]
             for r in tdict.filter(
-                (F.col("df") >= 25) & (F.col("df") <= 80) & (~F.col("heavy"))
+                (F.col("df") >= 25 * band)
+                & (F.col("df") <= 80 * band)
+                & (~F.col("heavy"))
             )
             .orderBy("term")
             .limit(6)
@@ -261,8 +265,8 @@ def main() -> None:
         from dataclasses import replace as _replace
 
         # a budget one short of the two heavy lists keeps every
-        # rare + heavy + heavy query on the distributed branch, with its
-        # rare light list on the driver and the range θ seed
+        # rare + heavy + heavy query on the block-max walk, with its rare
+        # light list decoded whole on the driver as θ0
         prune_engine = Engine(
             spark, idx_dir,
             _replace(cfg, max_driver_postings=sum(r["df"] for r in heavy_b) - 1),
@@ -282,10 +286,9 @@ def main() -> None:
                 ] = round((time.time() - t0) / len(rare_terms), 3)
             extras[pass_name] = prune_ctr
 
-        # distributed branch (round-2 gap: the sf0.1 index always fits the
-        # driver path, so the fan-out latency was never measured): a tight
-        # postings budget forces the applyInPandas range tasks and
-        # executor-side light-list splits
+        # block-max walk (the sf0.1 index always fits the driver path, so
+        # the walk is otherwise never timed): a tight postings budget
+        # sends the light lists above it into the walk as block-span views
         dist_engine = Engine(
             spark, idx_dir, _replace(cfg, max_driver_postings=1000)
         )
@@ -297,28 +300,23 @@ def main() -> None:
         timings["wand_topk_dist_avg"] = round((time.time() - t0) / 5, 3)
         extras["wand_dist_counters"] = dist_ctr
 
-        # STARVED-budget distributed pass (VERDICT r4 #3 done-criterion):
-        # max_driver_postings=64 is far below any range's postings, so θ
-        # must come from the block seed — the artifact records
-        # ranges_pruned > 0 under exactly the 100x-index shape where the
-        # seed range can never fit the driver
+        # STARVED-budget walk (VERDICT r4 #3 done-criterion):
+        # max_driver_postings=64 is far below any range's postings, so
+        # nearly every list is walked and θ rises inside the walk — the
+        # artifact records ranges_pruned > 0 under exactly the
+        # 100x-index shape where no range fits the driver budget
         stress_engine = Engine(
             spark, idx_dir, _replace(cfg, max_driver_postings=64, top_k_internal=10)
         )
         stress_ctr: dict = {}
-        seed_modes: dict = {}
         t0 = time.time()
         for t in rare_terms:
             stress_engine.search({t: 1, heavy_terms_b[0]: 1, heavy_terms_b[1]: 1})
-            c = stress_engine.last_search_counters
-            _acc(stress_ctr, c, _CTRS)
-            m = c.get("theta_seed_mode", "")
-            seed_modes[m] = seed_modes.get(m, 0) + 1
+            _acc(stress_ctr, stress_engine.last_search_counters, _CTRS)
         if rare_terms:
             timings["wand_topk_dist_stress_avg"] = round(
                 (time.time() - t0) / len(rare_terms), 3
             )
-        stress_ctr["theta_seed_modes"] = seed_modes
         extras["wand_dist_stress_counters"] = stress_ctr
 
         timed("hydrated_search", lambda: engine.search_df("parse http request").collect())

@@ -43,7 +43,7 @@ class EngineConfig:
     # A term whose df exceeds the EFFECTIVE threshold is "heavy"
     # (stopword-like): the merge writes its postings as one segment row
     # per (term, doc_id // range_size) instead of one light row, so no
-    # single row (and no query task) holds more than range_size postings.
+    # single row holds more than range_size postings.
     # An absolute value here overrides; the default None scales the
     # threshold with the corpus:
     # clamp(n_docs * heavy_df_ratio, heavy_df_min, heavy_df_max).
@@ -54,18 +54,18 @@ class EngineConfig:
     heavy_df_threshold: int | None = None
     heavy_df_ratio: float = 0.01
     heavy_df_min: int = 1024
-    # Ceiling so no single light posting list can exceed one task's
-    # memory regardless of corpus size (1M postings packs to a few MB of
-    # varbyte).
+    # Ceiling so no single light posting list can exceed one merge
+    # task's memory regardless of corpus size (1M postings packs to a few
+    # MB of varbyte).
     heavy_df_max: int = 1_000_000
-    # Query-time budget on postings decoded ON THE DRIVER. A query whose
-    # total postings (every row of every term) fit it is scored whole on
-    # the driver; any other query takes the distributed branch, where
-    # light lists are taken smallest-first until the budget is hit (the
-    # θ-seed range counts against it too) and the rest are range-split on
-    # the executors and scored in the distributed range tasks, so a
-    # 10-term query of mid-frequency terms (df just under heavy_df_max)
-    # can never accumulate hundreds of MB of driver NumPy. 2M postings
+    # Query-time budget on postings decoded whole ON THE DRIVER. A query
+    # whose total postings (every row of every term) fit it is scored
+    # whole on the driver; any other query takes the block-max walk, also
+    # on the driver: light lists are decoded whole smallest-first until
+    # the budget is hit, and every other row is read compressed and
+    # decoded one doc-range's blocks at a time, so a 10-term query of
+    # mid-frequency terms (df just under heavy_df_max) can never
+    # accumulate hundreds of MB of driver NumPy. 2M postings
     # varbyte-decode to ~50 MB of int64 arrays.
     max_driver_postings: int = 2_000_000
     # Phrase serving (operators/phrase_serve.py): max candidate docs whose

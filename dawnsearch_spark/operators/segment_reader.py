@@ -14,8 +14,9 @@ The pyarrow read keeps the same files, the same pruning (bucket dirs =
 partition pruning, term filter = row-group statistics/dictionary pushdown)
 and the same rows, without the scheduler round-trip. Index roots are
 local paths (``IndexPaths``), so every WAND, phrase, count and explain
-call and the Engine's term dictionary read through here; row sets above
-the driver budgets take the distributed branches instead.
+call and the Engine's term dictionary read through here; only phrase
+and count row sets above their driver budgets take distributed branches
+instead (WAND above its budget still reads here, for the block-max walk).
 
 Tiered generations: segments live under ``gen=K/bucket=B/*.parquet``
 (index_build.py stage 3). Callers pass the MANIFEST-LISTED generation ids

@@ -1,13 +1,14 @@
 """Block-max WAND top-k query executor.
 
 Reference semantics being preserved (SURVEY.md §2.5 T1/T4, §4 P1/P2):
-* local-then-scatter-gather with a shipped pruning threshold — the
-  reference seeds a bounded top-k with local hits, captures its worst
-  distance and ships it so peers filter before responding
-  (/root/reference/src/search/search_service.rs:201-236;
-  /root/reference/src/net/udp_service.rs:196-200). Here: the driver scores
-  the small ("light") posting lists exactly, seeds θ, and the distributed
-  range tasks prune candidates whose block-max upper bound is below θ;
+* local-first search with a pruning threshold — the reference seeds a
+  bounded top-k with local hits, captures its worst distance and ships
+  it so peers filter before responding (search_service.rs:201-236;
+  udp_service.rs:196-200). Here the threshold semantics stay and the
+  fan-out goes: the driver scores the small ("light") posting lists
+  exactly, seeds θ from them, and walks the rest of the query's rows
+  itself, pruning doc-ranges and candidates whose block-max upper bound
+  is below θ;
 * bounded top-k accumulator with (score desc, doc_id asc) final order
   (/root/reference/src/search/best_results.rs:28-79);
 * per-search observability counters, the analog of the reference's
@@ -15,12 +16,11 @@ Reference semantics being preserved (SURVEY.md §2.5 T1/T4, §4 P1/P2):
   (/root/reference/src/search/search_provider.rs:44-59): ranges pruned,
   blocks decoded, postings scored, driver postings decoded, path taken;
 * unlike the reference's 200 ms best-effort deadline gather
-  (udp_service.rs:300-341), the Spark stage barrier makes our merge
-  complete — results are exact, verified rank-identical to the full-scan
-  oracle.
+  (udp_service.rs:300-341), nothing is dropped: every doc-range is either
+  scored or pruned by an admissible bound, so results are exact, verified
+  rank-identical to the full-scan oracle.
 
-Execution shape (driver path: ZERO Spark jobs; distributed branch: one
-pruned scan job + a tiny collect):
+Execution shape (every path: ZERO Spark jobs):
   query terms -> bucket + term pruning; metadata comes from the Engine's
      COLUMNAR driver-resident term dictionary (plans/query.py TermMeta),
      else a pruned metadata read. Global df per term = Σ n_docs over the
@@ -37,30 +37,30 @@ pruned scan job + a tiny collect):
      — reference S7 in-process segment scan, document_embeddings.rs:17-54;
      only MANIFEST-LISTED generation dirs, never compaction leftovers)
      and a full decode.
-  distributed branch (the total exceeds the budget — the scale path):
+  block-max walk (the total exceeds the budget — the scale path):
   -> light lists of terms with no range row come through the same LRU,
-     smallest-TERM-first under the budget, and seed θ; overflow light
-     lists (and the light rows of terms that also have range rows) are
-     RANGE-SPLIT on the executors (mapInPandas decode -> per-doc-range
-     re-pack) into rows shaped exactly like heavy range rows
-  -> heavy + split rows grouped into range tasks (applyInPandas); each
-     task derives EXACT per-block BM25 maxima from the rows' stats-free
-     (tf, dl) Pareto fronts under current stats (_attach_bounds),
-     processes its doc-ranges in descending upper-bound order, maintains
-     a rising local θ (seeded from the driver's light pass PLUS a driver
-     pre-score of the single best-upper-bound range), prunes whole
-     ranges by Σ over terms of the per-term row-max bound, prunes
-     candidates by per-block max, and decodes tf/dl only for blocks that
-     still have survivors
-  -> driver merges per-task top-k (dedup keep-max), final sort.
+     smallest-TERM-first under the budget, and seed θ0
+  -> every other row of the query's terms (range rows, plus the light
+     rows of overflow terms and of terms that also have range rows) is
+     read ONCE, compressed, by one pyarrow read. A range row belongs to
+     its doc-range; a light row enters every doc-range its blocks meet,
+     as a view of that block span (a block-directory lookup, no decode)
+  -> the walk derives EXACT per-block BM25 maxima from the rows'
+     stats-free (tf, dl) Pareto fronts under current stats
+     (_attach_bounds), visits doc-ranges in descending upper-bound order
+     with a rising θ, prunes whole ranges by Σ over terms of the per-term
+     bound, prunes candidates by per-block max, decodes only a view's
+     doc blocks, and decodes tf/dl only for blocks that still have
+     survivors
+  -> keep-max merge with the light scores, final sort.
 
-The per-doc score for any doc is computed whole inside exactly one range
-task (all heavy/split rows of a doc-range carry the same range_id, and the
-driver-resident light lists are sliced per range inside the task), so the
-keep-max merge never adds partial scores — the merge is exact. With
-tiered generations a (term, range) may span several rows holding
-DISJOINT doc subsets: per-term bounds take the MAX over rows, exact
-contributions accumulate row by row (each doc matches at most one row).
+A doc's score is computed whole inside exactly one range visit (every
+row or view of a doc-range is masked to that range, and the
+driver-resident light lists are sliced per range), so the keep-max merge
+never adds partial scores — the merge is exact. With tiered generations
+a (term, range) may have several rows holding DISJOINT doc subsets:
+per-term bounds take the MAX over rows, exact contributions accumulate
+row by row (each doc matches at most one row).
 
 All per-posting work is NumPy-vectorized. Scores accumulate per doc in
 ascending-term order in float64, the oracle's fold order (SURVEY.md §7
@@ -75,9 +75,6 @@ from collections import Counter
 from dataclasses import dataclass
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from dawnsearch_spark.config import EngineConfig
 from dawnsearch_spark.functions.bm25 import bm25_np, idf_np
@@ -86,38 +83,23 @@ from dawnsearch_spark.functions.tokenizer import tokenize_py
 from dawnsearch_spark.index_build import IndexPaths, load_stats
 from dawnsearch_spark.operators.tf import CorpusStats
 
-# Data rows carry doc_id >= 0 with zeroed counters; each task additionally
-# emits ONE summary row (doc_id = -1) whose counter columns hold the task's
-# totals — the driver splits on the sign and sums the summaries.
-RESULT_SCHEMA = (
-    "doc_id long, score double, "
-    "ranges_pruned long, blocks_decoded long, postings_scored long"
-)
-
-_CTR_KEYS = ("ranges_pruned", "blocks_decoded", "postings_scored")
-
 
 def new_counters() -> dict:
     return {
-        "path": "",
+        "path": "",  # "driver" or "block_max"
         "terms": 0,
         "light_terms_driver": 0,
         "light_terms_overflow": 0,
         "heavy_rows": 0,
+        # postings of WHOLE lists decoded on the driver (the part bounded
+        # by max_driver_postings); the block-max walk's block decodes are
+        # counted by blocks_decoded instead
         "driver_postings_decoded": 0,
         "ranges_pruned": 0,
         "blocks_decoded": 0,
         "postings_scored": 0,
-        # θ-seed pre-pass work (driver-side, distributed branch only) —
-        # kept separate so blocks_decoded stays comparable to the index's
-        # block directory totals
-        "seed_blocks_decoded": 0,
-        "seed_postings_scored": 0,
+        # θ0 of the block-max walk: the kth best light-list score
         "theta_seed": 0.0,
-        # "range" when the best range fit the driver budget and was scored
-        # whole, "block" when it did not and the single best block of its
-        # best row seeded θ instead (the 100x-index shape), "" otherwise
-        "theta_seed_mode": "",
         # posting-list LRU lookups of THIS search, one per cached term
         # lookup of any layout (Engine serving only; 0/0 when no cache in
         # play). The keys keep their "light_" names for existing readers.
@@ -252,15 +234,6 @@ def _attach_bounds(rd: dict, idf: float, stats: CorpusStats, cfg: EngineConfig) 
     return rd
 
 
-def _meta_row_ub(r, idf: float, stats: CorpusStats, cfg: EngineConfig) -> float:
-    """Row-level upper bound from the scalar (max_tf, min_dl) metadata."""
-    tf = float(r["max_tf"])
-    dl = float(r["min_dl"])
-    return float(
-        idf * (tf * (cfg.k1 + 1.0)) / (tf + cfg.k1 * (1.0 - cfg.b + cfg.b * dl / stats.avgdl))
-    )
-
-
 def _decode_blocks_tf_dl(
     row: dict, blocks: np.ndarray, block_size: int, ctr: dict | None = None
 ) -> dict[int, tuple]:
@@ -340,10 +313,36 @@ def _topk_unique(doc_ids: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[
     return [(int(doc_ids[i]), float(scores[i])) for i in sel]
 
 
+def _first_doc(row: dict) -> int:
+    """First docID of a packed row: the one varbyte value that opens its
+    doc stream (block 0 stores the absolute docID)."""
+    head = np.frombuffer(row["doc_blob"][:10], np.uint8)
+    return int(varbyte_decode(head[: int(np.argmax(head < 0x80)) + 1].tobytes(), 1)[0])
+
+
+def _span_docs(row: dict, lo: int, hi: int, block_size: int) -> tuple[np.ndarray, int]:
+    """DocIDs of one row view that fall in ``[lo, hi)``, and the row
+    position of the first of them. Only the view's block span
+    ``[b0, b1)`` of the doc stream is decoded; the span's first gap is
+    relative to ``block_last[b0 - 1]``, as in :func:`codec.decode_block`."""
+    b0, b1 = row["b0"], row["b1"]
+    s = b0 * block_size
+    off = row["block_doc_off"]
+    gaps = varbyte_decode(
+        memoryview(row["doc_blob"])[off[b0] : off[b1]],
+        min(b1 * block_size, row["n_docs"]) - s,
+    )
+    docs = np.cumsum(gaps.astype(np.int64))
+    if b0 > 0:
+        docs += int(row["block_last"][b0 - 1])
+    a, e = np.searchsorted(docs, lo), np.searchsorted(docs, hi)
+    return docs[a:e], s + int(a)
+
+
 def _score_one_range(
     lo: int,
     hi: int,
-    heavy_rows: dict[str, list[dict]],
+    rows: dict[str, list[dict]],
     lights: list[LightList],
     qmeta: list[tuple[str, float, float]],  # (term, qtf, idf) ascending term
     theta: float,
@@ -352,18 +351,17 @@ def _score_one_range(
     ctr: dict | None = None,
     tomb: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Exact scores for surviving docs of one doc-range.
+    """Exact scores for surviving docs of one doc-range ``[lo, hi)``.
 
-    ``heavy_rows`` maps term -> LIST of segment rows: with tiered segment
-    generations a (term, range) can have one row per generation, holding
-    DISJOINT doc sets (a doc is indexed by exactly one generation). A
-    term's upper bound for a doc is therefore the MAX over its rows'
-    block bounds (never the sum), and exact contributions accumulate row
-    by row — each doc matches in at most one row. Rows must arrive with
-    ``block_ub``/``row_ub`` attached (see :func:`_attach_bounds`)."""
+    ``rows`` maps term -> LIST of row views (see
+    :func:`_group_rows_by_range`): with tiered segment generations a term
+    can have one row per generation, holding DISJOINT doc sets (a doc is
+    indexed by exactly one generation). A term's upper bound for a doc is
+    therefore the MAX over its rows' block bounds (never the sum), and
+    exact contributions accumulate row by row — each doc matches in at
+    most one row."""
     # light slices restricted to this range, scored exactly (cheap, small)
     slices: dict[str, list[tuple]] = {}
-    light_ub = 0.0
     term_slice_max: dict[str, float] = {}
     for l in lights:
         a, b_ = np.searchsorted(l.docs, lo), np.searchsorted(l.docs, hi)
@@ -375,50 +373,52 @@ def _score_one_range(
         # disjoint docs -> per-term bound is the max over rows
         term_slice_max[l.term] = max(term_slice_max.get(l.term, 0.0), float(sc.max()))
     light_ub = sum(term_slice_max.values())
-    # range-level screen before any heavy decode
-    heavy_ub = sum(
-        qtf * max(r["row_ub"] for r in heavy_rows[t])
-        for t, qtf, _ in qmeta
-        if t in heavy_rows
+    # range-level screen before any decode
+    rows_ub = sum(
+        qtf * max(r["row_ub"] for r in rows[t]) for t, qtf, _ in qmeta if t in rows
     )
-    if heavy_ub + light_ub < theta:
+    if rows_ub + light_ub < theta:
         if ctr is not None:
             ctr["ranges_pruned"] += 1
         return np.zeros(0, np.int64), np.zeros(0, np.float64)
 
-    heavy_docs = {
-        t: [
-            r["_docs"] if "_docs" in r else _decode_row_docs(r)
-            for r in rows
-        ]
-        for t, rows in heavy_rows.items()
+    # (docs in [lo, hi), row position of the first) per view
+    spans = {
+        t: [_span_docs(r, lo, hi, cfg.block_size) for r in rs] for t, rs in rows.items()
     }
-    cand_parts = [d for ds in heavy_docs.values() for d in ds] + [
-        s[0] for lst in slices.values() for s in lst
-    ]
-    cand = np.unique(np.concatenate(cand_parts))
+    cand = np.unique(
+        np.concatenate(
+            [d for sp in spans.values() for d, _ in sp]
+            + [s[0] for lst in slices.values() for s in lst]
+        )
+    )
     if tomb is not None and len(tomb):
         # tombstoned docs leave the candidate set BEFORE any bound or θ
         # is derived — a deleted doc must neither appear in results nor
-        # inflate θ (heavy_docs stay unmasked: positions into them drive
-        # the block-offset arithmetic below). Light slices are already
-        # tombstone-free (masked at LightList construction).
+        # inflate θ. Light slices are already tombstone-free (masked at
+        # LightList construction).
         from dawnsearch_spark.operators.merge import _tombstone_mask
 
         cand = cand[_tombstone_mask(cand, tomb)]
-        if not len(cand):
-            return np.zeros(0, np.int64), np.zeros(0, np.float64)
-    # per-doc upper bound: block-max for heavy, exact for light
+    if not len(cand):
+        return np.zeros(0, np.int64), np.zeros(0, np.float64)
+    # per-doc upper bound: for each view holding the doc, the max of the
+    # block holding it (0 from views that do not hold it); exact for
+    # light slices. A term's views hold disjoint docs, so at most one of
+    # them sets a doc's bound.
     ub = np.zeros(len(cand), np.float64)
+    hits: dict[str, list[tuple]] = {}  # term -> [(view, member mask, row pos)]
     for t, qtf, _idf in qmeta:
-        if t in heavy_rows:
-            tub = None
-            for row in heavy_rows[t]:
-                blk = np.searchsorted(row["block_last"], cand)
-                valid = blk < len(row["block_last"])
-                cur = np.zeros(len(cand), np.float64)
-                cur[valid] = row["block_ub"][blk[valid]]
-                tub = cur if tub is None else np.maximum(tub, cur)
+        if t in rows:
+            tub = np.zeros(len(cand), np.float64)
+            for row, (docs_t, base) in zip(rows[t], spans[t]):
+                if not len(docs_t):
+                    continue
+                pos = np.searchsorted(docs_t, cand)
+                m = (pos < len(docs_t)) & (docs_t[np.minimum(pos, len(docs_t) - 1)] == cand)
+                p = pos[m] + base
+                tub[m] = row["block_ub"][p // cfg.block_size]
+                hits.setdefault(t, []).append((row, m, p))
             ub += qtf * tub
         if t in slices:
             for sdocs, ssc in slices[t]:
@@ -433,21 +433,20 @@ def _score_one_range(
     if ctr is not None:
         ctr["postings_scored"] += int(len(surv))
     for t, qtf, idf in qmeta:  # ascending-term fold (rank determinism)
-        for row, docs_t in zip(heavy_rows.get(t, ()), heavy_docs.get(t, ())):
-            pos = np.searchsorted(docs_t, surv)
-            m = (pos < len(docs_t)) & (docs_t[np.minimum(pos, len(docs_t) - 1)] == surv)
-            if m.any():
-                p = pos[m]
-                blocks = np.unique(p // cfg.block_size)
-                tfdl = _decode_blocks_tf_dl(row, blocks, cfg.block_size, ctr)
-                tf_v = np.empty(len(p), np.int64)
-                dl_v = np.empty(len(p), np.int64)
-                for b in blocks:
-                    sel = (p // cfg.block_size) == b
-                    off = p[sel] - b * cfg.block_size
-                    tf_v[sel] = tfdl[int(b)][0][off]
-                    dl_v[sel] = tfdl[int(b)][1][off]
-                acc[m] += qtf * bm25_np(tf_v, dl_v, idf, stats.avgdl, cfg.k1, cfg.b)
+        for row, m, p in hits.get(t, ()):
+            p = p[keep[m]]
+            if not len(p):
+                continue
+            blocks = np.unique(p // cfg.block_size)
+            tfdl = _decode_blocks_tf_dl(row, blocks, cfg.block_size, ctr)
+            tf_v = np.empty(len(p), np.int64)
+            dl_v = np.empty(len(p), np.int64)
+            for b in blocks:
+                sel = (p // cfg.block_size) == b
+                off = p[sel] - b * cfg.block_size
+                tf_v[sel] = tfdl[int(b)][0][off]
+                dl_v[sel] = tfdl[int(b)][1][off]
+            acc[m[keep]] += qtf * bm25_np(tf_v, dl_v, idf, stats.avgdl, cfg.k1, cfg.b)
         for sdocs, ssc in slices.get(t, ()):
             pos = np.searchsorted(surv, sdocs)
             m = (pos < len(surv)) & (surv[np.minimum(pos, len(surv) - 1)] == sdocs)
@@ -455,29 +454,39 @@ def _score_one_range(
     return surv, acc
 
 
-def _result_frame(top: list[tuple[float, int]], ctr: dict) -> pd.DataFrame:
-    """Data rows + one doc_id=-1 summary row carrying the task counters."""
-    zeros = [0] * len(top)
-    return pd.DataFrame(
-        {
-            "doc_id": [d for _, d in top] + [-1],
-            "score": [s for s, _ in top] + [0.0],
-            "ranges_pruned": zeros + [ctr["ranges_pruned"]],
-            "blocks_decoded": zeros + [ctr["blocks_decoded"]],
-            "postings_scored": zeros + [ctr["postings_scored"]],
-        }
-    )
-
-
 def _group_rows_by_range(
     rows, qmeta, stats: CorpusStats, cfg: EngineConfig
 ) -> dict[int, dict[str, list[dict]]]:
-    """range_id -> term -> [bound-attached row dicts] (one per generation)."""
+    """range_id -> term -> [bound-attached row views] for the walk.
+
+    A view is the row dict plus its block span ``[b0, b1)`` and a
+    ``row_ub`` that is the span's max block bound. A range row is one view
+    of all its blocks. A light row enters every doc-range its blocks
+    meet: block b holds docs in ``[first_b, block_last[b]]`` with
+    ``first_b > block_last[b-1]``, so ``searchsorted`` on those ends
+    finds each range's span without decoding anything but the row's first
+    docID. Views share the row's compressed blobs."""
     idf_by_term = {t: idf for t, _qtf, idf in qmeta}
+    R = cfg.range_size
     by_range: dict[int, dict[str, list[dict]]] = {}
     for r in rows:
         rd = _attach_bounds(_row_to_dict(r), idf_by_term[r["term"]], stats, cfg)
-        by_range.setdefault(int(r["range_id"]), {}).setdefault(r["term"], []).append(rd)
+        last = rd["block_last"]
+        if rd["range_id"] >= 0:
+            rd["b0"], rd["b1"] = 0, len(last)
+            views = [(rd["range_id"], rd)]
+        else:
+            first = np.concatenate(([_first_doc(rd)], last[:-1] + 1))
+            rids = np.arange(first[0] // R, last[-1] // R + 1)
+            b0s = np.searchsorted(last, rids * R)
+            b1s = np.searchsorted(first, (rids + 1) * R)
+            views = []
+            for rid, b0, b1 in zip(rids.tolist(), b0s.tolist(), b1s.tolist()):
+                if b1 > b0:
+                    ub = float(rd["block_ub"][b0:b1].max())
+                    views.append((rid, dict(rd, b0=b0, b1=b1, row_ub=ub)))
+        for rid, v in views:
+            by_range.setdefault(rid, {}).setdefault(rd["term"], []).append(v)
     return by_range
 
 
@@ -491,20 +500,23 @@ def _score_ranges(
     cfg: EngineConfig,
     ctr: dict,
     tomb: np.ndarray | None = None,
-) -> list[tuple[float, int]]:
-    """WAND core of one distributed range task: visit doc-ranges in
-    descending upper-bound order so the local
-    θ rises fast (reference analog: local top-k first, then pruned
-    remote merge, search_service.rs:201-236). Per term the range bound
-    is the MAX over its generation rows (disjoint doc sets), never the
-    sum. Returns the bounded (score, doc_id) top list."""
+) -> tuple[np.ndarray, np.ndarray]:
+    """The block-max walk: visit doc-ranges in descending upper-bound
+    order so θ rises fast from ``theta0`` (reference analog: local top-k
+    first, then a pruned merge, search_service.rs:201-236). Per term the
+    range bound is the MAX over its row views (disjoint doc sets), never
+    the sum. ``tomb`` is the sorted tombstoned docID array. Returns the
+    surviving (scores, doc_ids), best first; it holds the top-k exactly.
+
+    Memory: the compressed rows (held by the caller) plus one range's
+    decoded doc blocks and surviving tf/dl blocks at a time, and at most
+    ~4k retained survivors."""
     import heapq
 
     theta = theta0
     # survivors accumulate as (scores, docs) array chunks; ordering and
     # truncation run vectorized (lexsort on (-score, doc) — the exact
-    # final tie rule) instead of per-tuple key lambdas, which were ~15%
-    # of driver-path serving latency at 200 ranges/query
+    # final tie rule) instead of per-tuple key lambdas
     chunks: list[tuple[np.ndarray, np.ndarray]] = []
     n_found = 0
     # min-heap of the k best scores seen so far: θ = heap root, updated in
@@ -531,11 +543,11 @@ def _score_ranges(
             if t in kv[1]
         ),
     )
-    for range_id, heavy_rows in order:
+    for range_id, rows in order:
         lo = range_id * cfg.range_size
         hi = lo + cfg.range_size
         surv, acc = _score_one_range(
-            lo, hi, heavy_rows, lights, qmeta, theta, stats, cfg, ctr, tomb
+            lo, hi, rows, lights, qmeta, theta, stats, cfg, ctr, tomb
         )
         if len(surv):
             chunks.append((acc, surv))
@@ -553,93 +565,14 @@ def _score_ranges(
             n_found = len(s)
         if len(heap) >= k and heap[0] > theta:
             theta = heap[0]
-    s, d = _best(None)
-    return list(zip(s.tolist(), d.tolist()))
-
-
-def make_range_scorer(
-    lights: list[LightList],
-    qmeta: list[tuple[str, float, float]],
-    theta0: float,
-    k: int,
-    stats: CorpusStats,
-    cfg: EngineConfig,
-    tomb=None,
-):
-    """applyInPandas wrapper over :func:`_score_ranges`. ``tomb`` (sorted
-    tombstoned docIDs, plain array or ``pyspark.Broadcast`` of one) is
-    bounded by the tombstone set between purges — the same budget
-    Lucene's per-segment live-docs bitmaps carry; callers pass a
-    Broadcast so the set ships once per executor, not once per task."""
-
-    def scorer(pdf: pd.DataFrame) -> pd.DataFrame:
-        t = tomb.value if hasattr(tomb, "value") else tomb
-        ctr = {key: 0 for key in _CTR_KEYS}
-        by_range = _group_rows_by_range(pdf.to_dict("records"), qmeta, stats, cfg)
-        found = _score_ranges(
-            by_range, lights, qmeta, theta0, k, stats, cfg, ctr, t
-        )
-        return _result_frame(found[:k], ctr)
-
-    return scorer
-
-
-def _split_light_rows_gen(cfg: EngineConfig):
-    """mapInPandas generator: range-split overflow light rows into rows
-    shaped exactly like heavy range rows (same blocked varbyte layout,
-    block-bound directory recomputed per slice; idf is unaffected — the
-    driver derives global df from the METADATA rows before splitting, so
-    scores are identical to the unsplit list). This is the executor
-    half of the driver-postings budget: the decode of a big light list
-    happens here, bounded per row by ``heavy_df_max``, never on the
-    driver. Reference analog: the bounded accumulator + shipped threshold
-    (best_results.rs:28-65) — overflow lists join the same pruned
-    distributed merge as heavy terms instead of a driver hot spot."""
-    from dawnsearch_spark.functions.codec import decode_all_postings
-    from dawnsearch_spark.operators.merge import SEGMENT_COLS, _make_segment_row
-
-    range_size = cfg.range_size
-
-    def gen(batches):
-        for pdf in batches:
-            out = []
-            for r in pdf.itertuples(index=False):
-                row = {
-                    "n_docs": int(r.n_docs),
-                    "doc_blob": bytes(r.doc_blob),
-                    "tf_blob": bytes(r.tf_blob),
-                    "dl_blob": bytes(r.dl_blob),
-                }
-                docs, tfs, dls = decode_all_postings(row, cfg.block_size)
-                ranges = docs // range_size
-                bounds = np.concatenate(
-                    ([0], np.flatnonzero(ranges[1:] != ranges[:-1]) + 1, [len(docs)])
-                )
-                for s, e in zip(bounds[:-1], bounds[1:]):
-                    out.append(
-                        _make_segment_row(
-                            r.term,
-                            int(ranges[s]),
-                            docs[s:e],
-                            tfs[s:e],
-                            dls[s:e],
-                            cfg,
-                        )
-                    )
-            if out:
-                yield pd.DataFrame({c: [o[c] for o in out] for c in SEGMENT_COLS})
-
-    return gen
+    return _best(None)
 
 
 def search_index(
-    spark: SparkSession,
     index_root: str,
     query: str | dict[str, float],
     cfg: EngineConfig,
     k: int | None = None,
-    task_groups: int = 64,
-    seg_df=None,
     stats: CorpusStats | None = None,
     counters: dict | None = None,
     meta_by_term=None,
@@ -650,20 +583,24 @@ def search_index(
 
     Gathers ``top_k_internal`` candidates internally and returns ``k``
     (reference: internal k=20, displayed 10 — search_provider.rs:214,
-    examples_old/search.rs:55-63).
+    examples_old/search.rs:55-63). Launches no Spark job.
 
-    Driver memory is bounded by ``cfg.max_driver_postings``. A query whose
-    total postings (Σ ``n_docs`` over its rows, light and range alike) fit
-    the budget takes the driver path — the reference's local-search-first
-    shape: every term's whole list, from ``cache`` or one segment read,
-    scored exactly on the driver. Any larger query takes the distributed
-    branch: light lists are decoded on the driver smallest-first under the
-    budget (they seed θ), and overflow light lists are range-split on the
-    executors and scored in the block-max range tasks.
+    ``cfg.max_driver_postings`` is the one switch. A query whose total
+    postings (Σ ``n_docs`` over its rows, light and range alike) fit it
+    takes the driver path — the reference's local-search-first shape:
+    every term's whole list, from ``cache`` or one segment read, decoded
+    and scored exactly. Any larger query takes the block-max walk: light
+    lists are decoded whole smallest-first under the budget (they seed
+    θ0), and every other row of the query's terms is read once,
+    compressed, and walked range by range (:func:`_score_ranges`). Driver
+    memory above the budget is then the budgeted light lists, the
+    compressed rows, and one range's decoded blocks — no list above the
+    budget is ever decoded whole.
 
-    ``counters``: pass a dict to receive per-search observability counters
-    (see :func:`new_counters`) — the reference's servers_contacted /
-    pages_searched analog (search_provider.rs:44-59).
+    ``tombstones``: sorted docIDs to exclude. ``counters``: pass a dict to
+    receive per-search observability counters (see :func:`new_counters`)
+    — the reference's servers_contacted / pages_searched analog
+    (search_provider.rs:44-59).
     """
     ctr = counters if counters is not None else new_counters()
     for key, v in new_counters().items():
@@ -688,7 +625,6 @@ def search_index(
     buckets = sorted({_term_bucket(t, cfg.num_term_buckets) for t in terms})
     from dawnsearch_spark.index_build import (
         gen_ids_with_rows,
-        read_segments,
         segment_generations,
     )
     from dawnsearch_spark.operators.segment_reader import (
@@ -802,8 +738,8 @@ def search_index(
         # decodes) is pure overhead — profiled at ~190 range iterations
         # and ~1k small varbyte calls per query at 200k docs, ~50x the
         # cost of one vectorized ascending-term accumulation over the same
-        # postings. Block-max pruning carries the distributed branch
-        # below — the path for queries that outgrow the driver budget.
+        # postings. The block-max walk below carries the queries that
+        # outgrow the driver budget.
         ctr["path"] = "driver"
         ctr["light_terms_driver"] = len(light_terms)
         lists = _term_lists([t for t, _qtf, _idf in qmeta])
@@ -811,12 +747,11 @@ def search_index(
         ldocs, lscores = _exact_light_scores(lists, stats, cfg)
         return _topk_unique(ldocs, lscores, k)[:k_out]
 
-    # ---- distributed branch ----
-    ctr["path"] = "distributed"
+    # ---- block-max walk ----
+    ctr["path"] = "block_max"
     # driver-resident light lists: smallest TERM first, under the budget.
-    # A term with range rows too keeps its light rows on the executors
-    # (overflow): the cached list is the term's WHOLE list, and its range
-    # rows are scored in the range tasks.
+    # A term with range rows too is walked (overflow) with all its rows:
+    # a cached list is a term's WHOLE list, never a part of one.
     heavy_terms = {r["term"] for r in heavy_meta}
     driver_terms: list[str] = []
     overflow_terms = sorted(light_terms & heavy_terms)
@@ -834,156 +769,13 @@ def search_index(
     theta0 = 0.0
     if len(lscores) >= k:
         theta0 = float(np.partition(lscores, -k)[-k])
-    seed_docs = np.zeros(0, np.int64)
-    seed_scores = np.zeros(0, np.float64)
-    if heavy_meta:
-        # θ pre-seed: driver-score the single best-upper-bound range so
-        # every task group starts from a tight θ instead of re-deriving it
-        # (reference analog: the LOCAL top-k's worst distance is shipped as
-        # the remote filter, search_service.rs:214-222). Conservative in
-        # both directions: seed scores are true partial-or-full scores, so
-        # θ stays a lower bound of the kth best.
-        # per (range, term) the bound is the max over generation rows
-        rt_ub: dict[tuple[int, str], float] = {}
-        range_postings: dict[int, int] = {}
-        for r in heavy_meta:
-            rid = int(r["range_id"])
-            key_rt = (rid, r["term"])
-            ub_r = bag[r["term"]] * _meta_row_ub(
-                r, idf_by_term[r["term"]], stats, cfg
-            )
-            rt_ub[key_rt] = max(rt_ub.get(key_rt, 0.0), ub_r)
-            range_postings[rid] = range_postings.get(rid, 0) + int(r["n_docs"])
-        range_ub: dict[int, float] = {}
-        for (rid, _t), v in rt_ub.items():
-            range_ub[rid] = range_ub.get(rid, 0.0) + v
-        best_rid = max(sorted(range_ub), key=lambda rid: range_ub[rid])
-        if cum + range_postings[best_rid] <= budget:
-            ctr["theta_seed_mode"] = "range"
-            ctr["driver_postings_decoded"] += range_postings[best_rid]
-            seed_rows = _fetch(range_id=best_rid)
-            seed_dict: dict[str, list[dict]] = {}
-            for r in seed_rows:
-                seed_dict.setdefault(r["term"], []).append(
-                    _attach_bounds(
-                        _row_to_dict(r), idf_by_term[r["term"]], stats, cfg
-                    )
-                )
-            seed_ctr = {key: 0 for key in _CTR_KEYS}
-            seed_docs, seed_scores = _score_one_range(
-                best_rid * cfg.range_size,
-                (best_rid + 1) * cfg.range_size,
-                seed_dict,
-                lights,
-                qmeta,
-                theta0,
-                stats,
-                cfg,
-                seed_ctr,
-                tombstones,
-            )
-            ctr["seed_blocks_decoded"] += seed_ctr["blocks_decoded"]
-            ctr["seed_postings_scored"] += seed_ctr["postings_scored"]
-            merged_seed = _topk_merge(
-                np.concatenate([ldocs, seed_docs]),
-                np.concatenate([lscores, seed_scores]),
-                k,
-            )
-            if len(merged_seed) >= k:
-                theta0 = max(theta0, merged_seed[k - 1][1])
-        else:
-            # The best range exceeds the driver budget — the shape of a
-            # 100x index, where the hottest range outgrows any fixed
-            # driver budget (with no seed the fan-out started at θ≈0 and
-            # ranges_pruned stayed 0 two rounds running). Seed from the
-            # single best BLOCK instead: fetch only the highest-bound row
-            # of the best range and exactly score its best block
-            # (≤ block_size postings — always affordable, whatever the
-            # budget). A single-term block score is a LOWER bound of the
-            # doc's full score (BM25 contributions are nonnegative), so
-            # θ = kth best of (light ∪ block) stays admissible, and the
-            # final keep-max merge is safe: a doc the tasks score keeps
-            # its exact score (≥ the partial), and a doc the tasks prune
-            # has full score < θ, which its partial ≤ full can never
-            # displace from the top-k.
-            ctr["theta_seed_mode"] = "block"
-            best_meta = max(
-                (r for r in heavy_meta if int(r["range_id"]) == best_rid),
-                key=lambda r: (
-                    bag[r["term"]]
-                    * _meta_row_ub(r, idf_by_term[r["term"]], stats, cfg),
-                    r["term"],
-                ),
-            )
-            seed_term = best_meta["term"]
-            best_row, best_b, best_ub = None, -1, -1.0
-            for r in _fetch(range_id=best_rid, only_terms=[seed_term]):
-                rd = _attach_bounds(
-                    _row_to_dict(r), idf_by_term[seed_term], stats, cfg
-                )
-                b = int(np.argmax(rd["block_ub"]))
-                if float(rd["block_ub"][b]) > best_ub:
-                    best_row, best_b, best_ub = rd, b, float(rd["block_ub"][b])
-            if best_row is not None:
-                from dawnsearch_spark.functions.codec import decode_block
-
-                docs_b, tfs_b, dls_b = decode_block(best_row, best_b, cfg.block_size)
-                if tombstones is not None:
-                    from dawnsearch_spark.operators.merge import _tombstone_mask
-
-                    mb = _tombstone_mask(docs_b, tombstones)
-                    docs_b, tfs_b, dls_b = docs_b[mb], tfs_b[mb], dls_b[mb]
-                seed_docs = docs_b
-                seed_scores = bag[seed_term] * bm25_np(
-                    tfs_b, dls_b, idf_by_term[seed_term], stats.avgdl, cfg.k1, cfg.b
-                )
-                # bounded seed work is tracked under the seed_* counters
-                # (a deliberate ≤ block_size exception to the budget)
-                ctr["seed_blocks_decoded"] += 1
-                ctr["seed_postings_scored"] += int(len(docs_b))
-                merged_seed = _topk_merge(
-                    np.concatenate([ldocs, seed_docs]),
-                    np.concatenate([lscores, seed_scores]),
-                    k,
-                )
-                if len(merged_seed) >= k:
-                    theta0 = max(theta0, merged_seed[k - 1][1])
     ctr["theta_seed"] = theta0
-
-    from dawnsearch_spark.operators.merge import SEGMENT_COLS, SEGMENT_SCHEMA
-
-    # the Spark relation is built only here: even constructing a
-    # .filter() costs py4j round-trips the driver paths never pay
-    seg = (seg_df if seg_df is not None else read_segments(spark, index_root)).filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(terms)
+    # every other row of the query's terms, compressed, in one read
+    walk_rows = _fetch(only_terms=heavy_terms | set(overflow_terms))
+    by_range = _group_rows_by_range(walk_rows, qmeta, stats, cfg)
+    wscores, wdocs = _score_ranges(
+        by_range, lights, qmeta, theta0, k, stats, cfg, ctr, tombstones
     )
-    rows_df = seg.filter(F.col("range_id") >= 0).select(*SEGMENT_COLS)
-    if overflow_terms:
-        ov = seg.filter(
-            (F.col("range_id") == -1) & F.col("term").isin(overflow_terms)
-        ).select(*SEGMENT_COLS)
-        split = ov.mapInPandas(_split_light_rows_gen(cfg), SEGMENT_SCHEMA)
-        rows_df = rows_df.unionByName(split)
-
-    tomb_ship = (
-        spark.sparkContext.broadcast(tombstones) if tombstones is not None else None
-    )
-    scorer = make_range_scorer(lights, qmeta, theta0, k, stats, cfg, tomb_ship)
-    result = (
-        rows_df.withColumn("task_group", F.pmod(F.col("range_id"), F.lit(task_groups)))
-        .groupBy("task_group")
-        .applyInPandas(scorer, RESULT_SCHEMA)
-        .collect()
-    )
-    data = [r for r in result if int(r["doc_id"]) >= 0]
-    for r in result:
-        if int(r["doc_id"]) < 0:
-            for key in _CTR_KEYS:
-                ctr[key] += int(r[key])
-    all_docs = np.concatenate(
-        [ldocs, seed_docs, np.array([r["doc_id"] for r in data], np.int64)]
-    )
-    all_scores = np.concatenate(
-        [lscores, seed_scores, np.array([r["score"] for r in data], np.float64)]
-    )
-    return _topk_merge(all_docs, all_scores, k)[:k_out]
+    return _topk_merge(
+        np.concatenate([ldocs, wdocs]), np.concatenate([lscores, wscores]), k
+    )[:k_out]

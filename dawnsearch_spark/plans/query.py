@@ -305,12 +305,10 @@ class Engine:
         result path; the posting-list LRU is internally locked."""
         self.last_search_counters = counters if counters is not None else {}
         return search_index(
-            self.spark,
             self.paths.root,
             query,
             self.cfg,
             k=k,
-            seg_df=self._segments,
             stats=self.stats_,
             counters=self.last_search_counters,
             meta_by_term=self._meta_by_term,

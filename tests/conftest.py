@@ -34,11 +34,11 @@ def small_corpus(spark):
 
 
 @pytest.fixture(scope="session")
-def distributed_cfg():
+def block_max_cfg():
     """``f(cfg, index_root, query)``: ``cfg`` with a driver budget one
     posting short of the query's total (Σ df over its terms, read from the
     index's ``terms/`` dictionary), so ``search_index`` takes the
-    distributed branch by its budget alone."""
+    block-max walk by its budget alone."""
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 

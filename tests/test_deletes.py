@@ -3,10 +3,10 @@
 Lucene-style contract under test:
   * ``delete_documents`` is O(delete batch): it writes only the tombstone
     set — segments, forward index, and stats are untouched;
-  * every search path (driver, light-only, distributed fan-out, θ seeds)
-    excludes tombstoned docs IMMEDIATELY, and surviving docs keep their
-    PRE-delete scores until purge (deleted docs still count in N/df —
-    exactly Lucene's deleted-docs staleness);
+  * every search path (driver, block-max walk) excludes tombstoned
+    docs IMMEDIATELY, and surviving docs keep their PRE-delete scores
+    until purge (deleted docs still count in N/df — exactly Lucene's
+    deleted-docs staleness);
   * ``purge_deletes`` rewrites the index once (tombstone-filtered merge
     sourced from the index's own segment rows + forward-index rewrite +
     dictionary/stats rebuild), after which scores are EXACTLY a
@@ -84,21 +84,21 @@ def test_delete_filters_all_paths_with_stale_stats(spark, cfg, tmp_path):
             round(s, 9) for _, s in want[:n]
         ], q
 
-    # distributed fan-out agrees with the driver path under tombstones
+    # the block-max walk agrees with the driver path under tombstones
     tomb = tombstone_ids(d)
-    fanned_out = False
+    walked = False
     for q in QUERIES:
         ctr = new_counters()
         dist = search_index(
-            spark, d, q, replace(cfg, max_driver_postings=16),
-            task_groups=4, counters=ctr, tombstones=tomb,
+            d, q, replace(cfg, max_driver_postings=16),
+            counters=ctr, tombstones=tomb,
         )
-        fanned_out |= ctr["path"] == "distributed"
+        walked |= ctr["path"] == "block_max"
         want = e.search(q)
         assert [(x, round(s, 9)) for x, s in dist] == [
             (x, round(s, 9)) for x, s in want
         ], (q, ctr["path"])
-    assert fanned_out, "no query exercised the distributed branch"
+    assert walked, "no query exercised the block-max walk"
 
     assert read_manifest(d, "tombstones")["count"] == len(victims)
     assert segment_generations(d), "generation list must remain committed"

@@ -128,6 +128,17 @@ def test_rank_identity_across_appends_and_compaction(spark, cfg, tmp_path):
     )
     covered = sorted(x for g in gens for x in g["groups"])
     assert covered == [0, 1, 2, 3], covered
+    # the block-max walk over the final generations (a zero budget walks
+    # every query with a posting; the appended generation's light rows
+    # start far from docID 0) gives the driver path's answers
+    e_walk = Engine(spark, inc, replace(ccfg, max_driver_postings=0))
+    paths = []
+    for q in QUERIES:
+        got = e_walk.search(q)
+        assert got == e_inc.search(q), q
+        paths.append(e_walk.last_search_counters["path"])
+        assert paths[-1] == ("block_max" if got else "driver"), q
+    assert "block_max" in paths
 
 
 def test_mixed_light_heavy_across_generations(spark, cfg, tmp_path):
@@ -164,6 +175,14 @@ def test_mixed_light_heavy_across_generations(spark, cfg, tmp_path):
         got, want = _keyed(e1, q), _keyed(e2, q)
         assert [s for _, s in got] == [s for _, s in want], q
         _assert_same_nontied(got, want, q)
+    # the block-max walk over the same generations (a zero budget walks
+    # every query with a posting, mixed-layout terms included) gives the
+    # driver path's answers
+    e3 = Engine(spark, d, replace(cfg, max_driver_postings=0))
+    for q in QUERIES + ["fn the let", {mixed[0]["term"]: 1}]:
+        got = e3.search(q)
+        assert got == e1.search(q), q
+        assert e3.last_search_counters["path"] == ("block_max" if got else "driver"), q
     # the mixed term's light and range rows are cached as one list: a
     # repeated search fetches and decodes nothing
     q = {mixed[0]["term"]: 1}

@@ -75,22 +75,20 @@ def test_wand_rank_identical_to_oracle(spark, index_dir, oracle_inputs, cfg, qid
 
 @pytest.mark.parametrize("qid", sorted(REFERENCE_QUERIES)[:8])
 def test_distributed_branch_rank_identical(
-    spark, index_dir, oracle_inputs, cfg, distributed_cfg, qid
+    spark, index_dir, oracle_inputs, cfg, block_max_cfg, qid
 ):
-    """Force the DISTRIBUTED executor branch (applyInPandas range tasks —
-    a budget one posting short of the query's lists keeps it off the
-    driver path) and demand the same rank identity: the θ-pruned fan-out
-    must be semantics-free."""
+    """Force the block-max walk (a budget one posting short of the
+    query's lists keeps it off the driver path) and demand the same rank
+    identity: θ pruning must be semantics-free."""
     from dawnsearch_spark.operators.wand import new_counters, search_index
 
     tf, stats, dfs = oracle_inputs
     query = REFERENCE_QUERIES[qid]
     ctr = new_counters()
     got = search_index(
-        spark, index_dir, query, distributed_cfg(cfg, index_dir, query),
-        task_groups=4, counters=ctr,
+        index_dir, query, block_max_cfg(cfg, index_dir, query), counters=ctr,
     )
-    assert ctr["path"] == "distributed"
+    assert ctr["path"] == "block_max"
     want = [
         (r["doc_id"], r["score"])
         for r in bm25_exact_topk(tf, dfs, stats, query, cfg).collect()

@@ -213,12 +213,13 @@ def test_engine_method_and_tombstones(spark, phrase_index, cfg, a_phrase, small_
 
 
 def test_driver_paths_launch_no_spark_job(spark, phrase_index, cfg, a_phrase):
-    """Every serving call that takes its driver path reads segments and
-    the forward index with pyarrow only: no Spark job runs under the
-    group."""
+    """Every serving call that takes its driver path, and a search above
+    the driver budget (the block-max walk), reads segments and the
+    forward index with pyarrow only: no Spark job runs under the group."""
     from dawnsearch_spark.operators.phrase_serve import count_matches_index
 
     e = Engine(spark, phrase_index, cfg)  # opening may run schema jobs
+    starved = Engine(spark, phrase_index, replace(cfg, max_driver_postings=16))
     ta, tb = a_phrase.split()
     sc = spark.sparkContext
     group = "driver-path-serving"
@@ -239,6 +240,8 @@ def test_driver_paths_launch_no_spark_job(spark, phrase_index, cfg, a_phrase):
             )
             assert ctr["path"] == "driver"
         assert e.explain(a_phrase, e.search(a_phrase)[0][0])["matched"]
+        assert starved.search(a_phrase)
+        assert starved.last_search_counters["path"] == "block_max"
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         # control: a job in the same group is visible to the tracker
         spark.range(3).count()

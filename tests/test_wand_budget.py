@@ -1,13 +1,13 @@
-"""Driver-postings budget, distributed overflow routing, θ pre-seeding and
-observability counters of the WAND executor (VERDICT r2 items 1/3/4/6).
+"""Driver-postings budget, overflow routing into the block-max walk, θ0
+and observability counters of the WAND executor (VERDICT r2 items
+1/3/4/6).
 
 The invariant under test: no matter how small ``max_driver_postings`` is,
 results stay rank-identical to the exact oracle (overflow light lists are
-range-split on the executors, never decoded on the driver), and the
-counters faithfully report what the engine did. Reference analogs: the
-bounded top-k accumulator (/root/reference/src/search/best_results.rs:28-65)
-and the per-search servers_contacted/pages_searched counters
-(/root/reference/src/search/search_provider.rs:44-59).
+walked block span by block span, never decoded whole on the driver), and
+the counters faithfully report what the engine did. Reference analogs:
+the bounded top-k accumulator (best_results.rs:28-65) and the per-search
+servers_contacted/pages_searched counters (search_provider.rs:44-59).
 """
 
 from __future__ import annotations
@@ -65,22 +65,22 @@ def _assert_rank_identical(got, want, query):
 
 @pytest.mark.parametrize("qid", MULTI_TERM_QUERIES)
 def test_tiny_budget_overflow_rank_identical(spark, index_dir, oracle_inputs, cfg, qid):
-    """A budget far below the lists' sizes forces the overflow split path;
+    """A budget far below the lists' sizes sends the lists to the walk;
     results must not change and the driver must respect the budget."""
     query = REFERENCE_QUERIES[qid]
     tight = replace(cfg, max_driver_postings=16)
     ctr = new_counters()
-    got = search_index(spark, index_dir, query, tight, task_groups=4, counters=ctr)
+    got = search_index(index_dir, query, tight, counters=ctr)
     _assert_rank_identical(got, _oracle(oracle_inputs, cfg, query), query)
-    assert ctr["path"] == "distributed"
-    # budget bounds ALL driver decode: resident lights + θ-seed range
+    assert ctr["path"] == "block_max"
+    # the budget bounds every whole-list decode on the driver
     assert ctr["driver_postings_decoded"] <= 16
 
 
-def test_light_lists_overflow_to_executors(spark, index_dir, oracle_inputs, cfg):
+def test_light_lists_overflow_to_walk(spark, index_dir, oracle_inputs, cfg):
     """Build a query from terms the dictionary says are LIGHT with df above
-    the budget: every one of them must overflow (range-split on the
-    executors), none decoded on the driver — the VERDICT r2 scale choke."""
+    the budget: every one of them must overflow into the block-max walk,
+    none decoded whole on the driver — the VERDICT r2 scale choke."""
     terms_dict = spark.read.parquet(index_dir + "/terms")
     light_terms = [
         r["term"]
@@ -95,13 +95,13 @@ def test_light_lists_overflow_to_executors(spark, index_dir, oracle_inputs, cfg)
     query = {t: 1 for t in light_terms}
     tight = replace(cfg, max_driver_postings=8)
     ctr = new_counters()
-    got = search_index(spark, index_dir, query, tight, task_groups=4, counters=ctr)
-    assert ctr["path"] == "distributed"
+    got = search_index(index_dir, query, tight, counters=ctr)
+    assert ctr["path"] == "block_max"
     assert ctr["light_terms_overflow"] == 3, ctr
     assert ctr["light_terms_driver"] == 0
     assert ctr["driver_postings_decoded"] <= 8
     # identical to the unconstrained engine answer
-    want = search_index(spark, index_dir, query, cfg)
+    want = search_index(index_dir, query, cfg)
     assert [(d, round(s, 9)) for d, s in got] == [(d, round(s, 9)) for d, s in want]
 
 
@@ -110,7 +110,7 @@ def test_zero_budget_everything_distributed(spark, index_dir, oracle_inputs, cfg
     query = REFERENCE_QUERIES[qid]
     zero = replace(cfg, max_driver_postings=0)
     ctr = new_counters()
-    got = search_index(spark, index_dir, query, zero, task_groups=4, counters=ctr)
+    got = search_index(index_dir, query, zero, counters=ctr)
     _assert_rank_identical(got, _oracle(oracle_inputs, cfg, query), query)
     assert ctr["driver_postings_decoded"] == 0
     assert ctr["light_terms_driver"] == 0
@@ -130,11 +130,11 @@ def test_fast_path_within_budget_and_counters(spark, index_dir, cfg):
     assert "last_search" in engine.stats()
 
 
-def test_block_max_pruning_saves_decodes(spark, index_dir, cfg, distributed_cfg):
-    """Distributed branch with θ pre-seed: across the multi-term queries
-    the executor must decode strictly fewer blocks than a full decode of
-    every matching heavy row would (the whole point of block-max WAND +
-    the seeded θ)."""
+def test_block_max_pruning_saves_decodes(spark, index_dir, cfg, block_max_cfg):
+    """Block-max walk seeded with θ0: across the multi-term queries the
+    walk must decode strictly fewer blocks than a full decode of every
+    matching heavy row would (the whole point of block-max WAND + the
+    seeded θ)."""
     seg = spark.read.parquet(index_dir + "/segments")
     saved_somewhere = False
     for qid in MULTI_TERM_QUERIES:
@@ -148,23 +148,22 @@ def test_block_max_pruning_saves_decodes(spark, index_dir, cfg, distributed_cfg)
         )
         ctr = new_counters()
         search_index(
-            spark, index_dir, query, distributed_cfg(cfg, index_dir, query),
-            task_groups=4, counters=ctr,
+            index_dir, query, block_max_cfg(cfg, index_dir, query), counters=ctr,
         )
-        assert ctr["path"] == "distributed"
+        assert ctr["path"] == "block_max"
         assert ctr["blocks_decoded"] <= total_blocks
         if ctr["blocks_decoded"] < total_blocks or ctr["ranges_pruned"] > 0:
             saved_somewhere = True
     assert saved_somewhere, "pruning never skipped a block or range"
 
 
-def test_block_seed_under_starved_budget(spark, index_dir, oracle_inputs, cfg):
-    """When the best range's postings exceed the driver budget (the shape
-    of a 100x index), θ must still be seeded — from the single best block
-    (≤ block_size postings) of the best row — so the fan-out does not
-    start at θ≈0 (VERDICT r4 #3: ranges_pruned was 0 two rounds running).
-    Results stay rank-identical to the oracle; a discriminative
-    rare+stopword query must record actual range pruning."""
+def test_walk_prunes_under_starved_budget(spark, index_dir, oracle_inputs, cfg):
+    """When every range's postings exceed the driver budget (the shape of
+    a 100x index), the walk must still prune: visiting ranges in
+    descending upper-bound order raises θ from the first ranges on
+    (VERDICT r4 #3: ranges_pruned was 0 two rounds running). Results stay
+    rank-identical to the oracle; a discriminative rare+stopword query
+    must record actual range pruning."""
     terms_dict = spark.read.parquet(index_dir + "/terms")
     # rare terms with at least k=5 matching docs so the seeded θ lands on
     # a HIGH (rare-idf) score, tight enough to prune heavy-only ranges
@@ -187,42 +186,43 @@ def test_block_seed_under_starved_budget(spark, index_dir, oracle_inputs, cfg):
         query = {t: 1, heavy2[0]: 1, heavy2[1]: 1}
         tight = replace(cfg, max_driver_postings=16, top_k_internal=5)
         ctr = new_counters()
-        got = search_index(
-            spark, index_dir, query, tight, k=5, task_groups=4, counters=ctr,
-        )
-        assert ctr["path"] == "distributed"
-        assert ctr["theta_seed_mode"] == "block", ctr
-        assert ctr["seed_blocks_decoded"] >= 1
-        assert 0 < ctr["seed_postings_scored"] <= cfg.block_size
-        assert ctr["theta_seed"] > 0.0, ctr
-        want = search_index(spark, index_dir, query, cfg)
+        got = search_index(index_dir, query, tight, k=5, counters=ctr)
+        assert ctr["path"] == "block_max"
+        want = search_index(index_dir, query, cfg)
         assert [(d, round(s, 9)) for d, s in got] == [
             (d, round(s, 9)) for d, s in want[:5]
         ], t
         if ctr["ranges_pruned"] > 0:
             pruned_somewhere = True
-    assert pruned_somewhere, "block-seeded θ never pruned a range"
+    assert pruned_somewhere, "the walk's θ never pruned a range"
 
 
-def test_theta_seed_recorded(spark, index_dir, cfg, distributed_cfg):
-    """The θ pre-seed must be captured and nonzero for a query whose light
-    lists alone fill the top-k (seed = kth best light/seed score)."""
-    query = REFERENCE_QUERIES[21]
+def test_theta_seed_recorded(spark, index_dir, cfg, block_max_cfg):
+    """The walk's θ0 must be captured and nonzero for a query whose light
+    lists alone fill the top-k (θ0 = kth best light score): a light term
+    with at least top_k_internal docs plus the heaviest term."""
+    terms_dict = spark.read.parquet(index_dir + "/terms")
+    light = (
+        terms_dict.filter((~F.col("heavy")) & (F.col("df") >= cfg.top_k_internal))
+        .orderBy("df", "term")
+        .first()
+    )
+    heavy = terms_dict.orderBy(F.desc("df"), F.asc("term")).first()
+    query = {light["term"]: 1, heavy["term"]: 1}
     ctr = new_counters()
     search_index(
-        spark, index_dir, query, distributed_cfg(cfg, index_dir, query),
-        task_groups=4, counters=ctr,
+        index_dir, query, block_max_cfg(cfg, index_dir, query), counters=ctr,
     )
-    assert ctr["path"] == "distributed"
+    assert ctr["path"] == "block_max"
     assert ctr["theta_seed"] > 0.0
 
 
-def test_budget_alone_selects_path(spark, index_dir, oracle_inputs, cfg, distributed_cfg):
+def test_budget_alone_selects_path(spark, index_dir, oracle_inputs, cfg, block_max_cfg):
     """The query's total postings (Σ df over its terms) against
     max_driver_postings alone pick the path, for a heavy + light and a
     light-only query: at Σ df the driver scores every list whole, one
-    posting less sends the query to the distributed branch, and both
-    answers equal each other and the oracle."""
+    posting less sends the query to the block-max walk, and both answers
+    equal each other and the oracle."""
     terms_dict = spark.read.parquet(index_dir + "/terms")
     light = [
         r["term"]
@@ -242,16 +242,16 @@ def test_budget_alone_selects_path(spark, index_dir, oracle_inputs, cfg, distrib
     ]
     assert len(light) == 2 and len(heavy) == 1
     for query in (f"{light[0]} {heavy[0]}", f"{light[0]} {light[1]}"):
-        sigma = distributed_cfg(cfg, index_dir, query).max_driver_postings + 1
+        sigma = block_max_cfg(cfg, index_dir, query).max_driver_postings + 1
         got = {}
-        for budget, path in ((sigma, "driver"), (sigma - 1, "distributed")):
+        for budget, path in ((sigma, "driver"), (sigma - 1, "block_max")):
             ctr = new_counters()
             got[path] = search_index(
-                spark, index_dir, query, replace(cfg, max_driver_postings=budget),
-                task_groups=4, counters=ctr,
+                index_dir, query, replace(cfg, max_driver_postings=budget),
+                counters=ctr,
             )
             assert ctr["path"] == path, (query, ctr)
             if path == "driver":
                 assert ctr["postings_scored"] == sigma, ctr
-        assert got["driver"] == got["distributed"], query
+        assert got["driver"] == got["block_max"], query
         _assert_rank_identical(got["driver"], _oracle(oracle_inputs, cfg, query), query)
