@@ -31,6 +31,9 @@ from dawnsearch_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# detail record, relative to this script; .bench_work/ is git-ignored, so
+# a run leaves the checkout clean
+DETAILS_PATH = os.path.join(".bench_work", "BENCH_DETAILS.json")
 
 
 def _sf_from_dir(d: str) -> float:
@@ -525,9 +528,8 @@ def main() -> None:
     # section inline — outgrew that capture, leaving BENCH_r05.json with
     # parsed=null and no headline at all. So: bulky sections (draws,
     # counter families, append/delete/serving passes) are printed as their
-    # own EARLIER stdout lines and written to BENCH_DETAILS.json beside
-    # this script, and the FINAL line is a compact headline (~1 KB) that
-    # always fits the capture window.
+    # own EARLIER stdout lines and written to DETAILS_PATH, and the FINAL
+    # line is a compact headline (~1 KB) that always fits the capture window.
     headline_extras = {
         k: extras[k]
         for k in (
@@ -545,7 +547,8 @@ def main() -> None:
         print(json.dumps({"detail": name, name: detail[name]}))
     try:
         side = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            "BENCH_DETAILS.json")
+                            DETAILS_PATH)
+        os.makedirs(os.path.dirname(side), exist_ok=True)
         with open(side, "w") as f:
             json.dump({"headline_total_sec": total, "queries": timings,
                        **extras}, f, indent=1, sort_keys=True)
@@ -559,7 +562,7 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         **headline_extras,
-        "details": "BENCH_DETAILS.json",
+        "details": DETAILS_PATH,
     }
     line = json.dumps(final)
     if len(line) > 1800:  # belt-and-braces: never outgrow the capture again

@@ -1,64 +1,54 @@
 """Result hydration: top-k docIDs -> document rows + integrity check.
 
-Reference analogs:
-* point-lookup hydration of each result id from the row store
-  (/root/reference/src/search/search_provider.rs:218-240) — here a
-  broadcast hash join of the tiny top-k set against ``documents`` (J1);
-* per-row integrity verification (full-scan embedding verify at
-  search_provider.rs:289-327) — here the input_hint invariant:
-  sha256(content) must equal the stored content_sha for every hydrated row;
-* serve-time snippet truncation (/root/reference/src/net/web.rs:328).
+Reference analogs: point-lookup hydration of each result id from the row
+store (reference ``src/search/search_provider.rs:218-240``) — here one
+pruned pyarrow read of the forward index (J1, zero Spark jobs); per-row
+integrity verification (search_provider.rs:289-327) — sha256(content) must
+equal the stored content_sha, checked with ``hashlib`` on the k rows here and
+by a Spark scan over the whole corpus in ``verify_corpus``; serve-time snippet
+truncation (reference ``src/net/web.rs:328``).
 """
 
 from __future__ import annotations
 
+import hashlib
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dawnsearch_spark.config import EngineConfig
+from dawnsearch_spark.operators.forward_reader import read_forward_rows
 
 
-def hydrate_topk(
-    topk: DataFrame,
-    documents: DataFrame,
-    cfg: EngineConfig,
-    verify_sha: bool = True,
-    doc_ids: list[int] | None = None,
-) -> DataFrame:
-    """Join (doc_id, score) against documents; returns ranked result rows.
-
-    The top-k side is tiny (k rows) so it is broadcast — the scan side
-    prunes to the joined ids via the broadcast hash join (no shuffle of the
-    documents table). Plan shape matters: the join runs FIRST, and the
-    sha256 + snippet projections are computed on the k joined rows only —
-    projecting below the join would hash/truncate the full corpus per query
-    (full-corpus crypto belongs to ``verify_corpus``, not the search path).
-
-    ``doc_ids`` (the k result ids, when the caller already holds them on
-    the driver) becomes an ``IN`` predicate pushed into the documents scan:
-    the forward index is written as contiguous doc_id ranges, so parquet
-    row-group statistics skip every file/row-group outside the k ids — the
-    reference's per-id point lookup (search_provider.rs:218-240) instead
-    of a full table scan feeding the join.
-    """
-    cols = [c for c in ("repo", "path", "commit", "lang") if c in documents.columns]
-    sel = documents.select(
-        "doc_id",
-        *cols,
-        cfg.content_col,
-        *(["content_sha"] if "content_sha" in documents.columns else []),
+def hydrate_hits(
+    documents_dir: str, hits: list[tuple[int, float]], cfg: EngineConfig
+) -> pa.Table:
+    """Result rows of the (doc_id, score) hits that have a forward row, by
+    score desc, doc_id asc. ``sha_ok`` exists only when ``content_sha`` is
+    stored; it and the snippet are null for null content."""
+    score = {int(d): float(s) for d, s in hits}
+    tbl = read_forward_rows(
+        documents_dir,
+        sorted(score),
+        ["doc_id", "repo", "path", "commit", "lang", cfg.content_col, "content_sha"],
     )
-    if doc_ids is not None:
-        sel = sel.filter(F.col("doc_id").isin([int(d) for d in doc_ids]))
-    out = sel.join(F.broadcast(topk), "doc_id", "inner")
-    if verify_sha and "content_sha" in documents.columns:
-        out = out.withColumn(
-            "sha_ok", F.sha2(F.col(cfg.content_col), 256) == F.col("content_sha")
-        )
-    out = out.withColumn(
-        "snippet", F.substring(F.col(cfg.content_col), 1, cfg.snippet_len)
-    ).drop(cfg.content_col)
-    return out.orderBy(F.desc("score"), F.asc("doc_id"))
+    scores = [score[d] for d in tbl.column("doc_id").to_pylist()]
+    tbl = tbl.append_column("score", pa.array(scores, pa.float64())).sort_by(
+        [("score", "descending"), ("doc_id", "ascending")]
+    )
+    content = tbl.column(cfg.content_col).to_pylist()
+    out = tbl.drop_columns([cfg.content_col])
+    out = out.cast(pa.schema([f.with_nullable(True) for f in out.schema]))  # as Spark reads parquet
+    if "content_sha" in tbl.column_names:
+        ok = [
+            None if c is None or s is None
+            else hashlib.sha256(c.encode("utf-8")).hexdigest() == s
+            for c, s in zip(content, tbl.column("content_sha").to_pylist())
+        ]
+        out = out.append_column("sha_ok", pa.array(ok, pa.bool_()))
+    snippet = [None if c is None else c[: max(cfg.snippet_len, 0)] for c in content]
+    return out.append_column("snippet", pa.array(snippet, pa.string()))
 
 
 def verify_corpus(documents: DataFrame, cfg: EngineConfig) -> dict:

@@ -24,6 +24,8 @@ identical to the batch operator — both answer the same SQL oracle.
 
 from __future__ import annotations
 
+from typing import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -43,6 +45,7 @@ from dawnsearch_spark.operators.boolquery import (
     _near_hits_flat,
     _phrase_hits_flat,
 )
+from dawnsearch_spark.operators.forward_reader import read_forward_rows
 from dawnsearch_spark.operators.wand import (
     _decode_row_docs,
     _term_bucket,
@@ -190,7 +193,7 @@ def count_matches_index(
     query: str,
     cfg: EngineConfig,
     mode: str = "or",
-    seg_df: DataFrame | None = None,
+    segments: Callable[[], DataFrame] | None = None,
     counters: dict | None = None,
     tombstones: np.ndarray | None = None,
 ) -> int:
@@ -229,7 +232,7 @@ def count_matches_index(
 
     # distributed: decode query-term postings in tasks, count in Spark
     ctr["path"] = "distributed"
-    sdf = seg_df if seg_df is not None else read_segments(spark, index_root)
+    sdf = segments() if segments is not None else read_segments(spark, index_root)
     pdocs = _posting_docs(sdf, buckets, terms)
     if tombstones is not None:
         tomb_df = spark.createDataFrame(
@@ -254,12 +257,12 @@ def positional_search_index(
     matcher,
     cfg: EngineConfig,
     k: int | None = None,
-    seg_df: DataFrame | None = None,
+    segments: Callable[[], DataFrame] | None = None,
     stats=None,
     counters: dict | None = None,
     meta_by_term=None,
     tombstones: np.ndarray | None = None,
-    documents: DataFrame | None = None,
+    documents: Callable[[], DataFrame] | None = None,
 ) -> list[tuple[int, int, float]]:
     """Generic positional query over the index: candidates must contain
     every distinct term in ``match_terms``; ``matcher(flat, seg, n_docs)
@@ -321,15 +324,8 @@ def positional_search_index(
             return []
 
     if cand is not None and len(cand) <= cfg.max_driver_phrase_docs:
-        # zero-job adjacency: pyarrow read of the forward index pruned to
-        # the candidate ids (row-group stats skip everything else — the
-        # doc_id-ranged layout makes this the J1 point-lookup shape)
-        import pyarrow.dataset as pds
-
-        tbl = pds.dataset(paths.documents).to_table(
-            columns=["doc_id", content_col],
-            filter=pds.field("doc_id").isin([int(d) for d in cand]),
-        )
+        # zero-job adjacency over the candidates' forward-index rows
+        tbl = read_forward_rows(paths.documents, cand, ["doc_id", content_col])
         flat, seg, dl = tokenize_flat_arrow(tbl.column(content_col))
         ptf = matcher(flat, seg, len(dl))
         out = _score_matches(
@@ -342,11 +338,11 @@ def positional_search_index(
 
     # ---- distributed branch: candidates (or their excess) in Spark ----
     ctr["path"] = "distributed"
-    sdf = seg_df if seg_df is not None else read_segments(spark, index_root)
     docs_rel = (
-        documents if documents is not None else spark.read.parquet(paths.documents)
+        documents() if documents is not None else spark.read.parquet(paths.documents)
     )
     if cand is None:
+        sdf = segments() if segments is not None else read_segments(spark, index_root)
         posting_docs = _posting_docs(sdf, buckets, uniq)
         cand_df = (
             posting_docs.groupBy("doc_id")

@@ -28,7 +28,8 @@ from dawnsearch_spark.index_build import (
     read_segments,
 )
 from dawnsearch_spark.manifest import list_manifests
-from dawnsearch_spark.operators.hydrate import hydrate_topk, verify_corpus
+from dawnsearch_spark.operators.forward_reader import read_forward_rows
+from dawnsearch_spark.operators.hydrate import hydrate_hits, verify_corpus
 from dawnsearch_spark.operators.wand import search_index
 
 
@@ -134,13 +135,8 @@ class Engine:
         self.paths = IndexPaths(index_root)
         self.stats_ = load_stats(index_root)  # raises if index absent
         self.last_search_counters: dict = {}
-        # cached segment relation: avoids per-query file listing + schema
-        # inference (the dominant cost of small queries); reads only the
-        # manifest-listed generation directories
-        self._segments = read_segments(spark, self.paths.root)
-        # eager: file listing + schema read happen at boot (a serving
-        # engine warms its row store once), not inside the first query
-        self._documents: DataFrame | None = spark.read.parquet(self.paths.documents)
+        # Spark relations, built on first use: opening runs no Spark job
+        self._segments = self._documents = None
         # driver-resident term dictionary (metadata only, no blobs): paid
         # once here, it removes the per-query metadata-planning read — a
         # driver-path search then reads only its posting rows, with zero
@@ -256,9 +252,9 @@ class Engine:
     def refresh(self) -> "Engine":
         """Re-sync a live Engine after the index changed on disk (e.g. an
         ``append_documents`` rewrote the segments directory): drops cached
-        file listings and re-reads stats + the segments relation. Without
-        this, a live Engine's queries read dropped files
-        (FileNotFoundException) or serve stale stats.
+        file listings and Spark relations (rebuilt on next use) and
+        re-reads stats. Without this, a live Engine's queries read dropped
+        files (FileNotFoundException) or serve stale stats.
 
         The driver term dictionary refreshes INCREMENTALLY after a plain
         append: committed generations are immutable, so only the new
@@ -270,8 +266,7 @@ class Engine:
         self.spark.catalog.refreshByPath(self.paths.segments)
         self.spark.catalog.refreshByPath(self.paths.documents)
         self.stats_ = load_stats(self.paths.root)
-        self._segments = read_segments(self.spark, self.paths.root)
-        self._documents = None
+        self._segments = self._documents = None
         self._meta_by_term = self._load_meta(self._meta_by_term, self._meta_gens)
         if self.last_meta_load.get("mode") != "incremental":
             # full reload (compaction / dict overflow): the generation
@@ -282,7 +277,14 @@ class Engine:
         self._tombstones = self._load_tombstones()
         return self
 
+    def segments(self) -> DataFrame:
+        """Spark relation over the segment generations, built on first use."""
+        if self._segments is None:
+            self._segments = read_segments(self.spark, self.paths.root)
+        return self._segments
+
     def documents(self) -> DataFrame:
+        """Spark relation over the forward index, built on first use."""
         if self._documents is None:
             self._documents = self.spark.read.parquet(self.paths.documents)
         return self._documents
@@ -334,12 +336,12 @@ class Engine:
             phrase,
             self.cfg,
             k=k,
-            seg_df=self._segments,
+            segments=self.segments,
             stats=self.stats_,
             counters=self.last_search_counters,
             meta_by_term=self._meta_by_term,
             tombstones=self._tombstones,
-            documents=self._documents,
+            documents=self.documents,
         )
 
     def search_near(
@@ -363,12 +365,12 @@ class Engine:
             window,
             self.cfg,
             k=k,
-            seg_df=self._segments,
+            segments=self.segments,
             stats=self.stats_,
             counters=self.last_search_counters,
             meta_by_term=self._meta_by_term,
             tombstones=self._tombstones,
-            documents=self._documents,
+            documents=self.documents,
         )
 
     def count(self, query: str, mode: str = "or") -> int:
@@ -383,7 +385,7 @@ class Engine:
             query,
             self.cfg,
             mode=mode,
-            seg_df=self._segments,
+            segments=self.segments,
             tombstones=self._tombstones,
         )
 
@@ -574,37 +576,27 @@ class Engine:
         return out
 
     def search_df(self, query: str | dict[str, float], k: int | None = None) -> DataFrame:
-        """Hydrated ranked results (J1 broadcast join + sha verification +
-        snippet truncation, reference E1 steps 5-6)."""
+        """Hydrated ranked results (reference E1 steps 5-6): ``hydrate_hits``'
+        k rows as a local relation, which collects without a Spark job (above
+        ``spark.sql.execution.arrow.localRelationThreshold`` Spark makes it an
+        RDD instead: one job, the same rows)."""
         hits = self.search(query, k=k)
-        topk = self.spark.createDataFrame(
-            [(int(d), float(s)) for d, s in hits] or [], "doc_id long, score double"
-        )
-        # the k result ids are pushed into the documents scan (row-group
-        # pruning over the doc_id-ranged forward index — J1 point lookups)
-        return hydrate_topk(
-            topk, self.documents(), self.cfg, doc_ids=[d for d, _ in hits]
-        )
+        return self.spark.createDataFrame(hydrate_hits(self.paths.documents, hits, self.cfg))
 
     def more_like(self, doc_id: int, top_m: int = 10, k: int | None = None):
         """E2: use a stored document's term bag as the query
         (reference: embedding_for_page -> re-enter search,
-        /root/reference/src/search/search_service.rs:105-124)."""
-        if self._tombstones is not None:
-            import numpy as np
+        reference ``src/search/search_service.rs:105-124``). The source row
+        is one pyarrow forward-index read: no Spark job."""
+        import numpy as np
 
-            i = int(np.searchsorted(self._tombstones, doc_id))
-            if i < len(self._tombstones) and int(self._tombstones[i]) == doc_id:
-                return []  # deleted docs are unreachable, like search
-        row = (
-            self.documents()
-            .filter(F.col("doc_id") == doc_id)
-            .select(self.cfg.content_col)
-            .collect()
-        )
-        if not row:
-            return []
-        bag = Counter(tokenize_py(row[0][0]))
+        from dawnsearch_spark.operators.phrase_serve import _drop_tombstoned
+
+        live = _drop_tombstoned(np.asarray([doc_id], np.int64), self._tombstones)
+        row = read_forward_rows(self.paths.documents, live, [self.cfg.content_col])
+        if not row.num_rows:
+            return []  # deleted and unknown docs are unreachable, like search
+        bag = Counter(tokenize_py(row.column(0)[0].as_py()))
         top_terms = sorted(bag.items(), key=lambda kv: (-kv[1], kv[0]))[:top_m]
         return self.search(dict(top_terms), k=k)
 

@@ -54,3 +54,46 @@ def block_max_cfg():
         return replace(cfg, max_driver_postings=total - 1)
 
     return f
+
+
+def hydrate_topk(topk, documents, cfg, doc_ids=None):
+    """Reference hydration, all in Spark: (doc_id, score) rows joined onto
+    the documents relation, sha256 and snippet from Spark's ``sha2`` and
+    ``substring``, ranked by score desc, doc_id asc. ``Engine.search_df``
+    must return exactly these rows, in this order, with this schema."""
+    from pyspark.sql import functions as F
+
+    cols = [c for c in ("repo", "path", "commit", "lang") if c in documents.columns]
+    sel = documents.select(
+        "doc_id",
+        *cols,
+        cfg.content_col,
+        *(["content_sha"] if "content_sha" in documents.columns else []),
+    )
+    if doc_ids is not None:
+        sel = sel.filter(F.col("doc_id").isin([int(d) for d in doc_ids]))
+    out = sel.join(F.broadcast(topk), "doc_id", "inner")
+    if "content_sha" in documents.columns:
+        out = out.withColumn(
+            "sha_ok", F.sha2(F.col(cfg.content_col), 256) == F.col("content_sha")
+        )
+    out = out.withColumn(
+        "snippet", F.substring(F.col(cfg.content_col), 1, cfg.snippet_len)
+    ).drop(cfg.content_col)
+    return out.orderBy(F.desc("score"), F.asc("doc_id"))
+
+
+def search_df_rows(engine, query) -> list:
+    """``engine.search_df(query)`` collected, after asserting that its rows,
+    their order and its schema equal the reference join's over the same
+    hits and the engine's documents relation."""
+    df = engine.search_df(query)
+    hits = engine.search(query)
+    topk = engine.spark.createDataFrame(
+        [(int(d), float(s)) for d, s in hits] or [], "doc_id long, score double"
+    )
+    ref = hydrate_topk(topk, engine.documents(), engine.cfg, [d for d, _ in hits])
+    assert df.schema == ref.schema, (df.schema, ref.schema)
+    rows = df.collect()
+    assert [r.asDict() for r in rows] == [r.asDict() for r in ref.collect()], query
+    return rows

@@ -37,6 +37,7 @@ from dawnsearch_spark.streaming.incremental import (
     purge_deletes,
     tombstone_ids,
 )
+from conftest import search_df_rows
 
 QUERIES = ["parse http request", "struct net bind listen", "fn the let"]
 
@@ -48,7 +49,7 @@ def _corpus(spark, n=300, seed=21, start=0):
 
 
 def _keyed(engine: Engine, q: str):
-    rows = engine.search_df(q).select("repo", "path", "commit", "score").collect()
+    rows = search_df_rows(engine, q)
     return [((r["repo"], r["path"], r["commit"]), round(r["score"], 9)) for r in rows]
 
 

@@ -34,6 +34,7 @@ from dawnsearch_spark.index_build import (
 from dawnsearch_spark.manifest import MANIFEST_DIR
 from dawnsearch_spark.plans.query import Engine
 from dawnsearch_spark.streaming.incremental import append_documents
+from conftest import search_df_rows
 
 QUERIES = ["parse http request", "struct net bind listen", "fn the let"]
 
@@ -169,7 +170,7 @@ def _terms(spark, root: str) -> list[tuple]:
 
 
 def _keyed(engine: Engine, q: str) -> list[tuple]:
-    rows = engine.search_df(q).select("repo", "path", "commit", "score").collect()
+    rows = search_df_rows(engine, q)
     return [((r["repo"], r["path"], r["commit"]), round(r["score"], 9)) for r in rows]
 
 

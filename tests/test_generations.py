@@ -26,6 +26,7 @@ from dawnsearch_spark.index_build import (
 from dawnsearch_spark.manifest import dir_bytes
 from dawnsearch_spark.plans.query import Engine
 from dawnsearch_spark.streaming.incremental import append_documents
+from conftest import search_df_rows
 
 QUERIES = ["parse http request", "async await", "struct net bind listen"]
 
@@ -35,7 +36,7 @@ def _keyed(engine: Engine, q: str) -> list[tuple[tuple, float]]:
     between appended and fresh builds (appends number new docs at the end,
     reference rowid semantics), so identity + exact score vector is the
     rank-identity contract (same convention as test_incremental)."""
-    rows = engine.search_df(q).select("repo", "path", "commit", "score").collect()
+    rows = search_df_rows(engine, q)
     return [((r["repo"], r["path"], r["commit"]), round(r["score"], 9)) for r in rows]
 
 

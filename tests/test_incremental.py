@@ -12,6 +12,7 @@ from dawnsearch_spark.index_build import build_index, load_stats
 from dawnsearch_spark.manifest import list_manifests
 from dawnsearch_spark.plans.query import Engine
 from dawnsearch_spark.streaming.incremental import append_documents, stream_into_index
+from conftest import search_df_rows
 
 QUERIES = ["def import", "parse http request", "getValue", "store commit repo"]
 
@@ -44,7 +45,7 @@ def test_append_matches_fresh_build(spark, cfg, corpora, tmp_path):
         """[(identity_key, rounded_score)] — docIDs differ by construction:
         appends number new docs at the end (reference rowid semantics) while
         a fresh build interleaves, so ties can resolve to different docs."""
-        rows = engine.search_df(q).select("repo", "path", "commit", "score").collect()
+        rows = search_df_rows(engine, q)
         return [((r["repo"], r["path"], r["commit"]), round(r["score"], 9)) for r in rows]
 
     for q in QUERIES:

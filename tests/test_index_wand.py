@@ -5,6 +5,7 @@ resume and skew-path correctness (SURVEY.md §5)."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +21,7 @@ from dawnsearch_spark.operators.tf import (
     term_frequencies,
 )
 from dawnsearch_spark.plans.query import Engine
+from conftest import search_df_rows
 
 
 @pytest.fixture(scope="module")
@@ -105,8 +107,48 @@ def test_wand_weighted_bag_and_more_like(spark, index_dir, cfg):
     # BM25 length normalization can rank a shorter doc above the source doc
     # for a 10-term bag, but the source doc must appear in its own top-k.
     assert 5 in [d for d, _ in res], "source doc appears in its own more-like results"
-    hydrated = engine.search_df("parse http request").collect()
-    assert all(r["sha_ok"] for r in hydrated)
+    hydrated = search_df_rows(engine, "parse http request")
+    assert hydrated and all(r["sha_ok"] for r in hydrated)
+
+
+def test_search_df_flags_tampered_content(spark, index_dir, cfg, tmp_path):
+    """One changed content byte in the forward index, its stored
+    content_sha kept, gives sha_ok == False for that hit only."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "idx")
+    shutil.copytree(index_dir, root)
+    q = "parse http request"
+    victim = Engine(spark, root, cfg).search(q)[0][0]
+    for frag in ds.dataset(os.path.join(root, "documents"), format="parquet").get_fragments():
+        tbl = frag.to_table()
+        ids = tbl.column("doc_id").to_pylist()
+        if victim not in ids:
+            continue
+        content = tbl.column("content").to_pylist()
+        i = ids.index(victim)
+        content[i] = ("#" if content[i][0] != "#" else "%") + content[i][1:]
+        j = tbl.schema.get_field_index("content")
+        field = tbl.schema.field(j)
+        tbl = tbl.set_column(j, field, pa.array(content, field.type))
+        pq.write_table(tbl, frag.path)
+        # Spark's local reads check the Hadoop checksum sidecar
+        d, name = os.path.split(frag.path)
+        os.remove(os.path.join(d, f".{name}.crc"))
+    e = Engine(spark, root, cfg)
+    rows = search_df_rows(e, q)
+    assert {r["doc_id"]: r["sha_ok"] for r in rows} == {d: d != victim for d, _ in e.search(q)}
+    assert e.verify()["sha_mismatch"] == 1
+
+
+def test_search_df_empty_result_has_reference_schema(spark, index_dir, cfg):
+    """A query with no hits gives an empty frame whose schema is the
+    reference join's (``search_df_rows`` asserts the schema)."""
+    assert search_df_rows(Engine(spark, index_dir, cfg), "zzzqqqxnotaterm") == []
 
 
 def test_resume_skips_committed_groups(spark, small_corpus, cfg, tmp_path):

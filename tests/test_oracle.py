@@ -10,7 +10,7 @@ import pytest
 
 from dawnsearch_spark.config import EngineConfig
 from dawnsearch_spark.functions.tokenizer import tokenize_py
-from dawnsearch_spark.operators.hydrate import hydrate_topk, verify_corpus
+from dawnsearch_spark.operators.hydrate import verify_corpus
 from dawnsearch_spark.operators.oracle import bm25_exact_topk
 from dawnsearch_spark.operators.tf import (
     corpus_stats,
@@ -18,6 +18,7 @@ from dawnsearch_spark.operators.tf import (
     document_frequencies,
     term_frequencies,
 )
+from conftest import hydrate_topk
 
 DOCS = [
     "def load_config(path): return parse(path)",

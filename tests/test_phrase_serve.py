@@ -213,18 +213,19 @@ def test_engine_method_and_tombstones(spark, phrase_index, cfg, a_phrase, small_
 
 
 def test_driver_paths_launch_no_spark_job(spark, phrase_index, cfg, a_phrase):
-    """Every serving call that takes its driver path, and a search above
-    the driver budget (the block-max walk), reads segments and the
-    forward index with pyarrow only: no Spark job runs under the group."""
+    """Opening and refreshing an Engine, every serving call that takes its
+    driver path, a search above the driver budget (the block-max walk),
+    hydration and more-like read segments and the forward index with
+    pyarrow only: no Spark job runs under the group."""
     from dawnsearch_spark.operators.phrase_serve import count_matches_index
 
-    e = Engine(spark, phrase_index, cfg)  # opening may run schema jobs
-    starved = Engine(spark, phrase_index, replace(cfg, max_driver_postings=16))
     ta, tb = a_phrase.split()
     sc = spark.sparkContext
     group = "driver-path-serving"
     sc.setJobGroup(group, "driver-path serving must launch no job")
     try:
+        e = Engine(spark, phrase_index, cfg).refresh()
+        starved = Engine(spark, phrase_index, replace(cfg, max_driver_postings=16))
         assert e.search(a_phrase)
         assert e.last_search_counters["path"] == "driver"
         assert e.search_phrase(a_phrase)
@@ -242,6 +243,9 @@ def test_driver_paths_launch_no_spark_job(spark, phrase_index, cfg, a_phrase):
         assert e.explain(a_phrase, e.search(a_phrase)[0][0])["matched"]
         assert starved.search(a_phrase)
         assert starved.last_search_counters["path"] == "block_max"
+        rows = e.search_df(a_phrase).collect()
+        assert rows and all(r["sha_ok"] for r in rows)
+        assert e.more_like(rows[0]["doc_id"])
         assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
         # control: a job in the same group is visible to the tracker
         spark.range(3).count()

@@ -67,22 +67,6 @@ def test_relational_path_stays_in_codegen(spark):
     assert re.search(r"\*\(\d+\) Filter", plan), plan[:400]
 
 
-def test_hydration_computes_sha_above_the_join(spark, small_corpus, cfg):
-    """Round-1 regression guard: sha256+snippet must sit ABOVE the
-    broadcast join (computed on k rows), never below it (full-corpus
-    crypto per query). executedPlan prints top-down, so 'above' means an
-    earlier offset in the plan string."""
-    from dawnsearch_spark.operators.hydrate import hydrate_topk
-
-    topk = small_corpus.sparkSession.createDataFrame(
-        [(1, 1.0), (2, 0.5)], "doc_id long, score double"
-    )
-    plan = _plan(hydrate_topk(topk, small_corpus, cfg))
-    assert "BroadcastHashJoin" in plan
-    assert "sha2" in plan
-    assert plan.index("sha2") < plan.index("BroadcastHashJoin")
-
-
 def test_events_window_single_shuffle(spark):
     """row_number over (user_id) must shuffle once on user_id, not sort
     globally (no single-partition Exchange)."""
@@ -106,22 +90,6 @@ def test_contamination_broadcasts_benchmark_not_corpus(spark):
     # the benchmark shingle set broadcasts; the corpus is never exchanged
     # for the probe join
     assert "BroadcastHashJoin" in plan and "BroadcastExchange" in plan
-
-
-def test_hydration_pushes_result_ids_into_the_scan(spark, cfg):
-    from dawnsearch_spark.operators.hydrate import hydrate_topk
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").withColumnRenamed(
-        "text", "content"
-    )
-    topk = spark.createDataFrame(
-        [(3, 1.5), (7, 1.2)], "doc_id long, score double"
-    )
-    plan = _plan(hydrate_topk(topk, docs, cfg, doc_ids=[3, 7]))
-    # the k ids reach the documents scan as a pushed In filter
-    # (row-group pruning over the doc_id-ranged forward index)
-    pushed = plan.split("PushedFilters")[1][:300] if "PushedFilters" in plan else ""
-    assert "In(doc_id" in pushed or "EqualTo(doc_id" in pushed, plan[:1500]
 
 
 def test_term_meta_columnar_memory_bound(spark, small_corpus, cfg, tmp_path):

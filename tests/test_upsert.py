@@ -33,6 +33,7 @@ from dawnsearch_spark.streaming.incremental import (
     tombstone_ids,
     upsert_documents,
 )
+from conftest import search_df_rows
 
 QUERIES = ["parse http request", "struct net bind listen", "fn the let"]
 
@@ -63,7 +64,7 @@ def _new_versions(spark, docs_df, pred, marker="refreshed revision marker"):
 
 
 def _keyed(engine: Engine, q: str):
-    rows = engine.search_df(q).select("repo", "path", "commit", "score").collect()
+    rows = search_df_rows(engine, q)
     return [((r["repo"], r["path"], r["commit"]), round(r["score"], 9)) for r in rows]
 
 
