@@ -363,16 +363,16 @@ def main() -> None:
         # ---- append + compaction pass (VERDICT r4 #4): tiered
         # generations at bench scale. 3 appends of 5% each onto the
         # full index with max_segment_generations=3 so the LAST append
-        # triggers a size-tiered compaction; gc_runs exercises the
-        # segment-sourced compaction path and reclaims runs/. Evidence
-        # recorded per append: wall time, bytes written for the new
-        # generation vs total index bytes (the O(batch)-not-O(index)
-        # claim), live generation count, runs-dir size after GC.
+        # triggers a size-tiered compaction, which reads the taken
+        # generations' segment rows (every build sweeps merged run dirs).
+        # Evidence recorded per append: wall time, bytes written for the
+        # new generation vs total index bytes (the O(batch)-not-O(index)
+        # claim), live generation count, runs-dir size after the sweep.
         from dawnsearch_spark.index_build import IndexPaths, segment_generations
         from dawnsearch_spark.manifest import dir_bytes
         from dawnsearch_spark.streaming.incremental import append_documents
 
-        acfg = _replace(cfg, max_segment_generations=3, gc_runs=True)
+        acfg = _replace(cfg, max_segment_generations=3)
         paths = IndexPaths(idx_dir)
         batch = max(200, n_docs // 20)
         appends = []

@@ -114,15 +114,7 @@ class EngineConfig:
     id_cols: tuple[str, ...] = ("repo", "path", "commit")
     content_col: str = "content"
 
-    # Delete run-group directories once their postings are recoverable
-    # from the index itself (group folded into the committed dictionary
-    # AND merged into a committed generation). Compaction and the stage-1b
-    # dictionary fallback re-read segment rows when runs are gone, so
-    # nothing downstream needs them — retaining runs/ forever costs a
-    # second copy of the index (~2x storage at 100 TB). Off by default:
-    # retained runs let a fingerprint-change rebuild skip stage 2.
-    # Deliberately NOT part of the config fingerprint (storage policy,
-    # not index layout).
+    # Ignored: every build sweeps merged run dirs (goes with perfbench's gc_runs=True).
     gc_runs: bool = False
 
     # --- misc ---

@@ -12,14 +12,11 @@ tokenizer becomes a deterministic code-aware splitter:
   4. lowercase
   5. split on whitespace, drop empties
 
-Four equivalent implementations are provided and tested for equality:
+Three equivalent implementations are provided and tested for equality:
 
 * ``tokens_col``          — native Spark Column expressions (one fused
                             regex split), fully JVM-side + whole-stage
                             codegen: the hot path for index builds.
-* ``tokenize_pandas``     — vectorized pandas (``pd.Series.str`` ops, no
-                            per-row Python) returning per-row token lists;
-                            used inside mapInPandas operators.
 * ``tokenize_flat_arrow`` — pyarrow compute (RE2 + C++ kernels) returning
                             ONE flat token stream plus per-row offsets;
                             the positional matchers' and phrase serving's
@@ -69,27 +66,15 @@ def tokens_col(col: Column | str) -> Column:
     return F.filter(F.transform(arr, F.lower), lambda x: x != F.lit(""))
 
 
-def tokenize_pandas(s: pd.Series) -> pd.Series:
-    """Vectorized pandas twin of ``tokens_col`` (Series[str] -> Series[list[str]]).
-
-    One fused boundary-substitution pass (the same zero-width-lookaround
-    pattern the JVM path splits on) instead of three chained rewrites —
-    each ``str.replace`` copies every string, and the tokenizer is the
-    dominant CPU of every corpus-pass operator."""
-    c = s.fillna("")
-    c = c.str.replace(BOUNDARY_PAT, " ", regex=True)
-    return c.str.lower().str.split()
-
-
 def tokenize_flat_arrow(texts) -> tuple:
     """(flat_tokens, seg, dl) via pyarrow compute (RE2 + C++ kernels).
 
-    The flat twin of ``tokenize_pandas`` for consumers that want ONE
-    concatenated token stream instead of per-row lists: ``flat_tokens``
+    The vectorized twin of ``tokens_col`` for Arrow/pandas batches, as
+    ONE concatenated token stream instead of per-row lists: ``flat_tokens``
     is a pyarrow StringArray of every token in document order, ``seg``
     maps each token to its row ordinal, ``dl`` is per-row token counts.
-    ~2.5x faster than the pandas object-dtype path on this host (the
-    corpus tokenize is the dominant CPU of every positional/TF pass), and
+    C++ kernels instead of pandas object-dtype ``str`` ops (the corpus
+    tokenize is the dominant CPU of every positional/TF pass), and
     token-identical: the two camel/acronym substitutions plus the
     non-word split are the same rules, RE2 and Python ``re`` agree on
     these ASCII patterns, and empty fragments are dropped exactly like

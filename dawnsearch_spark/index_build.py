@@ -28,12 +28,15 @@ Scale notes (100 TB thinking):
   ``DRIVER_DICT_MAX_ROWS`` metadata rows, in Spark above. Stage 3 merges
   every bucket with one kernel (:func:`_merge_bucket`): on driver threads
   at or under ``DRIVER_MERGE_MAX_POSTINGS`` input postings, as one Spark
-  task per bucket above it. Segment-sourced inputs (purge, compaction
-  after ``gc_runs``) are already bucketed on disk, so their tasks need no
-  exchange; runs-sourced inputs (first build, large append) reach their
-  bucket's task through one exchange keyed by ``bucket``. Stage-2 runs
-  are salt-free: the kernel alone decides each term's layout from the
-  exact dictionary;
+  task per bucket above it. Segment-sourced inputs (compaction, purge)
+  are already bucketed on disk, so their tasks need no exchange;
+  runs-sourced inputs (first build, append) reach their bucket's task
+  through one exchange keyed by ``bucket``. The kernel alone decides
+  each term's layout, from the exact dictionary;
+* runs are transient: a group's run dir is read once, by the merge that
+  first commits the group, and every build sweeps the run dirs of
+  merged, folded groups (:func:`gc_run_dirs`). Only the ``runs_group_*``
+  manifests stay; they drive resume;
 * index roots are local paths (:class:`IndexPaths` rejects URIs), since
   manifests commit through ``os``.
 """
@@ -234,13 +237,13 @@ def _pa_count_max(path: str, col: str) -> tuple[int, int | None] | None:
 def gc_run_dirs(root: str, log=lambda m: None) -> list[int]:
     """Delete run-group directories whose postings are fully recoverable
     from the index itself: the group is folded into the committed term
-    dictionary AND merged into a committed segment generation. Compaction
-    and the stage-1b dictionary fallback source from segment rows when a
-    run dir is gone, so runs/ stops being load-bearing the moment its
-    groups are merged — retaining it forever doubles index storage
-    (the 100-TB cost-of-ownership flaw, VERDICT r4 #1). The runs_group_*
-    manifests are KEPT: they drive the resume plan (committed spans).
-    Returns the swept group ids."""
+    dictionary AND merged into a committed segment generation. Nothing
+    reads such a dir again (compaction, purge and the stage-1b rebuild
+    read committed generations' segment rows), so every build calls this
+    after its last segments commit; a crash before the sweep leaves dirs
+    that the next build sweeps. The runs_group_* manifests are KEPT: they
+    drive the resume plan (committed spans). Returns the swept group
+    ids."""
     import shutil
 
     paths = IndexPaths(root)
@@ -262,7 +265,7 @@ def gc_run_dirs(root: str, log=lambda m: None) -> list[int]:
                 shutil.rmtree(os.path.join(paths.runs, d), ignore_errors=True)
                 swept.append(int(d.split("=", 1)[1]))
     if swept:
-        log(f"gc_runs: reclaimed run dirs for groups {swept}")
+        log(f"stage3 swept run dirs of merged groups {swept}")
     return swept
 
 
@@ -288,7 +291,7 @@ DRIVER_MERGE_MAX_POSTINGS = int(
 #: the one file each merged ``gen=K/bucket=B`` directory holds
 BUCKET_FILE = "part-00000.parquet"
 
-_MERGE_IN_COLS = ["n_docs", "doc_blob", "tf_blob", "dl_blob"]
+_MERGE_IN_COLS = ["term", "n_docs", "doc_blob", "tf_blob", "dl_blob"]
 
 
 def _heavy_terms(paths: IndexPaths) -> frozenset:
@@ -304,20 +307,16 @@ def _heavy_terms(paths: IndexPaths) -> frozenset:
     return frozenset(td.column("term").to_pylist())
 
 
-def _merge_bucket(rows, salt_col: str | None, heavy, tomb, cfg: EngineConfig,
-                  bucket_dir: str) -> tuple[int, int]:
+def _merge_bucket(rows, heavy, tomb, cfg: EngineConfig, bucket_dir: str) -> tuple[int, int]:
     """THE merge kernel: merge, pack and write one term bucket.
 
-    ``rows`` is a pyarrow table of run-shaped rows of ONE bucket — posting
-    runs (``salt_col=None``: runs are salt-free, and a ``salt`` column
-    left by older runs is ignored, since a term's run rows hold disjoint
-    docs whatever their salt) or segment rows reinterpreted as runs
-    (``salt_col="range_id"``: a segment row's blobs are valid run blobs).
-    Keys never span buckets (bucket = crc32(term)), so a bucket merges on
-    its own. Split set = dictionary-heavy terms, plus (segment rows only)
-    terms an input generation already holds range-split: within one
-    generation a term is served either as one light row or as range rows,
-    never both. Output: ``bucket_dir/part-00000``
+    ``rows`` is a pyarrow table of run-shaped rows of ONE bucket: posting
+    runs, or segment rows of either layout (a segment row's blobs are
+    valid run blobs, and its ``range_id`` is not read). Keys never span
+    buckets (bucket = crc32(term)), so a bucket merges on its own. The
+    dictionary alone decides each term's layout: ``heavy`` terms come out
+    range-split, every other term as one light row, whatever layout its
+    input rows had. Output: ``bucket_dir/part-00000``
     sorted by (term, range_id), ~1 MB row groups (parquet footers become
     the term directory pages the serving reads prune by). Returns
     (rows, postings) written; an empty result writes nothing."""
@@ -334,22 +333,14 @@ def _merge_bucket(rows, salt_col: str | None, heavy, tomb, cfg: EngineConfig,
 
     if not rows.num_rows:
         return 0, 0
-    terms = rows.column("term").to_numpy(zero_copy_only=False)
-    if salt_col is None:
-        salts = np.full(len(terms), -1, np.int64)
-        salted = None
-    else:
-        salts = rows.column(salt_col).to_numpy(zero_copy_only=False).astype(np.int64)
-        salted = {t for t, s in zip(terms, salts) if s >= 0}
     cols = merge_rows_columnar(
-        terms,
-        salts,
+        rows.column("term").to_numpy(zero_copy_only=False),
         rows.column("n_docs").to_numpy(zero_copy_only=False).astype(np.int64),
         rows.column("doc_blob").to_pylist(),
         rows.column("tf_blob").to_pylist(),
         rows.column("dl_blob").to_pylist(),
         cfg,
-        split_terms=heavy | salted if salted else heavy,
+        split_terms=heavy,
         tomb=tomb,
     )
     out = pd.DataFrame(segment_columns_to_rows(cols))
@@ -400,33 +391,28 @@ def _generation_files(paths: IndexPaths, gens: list[dict]) -> list[str]:
 
 def _merge_source(
     paths: IndexPaths, group_ids: list[int], source_gens: list[dict] | None
-) -> tuple[str | None, list[str]]:
-    """(salt column, input files) of a merge. Runs-sourced (salt column
-    None: runs are salt-free) while every group's run dir exists;
-    otherwise (compaction / purge after
-    ``gc_runs``) the source generations' segment files, which must cover
-    exactly the requested groups."""
-    gdirs = [os.path.join(paths.runs, f"group={g}") for g in group_ids]
-    if source_gens is None or all(os.path.isdir(d) for d in gdirs):
-        missing = [g for g, d in zip(group_ids, gdirs) if not os.path.isdir(d)]
+) -> list[str]:
+    """Input files of a merge, chosen by its caller: a first merge of
+    uncommitted groups (``source_gens`` None) reads their run dirs; a
+    compaction or purge reads the source generations' segment files,
+    which must cover exactly the requested groups, and never a run dir
+    (not even one a crash left before its sweep)."""
+    if source_gens is None:
+        gdirs = {g: os.path.join(paths.runs, f"group={g}") for g in group_ids}
+        missing = [g for g, d in gdirs.items() if not os.path.isdir(d)]
         if missing:
             raise FileNotFoundError(f"merge: run groups {missing} have no run dir")
-        return None, [f for d in gdirs for f in _pa_files(d)]
+        return [f for d in gdirs.values() for f in _pa_files(d)]
     src_groups = sorted(int(x) for g in source_gens for x in g["groups"])
     if src_groups != sorted(int(g) for g in group_ids):
         raise RuntimeError(
-            f"segment-sourced merge needs generations covering exactly "
-            f"the requested groups (gens cover {src_groups}, "
-            f"requested {sorted(group_ids)})"
+            f"segment-sourced merge needs generations covering exactly the requested "
+            f"groups (gens cover {src_groups}, requested {sorted(group_ids)})"
         )
-    return "range_id", _generation_files(paths, source_gens)
+    return _generation_files(paths, source_gens)
 
 
-def _merge_in_cols(salt_col: str | None) -> list[str]:
-    return ["term"] + ([salt_col] if salt_col else []) + _MERGE_IN_COLS
-
-
-def _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir) -> dict[int, tuple[int, int]]:
+def _merge_on_driver(cfg, files, heavy, tomb, gdir) -> dict[int, tuple[int, int]]:
     """Driver placement: one pyarrow read, split by bucket, the kernel on a
     small thread pool (its NumPy passes release the GIL)."""
     from concurrent.futures import ThreadPoolExecutor
@@ -435,7 +421,7 @@ def _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir) -> dict[int, tuple
 
     from dawnsearch_spark.operators.merge import term_bucket_py
 
-    tbl = _pa_read(files, columns=_merge_in_cols(salt_col))
+    tbl = _pa_read(files, columns=_MERGE_IN_COLS)
     uterms, tinv = np.unique(
         tbl.column("term").to_numpy(zero_copy_only=False), return_inverse=True
     )
@@ -451,9 +437,7 @@ def _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir) -> dict[int, tuple
 
     def one(b: int) -> tuple[int, tuple[int, int]]:
         rows = tbl.take(np.flatnonzero(row_bucket == b))
-        return b, _merge_bucket(
-            rows, salt_col, heavy, tomb, cfg, os.path.join(gdir, f"bucket={b}")
-        )
+        return b, _merge_bucket(rows, heavy, tomb, cfg, os.path.join(gdir, f"bucket={b}"))
 
     with ThreadPoolExecutor(max_workers=min(8, len(present))) as pool:
         return dict(pool.map(one, present))
@@ -482,13 +466,12 @@ def _exchanged_buckets(batches):
         yield cur, pa.Table.from_batches(parts)
 
 
-def _merge_in_tasks(spark, cfg, files, salt_col, heavy, tomb, gdir) -> dict[int, tuple[int, int]]:
+def _merge_in_tasks(spark, cfg, files, from_runs, heavy, tomb, gdir) -> dict[int, tuple[int, int]]:
     """Task placement: the kernel runs once per bucket inside Spark tasks.
 
-    * Segment-sourced (purge, compaction after ``gc_runs``): one task per
-      bucket reads that bucket's files. No exchange — every row of a
-      (term, range), in every generation, already lives under the same
-      ``bucket=B`` directories.
+    * Segment-sourced (compaction, purge): one task per bucket reads that
+      bucket's files. No exchange — every row of a term, in every
+      generation, already lives under the same ``bucket=B`` directories.
     * Runs-sourced (first build, large append): run files are not
       bucketed, so Spark reads them, adds ``bucket`` (= ``term_bucket_py``)
       and exchanges once by it; each task streams its partition sorted by
@@ -499,8 +482,8 @@ def _merge_in_tasks(spark, cfg, files, salt_col, heavy, tomb, gdir) -> dict[int,
     import pyarrow as pa
 
     n_b = cfg.num_term_buckets
-    cols = _merge_in_cols(salt_col)
-    if salt_col is None:
+    cols = _MERGE_IN_COLS
+    if from_runs:
         if not files:
             return {}
         by_bucket = None
@@ -529,7 +512,7 @@ def _merge_in_tasks(spark, cfg, files, salt_col, heavy, tomb, gdir) -> dict[int,
         )
         for b, rows in pairs:
             n, p = _merge_bucket(
-                rows, salt_col, heavy_bc.value, tomb_bc.value, cfg,
+                rows, heavy_bc.value, tomb_bc.value, cfg,
                 os.path.join(gdir, f"bucket={b}"),
             )
             yield pa.RecordBatch.from_pydict(
@@ -570,13 +553,12 @@ def merge_groups_to_generation(
     source_gens: list[dict] | None = None,
     tombstones=None,
 ) -> dict:
-    """Merge the given run groups into segments/gen=<gen_id>.
+    """Merge the given groups into segments/gen=<gen_id>.
 
-    ``source_gens`` (committed generation dicts covering exactly
-    ``group_ids``) lets the merge source from the POSTINGS ALREADY IN
-    those generations' segment rows once runs/ is gone (``gc_runs``):
-    the rows reinterpret as runs with salt = range_id, zero re-encoding,
-    and both sources merge to the same rows.
+    A first merge (``source_gens`` None) reads the groups' run dirs; a
+    compaction or purge passes ``source_gens`` (committed generation dicts
+    covering exactly ``group_ids``) and reads the POSTINGS ALREADY IN their
+    segment rows, which reinterpret as runs with zero re-encoding.
 
     ``tombstones`` (doc_ids) drops those docs' postings during the merge —
     the purge path of the delete lifecycle.
@@ -589,7 +571,7 @@ def merge_groups_to_generation(
 
     import numpy as np
 
-    salt_col, files = _merge_source(paths, group_ids, source_gens)
+    files = _merge_source(paths, group_ids, source_gens)
     if source_gens is not None:
         in_postings = sum(int(g.get("postings", 0) or 0) for g in source_gens)
     else:
@@ -604,9 +586,9 @@ def merge_groups_to_generation(
         tomb = np.sort(np.asarray(tombstones, np.int64))
     heavy = _heavy_terms(paths)
     if in_postings <= DRIVER_MERGE_MAX_POSTINGS:
-        per_bucket = _merge_on_driver(cfg, files, salt_col, heavy, tomb, gdir)
+        per_bucket = _merge_on_driver(cfg, files, heavy, tomb, gdir)
     else:
-        per_bucket = _merge_in_tasks(spark, cfg, files, salt_col, heavy, tomb, gdir)
+        per_bucket = _merge_in_tasks(spark, cfg, files, source_gens is None, heavy, tomb, gdir)
     _check_bucket_files(gdir, per_bucket)
     rows = sum(n for n, _ in per_bucket.values())
     postings = sum(p for _, p in per_bucket.values())
@@ -659,11 +641,10 @@ def _stage1b_plan(paths: IndexPaths, fp: str, all_ids: set, t_covered: set | Non
       after the dictionary swap): recount the stats only;
     * ``fold`` — only new groups are uncovered (an append): fold their run
       metadata into the committed dictionary, O(dict + new groups);
-    * ``full`` — re-aggregate (first build / purge / crash recovery).
-      Sources per GENERATION all-or-nothing (a generation's segment rows
-      cannot be attributed to individual groups): a generation with a GC'd
-      member group contributes its segment rows (df = Σ n_docs and
-      cf = Σ tf_sum hold there too), every other group its run dir.
+    * ``full`` — re-aggregate (first build / purge / crash recovery):
+      every committed generation of this fingerprint contributes its
+      segment rows (df = Σ n_docs and cf = Σ tf_sum hold there too), and
+      every group no generation covers its run dir.
 
     Returns {mode, runs, segs (metadata files), rows (metadata rows the
     aggregation reads), log (progress line or None)}."""
@@ -688,14 +669,8 @@ def _stage1b_plan(paths: IndexPaths, fp: str, all_ids: set, t_covered: set | Non
     else:
         dict_files = []
         seg_m = read_manifest(paths.root, "segments") or {}
-        gen_list = (
-            (seg_m.get("generations") or []) if seg_m.get("fingerprint") == fp else []
-        )
-        used_gens = [
-            g for g in gen_list if not all(os.path.isdir(run_dir(int(x))) for x in g["groups"])
-        ]
-        gen_covered = sorted({int(x) for g in used_gens for x in g["groups"]})
-        runs_groups = sorted(g for g in all_ids if g not in set(gen_covered))
+        gens = (seg_m.get("generations") or []) if seg_m.get("fingerprint") == fp else []
+        runs_groups = sorted(all_ids - {int(x) for g in gens for x in g["groups"]})
         missing = [g for g in runs_groups if not os.path.isdir(run_dir(g))]
         if missing:
             raise FileNotFoundError(
@@ -703,10 +678,11 @@ def _stage1b_plan(paths: IndexPaths, fp: str, all_ids: set, t_covered: set | Non
                 "run dirs nor a committed segment generation"
             )
         plan["runs"] = [f for g in runs_groups for f in _pa_files(run_dir(g))]
-        plan["segs"] = _generation_files(paths, used_gens)
-        if used_gens:
+        plan["segs"] = _generation_files(paths, gens)
+        if gens:
             plan["log"] = (
-                f"stage1b dictionary rebuilt from segment rows for GC'd groups {gen_covered}"
+                "stage1b dictionary rebuilt from segment rows of generations "
+                f"{[int(g['gen']) for g in gens]}"
                 + (f" + run groups {runs_groups}" if runs_groups else "")
             )
     plan["rows"] = sum(
@@ -1065,8 +1041,9 @@ def build_index(
     # ``add`` + periodic save, search_provider.rs:250-286, :173-181 —
     # append is O(batch), persistence periodic). When the generation
     # count exceeds ``cfg.max_segment_generations``, one compaction job
-    # re-merges ALL runs into a single fresh generation (bounded read
-    # amplification at query time, amortized write amplification).
+    # re-merges the smallest generations' segment rows into a single fresh
+    # generation (bounded read amplification at query time, amortized
+    # write amplification).
     all_group_ids = {g for g, _, _, _ in plan}
     seg_m = read_manifest(paths.root, "segments")
     generations: list[dict] = []
@@ -1191,9 +1168,8 @@ def build_index(
                         break
                 merge_groups = sorted(x for g in taken for x in g["groups"])
                 comp_gen = next_gen + 1
-                # source_gens: when the taken groups' run dirs are gone
-                # (gc_runs), compaction re-reads the taken generations'
-                # own segment rows — the index is self-sufficient
+                # compaction re-reads the taken generations' own segment
+                # rows — the index is self-sufficient
                 gd = _merge_groups_to_gen(merge_groups, comp_gen, source_gens=taken)
                 taken_ids = {int(g["gen"]) for g in taken}
                 generations = [
@@ -1213,8 +1189,7 @@ def build_index(
                     f"{len(generations)} generations remain"
                 )
 
-    if cfg.gc_runs:
-        gc_run_dirs(paths.root, log=log)
+    gc_run_dirs(paths.root, log=log)
 
     seg_m = read_manifest(paths.root, "segments") or {}
     return {

@@ -20,12 +20,14 @@ Its one caller is ``index_build._merge_bucket``, which every merge
 placement runs per term bucket (driver threads, or one Spark task per
 bucket).
 
-Output layout:
+Output layout, decided by the term dictionary at merge time alone:
 * light terms (df <= heavy_df_threshold): one row per term, range_id = -1,
   full posting list;
-* heavy terms (and terms an input generation already holds range-split):
-  one row per (term, doc-range), range_id = doc_id // range_size — the
-  query executor prunes these rows by range.
+* heavy terms: one row per (term, doc-range), range_id = doc_id //
+  range_size — the query executor prunes these rows by range.
+Input rows of either layout merge to the same output, so a generation
+whose term crossed the threshold since it was written is re-laid out by
+the next merge that reads it.
 """
 
 from __future__ import annotations
@@ -82,8 +84,8 @@ def _make_segment_row(
         "n_docs": int(packed["n_docs"]),
         # per-row collection-frequency partial, mirroring the run rows'
         # tf_sum: lets the term dictionary (df = Σ n_docs, cf = Σ tf_sum)
-        # be rebuilt from segment METADATA alone, so the runs directory
-        # stops being load-bearing once its groups are merged (gc_runs)
+        # be rebuilt from segment METADATA alone, so a group's run dir is
+        # swept once its group is merged and folded
         "tf_sum": int(tfs.sum()),
         "doc_blob": packed["doc_blob"],
         "tf_blob": packed["tf_blob"],
@@ -102,7 +104,6 @@ def _make_segment_row(
 
 def _merge_key_postings(
     terms: np.ndarray,
-    salts: np.ndarray,
     n_docs: np.ndarray,
     doc_blobs,
     tf_blobs,
@@ -115,18 +116,18 @@ def _merge_key_postings(
 
     Decodes ALL rows' streams in ONE varbyte call per stream (the
     per-row/per-key NumPy fixed overhead dominated the merge at O(batch)
-    input sizes), assigns every posting its final (term, salt) key —
-    splitting light rows (salt = -1) of ``split_terms`` members by
-    doc-range (salt = doc_id // range_size) — applies the tombstone mask, and merges via
-    one global lexsort (docs are disjoint across a key's runs, so the
-    permutation is fully determined — same output as the per-key stable
-    argsort). Returns (key_terms, key_tids, key_salts, key_starts, docs,
-    tfs, dls); ``key_starts`` has a trailing total-length sentinel."""
+    input sizes), keys every posting as (term, doc_id // range_size) if
+    its term is in ``split_terms`` (the dictionary-heavy set), else
+    (term, -1) — one flag per unique term, whatever layout the input row
+    had — applies the tombstone mask, and merges via one global lexsort
+    (docs are disjoint across a term's rows, so the permutation is fully
+    determined — same output as the per-key stable argsort). Returns
+    (key_terms, key_tids, key_range_ids, key_starts, docs, tfs, dls);
+    ``key_starts`` has a trailing total-length sentinel."""
     n_docs = np.ascontiguousarray(n_docs, np.int64)
     keep_rows = n_docs > 0
     if not keep_rows.all():
         terms = terms[keep_rows]
-        salts = salts[keep_rows]
         doc_blobs = [b for b, m in zip(doc_blobs, keep_rows) if m]
         tf_blobs = [b for b, m in zip(tf_blobs, keep_rows) if m]
         dl_blobs = [b for b, m in zip(dl_blobs, keep_rows) if m]
@@ -154,34 +155,27 @@ def _merge_key_postings(
     docs = g - np.repeat(corr, n_docs)
 
     uniq, tid = np.unique(np.asarray(terms, dtype=object), return_inverse=True)
-    salts = np.ascontiguousarray(salts, np.int64)
     tid_p = np.repeat(tid, n_docs)
-    salt_p = np.repeat(salts, n_docs)
-    if split_terms:
-        split_row = np.fromiter(
-            (s == -1 and t in split_terms for t, s in zip(terms, salts)),
-            bool,
-            len(terms),
-        )
-        split_p = np.repeat(split_row, n_docs)
-        salt_p = np.where(split_p, docs // range_size, salt_p)
+    split = split_terms or frozenset()
+    split_u = np.fromiter((t in split for t in uniq), bool, len(uniq))
+    rid_p = np.where(split_u[tid_p], docs // range_size, -1)
     if tomb is not None and len(tomb):
         m = _tombstone_mask(docs, tomb)
         docs, tfs, dls = docs[m], tfs[m], dls[m]
-        tid_p, salt_p = tid_p[m], salt_p[m]
+        tid_p, rid_p = tid_p[m], rid_p[m]
         if not len(docs):
             return empty
-    order = np.lexsort((docs, salt_p, tid_p))
+    order = np.lexsort((docs, rid_p, tid_p))
     docs, tfs, dls = docs[order], tfs[order], dls[order]
-    tid_p, salt_p = tid_p[order], salt_p[order]
-    change = (tid_p[1:] != tid_p[:-1]) | (salt_p[1:] != salt_p[:-1])
+    tid_p, rid_p = tid_p[order], rid_p[order]
+    change = (tid_p[1:] != tid_p[:-1]) | (rid_p[1:] != rid_p[:-1])
     key_starts = np.concatenate(
         ([0], np.flatnonzero(change) + 1, [len(docs)])
     ).astype(np.int64)
     key_tid = tid_p[key_starts[:-1]]
     key_terms = uniq[key_tid]
-    key_salts = salt_p[key_starts[:-1]]
-    return key_terms, key_tid, key_salts, key_starts, docs, tfs, dls
+    key_rids = rid_p[key_starts[:-1]]
+    return key_terms, key_tid, key_rids, key_starts, docs, tfs, dls
 
 
 #: cap on padded (blocks x block_size) front-matrix cells per chunk —
@@ -192,7 +186,7 @@ _FRONT_CHUNK_CELLS = 1 << 22
 def encode_segment_columns(
     key_terms: np.ndarray,
     key_tid: np.ndarray,
-    key_salts: np.ndarray,
+    key_rids: np.ndarray,
     key_starts: np.ndarray,
     docs: np.ndarray,
     tfs: np.ndarray,
@@ -224,7 +218,7 @@ def encode_segment_columns(
         }
     out = {
         "term": key_terms,
-        "range_id": np.ascontiguousarray(key_salts, np.int64),
+        "range_id": np.ascontiguousarray(key_rids, np.int64),
     }
     if uniq_terms is None:
         uniq_terms, inv = np.unique(key_terms, return_inverse=True)
@@ -372,7 +366,6 @@ def segment_columns_to_rows(cols: dict) -> dict:
 
 def merge_rows_columnar(
     terms,
-    salts,
     n_docs,
     doc_blobs,
     tf_blobs,
@@ -381,13 +374,15 @@ def merge_rows_columnar(
     split_terms=None,
     tomb: np.ndarray | None = None,
 ) -> dict:
-    """Run rows -> merged, packed segment rows (columnar), fully batched."""
-    key_terms, key_tid, key_salts, key_starts, d, t, l = _merge_key_postings(
-        terms, salts, n_docs, doc_blobs, tf_blobs, dl_blobs,
+    """Run rows -> merged, packed segment rows (columnar), fully batched.
+    ``split_terms`` (the dictionary-heavy set) alone decides which terms
+    come out range-split."""
+    key_terms, key_tid, key_rids, key_starts, d, t, l = _merge_key_postings(
+        terms, n_docs, doc_blobs, tf_blobs, dl_blobs,
         cfg.range_size, split_terms=split_terms, tomb=tomb,
     )
     return encode_segment_columns(
-        key_terms, key_tid, key_salts, key_starts, d, t, l, cfg
+        key_terms, key_tid, key_rids, key_starts, d, t, l, cfg
     )
 
 

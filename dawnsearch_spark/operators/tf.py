@@ -8,8 +8,8 @@ the term-frequency bag (SURVEY.md §2.4 A6/A7).
 The hot path is an Arrow-vectorized ``mapInPandas`` (input_hint: "vectorized
 pandas/Arrow UDFs (no per-row Python) throughout", and the reference
 likewise batches its tokenizer, embedding_service.rs:101-120): each batch
-tokenizes with vectorized ``pd.Series.str`` ops and pre-aggregates
-(doc, term) counts with a C-level pandas groupby, so the JVM only ever
+tokenizes with pyarrow kernels (``tokenize_flat_arrow``) and pre-aggregates
+(doc, term) counts with one integer ``np.unique``, so the JVM only ever
 shuffles compact, already-aggregated TF rows — a document lives in exactly
 one Arrow batch, so no further combine is needed. (A native
 explode->groupBy formulation is equivalent but pushes ~8x more short-lived
@@ -27,8 +27,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from dawnsearch_spark.functions.tokenizer import tokenize_pandas
 
 TF_SCHEMA = "term string, doc_id long, dl long, tf long"
 
@@ -156,24 +154,6 @@ def term_frequencies_pruned(
             yield pd.concat([keep, summary], ignore_index=True)
 
     return docs.select("doc_id", content_col).mapInPandas(gen, TF_SCHEMA)
-
-
-def doc_lengths(docs: DataFrame, content_col: str = "content") -> DataFrame:
-    """(doc_id, dl) token counts (same vectorized tokenizer)."""
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            toks = tokenize_pandas(pdf[content_col])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].to_numpy(np.int64),
-                    "dl": toks.str.len().fillna(0).to_numpy(np.int64),
-                }
-            )
-
-    return docs.select("doc_id", content_col).mapInPandas(gen, "doc_id long, dl long")
 
 
 def corpus_stats(doclens: DataFrame) -> CorpusStats:

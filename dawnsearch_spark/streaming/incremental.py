@@ -596,7 +596,7 @@ def purge_deletes(
     )
 
     # 4. dictionary + stats rebuild from the purged segments (stage 1b
-    # fallback — run dirs are gone, so it sources from the new generation)
+    # reads every committed generation's segment rows, never run dirs)
     from dawnsearch_spark.index_build import build_index
 
     build_index(spark, spark.read.parquet(paths.documents), index_root, cfg, log=log)

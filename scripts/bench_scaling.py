@@ -99,7 +99,7 @@ def run_one(cores: int, corpus: str, docs: int) -> None:
 def run_append_pass(cores: int, corpus: str, docs: int, n_appends: int = 4,
                     batch: int = 10000) -> None:
     """Tiered-generation evidence at bench scale (VERDICT r4 #4): build
-    the full index, then N appends of ``batch`` docs with gc_runs +
+    the full index, then N appends of ``batch`` docs with
     size-tiered compaction, recording per-append wall time and bytes
     written vs total index bytes (the O(batch)-not-O(index) claim),
     compaction IO, reclaimed runs/ storage, and post-append WAND latency
@@ -137,7 +137,6 @@ def run_append_pass(cores: int, corpus: str, docs: int, n_appends: int = 4,
             build_partitions=64,
         ),
         max_segment_generations=3,
-        gc_runs=True,
     )
     src = spark.read.parquet(corpus)
     with tempfile.TemporaryDirectory() as tmp:
@@ -263,7 +262,8 @@ def run_weak(docs: int, repeat: int, json_out: str | None) -> None:
 
 def run_probe(corpus: str, json_out: str | None) -> None:
     """Spark-free concurrency probe: the engine's dominant compute kernel
-    (vectorized tokenize+len over pandas) at P=2 vs P=8 concurrent
+    (``tokenize_flat_arrow``'s tokenize + per-doc lengths, the stage-2
+    tokenizer) at P=2 vs P=8 concurrent
     PROCESSES with fixed per-process work. This decouples the weak-scaling
     question from Spark entirely: if per-process wall time stays flat at
     4x the concurrency, the host's memory subsystem sustains the Python
@@ -318,13 +318,13 @@ def run_probe(corpus: str, json_out: str | None) -> None:
 def _probe_worker(args):
     import pandas as pd
 
-    from dawnsearch_spark.functions.tokenizer import tokenize_pandas
+    from dawnsearch_spark.functions.tokenizer import tokenize_flat_arrow
 
     texts, reps = args
     s = pd.Series(texts)
     t0 = time.time()
     for _ in range(reps):
-        tokenize_pandas(s).str.len().sum()
+        tokenize_flat_arrow(s)[2].sum()
     return time.time() - t0
 
 

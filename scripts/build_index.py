@@ -4,7 +4,7 @@ Usage:
   spark-submit --py-files dawnsearch_spark.zip scripts/build_index.py \
       --docs /path/to/documents_parquet --out /path/to/index \
       [--synthetic N] [--groups 8] [--master local[32]] \
-      [--append] [--delete-ids 1,2,3] [--purge] [--gc-runs]
+      [--append] [--delete-ids 1,2,3] [--purge]
 
 Lifecycle flags compose: --append treats --docs/--synthetic as a NEW
 batch appended onto the existing index at --out; --delete-ids tombstones
@@ -71,17 +71,9 @@ def main() -> None:
         "--purge", action="store_true",
         help="physically remove tombstoned docs (filtered merge + rewrite)",
     )
-    ap.add_argument(
-        "--gc-runs", action="store_true",
-        help="reclaim merged run-group directories after commit",
-    )
     args = ap.parse_args()
 
     cfg = load_config(args.config) if args.config else EngineConfig()
-    if args.gc_runs:
-        from dataclasses import replace
-
-        cfg = replace(cfg, gc_runs=True)
     spark = get_spark("dawnsearch-build", master=args.master)
     docs = None
     if args.synthetic:

@@ -56,6 +56,20 @@ def block_max_cfg():
     return f
 
 
+def corpus_stats_of(docs, content_col: str = "content"):
+    """Exact BM25 corpus stats of ``docs`` from JVM token counts
+    (``size(tokens_col(...))``, as ``q_doclen_stats`` computes them). Null
+    content counts 0 tokens: it is replaced by "" before tokenizing, since
+    ``size(null)`` is -1 under legacy semantics."""
+    from pyspark.sql import functions as F
+
+    from dawnsearch_spark.functions.tokenizer import tokens_col
+    from dawnsearch_spark.operators.tf import corpus_stats
+
+    content = F.coalesce(F.col(content_col), F.lit(""))
+    return corpus_stats(docs.select(F.size(tokens_col(content)).cast("long").alias("dl")))
+
+
 def hydrate_topk(topk, documents, cfg, doc_ids=None):
     """Reference hydration, all in Spark: (doc_id, score) rows joined onto
     the documents relation, sha256 and snippet from Spark's ``sha2`` and

@@ -19,11 +19,10 @@ from dawnsearch_spark.operators.boolquery import (
     phrase_topk,
 )
 from dawnsearch_spark.operators.tf import (
-    corpus_stats,
-    doc_lengths,
     document_frequencies,
     term_frequencies,
 )
+from conftest import corpus_stats_of
 
 CFG = EngineConfig()
 
@@ -93,7 +92,7 @@ def test_flat_matchers_equal_per_doc():
 
 def test_phrase_topk_semantics(spark, tiny):
     tf = term_frequencies(tiny)
-    stats = corpus_stats(doc_lengths(tiny))
+    stats = corpus_stats_of(tiny)
     out = phrase_topk(tiny, tf, stats, "alpha beta", CFG).collect()
     got = {r.doc_id: r.phrase_tf for r in out}
     # docs 0 (x2), 1 (x1), 3 (x2) contain "alpha beta" adjacently; doc 2
@@ -115,7 +114,7 @@ def test_phrase_topk_semantics(spark, tiny):
 
 def test_phrase_empty_and_absent(spark, tiny):
     tf = term_frequencies(tiny)
-    stats = corpus_stats(doc_lengths(tiny))
+    stats = corpus_stats_of(tiny)
     assert phrase_topk(tiny, tf, stats, "", CFG).count() == 0
     assert phrase_topk(tiny, tf, stats, "nosuch term", CFG).count() == 0
     # all terms present somewhere but never adjacent in any doc
@@ -124,7 +123,7 @@ def test_phrase_empty_and_absent(spark, tiny):
 
 def test_boolean_topk_semantics(spark, tiny):
     tf = term_frequencies(tiny)
-    stats = corpus_stats(doc_lengths(tiny))
+    stats = corpus_stats_of(tiny)
     dfs = document_frequencies(tf)
     # must delta -> docs 2,3,4; must_not epsilon removes 4
     out = boolean_topk(
@@ -147,7 +146,7 @@ def test_boolean_matches_exact_oracle_on_or(spark, tiny):
     from dawnsearch_spark.operators.oracle import bm25_exact_topk
 
     tf = term_frequencies(tiny)
-    stats = corpus_stats(doc_lengths(tiny))
+    stats = corpus_stats_of(tiny)
     dfs = document_frequencies(tf)
     a = boolean_topk(tf, dfs, stats, CFG, should=["alpha", "gamma"]).collect()
     b = bm25_exact_topk(tf, dfs, stats, "alpha gamma", CFG).collect()
@@ -159,7 +158,7 @@ def test_prefix_topk(spark, tiny):
     from dawnsearch_spark.operators.oracle import bm25_exact_topk
 
     tf = term_frequencies(tiny)
-    stats = corpus_stats(doc_lengths(tiny))
+    stats = corpus_stats_of(tiny)
     dfs = document_frequencies(tf)
     # "a" expands to exactly {alpha}: must equal the single-term exact scorer
     a = prefix_topk(tf, dfs, stats, "a", CFG).collect()
@@ -179,7 +178,7 @@ def test_near_topk(spark, tiny):
     from dawnsearch_spark.operators.boolquery import near_topk
 
     tf = term_frequencies(tiny)
-    stats = corpus_stats(doc_lengths(tiny))
+    stats = corpus_stats_of(tiny)
     # alpha/gamma positions: doc0 a=[0,3] g=[2]; doc1 a=[1] g=[3];
     # doc2 a=[0] g=[1]; doc3 no gamma; doc4 no alpha
     w1 = {r.doc_id: r.prox_tf for r in near_topk(
@@ -199,7 +198,7 @@ def test_fuzzy_topk(spark, tiny):
     from dawnsearch_spark.operators.boolquery import boolean_topk, fuzzy_topk
 
     tf = term_frequencies(tiny)
-    stats = corpus_stats(doc_lengths(tiny))
+    stats = corpus_stats_of(tiny)
     dfs = document_frequencies(tf)
     # "deta" is 1 edit from BOTH beta and delta -> OR over the pair
     a = fuzzy_topk(tf, dfs, stats, "deta", CFG).collect()
@@ -239,7 +238,7 @@ def test_regex_and_wildcard_rewrites(spark, tiny):
     )
 
     tf = term_frequencies(tiny)
-    stats = corpus_stats(doc_lengths(tiny))
+    stats = corpus_stats_of(tiny)
     dfs = document_frequencies(tf)
     # full-match: "delta|beta" expands to exactly those two terms
     a = regex_topk(tf, dfs, stats, "delta|beta", CFG).collect()
@@ -262,7 +261,7 @@ def test_float_boosts_scale_scores(spark, tiny):
     from dawnsearch_spark.operators.oracle import bm25_exact_topk
 
     tf = term_frequencies(tiny)
-    stats = corpus_stats(doc_lengths(tiny))
+    stats = corpus_stats_of(tiny)
     dfs = document_frequencies(tf)
     base = {r.doc_id: r.score
             for r in bm25_exact_topk(tf, dfs, stats, "delta", CFG).collect()}

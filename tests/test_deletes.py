@@ -262,19 +262,19 @@ def test_purge_crash_window_serves_correctly(spark, cfg, tmp_path):
 
 
 def test_purge_on_gc_runs_index(spark, cfg, tmp_path):
-    """With runs/ GC'd, purge must source its merge from the segment rows
-    (the index is self-sufficient) and still match a fresh build."""
-    gc_cfg = replace(cfg, gc_runs=True)
+    """A build sweeps its merged run dirs, so purge sources its merge from
+    the segment rows (the index is self-sufficient) and still matches a
+    fresh build."""
     d = str(tmp_path / "idx")
-    build_index(spark, _corpus(spark, 250, seed=5), d, gc_cfg, n_groups=2)
+    build_index(spark, _corpus(spark, 250, seed=5), d, cfg, n_groups=2)
     paths = IndexPaths(d)
     import os
 
     if os.path.isdir(paths.runs):
         assert not any(x.startswith("group=") for x in os.listdir(paths.runs))
-    delete_documents(spark, d, gc_cfg, doc_ids=list(range(0, 250, 9)))
-    purge_deletes(spark, d, gc_cfg)
-    e = Engine(spark, d, gc_cfg)
+    delete_documents(spark, d, cfg, doc_ids=list(range(0, 250, 9)))
+    purge_deletes(spark, d, cfg)
+    e = Engine(spark, d, cfg)
     got = e.search("parse http request", k=20)
     assert got and all(doc % 9 != 0 for doc, _ in got)
     # dictionary df equals the exact survivor df for a spot-checked term

@@ -144,7 +144,7 @@ def test_rank_identity_across_appends_and_compaction(spark, cfg, tmp_path):
 
 def test_mixed_light_heavy_across_generations(spark, cfg, tmp_path):
     """A term under the heavy threshold at gen 0 that crosses it later is
-    served from a light row (gen 0) AND salted range rows (gen 1+)
+    served from a light row (gen 0) AND range rows (gen 1+)
     simultaneously; df must still be the exact sum and results must match
     the oracle-equivalent fresh build."""
     d = str(tmp_path / "mix")
@@ -234,19 +234,15 @@ def test_incremental_dictionary_matches_full_aggregation(spark, cfg, tmp_path):
         r["term"]: (r["df"], r["cf"], r["heavy"])
         for r in spark.read.parquet(d + "/terms").collect()
     }
-    # ground truth: aggregate ALL runs from scratch
-    from pyspark.sql import functions as F
+    # ground truth: df/cf of the whole corpus, tokenized from scratch
+    from dawnsearch_spark.operators.tf import document_frequencies, term_frequencies
 
     eff = cfg.effective_heavy_df_threshold(330)
     want = {
         r["term"]: (r["df"], r["cf"], r["df"] > eff)
-        for r in spark.read.parquet(d + "/runs")
-        .groupBy("term")
-        .agg(
-            F.sum("n_docs").cast("long").alias("df"),
-            F.sum("tf_sum").cast("long").alias("cf"),
-        )
-        .collect()
+        for r in document_frequencies(
+            term_frequencies(spark.read.parquet(d + "/documents"))
+        ).collect()
     }
     assert got == want
 

@@ -15,13 +15,11 @@ from dawnsearch_spark.index_build import build_index, load_stats
 from dawnsearch_spark.manifest import list_manifests, read_manifest
 from dawnsearch_spark.operators.oracle import bm25_exact_topk
 from dawnsearch_spark.operators.tf import (
-    corpus_stats,
-    doc_lengths,
     document_frequencies,
     term_frequencies,
 )
 from dawnsearch_spark.plans.query import Engine
-from conftest import search_df_rows
+from conftest import corpus_stats_of, search_df_rows
 
 
 @pytest.fixture(scope="module")
@@ -34,7 +32,7 @@ def index_dir(tmp_path_factory, spark, small_corpus, cfg):
 @pytest.fixture(scope="module")
 def oracle_inputs(spark, small_corpus):
     tf = term_frequencies(small_corpus).cache()
-    stats = corpus_stats(doc_lengths(small_corpus))
+    stats = corpus_stats_of(small_corpus)
     dfs = document_frequencies(tf).cache()
     tf.count()
     return tf, stats, dfs
@@ -51,7 +49,7 @@ def test_manifests_and_stats(index_dir, cfg):
 
 
 def test_heavy_terms_exist(spark, index_dir, cfg):
-    """The scaled-down threshold must actually exercise the salted path."""
+    """The scaled-down threshold must actually exercise the range-split path."""
     terms = spark.read.parquet(index_dir + "/terms")
     n_heavy = terms.filter(F.col("heavy")).count()
     assert n_heavy > 0, "corpus must produce heavy (stopword-like) terms"
@@ -209,7 +207,7 @@ def test_resume_skips_committed_groups(spark, small_corpus, cfg, tmp_path):
 
 def test_group_count_invariance(spark, small_corpus, cfg, tmp_path, oracle_inputs):
     """Different build-group counts (the resume/parallelism knob) produce
-    identical query results — the skew/salting path must not change
+    identical query results — the skew/range-split path must not change
     semantics (SURVEY.md §7 hard part 2)."""
     d = str(tmp_path / "g2")
     build_index(spark, small_corpus, d, cfg, n_groups=2)

@@ -1,8 +1,10 @@
 """Differential test: the batched merge/encode kernel
 (merge_rows_columnar + segment_columns_to_rows) must emit EXACTLY the
 rows the original per-key path produced (_decode_runs_merged +
-_make_segment_row), including the reclassify split of light runs of
-heavy terms and the tombstone mask — across randomized fixtures with
+_make_segment_row) under the one layout rule — a term is range-split iff
+it is in ``split_terms``, whatever layout its input rows had (light rows
+of split terms split, range rows of other terms collapse to one light
+row) — and the tombstone mask, across randomized fixtures with
 multi-byte varbyte values, multi-run keys and range-crossing lists."""
 
 from __future__ import annotations
@@ -58,16 +60,18 @@ def _decode_runs_merged(
 
 
 def _random_fixture(rng, n_terms=12, max_runs=4, doc_space=500):
-    """Run rows whose (term, salt) keys hold disjoint doc sets per run."""
+    """(term, range_id, docs, tfs, dls) input rows; a term's rows hold
+    disjoint doc sets. ~40% of the terms arrive as range rows (segment
+    rows of a range-split generation), the rest as light rows."""
     rows = []
     for ti in range(n_terms):
         term = f"t{rng.integers(0, 1000)}_{ti}"
-        salted = rng.random() < 0.4
+        range_rows = rng.random() < 0.4
         pool = np.sort(
             rng.choice(doc_space, size=rng.integers(2, 60), replace=False)
         ).astype(np.int64)
-        if salted:
-            # one run per (range, run-index) slice with the salt set
+        if range_rows:
+            # one row per (range, run-index) slice with its range_id set
             ranges = pool // CFG.range_size
             for r in np.unique(ranges):
                 sel = pool[ranges == r]
@@ -91,10 +95,11 @@ def _random_fixture(rng, n_terms=12, max_runs=4, doc_space=500):
 
 
 def _expected_rows(rows, split_terms, tomb):
-    """Original formulation: reclassify split, per-key merge, per-key pack."""
+    """Per-key formulation: key each row's docs by the one rule, per-key
+    merge, per-key pack. The input row's range_id is never read."""
     groups: dict[tuple, list] = {}
-    for term, salt, docs, tfs, dls in rows:
-        if salt == -1 and term in split_terms:
+    for term, _rid, docs, tfs, dls in rows:
+        if term in split_terms:
             ranges = docs // CFG.range_size
             for r in np.unique(ranges):
                 m = ranges == r
@@ -102,9 +107,9 @@ def _expected_rows(rows, split_terms, tomb):
                     (docs[m], tfs[m], dls[m])
                 )
         else:
-            groups.setdefault((term, salt), []).append((docs, tfs, dls))
+            groups.setdefault((term, -1), []).append((docs, tfs, dls))
     out = {}
-    for (term, salt), parts in groups.items():
+    for (term, rid), parts in groups.items():
         blobs = [_encode_run(d, t, l) for d, t, l in parts]
         cols = {
             "term": np.asarray([term] * len(parts), dtype=object),
@@ -119,7 +124,7 @@ def _expected_rows(rows, split_terms, tomb):
             docs, tfs, dls = docs[m], tfs[m], dls[m]
             if not len(docs):
                 continue
-        out[(term, salt)] = _make_segment_row(term, salt, docs, tfs, dls, CFG)
+        out[(term, rid)] = _make_segment_row(term, rid, docs, tfs, dls, CFG)
     return out
 
 
@@ -138,7 +143,6 @@ def test_kernel_matches_per_key_path(seed, with_split, with_tomb):
     blobs = [_encode_run(d, t, l) for _, _, d, t, l in rows]
     cols = merge_rows_columnar(
         terms,
-        np.asarray([r[1] for r in rows], np.int64),
         np.asarray([len(r[2]) for r in rows], np.int64),
         [b[0] for b in blobs],
         [b[1] for b in blobs],
@@ -171,8 +175,7 @@ def test_kernel_matches_per_key_path(seed, with_split, with_tomb):
 
 def test_kernel_empty_input():
     cols = merge_rows_columnar(
-        np.asarray([], dtype=object), np.zeros(0, np.int64),
-        np.zeros(0, np.int64), [], [], [], CFG,
+        np.asarray([], dtype=object), np.zeros(0, np.int64), [], [], [], CFG,
     )
     rows = segment_columns_to_rows(cols)
     assert rows["term"] == []

@@ -13,12 +13,10 @@ from dawnsearch_spark.functions.tokenizer import tokenize_py
 from dawnsearch_spark.operators.hydrate import verify_corpus
 from dawnsearch_spark.operators.oracle import bm25_exact_topk
 from dawnsearch_spark.operators.tf import (
-    corpus_stats,
-    doc_lengths,
     document_frequencies,
     term_frequencies,
 )
-from conftest import hydrate_topk
+from conftest import corpus_stats_of, hydrate_topk
 
 DOCS = [
     "def load_config(path): return parse(path)",
@@ -59,7 +57,7 @@ def tiny(spark):
         "repo string, path string, commit string, lang string, content string, doc_id long",
     )
     tf = term_frequencies(docs).cache()
-    stats = corpus_stats(doc_lengths(docs))
+    stats = corpus_stats_of(docs)
     dfs = document_frequencies(tf).cache()
     return docs, tf, stats, dfs
 
@@ -80,7 +78,7 @@ def test_oracle_matches_pure_python(spark, tiny, query):
 
 def test_hydrate_and_verify(spark, small_corpus, cfg):
     tf = term_frequencies(small_corpus)
-    stats = corpus_stats(doc_lengths(small_corpus))
+    stats = corpus_stats_of(small_corpus)
     dfs = document_frequencies(tf)
     topk = bm25_exact_topk(tf, dfs, stats, "def import", cfg)
     res = hydrate_topk(topk, small_corpus, cfg).collect()

@@ -12,11 +12,10 @@ from dawnsearch_spark.index_build import build_index
 from dawnsearch_spark.operators.boolquery import phrase_topk
 from dawnsearch_spark.operators.phrase_serve import search_phrase_index
 from dawnsearch_spark.operators.tf import (
-    corpus_stats,
-    doc_lengths,
     term_frequencies,
 )
 from dawnsearch_spark.plans.query import Engine
+from conftest import corpus_stats_of
 
 
 @pytest.fixture(scope="module")
@@ -40,7 +39,7 @@ def a_phrase(small_corpus):
 
 def _batch_result(spark, small_corpus, phrase, cfg, k=10):
     tf = term_frequencies(small_corpus)
-    stats = corpus_stats(doc_lengths(small_corpus))
+    stats = corpus_stats_of(small_corpus)
     rows = phrase_topk(small_corpus, tf, stats, phrase, cfg, k=k).collect()
     return [(r.doc_id, r.phrase_tf, round(r.score, 9)) for r in rows]
 
@@ -94,7 +93,7 @@ def test_engine_prefix_matches_batch(spark, small_corpus, phrase_index, cfg):
     hits = e.search_prefix(pre)
     assert hits, "prefix taken from a real token must match"
     tf = term_frequencies(small_corpus)
-    stats = corpus_stats(doc_lengths(small_corpus))
+    stats = corpus_stats_of(small_corpus)
     dfs = document_frequencies(tf)
     want = prefix_topk(tf, dfs, stats, pre, cfg).collect()
     assert [(d, round(s, 9)) for d, s in hits] == [
@@ -157,7 +156,7 @@ def test_served_near_matches_batch(spark, small_corpus, phrase_index, cfg, a_phr
     hits = search_near_index(spark, phrase_index, ta, tb, 4, cfg)
     assert hits
     tf = term_frequencies(small_corpus)
-    stats = corpus_stats(doc_lengths(small_corpus))
+    stats = corpus_stats_of(small_corpus)
     want = near_topk(small_corpus, tf, stats, ta, tb, 4, cfg).collect()
     assert [(d, p, round(s, 9)) for d, p, s in hits] == [
         (r.doc_id, r.prox_tf, round(r.score, 9)) for r in want

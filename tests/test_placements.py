@@ -79,19 +79,20 @@ def _bucket_files(root: str) -> dict[str, bytes]:
 
 
 def test_runs_task_merge_identical_to_driver(spark, cfg, tmp_path, monkeypatch):
-    """Runs-sourced merges over the budget (first build, appends and a
-    compaction with runs retained) run the kernel in per-bucket Spark
-    tasks fed by one exchange keyed by bucket, and must write the very
-    files the driver placement writes."""
-    keep_cfg = replace(cfg, max_segment_generations=2)
+    """Merges over the budget run the kernel in per-bucket Spark tasks —
+    the first build and appends (runs-sourced, fed by one exchange keyed
+    by bucket) and a compaction (segment-sourced, one task per bucket
+    directory) — and must write the very files the driver placement
+    writes."""
+    c2 = replace(cfg, max_segment_generations=2)
     chunks = _chunks(spark)
     tasks, driver = str(tmp_path / "tasks"), str(tmp_path / "driver")
     for root, budget in ((driver, ib.DRIVER_MERGE_MAX_POSTINGS), (tasks, 0)):
         monkeypatch.setattr(ib, "DRIVER_MERGE_MAX_POSTINGS", budget)
         calls = _spy(monkeypatch, "_merge_in_tasks")
-        build_index(spark, chunks[0], root, keep_cfg, n_groups=1)
+        build_index(spark, chunks[0], root, c2, n_groups=1)
         for c in chunks[1:]:
-            append_documents(spark, root, c, keep_cfg, n_groups=1)
+            append_documents(spark, root, c, c2, n_groups=1)
         # build + 2 appends + 1 compaction
         assert len(calls) == (4 if budget == 0 else 0), root
         monkeypatch.undo()
@@ -106,7 +107,7 @@ def test_runs_task_merge_identical_to_driver(spark, cfg, tmp_path, monkeypatch):
     assert got and all(k.endswith("/" + ib.BUCKET_FILE) for k in got)
     assert got == want, "task placement must write byte-identical bucket files"
     assert _segment_rows(spark, tasks) == _segment_rows(spark, driver)
-    es, ed = Engine(spark, tasks, keep_cfg), Engine(spark, driver, keep_cfg)
+    es, ed = Engine(spark, tasks, c2), Engine(spark, driver, c2)
     for q in QUERIES:
         assert es.search(q) == ed.search(q), q
 
@@ -129,24 +130,23 @@ def test_exchanged_buckets_gather_across_batches():
 
 def test_stage1b_spark_aggregator_identical_to_pandas(spark, cfg, tmp_path, monkeypatch):
     """Every stage-1b mode — full aggregation (first build), fold (append),
-    rebuild from segment rows (purge with runs GC'd) and stats recount —
-    commits the same dictionary and stats under the Spark aggregator
-    (budget 0) as under the pandas one (default)."""
-    gc_cfg = replace(cfg, gc_runs=True)
+    rebuild from segment rows (purge) and stats recount — commits the
+    same dictionary and stats under the Spark aggregator (budget 0) as
+    under the pandas one (default)."""
     chunks = _chunks(spark)
     roots = {0: str(tmp_path / "spark"), ib.DRIVER_DICT_MAX_ROWS: str(tmp_path / "pandas")}
     logs = {budget: [] for budget in roots}
     steps = [
-        lambda root, log: build_index(spark, chunks[0], root, gc_cfg, n_groups=2, log=log),
-        lambda root, log: append_documents(spark, root, chunks[1], gc_cfg, log=log),
+        lambda root, log: build_index(spark, chunks[0], root, cfg, n_groups=2, log=log),
+        lambda root, log: append_documents(spark, root, chunks[1], cfg, log=log),
         lambda root, log: (
-            delete_documents(spark, root, gc_cfg, doc_ids=range(0, 200, 9)),
-            purge_deletes(spark, root, gc_cfg, log=log),
+            delete_documents(spark, root, cfg, doc_ids=range(0, 200, 9)),
+            purge_deletes(spark, root, cfg, log=log),
         ),
         lambda root, log: (
             os.remove(os.path.join(root, MANIFEST_DIR, "stats.json")),
             build_index(spark, spark.read.parquet(IndexPaths(root).documents),
-                        root, gc_cfg, log=log),
+                        root, cfg, log=log),
         ),
     ]
     for step in steps:
@@ -163,7 +163,7 @@ def test_stage1b_spark_aggregator_identical_to_pandas(spark, cfg, tmp_path, monk
         for want in ("folded into the committed dictionary",
                      "rebuilt from segment rows", "stats recount only"):
             assert any(want in m for m in lines), (want, lines)
-    e1, e2 = (Engine(spark, r, gc_cfg) for r in roots.values())
+    e1, e2 = (Engine(spark, r, cfg) for r in roots.values())
     for q in QUERIES:
         assert e1.search(q) == e2.search(q), q
 
@@ -173,10 +173,9 @@ def test_missing_bucket_file_blocks_commit(spark, cfg, tmp_path, monkeypatch):
     file where the driver sees it. Executors writing to a non-shared local
     path are simulated by deleting one task-written file; the purge must
     raise before it commits the generation, and a rerun must complete."""
-    gc_cfg = replace(cfg, gc_runs=True)
     d = str(tmp_path / "idx")
-    build_index(spark, _chunks(spark)[0], d, gc_cfg, n_groups=1)
-    delete_documents(spark, d, gc_cfg, doc_ids=[1, 2, 3])
+    build_index(spark, _chunks(spark)[0], d, cfg, n_groups=1)
+    delete_documents(spark, d, cfg, doc_ids=[1, 2, 3])
     before = read_manifest(d, "segments")
     real = ib._merge_in_tasks
 
@@ -190,11 +189,11 @@ def test_missing_bucket_file_blocks_commit(spark, cfg, tmp_path, monkeypatch):
     monkeypatch.setattr(ib, "_merge_in_tasks", lose_one_file)
     monkeypatch.setattr(ib, "DRIVER_MERGE_MAX_POSTINGS", 0)
     with pytest.raises(RuntimeError, match="not visible to the driver"):
-        purge_deletes(spark, d, gc_cfg)
+        purge_deletes(spark, d, cfg)
     assert read_manifest(d, "segments") == before
     monkeypatch.undo()
-    assert purge_deletes(spark, d, gc_cfg)["purged"] == 3
-    got = Engine(spark, d, gc_cfg).search("parse http request", k=50)
+    assert purge_deletes(spark, d, cfg)["purged"] == 3
+    got = Engine(spark, d, cfg).search("parse http request", k=50)
     assert got and not {doc for doc, _ in got} & {1, 2, 3}
 
 
@@ -233,18 +232,17 @@ def test_driver_placement_build_and_append_broadcast_nothing(spark, cfg, tmp_pat
 
 def test_task_placement_destroys_every_broadcast(spark, cfg, tmp_path, monkeypatch):
     """Forced task placement through build, append, delete and purge —
-    runs-sourced and (runs GC'd) segment-sourced merges — destroys every
-    broadcast it creates."""
-    gc_cfg = replace(cfg, gc_runs=True)
+    runs-sourced and segment-sourced merges — destroys every broadcast it
+    creates."""
     chunks = _chunks(spark)
     d = str(tmp_path / "idx")
     monkeypatch.setattr(ib, "DRIVER_MERGE_MAX_POSTINGS", 0)
     tasks = _spy(monkeypatch, "_merge_in_tasks")
     created, destroyed = _spy_broadcasts(monkeypatch)
-    build_index(spark, chunks[0], d, gc_cfg, n_groups=2)
-    append_documents(spark, d, chunks[1], gc_cfg)
-    delete_documents(spark, d, gc_cfg, doc_ids=[1, 2, 3])
-    assert purge_deletes(spark, d, gc_cfg)["purged"] == 3
+    build_index(spark, chunks[0], d, cfg, n_groups=2)
+    append_documents(spark, d, chunks[1], cfg)
+    delete_documents(spark, d, cfg, doc_ids=[1, 2, 3])
+    assert purge_deletes(spark, d, cfg)["purged"] == 3
     assert len(tasks) == 3
     assert created, "task placement ships heavy/tomb sets as broadcasts"
     assert [bc for bc in created if id(bc) not in destroyed] == []

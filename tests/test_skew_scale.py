@@ -22,13 +22,12 @@ from dawnsearch_spark.index_build import (
 from dawnsearch_spark.manifest import read_manifest
 from dawnsearch_spark.operators.oracle import bm25_exact_topk
 from dawnsearch_spark.operators.tf import (
-    corpus_stats,
-    doc_lengths,
     document_frequencies,
     term_frequencies,
 )
 from dawnsearch_spark.plans.query import Engine
 from dawnsearch_spark.streaming.incremental import append_documents
+from conftest import corpus_stats_of
 
 QUERIES = ["def import", "parse http request", "getValue config"]
 
@@ -44,7 +43,7 @@ def test_effective_threshold_scaling():
 
 def _oracle(spark, corpus):
     tf = term_frequencies(corpus)
-    stats = corpus_stats(doc_lengths(corpus))
+    stats = corpus_stats_of(corpus)
     dfs = document_frequencies(tf)
     return tf, stats, dfs
 
@@ -123,11 +122,11 @@ def _rot13(df):
 def test_heavy_to_light_threshold_drift_keeps_postings(spark, cfg, tmp_path, monkeypatch):
     """A ratio threshold rises with n_docs, so a term range-split in gen 0
     can be light under the dictionary by the time a compaction re-merges
-    gen 0. With runs retained the compaction re-decides the layout from
-    the dictionary (one light row); after gc_runs it re-merges segment
-    rows and keeps the range split. Under both placements no posting is
-    lost, no term serves both layouts within a generation, and answers
-    stay rank-identical to the oracle."""
+    gen 0's segment rows. The dictionary alone decides the layout: in the
+    compacted generation a term is range-split iff it is heavy now, so
+    each drifted term is one light row there. Under both placements no
+    posting is lost, no term serves both layouts within a generation, and
+    answers stay rank-identical to the oracle."""
     drift = replace(
         cfg, heavy_df_threshold=None, heavy_df_ratio=0.05, heavy_df_min=2,
         max_segment_generations=2,
@@ -140,48 +139,46 @@ def test_heavy_to_light_threshold_drift_keeps_postings(spark, cfg, tmp_path, mon
         for i, start in ((1, 200), (2, 500))
     ]
     oracle, rows_by = None, {}
-    for gc_runs in (False, True):
-        for budget in (ib.DRIVER_MERGE_MAX_POSTINGS, 0):
-            c = replace(drift, gc_runs=gc_runs)
-            root = str(tmp_path / f"gc{int(gc_runs)}-b{budget}")
-            monkeypatch.setattr(ib, "DRIVER_MERGE_MAX_POSTINGS", budget)
-            build_index(spark, base, root, c, n_groups=1)
-            gen0_split = {
-                r["term"]
-                for r in read_segments(spark, root)
-                .filter(F.col("range_id") >= 0).select("term").distinct().collect()
-            }
-            for a in appends:
-                append_documents(spark, root, a, c, n_groups=1)
-            monkeypatch.undo()
+    for budget in (ib.DRIVER_MERGE_MAX_POSTINGS, 0):
+        root = str(tmp_path / f"b{budget}")
+        monkeypatch.setattr(ib, "DRIVER_MERGE_MAX_POSTINGS", budget)
+        build_index(spark, base, root, drift, n_groups=1)
+        gen0_split = {
+            r["term"]
+            for r in read_segments(spark, root)
+            .filter(F.col("range_id") >= 0).select("term").distinct().collect()
+        }
+        for a in appends:
+            append_documents(spark, root, a, drift, n_groups=1)
+        monkeypatch.undo()
 
-            (comp,) = [g for g in segment_generations(root) if 0 in g["groups"]]
-            assert len(comp["groups"]) > 1, "gen 0 was never compacted"
-            light_now = {
-                r["term"]
-                for r in spark.read.parquet(IndexPaths(root).terms)
-                .filter(~F.col("heavy")).select("term").collect()
-            }
-            drifted = gen0_split & light_now
-            assert drifted, "no gen-0 range-split term fell under the threshold"
+        (comp,) = [g for g in segment_generations(root) if 0 in g["groups"]]
+        assert len(comp["groups"]) > 1, "gen 0 was never compacted"
+        heavy_now = {
+            r["term"]
+            for r in spark.read.parquet(IndexPaths(root).terms)
+            .filter(F.col("heavy")).select("term").collect()
+        }
+        drifted = gen0_split - heavy_now
+        assert drifted, "no gen-0 range-split term fell under the threshold"
 
-            seg = read_segments(spark, root).select("gen", "term", "range_id", "n_docs")
-            pdf = seg.toPandas()
-            rows_by[(gc_runs, budget)] = sorted(map(tuple, pdf.to_numpy().tolist()))
-            # posting mass preserved: every posting served exactly once
-            assert int(pdf["n_docs"].sum()) == read_manifest(root, "stats")["n_postings"]
-            # within a generation a term is light or range-split, never both
-            layouts = pdf.assign(split=pdf["range_id"] >= 0).groupby(["gen", "term"])["split"]
-            assert (layouts.nunique() == 1).all()
-            # the compacted generation's layout of the drifted terms
-            mine = pdf[(pdf["gen"] == comp["gen"]) & pdf["term"].isin(drifted)]
-            assert len(mine) and ((mine["range_id"] >= 0) == gc_runs).all()
+        seg = read_segments(spark, root).select("gen", "term", "range_id", "n_docs")
+        pdf = seg.toPandas()
+        rows_by[budget] = sorted(map(tuple, pdf.to_numpy().tolist()))
+        # posting mass preserved: every posting served exactly once
+        assert int(pdf["n_docs"].sum()) == read_manifest(root, "stats")["n_postings"]
+        # within a generation a term is light or range-split, never both
+        layouts = pdf.assign(split=pdf["range_id"] >= 0).groupby(["gen", "term"])["split"]
+        assert (layouts.nunique() == 1).all()
+        # the compacted generation: range-split iff heavy under the dictionary
+        mine = pdf[pdf["gen"] == comp["gen"]]
+        assert ((mine["range_id"] >= 0) == mine["term"].isin(heavy_now)).all()
+        assert (mine[mine["term"].isin(drifted)]["range_id"] == -1).all()
 
-            if oracle is None:
-                oracle = _oracle(spark, spark.read.parquet(IndexPaths(root).documents))
-            _assert_rank_identical(
-                Engine(spark, root, c), oracle, c,
-                QUERIES + [" ".join(sorted(drifted)[:3])],
-            )
-    for gc_runs in (False, True):
-        assert rows_by[(gc_runs, 0)] == rows_by[(gc_runs, ib.DRIVER_MERGE_MAX_POSTINGS)]
+        if oracle is None:
+            oracle = _oracle(spark, spark.read.parquet(IndexPaths(root).documents))
+        _assert_rank_identical(
+            Engine(spark, root, drift), oracle, drift,
+            QUERIES + [" ".join(sorted(drifted)[:3])],
+        )
+    assert rows_by[0] == rows_by[ib.DRIVER_MERGE_MAX_POSTINGS]

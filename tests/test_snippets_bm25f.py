@@ -51,11 +51,10 @@ def test_bm25f_degenerates_to_bm25_with_single_field(spark, small_corpus, cfg):
     from dawnsearch_spark.functions.tokenizer import tokens_col
     from dawnsearch_spark.operators.oracle import bm25_exact_topk
     from dawnsearch_spark.operators.tf import (
-        corpus_stats,
-        doc_lengths,
         document_frequencies,
         term_frequencies,
     )
+    from conftest import corpus_stats_of
 
     docs = small_corpus.select("doc_id", F.col("content").alias("text"))
     query = "spark index merge"
@@ -64,7 +63,7 @@ def test_bm25f_degenerates_to_bm25_with_single_field(spark, small_corpus, cfg):
 
     src = small_corpus
     tf = term_frequencies(src)
-    stats = corpus_stats(doc_lengths(src))
+    stats = corpus_stats_of(src)
     dfs = document_frequencies(tf)
     want = bm25_exact_topk(tf, dfs, stats, query, cfg, k=10)
 

@@ -7,7 +7,6 @@ import pandas as pd
 import pytest
 
 from dawnsearch_spark.functions.tokenizer import (
-    tokenize_pandas,
     tokenize_py,
     tokens_col,
 )
@@ -32,17 +31,6 @@ def test_tokenize_py_golden(text, expected):
     assert tokenize_py(text) == expected
 
 
-def test_pandas_matches_py():
-    texts = [t for t, _ in GOLDEN] + [
-        "a_bC dE_f", "", None, "   ", "x",
-        "212\u212a of heat",  # KELVIN SIGN lowercases to ASCII 'k'
-        "stop\u0130go",       # dotted capital I
-    ] + ["a_bC dE_f", "x" * 100, None]
-    got = tokenize_pandas(pd.Series(texts)).tolist()
-    want = [tokenize_py(t or "") for t in texts]
-    assert got == want
-
-
 def test_spark_native_matches_py(spark):
     texts = [t for t, _ in GOLDEN] + ["abcDefGHIjkl", "a1B2c3"]
     df = spark.createDataFrame([(t,) for t in texts], "content string")
@@ -61,7 +49,7 @@ def test_flat_arrow_matches_py():
 
     # the Kelvin sign (U+212A) and dotted capital I (U+0130) lowercase to
     # ASCII alphanumerics — they must stay DELIMITERS (boundaries are
-    # decided on the original text, like the py/pandas/JVM paths)
+    # decided on the original text, like the py and JVM paths)
     texts = [t for t, _ in GOLDEN] + [
         "a_bC dE_f", "", None, "   ", "x", "212K of heat", "stopİgo",
     ]

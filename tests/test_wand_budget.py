@@ -22,13 +22,12 @@ from dawnsearch_spark.corpus import REFERENCE_QUERIES
 from dawnsearch_spark.index_build import build_index
 from dawnsearch_spark.operators.oracle import bm25_exact_topk
 from dawnsearch_spark.operators.tf import (
-    corpus_stats,
-    doc_lengths,
     document_frequencies,
     term_frequencies,
 )
 from dawnsearch_spark.operators.wand import new_counters, search_index
 from dawnsearch_spark.plans.query import Engine
+from conftest import corpus_stats_of
 
 MULTI_TERM_QUERIES = [2, 3, 12, 18, 21, 24]  # heavier, multi-list queries
 
@@ -43,7 +42,7 @@ def index_dir(tmp_path_factory, spark, small_corpus, cfg):
 @pytest.fixture(scope="module")
 def oracle_inputs(spark, small_corpus):
     tf = term_frequencies(small_corpus).cache()
-    stats = corpus_stats(doc_lengths(small_corpus))
+    stats = corpus_stats_of(small_corpus)
     dfs = document_frequencies(tf).cache()
     tf.count()
     return tf, stats, dfs
